@@ -27,14 +27,6 @@ import graft.Ckpt._
   */
 object ProbeBpe {
 
-  private def toks(c: org.apache.spark.sql.Column) =
-    split(trim(lower(c)), "[ \\t\\n\\f\\r]+")
-
-  private def bigrams(a: org.apache.spark.sql.Column) =
-    zip_with(slice(a, lit(1), greatest(size(a) - 1, lit(0))),
-      slice(a, lit(2), greatest(size(a) - 1, lit(0))),
-      (x, y) => concat_ws(" ", x, y))
-
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/blob1")
     val merges = args.drop(1).find(a => a.nonEmpty && a.forall(_.isDigit))
@@ -69,7 +61,7 @@ object ProbeBpe {
       timed("ENCODE-PASS") {
         Tables.documents(spark, dir)
           .select(col("source"),
-            filter(toks(col("text")), t => t =!= "").as("tk"))
+            filter(graft.ops.TextOps.tokens(col("text")), t => t =!= "").as("tk"))
           .select(col("source"), size(col("tk")).as("nt"),
             graft.functions.BpeOps.symbolSum(col("tk"), prodRules).as("ns"))
           .groupBy("source")
@@ -84,7 +76,7 @@ object ProbeBpe {
 
     val vocabCounts = timed("TOKENIZE+VOCAB") {
       Tables.documents(spark, dir)
-        .select(explode(toks(col("text"))).as("tok"))
+        .select(explode(graft.ops.TextOps.tokens(col("text"))).as("tok"))
         .filter(col("tok") =!= "")
         .groupBy("tok").agg(count(lit(1)).as("freq"))
         .eagerCkpt
@@ -105,7 +97,7 @@ object ProbeBpe {
     def pairsOfLegacy(df: DataFrame): DataFrame = df
       .select(col("freq"), split(trim(col("s")), "  ").as("a"))
       .filter(size(col("a")) > 1)
-      .select(col("freq"), explode(bigrams(col("a"))).as("pair"))
+      .select(col("freq"), explode(graft.ops.Profiling.bigrams(col("a"))).as("pair"))
       .groupBy("pair").agg(sum(col("freq")).cast("long").as("c"))
 
     // production shape (Profiling.bpeMerges): one typed aggregate pass
@@ -163,7 +155,7 @@ object ProbeBpe {
     timed("ENCODE-PASS") {
       Tables.documents(spark, dir)
         .select(col("source"),
-          filter(toks(col("text")), t => t =!= "").as("tk"))
+          filter(graft.ops.TextOps.tokens(col("text")), t => t =!= "").as("tk"))
         .select(col("source"), size(col("tk")).as("nt"),
           graft.functions.BpeOps.symbolSum(col("tk"), rules.result()).as("ns"))
         .groupBy("source")

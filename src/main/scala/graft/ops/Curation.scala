@@ -34,14 +34,6 @@ import graft.{Q, Tables}
   */
 object Curation {
 
-  /** Lowercased whitespace tokens — the house convention (explicit class,
-    * see TextOps.tokens). */
-  private def toks(c: Column): Column =
-    split(trim(lower(c)), "[ \\t\\n\\f\\r]+")
-
-  private val duckToks =
-    "string_split_regex(trim(lower(text)), '[ \\t\\n\\f\\r]+')"
-
   /** BIGINT → DECIMAL(19,0) (overflow-rule promotion; products land in
     * DECIMAL(38,0) exactly). */
   private def dec(x: Column): Column = x.cast("decimal(19,0)")
@@ -120,7 +112,7 @@ object Curation {
     // visible; the firewall (q92) stays at 8 where a hit is conclusive.
     // Benchmark grams broadcast; hit pairs are near-zero cardinality.
     Q("q317_contamination_report",
-      s"""WITH t AS (SELECT doc_id, $duckToks AS w FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${TextOps.duckTokens} AS w FROM documents),
         |g4 AS (
         |  SELECT DISTINCT doc_id, g FROM (
         |    SELECT doc_id,
@@ -138,7 +130,7 @@ object Curation {
         |       CAST(sum(shared) AS BIGINT) AS n_shared_grams,
         |       CAST(max(shared) AS BIGINT) AS worst_overlap
         |FROM hits GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val w = toks(col("text"))
+      val w = TextOps.tokens(col("text"))
       // Probe-side corpus scan IS the whole cost of this query (the
       // bench side broadcasts), so the scan is kept to ONE tokenizer
       // evaluation (round-14 profile at sf3: tokenize 5.6 s of the 15 s
@@ -193,7 +185,7 @@ object Curation {
     // accepts strictly and the scan is total.
     Q("q318_epoch_plan",
       s"""WITH t AS (
-        |  SELECT source, lang, len($duckToks) AS ntok FROM documents),
+        |  SELECT source, lang, len(${TextOps.duckTokens}) AS ntok FROM documents),
         |d AS (SELECT source, lang, CAST(sum(ntok) AS BIGINT) AS avail
         |      FROM t GROUP BY 1, 2),
         |g AS (SELECT count(*) AS m, (sum(avail) * 3) // 2 AS target FROM d),
@@ -219,7 +211,7 @@ object Curation {
       import org.apache.spark.sql.expressions.Window
       val av = Tables.documents(s, d)
         .select(col("source"), col("lang"),
-          size(toks(col("text"))).cast("long").as("ntok"))
+          size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
         .groupBy(col("source"), col("lang")).agg(sum(col("ntok")).as("avail"))
       val g = av.agg(count(lit(1)).as("m"),
         Ranks.intDiv(sum(col("avail")) * 3, lit(2)).as("target"))
@@ -257,7 +249,7 @@ object Curation {
     // overflows BIGINT).
     Q("q319_seqlen_histogram",
       s"""WITH t AS (
-        |  SELECT source, len($duckToks) AS ntok FROM documents),
+        |  SELECT source, len(${TextOps.duckTokens}) AS ntok FROM documents),
         |b AS (
         |  SELECT source, (ntok // 16) * 16 AS bucket_lo,
         |         CAST(count(*) AS BIGINT) AS n_docs,
@@ -275,7 +267,7 @@ object Curation {
         |FROM b JOIN s USING (source) ORDER BY source, bucket_lo""".stripMargin) {
       (s, d) =>
       val t = Tables.documents(s, d)
-        .select(col("source"), size(toks(col("text"))).cast("long").as("ntok"))
+        .select(col("source"), size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
       val b = t.groupBy(col("source"),
           (Ranks.intDiv(col("ntok"), lit(16L)) * 16).as("bucket_lo"))
         .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("tok_sum"))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * are null-free), so the DuckDB oracle can verify fill semantics exactly.
   * Exact `percentile` is used in oracle-checked paths; the GK-sketch
   * `percentile_approx` (what the reference calls) lives in
-  * pipeline.Etl.fillMedian where cross-engine hashing doesn't apply. */
+  * pipeline.Etl.impute where cross-engine hashing doesn't apply. */
 object Imputation {
 
   val queries: Seq[Q] = Seq(

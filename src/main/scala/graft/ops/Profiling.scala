@@ -30,17 +30,11 @@ import graft.Ckpt._
   */
 object Profiling {
 
-  /** Whitespace tokens, lowercased — the q135/q30 convention. */
-  private def toks(c: Column): Column = split(trim(lower(c)), "[ \\t\\n\\f\\r]+")
-
   /** Adjacent-token bigrams "a b" from a token array (empty-safe). */
-  private def bigrams(a: Column): Column =
+  private[graft] def bigrams(a: Column): Column =
     zip_with(slice(a, lit(1), greatest(size(a) - 1, lit(0))),
       slice(a, lit(2), greatest(size(a) - 1, lit(0))),
       (x, y) => concat_ws(" ", x, y))
-
-  /** DuckDB side of the same tokenize (shared with q135's oracle). */
-  private val duckToks = "string_split_regex(trim(lower(text)), '[ \\t\\n\\f\\r]+')"
 
   val queries: Seq[Q] = Seq(
 
@@ -120,7 +114,7 @@ object Profiling {
     // engines: ln((c_ab/Tb) / ((c_a/Tu) * (c_b/Tu))).
     Q("q139_pmi_collocations",
       s"""WITH t AS (
-        |  SELECT doc_id, $duckToks AS a FROM documents),
+        |  SELECT doc_id, ${TextOps.duckTokens} AS a FROM documents),
         |u AS (
         |  SELECT unnest(a) AS tok FROM t),
         |uc AS (SELECT tok, count(*) AS c FROM u WHERE tok <> '' GROUP BY 1),
@@ -142,7 +136,7 @@ object Profiling {
         |JOIN uc cb ON cb.tok = string_split(k.bg, ' ')[2]
         |ORDER BY c_ab DESC, bg""".stripMargin) { (s, d) =>
       val t = Tables.documents(s, d)
-        .select(col("doc_id"), toks(col("text")).as("a"))
+        .select(col("doc_id"), TextOps.tokens(col("text")).as("a"))
         .eagerCkpt
       val uc = t.select(explode(col("a")).as("tok"))
         .filter(col("tok") =!= "")
@@ -195,7 +189,7 @@ object Profiling {
     // the q135 topology with a two-term mixture.
     Q("q141_bigram_lm",
       s"""WITH t AS (
-        |  SELECT doc_id, $duckToks AS a FROM documents),
+        |  SELECT doc_id, ${TextOps.duckTokens} AS a FROM documents),
         |u AS (SELECT unnest(a) AS tok FROM t),
         |uc AS (SELECT tok, count(*) AS c FROM u WHERE tok <> '' GROUP BY 1),
         |ut AS (SELECT CAST(sum(c) AS BIGINT) AS tu FROM uc),
@@ -215,7 +209,7 @@ object Profiling {
         |CROSS JOIN ut
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
       val t = Tables.documents(s, d)
-        .select(col("doc_id"), toks(col("text")).as("a"))
+        .select(col("doc_id"), TextOps.tokens(col("text")).as("a"))
         .eagerCkpt
       val uc = t.select(explode(col("a")).as("tok"))
         .filter(col("tok") =!= "")
@@ -323,7 +317,7 @@ object Profiling {
         .sortBy(_._1).map(t => (t._2, t._3)).toSeq
       Tables.documents(s, d)
         .select(col("source"),
-          filter(toks(col("text")), t => t =!= "").as("tk"))
+          filter(TextOps.tokens(col("text")), t => t =!= "").as("tk"))
         .select(col("source"), size(col("tk")).as("nt"),
           graft.functions.BpeOps.symbolSum(col("tk"), rules).as("ns"))
         .groupBy("source")
@@ -1053,7 +1047,7 @@ object Profiling {
   private[graft] def bpeMergesImpl(s: SparkSession, d: String,
       merges: Int, localMaxTypes: Long): DataFrame = {
     val words = Tables.documents(s, d)
-      .select(explode(toks(col("text"))).as("tok"))
+      .select(explode(TextOps.tokens(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy("tok").agg(count(lit(1)).as("freq"))
       .select(col("freq"),
@@ -1143,7 +1137,7 @@ object Profiling {
     val head =
       s"""WITH w AS MATERIALIZED (
          |  SELECT tok, count(*) AS freq FROM (
-         |    SELECT unnest($duckToks) AS tok FROM documents)
+         |    SELECT unnest(${TextOps.duckTokens}) AS tok FROM documents)
          |  WHERE tok <> '' GROUP BY 1),
          |v0 AS MATERIALIZED (
          |  SELECT freq,
@@ -1212,7 +1206,7 @@ object Profiling {
          |  SELECT
          |$ruleCols),
          |dd AS (
-         |  SELECT source, list_filter($duckToks, t -> t <> '') AS tk, m.*
+         |  SELECT source, list_filter(${TextOps.duckTokens}, t -> t <> '') AS tk, m.*
          |  FROM documents CROSS JOIN m)
          |SELECT source, count(*) AS n_docs,
          |       CAST(sum(len(tk)) AS BIGINT) AS n_tokens,

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.functions.CaseMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -338,7 +339,7 @@ object Relational {
         |FROM nation ORDER BY n_name""".stripMargin) { (s, d) =>
       Tables.nation(s, d)
         .select(col("n_name"),
-          lower(col("n_name")).as("lo"), upper(col("n_name")).as("up"),
+          CaseMap.lower(col("n_name")).as("lo"), CaseMap.upper(col("n_name")).as("up"),
           substring(col("n_name"), 1, 6).as("pre"),
           lpad(col("n_nationkey").cast("string"), 4, "0").as("padded"),
           // literal replace, matching the oracle's replace(): regexp_replace

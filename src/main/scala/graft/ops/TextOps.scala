@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.functions.CaseMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Ckpt._
@@ -25,8 +26,12 @@ object TextOps {
     * depending on engine AND version, silently diverging token counts,
     * shingles, and all downstream dedup. [ \t\n\f\r] is the house
     * convention (VT is a token character); every oracle spells the same
-    * explicit class, and TextOpsSpec pins the VT case. */
-  def tokens(c: Column): Column = split(trim(lower(c)), "[ \\t\\n\\f\\r]+")
+    * explicit class, and TextOpsSpec pins the VT case. [[CaseMap]] lowers
+    * with Spark's bytes minus its cold-start ICU title-case table. */
+  def tokens(c: Column): Column = split(trim(CaseMap.lower(c)), "[ \\t\\n\\f\\r]+")
+
+  /** DuckDB spelling of [[tokens]] over the `text` column, for oracles. */
+  val duckTokens = "string_split_regex(trim(lower(text)), '[ \\t\\n\\f\\r]+')"
 
   /** First 16 bits of md5(doc_id) as 4 lowercase hex chars — the shared
     * RNG-free sampling device of q103 (downsample) and q108 (upsample).
@@ -366,7 +371,7 @@ object TextOps {
 
   private def duckStopHits(words: Seq[String]): String = {
     val list = words.map(w => s"'$w'").mkString("[", ", ", "]")
-    s"len(list_filter(string_split_regex(trim(lower(text)), '[ \\t\\n\\f\\r]+'), x -> list_contains($list, x)))"
+    s"len(list_filter($duckTokens, x -> list_contains($list, x)))"
   }
 
   /** DuckDB text of the q28 language classifier (a CASE expression over
@@ -421,7 +426,7 @@ object TextOps {
         .agg(
           count(lit(1)).as("n_docs"),
           countDistinct(col("text")).as("n_unique"),
-          countDistinct(trim(lower(col("text")))).as("n_unique_norm"))
+          countDistinct(trim(CaseMap.lower(col("text")))).as("n_unique_norm"))
         .orderBy(col("source"))
     },
 
@@ -513,7 +518,7 @@ object TextOps {
         |       count(*) AS n_docs
         |FROM documents""".stripMargin) { (s, d) =>
       Tables.documents(s, d).agg(
-        countDistinct(xxhash64(trim(lower(regexp_replace(col("text"), "[ \\t\\n\\f\\r]+", " ")))))
+        countDistinct(xxhash64(trim(CaseMap.lower(regexp_replace(col("text"), "[ \\t\\n\\f\\r]+", " ")))))
           .as("n_fingerprints"),
         count(lit(1)).as("n_docs"))
     },

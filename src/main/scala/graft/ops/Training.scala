@@ -33,10 +33,6 @@ import graft.Ckpt._
   */
 object Training {
 
-  /** Lowercased whitespace tokens — the q28/q29/q135 house convention. */
-  private def toks(c: Column): Column =
-    split(trim(lower(c)), "[ \\t\\n\\f\\r]+")
-
   /** English stopword heads (the q28 lang-id "en" list): the density
     * signal q299 ranks by — natural running text hits these constantly,
     * boilerplate/code/noise barely at all. */
@@ -62,8 +58,7 @@ object Training {
   private def fdiv(x: Column, y: Column): Column =
     ((x - pmod(x, y)) / y).cast("long")
 
-  /** DuckDB spellings of the same tokenize + stopword hit count. */
-  private val duckToks = "string_split_regex(trim(lower(text)), '[ \\t\\n\\f\\r]+')"
+  /** DuckDB spelling of the stopword list. */
   private val duckStopList =
     stopEn.map(w => s"'$w'").mkString("[", ", ", "]")
 
@@ -142,7 +137,7 @@ object Training {
         |  SELECT doc_id, lang, len(w) AS ntok,
         |         (len(list_filter(w, x -> list_contains($duckStopList, x)))
         |          * 1000) // len(w) AS score_milli
-        |  FROM (SELECT doc_id, lang, $duckToks AS w FROM documents)),
+        |  FROM (SELECT doc_id, lang, ${TextOps.duckTokens} AS w FROM documents)),
         |b AS (SELECT sum(ntok) // 2 AS budget FROM sc),
         |c AS (
         |  SELECT lang, ntok,
@@ -152,7 +147,7 @@ object Training {
         |       CAST(sum(ntok) AS BIGINT) AS tok_sel
         |FROM c, b WHERE cum <= budget
         |GROUP BY lang ORDER BY lang""".stripMargin) { (s, d) =>
-      val t = toks(col("text"))
+      val t = TextOps.tokens(col("text"))
       val sc = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), size(t).cast("long").as("ntok"),
           Ranks.intDiv(stopHits(t) * 1000, size(t)).as("score_milli"))
@@ -224,7 +219,7 @@ object Training {
         |FROM o, lvl ORDER BY source, lang""".stripMargin) { (s, d) =>
       val av = Tables.documents(s, d)
         .select(col("source"), col("lang"),
-          size(toks(col("text"))).cast("long").as("ntok"))
+          size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
         .groupBy(col("source"), col("lang")).agg(sum(col("ntok")).as("avail"))
       val g = av.agg(count(lit(1)).as("m"),
         Ranks.intDiv(sum(col("avail")) * 3, lit(5)).as("budget"))
@@ -399,7 +394,7 @@ object Training {
         |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       val sc = Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
-          size(toks(col("text"))).cast("long").as("ntok"))
+          size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
       val g = sc.agg(count(lit(1)).as("nn"))
       Ranks.globalIndex(sc, 32, col("ntok"), col("doc_id"))
         .crossJoin(broadcast(g))
@@ -431,7 +426,7 @@ object Training {
         |  SELECT (lang = 'en') AS a,
         |         (len(list_filter(w, x -> list_contains($duckStopList, x)))
         |          * 1000) // len(w) >= 60 AS b
-        |  FROM (SELECT lang, $duckToks AS w FROM documents)),
+        |  FROM (SELECT lang, ${TextOps.duckTokens} AS w FROM documents)),
         |c AS (
         |  SELECT
         |    sum(CASE WHEN a AND b THEN 1 ELSE 0 END) AS tt,
@@ -456,7 +451,7 @@ object Training {
         |                 // (n * n - pe_num) END AS BIGINT)
         |         AS kappa_p1_micro
         |FROM m""".stripMargin) { (s, d) =>
-      val t = toks(col("text"))
+      val t = TextOps.tokens(col("text"))
       val lab = Tables.documents(s, d)
         .select((col("lang") === "en").as("a"),
           (Ranks.intDiv(stopHits(t) * 1000, size(t)) >= 60).as("b"))
@@ -525,7 +520,7 @@ object Training {
         |FROM p JOIN s ON p.source = s.source CROSS JOIN g
         |ORDER BY 1""".stripMargin) { (s, d) =>
       val st = Tables.documents(s, d)
-        .select(col("source"), explode(toks(col("text"))).as("token"))
+        .select(col("source"), explode(TextOps.tokens(col("text"))).as("token"))
         .groupBy(col("source"), col("token"))
         .agg(count(lit(1)).as("c"))
         .eagerCkpt // three consumers share the one reduction
@@ -585,7 +580,7 @@ object Training {
         |         AS coverage_micro
         |FROM c CROSS JOIN g ORDER BY k""".stripMargin) { (s, d) =>
       val v = Tables.documents(s, d)
-        .select(explode(toks(col("text"))).as("token"))
+        .select(explode(TextOps.tokens(col("text"))).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("ct"))
       val parted = v.repartitionByRange(32, col("ct").desc, col("token"))
         .withColumn("pid", spark_partition_id())
@@ -657,7 +652,7 @@ object Training {
         |         AS BIGINT) AS trunc_share_micro
         |FROM p ORDER BY l""".stripMargin) { (s, d) =>
       val t = Tables.documents(s, d)
-        .select(size(toks(col("text"))).cast("long").as("ntok"))
+        .select(size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
       val ls = s.range(1).select(
         explode(array(lit(128), lit(512), lit(2048))).as("l"))
       t.crossJoin(broadcast(ls))
@@ -730,7 +725,7 @@ object Training {
       // varargs) rather than array_join-ing a gram string per window —
       // tens of millions of string builds at sf3 for hash input only
       val g = Tables.documents(s, d)
-        .select(col("source"), toks(col("text")).as("w"))
+        .select(col("source"), TextOps.tokens(col("text")).as("w"))
         .select(col("source"), explode(expr(
           "CASE WHEN size(w) >= 8 THEN transform(sequence(1, size(w) - 7), " +
             "i -> xxhash64(element_at(w, i), element_at(w, i + 1), " +
@@ -771,7 +766,7 @@ object Training {
     // inside 2⁶³ (constant multiplier, not an SF×SF product).
     Q("q309_quality_funnel",
       s"""WITH t AS (
-        |  SELECT $duckToks AS w FROM documents),
+        |  SELECT ${TextOps.duckTokens} AS w FROM documents),
         |s AS (
         |  SELECT len(w) AS nt, len(list_distinct(w)) AS nd,
         |         len(list_filter(w, x -> list_contains($duckStopList, x)))
@@ -813,7 +808,7 @@ object Training {
         |         * 1000000 // n AS BIGINT) AS drop_share_micro
         |FROM ks CROSS JOIN a ORDER BY k""".stripMargin) { (s, d) =>
       val sig = Tables.documents(s, d)
-        .select(toks(col("text")).as("w"))
+        .select(TextOps.tokens(col("text")).as("w"))
         .select(size(col("w")).cast("long").as("nt"),
           size(array_distinct(col("w"))).cast("long").as("nd"),
           stopHits(col("w")).as("sh"))
@@ -885,7 +880,7 @@ object Training {
         .select(
           substring(md5(col("doc_id").cast("string").cast("binary")), 1, 3)
             .as("h3"),
-          size(toks(col("text"))).cast("long").as("ntok"))
+          size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
         .groupBy(col("h3")).agg(sum(col("ntok")).as("mass"))
         .eagerCkpt // ≤4096 rows; three rollups share it
       val perS = Seq(16 -> 1, 256 -> 2, 4096 -> 3).map { case (ns, p) =>
@@ -938,7 +933,7 @@ object Training {
         |         * 1000000 // count(*) AS BIGINT) AS hapax_share_micro
         |FROM v GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       Tables.documents(s, d)
-        .select(col("source"), explode(toks(col("text"))).as("token"))
+        .select(col("source"), explode(TextOps.tokens(col("text"))).as("token"))
         .groupBy(col("source"), col("token"))
         .agg(count(lit(1)).as("ct"))
         .groupBy(col("source"))

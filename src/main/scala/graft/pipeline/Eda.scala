@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
@@ -28,23 +28,19 @@ object Eda {
       min(col(c)).as(s"${c}_min"),
       max(col(c)).as(s"${c}_max"))): _*)
 
-  /** Exact quartiles for one column; [q1, median, q3]. Sort-based like
-    * iqrOutliers below — the built-in exact percentile aggregate is the
-    * GC-bound value-keyed-hash-map shape exactQuantiles documents
-    * (measured 16–57 s at sf0.1 on this very column). */
-  def quartiles(df: DataFrame, c: String): DataFrame = {
-    val Seq(q1, med, q3) = exactQuantiles(df, c, Seq(0.25, 0.50, 0.75))
-    df.sparkSession.range(1).select(
+  /** The quartile table of one column from its [q1, median, q3], which the
+    * caller computes once (sort-based [[exactQuantiles]]) and shares with
+    * [[iqrOutliers]]. */
+  def quartiles(spark: SparkSession, q: Seq[Double]): DataFrame = {
+    val Seq(q1, med, q3) = q
+    spark.range(1).select(
       lit(q1).as("q1"), lit(med).as("median"), lit(q3).as("q3"))
   }
 
-  /** IQR outlier bounds + count (eda.py:77-85), two passes, no collect of
-    * data rows (only the two scalar bounds cross to the driver plan). */
-  def iqrOutliers(df: DataFrame, c: String): DataFrame = {
-    // driver-collected bounds → literal predicate → parquet pushdown; and
-    // sort-based quantiles (the percentile aggregate is GC-bound on
-    // high-cardinality columns — see exactQuantiles)
-    val Seq(q1, q3) = exactQuantiles(df, c, Seq(0.25, 0.75))
+  /** IQR outlier count (eda.py:77-85) from the column's quartiles: only
+    * the two scalar bounds cross to the driver plan, as a literal predicate
+    * that reaches the parquet pushdown; no data rows are collected. */
+  def iqrOutliers(df: DataFrame, c: String, q1: Double, q3: Double): DataFrame = {
     val (lo, hi) = (q1 - 1.5 * (q3 - q1), q3 + 1.5 * (q3 - q1))
     df.filter(col(c) < lo || col(c) > hi)
       .agg(count(lit(1)).as("n_outliers"))

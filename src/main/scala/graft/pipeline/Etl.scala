@@ -9,9 +9,9 @@ import org.apache.spark.sql.types.FloatType
   * composable, schema-generic DataFrame transforms.
   *
   * Differences from the reference, by design (SURVEY.md §4):
-  *  - `fillMedian` computes ALL medians in ONE distributed pass over a cached
-  *    input instead of re-materializing the join once per column
-  *    (etl.py:17-22 recomputes the 2-join plan 11×).
+  *  - `impute` computes ALL medians and modes in ONE distributed pass over a
+  *    cached input instead of re-materializing the join once per column
+  *    (etl.py:17-32 recomputes the 2-join plan 11×).
   *  - No coalesce(1) anywhere (etl.py:123 collapses write parallelism).
   *  - Explicit schemas, not inferSchema (etl.py:86-89 costs a full extra
   *    read per CSV).
@@ -27,35 +27,20 @@ object Etl {
         when(col(c) === "NA", lit(null)).otherwise(col(c)).cast(FloatType))
     }
 
-  /** Median imputation (etl.py:17-22), all columns in a single aggregation
-    * pass (percentile_approx, the same Greenwald–Khanna sketch the reference
-    * uses via approxQuantile with relativeError 0.01 ⇒ accuracy 100). */
-  def fillMedian(df: DataFrame, cols: Seq[String]): DataFrame = {
+  /** Median + mode imputation (etl.py:17-32) from ONE aggregation job:
+    * `percentile_approx(c, 0.5, 100)` per numeric column (the reference's
+    * approxQuantile at relativeError 0.01) and `mode(c, deterministic =
+    * true)` per categorical one (most frequent non-null value, ties to the
+    * lowest: the reference's count-desc/value-asc rule). An all-null column
+    * has no statistic and keeps its nulls. */
+  def impute(df: DataFrame, medianCols: Seq[String], modeCols: Seq[String]): DataFrame = {
+    val cols = medianCols ++ modeCols
     if (cols.isEmpty) return df
-    val medians = df.select(cols.map(c =>
-      percentile_approx(col(c), lit(0.5), lit(100)).as(c)): _*).head()
+    val stats = df.select(
+      medianCols.map(c => percentile_approx(col(c), lit(0.5), lit(100)).as(c)) ++
+        modeCols.map(c => mode(col(c), deterministic = true).as(c)): _*).head()
     val fill = cols.zipWithIndex.collect {
-      case (c, i) if !medians.isNullAt(i) => c -> medians.getAs[Any](i)
-    }.toMap
-    df.na.fill(fill)
-  }
-
-  /** Mode imputation (etl.py:25-32): per categorical column, most frequent
-    * non-null value (count desc, value asc tie-break) via TakeOrdered.
-    * The per-column mode jobs are independent reads of the SAME input
-    * (filling column A's nulls never changes column B's value counts), so
-    * they run overlapped (guide §2.6) and the fills apply afterwards in
-    * one na.fill — same result as the old sequential foldLeft. */
-  def fillMode(df: DataFrame, cols: Seq[String]): DataFrame = {
-    if (cols.isEmpty) return df
-    val tops = graft.Par.run(cols.map { c => () =>
-      df.filter(col(c).isNotNull)
-        .groupBy(col(c)).agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), asc(c))
-        .head(1)
-    })
-    val fill = cols.lazyZip(tops).collect {
-      case (c, top) if top.nonEmpty => c -> top(0).getAs[Any](0)
+      case (c, i) if !stats.isNullAt(i) => c -> stats.get(i)
     }.toMap
     if (fill.isEmpty) df else df.na.fill(fill)
   }

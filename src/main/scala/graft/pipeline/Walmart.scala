@@ -69,16 +69,15 @@ object Walmart {
         // VectorAssembler (handleInvalid=error) and throw at the model stage
         val numeric = (naCols ++ Seq("Fuel_Price", "Temperature"))
           .filter(c => joined.columns.contains(c))
-        val imputed = Etl.fillMode(Etl.fillMedian(joined, numeric),
-          Seq("IsHoliday", "Type"))
+        val imputed = Etl.impute(joined, numeric, Seq("IsHoliday", "Type"))
         Etl.dateFeatures(imputed, "Date")
       } finally joined.unpersist(blocking = false)
     }
 
     // the train-side and test-side merges are independent lineages whose
-    // imputation statistics (median/mode) are driver actions — overlap the
-    // two sides (guide §2.6) so one side's quantile/mode jobs back-fill
-    // the other's; each returned frame is identical to the serial build
+    // imputation statistics are driver actions — overlap the two sides
+    // (guide §2.6) so one side's statistics job back-fills the other's;
+    // each returned frame is identical to the serial build
     val Seq(mergedTrain, mergedTest) = graft.Par.run(Seq(
       () => merge(train.na.drop(Seq("Weekly_Sales"))),
       () => merge(test)))
@@ -91,15 +90,20 @@ object Walmart {
     * distributed DataFrames (plots are presentation, not computation).
     * Returned LAZILY (round 18): quartiles/outliers run their
     * exact-quantile jobs at DataFrame-construction time, so building the
-    * list eagerly would serialize work runEda's overlap exists to hide. */
-  def eda(train: DataFrame): Seq[(String, () => DataFrame)] = Seq(
-    "null_counts" -> (() => Eda.nullCounts(train)),
-    "describe" -> (() => Eda.describe(train,
-      Seq("Weekly_Sales", "Temperature", "Fuel_Price"))),
-    "quartiles" -> (() => Eda.quartiles(train, "Weekly_Sales")),
-    "outliers" -> (() => Eda.iqrOutliers(train, "Weekly_Sales")),
-    "corr_vs_label" -> (() => Eda.corrVsLabel(train, "Weekly_Sales")),
-    "top10_stores" -> (() => Eda.groupTopK(train, "Store", "Weekly_Sales", 10)))
+    * list eagerly would serialize work runEda's overlap exists to hide.
+    * The two share one sort: from concurrent Par.run threads both would
+    * miss Eda's quantile memo, so the lazy val makes one wait instead. */
+  def eda(train: DataFrame): Seq[(String, () => DataFrame)] = {
+    lazy val q = Eda.exactQuantiles(train, "Weekly_Sales", Seq(0.25, 0.50, 0.75))
+    Seq(
+      "null_counts" -> (() => Eda.nullCounts(train)),
+      "describe" -> (() => Eda.describe(train,
+        Seq("Weekly_Sales", "Temperature", "Fuel_Price"))),
+      "quartiles" -> (() => Eda.quartiles(train.sparkSession, q)),
+      "outliers" -> (() => Eda.iqrOutliers(train, "Weekly_Sales", q(0), q(2))),
+      "corr_vs_label" -> (() => Eda.corrVsLabel(train, "Weekly_Sales")),
+      "top10_stores" -> (() => Eda.groupTopK(train, "Store", "Weekly_Sales", 10)))
+  }
 
   /** Model (model.py): RF pipeline on the merged train set; lag columns are
     * backfilled with 0 on test (model.py:126). Returns (validation scored,

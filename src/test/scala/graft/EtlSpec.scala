@@ -19,20 +19,20 @@ class EtlSpec extends SparkSpec {
     assert(out(2).getFloat(0) == 3.0f && out(2).getFloat(1) == 4.5f)
   }
 
-  test("fillMedian fills only nulls; idempotent on a null-free frame") {
+  test("impute: median fills only nulls; idempotent on a null-free frame") {
     val df = Seq[(java.lang.Double, Int)]((1.0, 1), (3.0, 2), (null, 3), (100.0, 4))
       .toDF("x", "id")
-    val filled = Etl.fillMedian(df, Seq("x")).orderBy("id").collect()
+    val filled = Etl.impute(df, Seq("x"), Nil).orderBy("id").collect()
     assert(filled.map(_.getDouble(0)).take(2).toSeq == Seq(1.0, 3.0)) // untouched
     assert(filled(2).getDouble(0) == 3.0) // GK(0.01) median of {1,3,100}
-    val again = Etl.fillMedian(Etl.fillMedian(df, Seq("x")), Seq("x"))
+    val again = Etl.impute(Etl.impute(df, Seq("x"), Nil), Seq("x"), Nil)
       .orderBy("id").collect()
     assert(again.map(_.getDouble(0)).sameElements(filled.map(_.getDouble(0))))
   }
 
-  test("fillMode: most frequent value wins, value-asc tie-break") {
+  test("impute: most frequent value wins, value-asc tie-break") {
     val df = Seq(Some("B"), Some("B"), Some("A"), Some("A"), None).toDF("Type")
-    val out = Etl.fillMode(df, Seq("Type")).collect().map(_.getString(0))
+    val out = Etl.impute(df, Nil, Seq("Type")).collect().map(_.getString(0))
     assert(out.count(_ == "A") == 3) // tie A/B at 2 -> "A" by asc tie-break
   }
 

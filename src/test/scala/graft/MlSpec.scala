@@ -5,6 +5,7 @@ import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.tuning.CrossValidatorModel
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class MlSpec extends SparkSpec {
   import spark.implicits._
@@ -154,5 +155,51 @@ class MlSpec extends SparkSpec {
       "conformal quantile must be positive and finite")
     assert(r.getAs[Boolean]("coverage_ok"),
       "test coverage left the [0.84, 0.98] band around 1 - alpha")
+  }
+
+  test("Ml.fittedMemo is process-local: heap entries only, nothing written to disk") {
+    import java.nio.file.{FileVisitResult, Path, Paths, SimpleFileVisitor}
+    import java.nio.file.attribute.BasicFileAttributes
+    // every regular file under `root`; vanished/unreadable entries (other
+    // processes share the temp dir) are skipped, not fatal
+    def files(root: Path): Set[Path] = {
+      val out = Set.newBuilder[Path]
+      if (Files.isDirectory(root)) Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+        override def visitFile(f: Path, a: BasicFileAttributes) = {
+          if (a.isRegularFile) out += f
+          FileVisitResult.CONTINUE
+        }
+        override def visitFileFailed(f: Path, e: java.io.IOException) =
+          FileVisitResult.CONTINUE
+      })
+      out.result()
+    }
+    val warehouse = Paths.get(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    // Spark's local-dir resolution order for a local-mode driver
+    val localRoots = sys.env.get("SPARK_LOCAL_DIRS")
+      .orElse(spark.sparkContext.getConf.getOption("spark.local.dir"))
+      .getOrElse(System.getProperty("java.io.tmpdir"))
+      .split(",").toSeq.map(Paths.get(_))
+    def snapshot() = (files(warehouse), localRoots.flatMap(files).toSet)
+
+    graft.ops.Ml.fittedMemo.clear()
+    val (wh0, local0) = snapshot()
+    SparkEntry.queries("q40_rf_regression")(spark, sf0001).collect()
+    val (wh1, local1) = snapshot()
+
+    // in-heap: exactly q40's entry, keyed by corpus dir + input signature,
+    // holding the live fitted chain (no path, no reload)
+    val key = (sf0001, Eda.inputSignature(Tables.lineitem(spark, sf0001)))
+    assert(graft.ops.Ml.fittedMemo.keySet == Set(key))
+    assert(graft.ops.Ml.fittedMemo(key).isInstanceOf[PipelineModel])
+    // nothing persisted: the warehouse gains no file, and no ML persistence
+    // layout (metadata/, stages/) appears under the local dirs — shuffle
+    // and block files from the fit itself are expected there
+    assert(wh1 == wh0, s"warehouse gained files: ${(wh1 -- wh0).take(5)}")
+    val persisted = (local1 -- local0).filter(p =>
+      p.iterator.asScala.exists(seg => seg.toString == "metadata" || seg.toString == "stages"))
+    assert(persisted.isEmpty, s"model files written under local dirs: ${persisted.take(5)}")
+    graft.ops.Ml.fittedMemo.clear()
   }
 }

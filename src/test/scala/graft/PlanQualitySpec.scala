@@ -507,4 +507,56 @@ class PlanQualitySpec extends SparkSpec {
     // looking (e.g. an API change hid WindowExec), not that the repo is clean
     assert(seen > 0, "sweep saw no global WindowExec at all — detector broken?")
   }
+
+  test("text queries never plan Spark's Lower/Upper/InitCap (no cold ICU title-case table)") {
+    import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    import scala.jdk.CollectionConverters._
+    // Spark's Lower/Upper/InitCap evaluate through CollationAwareUTF8String,
+    // whose static initializer title-cases every code point (~3 GB
+    // allocated, ~1.6 s on one task thread, once per JVM);
+    // graft.functions.CaseMap produces the same bytes without it. The spy
+    // rule sees EVERY plan the optimizer runs while a query builds, so the
+    // plans behind eager checkpoints (which the final frame only shows as
+    // an RDD scan) are covered too.
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    object CaseNodeSpy extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        plan.foreachWithSubqueries(_.expressions.foreach(_.foreach {
+          case e @ (_: Lower | _: Upper | _: InitCap) => seen.add(e.toString)
+          case _ =>
+        }))
+        plan
+      }
+    }
+    def caseNodes(build: => org.apache.spark.sql.DataFrame): Seq[String] = {
+      seen.clear()
+      val prev = spark.experimental.extraOptimizations
+      spark.experimental.extraOptimizations = prev :+ CaseNodeSpy
+      try build.queryExecution.optimizedPlan
+      finally spark.experimental.extraOptimizations = prev
+      seen.asScala.toSeq
+    }
+    // vacuity guard: the spy does see Spark's own case mapping
+    import org.apache.spark.sql.functions.{col, lower}
+    assert(caseNodes(spark.range(3).select(lower(col("id").cast("string")))).nonEmpty,
+      "spy rule saw no Lower in a plain lower() plan — detector broken?")
+    // every query whose case mapping moved to the kernel: q26/q29/q31 and
+    // the TextOps.tokens users that had private tokenizer copies
+    // (Curation, Profiling, Training), q54's lower/upper
+    val touched = Seq("q26_dedup_exact", "q29_quality_score", "q31_fingerprint",
+      "q54_string_funcs", "q139_pmi_collocations", "q141_bigram_lm",
+      "q142_bpe_merges", "q155_bpe_encode", "q299_token_budget_select",
+      "q300_mixture_waterfill", "q303_curriculum_pacing", "q304_kappa_agreement",
+      "q305_source_token_tvd", "q306_vocab_truncation", "q307_packing_forecast",
+      "q308_ngram_dup_mass", "q309_quality_funnel", "q311_shard_skew",
+      "q312_good_turing", "q317_contamination_report", "q318_epoch_plan",
+      "q319_seqlen_histogram")
+    val offenders = touched.flatMap { name =>
+      val nodes = caseNodes(SparkEntry.queries(name)(spark, sf0001))
+      if (nodes.nonEmpty) Some(s"$name: ${nodes.distinct.mkString(", ")}") else None
+    }
+    assert(offenders.isEmpty, s"Spark case-mapping nodes in: ${offenders.mkString("; ")}")
+  }
 }
