@@ -21,37 +21,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Scale experiments only (SPARK_GRAFT_INIT_PARTITIONS): start AQE
-    // from more reduce partitions than cores and let coalescing shrink
-    // the small stages — at 10×/30× corpora the fixed cpus-wide shuffle
-    // otherwise packs 3× the rows per partition (sort spill + GC, the
-    // superlinear term of the pair-stream family). Defaults to `cpus`,
-    // so the driver's board config is byte-identical to prior rounds.
-    val initParts = sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // compressed parquet bytes understate exploded-text work ~50x: the
-      // 4MB default openCostInBytes floors the scan split target and left
-      // an 18MB documents file at FIVE splits, so the shingle explode and
-      // its eager checkpoint materialized 5-partition RDDs that throttled
-      // every downstream map stage to 5-way parallelism on a 32-core box
-      // (measured: q27-direct sf3 58s at 5 splits vs 43s on 3.3x MORE
-      // data at 15 splits). 256KB lets files.minPartitionNum (defaults to
-      // the core count) win; big tables already split past openCost.
-      .config("spark.sql.files.openCostInBytes", (256 * 1024).toString)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initParts)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // library init: SQL functions + the injected plan rules (incl.
-    // honest checkpoint statistics) on this live session
-    GraftExtensions.register(spark)
-    // payload corpora (100 KB+ rows): bound the vectorized reader's batch
-    // before the first scan — footer-only, no-op on narrow corpora
-    Tables.tuneVectorBatch(spark, sfDir)
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.local(cpus, Some(sfDir))
     // Contention tripwire: a bench sharing the box with another heavy JVM
     // measures the weather, not the code (BENCH_r10 was contaminated by a
     // stray 32-thread sf1 run). Warn loudly when the 1-min load average
@@ -59,58 +30,11 @@ object Bench {
     try {
       val load1 = scala.io.Source.fromFile("/proc/loadavg").mkString
         .split("\\s+")(0).toDouble
-      if (load1 > cpus.toInt / 2.0)
+      if (load1 > cpus / 2.0)
         System.err.println(s"[bench] WARNING: 1-min load average $load1 at startup " +
           s"with local[$cpus] requested — results will reflect CPU contention, not code")
     } catch { case _: Throwable => () }
-    // Warm-up (uncounted): first query in a fresh JVM otherwise absorbs
-    // one-time costs — noop-sink init, codegen/JIT, parquet footer reads —
-    // that belong to the session, not that query. Warm against the BENCH
-    // sf dir (not sf0.001): q00 runs first in sorted order and was the
-    // only query paying the target dir's footer reads inside its timer.
-    ops.Relational.flagship(spark, sfDir).write.mode("overwrite").format("noop").save()
-    // Also warm every corpus table end-to-end (full column read, not just
-    // footers): the flagship only touches the TPC-H star, so the first
-    // documents/events/embeddings query otherwise pays that table's cold
-    // page-cache read + decompression inside its own timer (q26 absorbed
-    // ~20s of exactly this in two consecutive driver runs). The whole sf0.1
-    // corpus is ~17 MB — a one-shot uncounted scan.
-    Tables.names.foreach { t =>
-      Tables.load(spark, sfDir, t).write.mode("overwrite").format("noop").save()
-    }
-    // Same for MLlib: the first estimator fit in a JVM pays class loading,
-    // BLAS instance probing and tree/kmeans codegen that every later fit
-    // skips. A micro-fit on 64 in-memory rows (~2s) keeps that session cost
-    // out of whichever ML query happens to run first.
-    locally {
-      import org.apache.spark.sql.functions._
-      val tiny = spark.range(64).select(
-        col("id").cast("double").as("y"),
-        (col("id") % 3).cast("string").as("c"),
-        rand(7).as("x1"), rand(11).as("x2"))
-      graft.pipeline.Model.fitPredict(tiny, "y", Seq("c", "x1", "x2"),
-        numTrees = 2, maxDepth = 2)._2.unpersist(blocking = false)
-      val vecs = tiny.select(
-        org.apache.spark.ml.functions.array_to_vector(array(col("x1"), col("x2")))
-          .as("features"))
-      new org.apache.spark.ml.clustering.KMeans().setK(2).setSeed(1L).setMaxIter(2)
-        .fit(vecs).transform(vecs).write.mode("overwrite").format("noop").save()
-      spark.catalog.clearCache()
-    }
-    // And the streaming machinery: the first StreamingQuery in a JVM pays
-    // StreamExecution/state-store/memory-sink class loading and the
-    // micro-batch planner's first codegen — session costs the first
-    // streaming query (q76 in sorted order) otherwise absorbs. One windowed
-    // aggregate over the bench dir's events table (2 MB at sf0.1; the dir
-    // is the configurable source of truth, never a hardcoded path) replays
-    // the whole path uncounted.
-    locally {
-      import graft.streaming.EventStreams
-      EventStreams.runToMemory(spark,
-        EventStreams.tumblingDaily(EventStreams.readEvents(spark, sfDir)),
-        "bench_stream_warm")
-      spark.catalog.clearCache()
-    }
+    GraftSession.warmUp(spark, sfDir)
     // sorted: deterministic run order, comparable across rounds
     val errors = scala.collection.mutable.ListBuffer.empty[(String, String)]
     def timeOne(name: String,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev utility (round-9 scale smoke): synthesize an N×-replicated copy of
@@ -82,19 +82,7 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val (src, out, mult) = (args(0), args(1), args(2).toInt)
     require(mult >= 1)
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // getOrCreate SILENTLY ignores the builder configs when a session
-    // already exists (an sbt-console run would inherit that session's
-    // width/zone) — fail loudly instead of generating at the wrong config
-    require(spark.conf.get("spark.sql.session.timeZone") == "UTC" &&
-      spark.conf.get("spark.sql.shuffle.partitions") == "16",
-      "GenScale got a pre-existing SparkSession with different configs; " +
-        "run it in a fresh JVM (sbt runMain), not inside a live session")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     // one offset per key family, from the PARENT table's own max
     val offsets: Map[String, Long] = families.map { case (fam, (pt, pc)) =>
@@ -152,19 +140,7 @@ object GenScale {
             case _ => shifted
           }
         }.reduce(_ unionByName _)
-      // single part file, renamed into the `<table>.parquet` layout
-      val tmp = s"$out/_tmp_$t"
-      scaled.coalesce(1).write.mode("overwrite").parquet(tmp)
-      import scala.jdk.CollectionConverters._
-      // close the directory stream (fd leak otherwise — one per table)
-      val part = scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(tmp))) { st =>
-        st.iterator().asScala.filter(_.toString.endsWith(".parquet")).next()
-      }
-      java.nio.file.Files.move(part,
-        java.nio.file.Paths.get(s"$out/$t.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      graft.streaming.EventStreams.wipe(java.nio.file.Paths.get(tmp))
+      GenShape.writeTable(scaled, out, t)
       println(s"[genscale] $t x$mult -> $out/$t.parquet")
     }
     // FK spot-check: every edge's scaled orphan count must be exactly

@@ -2,7 +2,6 @@ package graft
 
 import graft.Ckpt._
 import graft.ops.TextOps
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility (VERDICT r14 directive 4): the committed COLD/WARM A/B for
   * the Σdf²/rows amplification probe, on the driver bench path's session
@@ -27,16 +26,7 @@ object ProbeAb {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/skew1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.openCostInBytes", (256 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-    Tables.tuneVectorBatch(spark, dir)
+    val spark = GraftSession.local(sfDir = Some(dir))
 
     def runs = graft.plans.AdaptivePlanRule.probeRuns.get()
     def nanos = graft.plans.AdaptivePlanRule.probeNanos.get()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Ckpt._
@@ -16,8 +16,7 @@ import graft.Ckpt._
   *  - ENCODE: per-type space-wrapped symbol string build (split + HOF
   *    filter + array_join) + repartition + eager checkpoint
   *  - PAIRS0: the one full pair-statistics pass (production: the
-  *    BpePairCounts typed aggregate; set SPARK_GRAFT_BPE_LEGACY=1 to also
-  *    time the r16 explode/groupBy form it replaced — the A/B)
+  *    BpePairCounts typed aggregate)
   *  - per merge k: ARGMAX (on the maintained pair table), HIT (contains
   *    filter + checkpoint), DELTA (bigram explode over hit words only,
   *    union-sum, checkpoint), VOCAB (full replace + checkpoint)
@@ -31,16 +30,7 @@ object ProbeBpe {
     val dir = args.headOption.getOrElse("/tmp/blob1")
     val merges = args.drop(1).find(a => a.nonEmpty && a.forall(_.isDigit))
       .map(_.toInt).getOrElse(6)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.openCostInBytes", (256 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-    Tables.tuneVectorBatch(spark, dir)
+    val spark = GraftSession.local(sfDir = Some(dir))
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()
@@ -92,14 +82,6 @@ object ProbeBpe {
         .repartition(spark.sparkContext.defaultParallelism).eagerCkpt
     }
 
-    // legacy declarative pair counting (the r16 shape): HOF bigrams +
-    // explode + hash agg — kept for the A/B against the aggregator
-    def pairsOfLegacy(df: DataFrame): DataFrame = df
-      .select(col("freq"), split(trim(col("s")), "  ").as("a"))
-      .filter(size(col("a")) > 1)
-      .select(col("freq"), explode(graft.ops.Profiling.bigrams(col("a"))).as("pair"))
-      .groupBy("pair").agg(sum(col("freq")).cast("long").as("c"))
-
     // production shape (Profiling.bpeMerges): one typed aggregate pass
     def pairsOf(df: DataFrame): DataFrame = {
       val pc = udaf(new graft.functions.BpePairCounts(),
@@ -110,9 +92,6 @@ object ProbeBpe {
         .select(explode(col("m")))
         .select(col("key").as("pair"), col("value").as("c"))
     }
-
-    if (sys.env.contains("SPARK_GRAFT_BPE_LEGACY"))
-      timed("PAIRS0-LEGACY")(pairsOfLegacy(words).eagerCkpt.count())
 
     var counts = timed("PAIRS0")(pairsOf(words).eagerCkpt)
     System.err.println(s"[probe-bpe] distinct pairs: ${counts.count()}")

@@ -1,58 +1,47 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev utility: run one named query (or `entry`) against a sf dir, print
-  * timing, rows and optionally the formatted physical plan.
+/** Dev utility: run the queries matching a comma-separated list of name
+  * prefixes (or `entry`) against a sf dir in ONE JVM, on Bench's session
+  * and warm-up; print each query's timing, rows and optionally its
+  * formatted physical plan.
   *
   *   sbt "runMain graft.RunOne q34_similar_pairs /root/testdata/sf0.1 explain"
+  *   sbt "runMain graft.RunOne q40,q154,q234 <testdata>/sf0.1"
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val prefixes = args(0).split(",")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val showPlan = args.contains("explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // compressed parquet bytes understate exploded-text work ~50x: the
-      // 4MB default openCostInBytes floors the scan split target and left
-      // an 18MB documents file at FIVE splits, so the shingle explode and
-      // its eager checkpoint materialized 5-partition RDDs that throttled
-      // every downstream map stage to 5-way parallelism on a 32-core box
-      // (measured: q27-direct sf3 58s at 5 splits vs 43s on 3.3x MORE
-      // data at 15 splits). 256KB lets files.minPartitionNum (defaults to
-      // the core count) win; big tables already split past openCost.
-      .config("spark.sql.files.openCostInBytes", (256 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // library init: SQL functions + the injected plan rules (incl.
-    // honest checkpoint statistics) on this live session
-    GraftExtensions.register(spark)
-    // payload corpora (100 KB+ rows): bound the vectorized reader's batch
-    // before the first scan — footer-only, no-op on narrow corpora
-    Tables.tuneVectorBatch(spark, sfDir)
-    // Warm-up (uncounted), mirroring Bench: a fresh JVM's first job pays
-    // ~7-8s of one-time cost (noop-sink init, codegen/JIT, parquet footer
-    // reads) that would otherwise swamp any query under ~10s
-    SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
-    // the timer wraps closure construction + noop save: several queries do
-    // eager driver-side work (ML fits, quantile jobs, file writes) inside
-    // the closure, which a count()-only timer would miss entirely
-    val t0 = System.nanoTime()
-    val df = if (name == "entry") SparkEntry.entry(spark)
-             else SparkEntry.queries(name)(spark, sfDir)
-    // noop sink like Bench: a count() here would let Catalyst prune the
-    // expensive expressions out of aggregate-only queries
-    df.write.mode("overwrite").format("noop").save()
-    val secs = (System.nanoTime() - t0) / 1e9
-    val n = df.count()
-    if (showPlan) df.explain("formatted")
-    df.show(20, truncate = false)
-    println(f"[runone] $name rows=$n time=$secs%.3fs sf=$sfDir")
+    val names = prefixes.filter(_ == "entry").toSeq ++
+      SparkEntry.queries.keys.toSeq.sorted.filter(n => prefixes.exists(n.startsWith))
+    require(names.nonEmpty, s"no query matches ${args(0)}")
+    val spark = GraftSession.local(sfDir = Some(sfDir))
+    GraftSession.warmUp(spark, sfDir)
+    names.foreach { name =>
+      try {
+        // the timer wraps closure construction + noop save: several queries
+        // do eager construction-time work (ML fits, quantile jobs, file writes)
+        // inside the closure, which a count()-only timer would miss entirely
+        val t0 = System.nanoTime()
+        val df = if (name == "entry") SparkEntry.entry(spark)
+                 else SparkEntry.queries(name)(spark, sfDir)
+        // noop sink like Bench: a count() here would let Catalyst prune the
+        // expensive expressions out of aggregate-only queries
+        df.write.mode("overwrite").format("noop").save()
+        val secs = (System.nanoTime() - t0) / 1e9
+        val n = df.count()
+        if (showPlan) df.explain("formatted")
+        df.show(20, truncate = false)
+        println(f"[runone] $name rows=$n time=$secs%.3fs sf=$sfDir")
+      } catch { // NonFatal only: an OOM/linkage error must kill the run,
+        // not produce misleading timings from a corrupted JVM
+        case scala.util.control.NonFatal(e) =>
+          println(s"[runone] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      }
+      // isolate queries from each other, like Bench
+      spark.catalog.clearCache()
+    }
     spark.stop()
   }
 }

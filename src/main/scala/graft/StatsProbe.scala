@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{GraftSql, SparkSession}
+import org.apache.spark.sql.GraftSql
 import graft.Ckpt._
 
 /** Dev probe: prints the Catalyst size estimates the AdaptivePlan rule
@@ -8,12 +8,7 @@ import graft.Ckpt._
   * the measured row-count crossovers. Not part of the driver contract. */
 object StatsProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     args.foreach { dir =>
       val sh = graft.ops.TextOps.shingles(
         Tables.documents(spark, dir), "text", 3).eagerCkpt

@@ -79,8 +79,8 @@ object Tables {
     * and the reserve path transiently DOUBLES arrays while growing, so an
     * executor JVM with a few GB per task dies with "Cannot reserve
     * additional contiguous bytes" long before the data itself is large
-    * (found when GenBlob's own report scan at 10× blob mass killed a
-    * default-heap JVM; any 100 TB-cluster executor with 4–8 GB heap hits
+    * (found when the blob generator's own report scan at 10× blob mass
+    * killed a default-heap JVM; any 100 TB-cluster executor with 4–8 GB heap hits
     * the identical wall). There is no per-read knob — the capacity is read
     * from the session conf at scan build (ParquetFileFormat →
     * SQLConf.parquetVectorizedReaderBatchSize) — so the right move is to
@@ -90,7 +90,7 @@ object Tables {
     * `total_uncompressed_size` (decoded bytes) per column per row group, so
     * avg decoded bytes/row needs NO data scan — exactly the statistic the
     * compressed FILE size cannot stand in for (natural text compresses
-    * 2–4×; the openCostInBytes note above documents the same trap on the
+    * 2–4×; GraftSession's openCostInBytes note documents the same trap on the
     * scan-split side). The widest column across all tables bounds the
     * batch: rows = TargetBatchBytes / maxAvgColBytes, clamped to
     * [MinBatchRows, 4096]. Narrow corpora (driver testdata: widest column
@@ -98,23 +98,11 @@ object Tables {
     * shrinking, so the classic path is untouched.
     *
     * Returns the chosen batch size (4096 = left at default). Call once per
-    * session after `SparkSession.builder` and before the first scan; all
-    * graft mains (Bench, Verify, RunOne, ProbeAb) and GenBlob do.
-    *
-    * `SPARK_GRAFT_VECTOR_BATCH` overrides the computed size verbatim
-    * (clamped to ≥1) — the ops/measurement knob behind the batch-size A/B
-    * (BENCH_NOTES round 17): an operator who knows the workload only
-    * touches narrow tables of a mixed corpus can pin 4096 back. */
+    * session before the first scan: `GraftSession.local` does for Bench,
+    * Verify, RunOne, ProbeAb and ProbeBpe, and GenShape's blob report
+    * does before it scans the corpus it wrote. */
   def tuneVectorBatch(spark: SparkSession, dir: String): Int = {
     import scala.jdk.CollectionConverters._
-    sys.env.get("SPARK_GRAFT_VECTOR_BATCH").map(_.trim.toInt) match {
-      case Some(forced) if forced >= 1 =>
-        spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", forced)
-        System.err.println(
-          s"[tables] vector batch FORCED by SPARK_GRAFT_VECTOR_BATCH=$forced")
-        return forced
-      case _ => ()
-    }
     val hconf = spark.sessionState.newHadoopConf()
     var maxAvg = 0.0
     for (t <- names) {

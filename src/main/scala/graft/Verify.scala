@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,29 +11,7 @@ object Verify {
     val only: String => Boolean =
       if (args.length > 2) { val ps = args(2).split(","); n => ps.exists(n.startsWith) }
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // compressed parquet bytes understate exploded-text work ~50x: the
-      // 4MB default openCostInBytes floors the scan split target and left
-      // an 18MB documents file at FIVE splits, so the shingle explode and
-      // its eager checkpoint materialized 5-partition RDDs that throttled
-      // every downstream map stage to 5-way parallelism on a 32-core box
-      // (measured: q27-direct sf3 58s at 5 splits vs 43s on 3.3x MORE
-      // data at 15 splits). 256KB lets files.minPartitionNum (defaults to
-      // the core count) win; big tables already split past openCost.
-      .config("spark.sql.files.openCostInBytes", (256 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // library init: SQL functions + the injected plan rules (incl.
-    // honest checkpoint statistics) on this live session
-    GraftExtensions.register(spark)
-    // payload corpora (100 KB+ rows): bound the vectorized reader's batch
-    // before the first scan — footer-only, no-op on narrow corpora
-    Tables.tuneVectorBatch(spark, sfDir)
+    val spark = GraftSession.local(sfDir = Some(sfDir))
     new java.io.File(outDir).mkdirs()
     // per-query Spark result schema, dumped alongside the parquet so the
     // dtype-symmetry gate (tools/check.py) can diff it against the DuckDB

@@ -192,8 +192,11 @@ object Graph {
       .eagerCkpt
     // adaptive probe: BOTH the edge list and the seed set must prove
     // small (the output is at least seed-sized, so a corpus-scale seed
-    // frame must stay distributed regardless of edge count)
-    if (allLong(e) && e.count() <= localMaxRows &&
+    // frame must stay distributed regardless of edge count), and both must
+    // be LongType — the collect below reads getLong; any other key type
+    // takes the distributed loop
+    if (allLong(e) && allLong(visited.select(col("node"))) &&
+        e.count() <= localMaxRows &&
         visited.count() <= localMaxRows) {
       val local = localBfsHops(
         e.collect().map(r => (r.getLong(0), r.getLong(1))),

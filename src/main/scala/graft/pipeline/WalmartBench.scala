@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
@@ -56,14 +55,7 @@ object WalmartBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     // applicationId-keyed scratch (like q52/q81): fixed /tmp names would
     // race a concurrently running Verify/Bench JVM and accumulate forever
     val raw = graft.ops.Sources.scratchDir(spark, "walmart_ref_scale").toString

@@ -25,6 +25,12 @@ object GraftSql {
     spark.asInstanceOf[classic.SparkSession].sessionState
       .functionRegistry.registerFunction(id, info, builder)
 
+  /** The JVM's live SparkContext, if any — `SparkContext.getActive` is
+    * private[spark]; `graft.GraftSession.local` checks it before the
+    * builder can reuse (and reconfigure) that context. */
+  def activeContext: Option[org.apache.spark.SparkContext] =
+    org.apache.spark.SparkContext.getActive
+
   /** Wrap a (possibly unresolved) LogicalPlan as a DataFrame —
     * `Dataset.ofRows` is private[sql]; custom logical operators
     * (graft.plans.*) need it to re-enter the public Dataset API. */

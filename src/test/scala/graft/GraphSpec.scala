@@ -72,6 +72,23 @@ class GraphSpec extends SparkSpec {
     assert(bDist == bLocal, s"bfs: distributed $bDist != local $bLocal")
   }
 
+  test("bfsHops: Int seeds with Long edges fall back to the distributed " +
+    "loop and match its answer") {
+    // the local path reads seeds with getLong; an IntegerType seed column
+    // must take the distributed loop, not throw ClassCastException
+    val raw = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (30L, 31L))
+      .toDF("a", "b")
+    val edges = raw.union(raw.select(col("b").as("a"), col("a").as("b")))
+    def hops(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getAs[Number](0).longValue -> r.getInt(1)).toSet
+    val want = hops(Graph.bfsHopsImpl(edges, Seq(1L, 30L).toDF("node"), 3,
+      localMaxRows = 0L))
+    val got = hops(Graph.bfsHopsImpl(edges, Seq(1, 30).toDF("node"), 3,
+      localMaxRows = Long.MaxValue))
+    assert(got == want)
+    assert(want == Set(1L -> 0, 2L -> 1, 4L -> 1, 3L -> 2, 30L -> 0, 31L -> 1))
+  }
+
   test("property: components match a reference union-find on random graphs") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     // small node universe forces dense/merging components; fixed seed for
