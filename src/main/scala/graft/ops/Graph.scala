@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Adaptive
 import graft.Ckpt._
 
 /** Minimal distributed graph connectivity for the dedup pipeline: near-dup
@@ -29,20 +30,6 @@ import graft.Ckpt._
   *    at the first changed row rather than counting them all.
   */
 object Graph {
-
-  /** Adaptive-path bound (round 18, the q142/q314 pattern, guide §1.2
-    * "don't distribute a tiny loop"): a graph PROVEN by one count over
-    * the checkpointed edge list to have at most this many rows runs its
-    * iteration driver-local — each distributed round of the loops below
-    * costs ~3 scheduled jobs of pure launch/checkpoint machinery on the
-    * sf0.1-sized dedup graphs (~160 nodes), repeated O(log diameter) or
-    * O(depth) times. 1M edges ≈ 16 MB of two longs — trivially
-    * driver-safe; a corpus-scale graph stays on the distributed loop. */
-  private[graft] val LocalGraphMaxRows = 1L << 20
-
-  private def allLong(df: DataFrame): Boolean =
-    df.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.LongType)
 
   /** Driver-local union-find with min-id representatives — exactly the
     * fixpoint of the distributed min-label propagation (component = the
@@ -73,27 +60,35 @@ object Graph {
   /** Connected components of an undirected graph given as (src, dst) edge
     * rows (direction ignored, self-loops fine). Returns (node, component)
     * where component = min node id in the component. Isolated nodes absent
-    * from the edge list are absent from the output. */
+    * from the edge list are absent from the output. A graph proven small
+    * by [[graft.Adaptive.collectIfSmall]] runs union-find on the driver
+    * (each distributed round costs ~3 scheduled jobs of pure launch and
+    * checkpoint machinery on the ~160-node sf0.1 dedup graphs, O(log
+    * diameter) rounds; BFS pays the same per hop). Union-find always
+    * converges: `maxIters` bounds only the distributed loop. */
   def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame =
-    connectedComponentsImpl(edges, maxIters, LocalGraphMaxRows)
+    connectedComponentsImpl(edges, maxIters, Adaptive.LocalMaxRows)
 
   /** [[connectedComponents]] with the local-path bound exposed for the
-    * GraphSpec path-equality pin (0 forces the distributed loop). */
+    * GraphSpec path-equality pin (-1 forces the distributed loop). */
   private[graft] def connectedComponentsImpl(edges: DataFrame,
       maxIters: Int, localMaxRows: Long): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .eagerCkpt
-    // adaptive probe (one count over the checkpointed symmetrized edges):
-    // a PROVEN-small long-keyed graph runs union-find on the driver
-    if (allLong(e) && e.count() <= localMaxRows) {
-      val local = localComponents(
-        e.collect().map(r => (r.getLong(0), r.getLong(1))))
-      val sq = e.sparkSession
-      import sq.implicits._
-      return local.toDF("node", "component")
+    val sq = e.sparkSession
+    import sq.implicits._
+    Adaptive.collectIfSmall[(Long, Long)](e, localMaxRows) match {
+      case Some(es) => localComponents(es).toDF("node", "component")
+      case None => distributedComponents(e, maxIters)
     }
+  }
+
+  /** Min-label propagation with pointer jumping over the checkpointed
+    * symmetrized edge list (see the object doc). */
+  private def distributedComponents(e: DataFrame,
+      maxIters: Int): DataFrame = {
     var labels = e.select(col("src").as("node")).distinct()
       .withColumn("component", col("node"))
       .eagerCkpt
@@ -151,7 +146,7 @@ object Graph {
     * maxHop−depth full rounds of job overhead; `maxHop` stays the hard
     * bound. */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHop: Int): DataFrame =
-    bfsHopsImpl(edges, seeds, maxHop, LocalGraphMaxRows)
+    bfsHopsImpl(edges, seeds, maxHop, Adaptive.LocalMaxRows)
 
   /** Driver-local BFS — the same min-hop frontier expansion as the
     * distributed loop, hop 0 = seeds. GraphSpec pins path equality. */
@@ -183,29 +178,35 @@ object Graph {
   }
 
   /** [[bfsHops]] with the local-path bound exposed for the GraphSpec
-    * path-equality pin (0 forces the distributed loop). */
+    * path-equality pin (-1 forces the distributed loop). */
   private[graft] def bfsHopsImpl(edges: DataFrame, seeds: DataFrame,
       maxHop: Int, localMaxRows: Long): DataFrame = {
     val e = edges.select(col("a"), col("b")).eagerCkpt
-    var visited = seeds.select(col("node")).distinct()
+    val visited = seeds.select(col("node")).distinct()
       .withColumn("hop", lit(0))
       .eagerCkpt
-    // adaptive probe: BOTH the edge list and the seed set must prove
-    // small (the output is at least seed-sized, so a corpus-scale seed
-    // frame must stay distributed regardless of edge count), and both must
-    // be LongType — the collect below reads getLong; any other key type
-    // takes the distributed loop
-    if (allLong(e) && allLong(visited.select(col("node"))) &&
-        e.count() <= localMaxRows &&
-        visited.count() <= localMaxRows) {
-      val local = localBfsHops(
-        e.collect().map(r => (r.getLong(0), r.getLong(1))),
-        visited.collect().map(_.getLong(0)), maxHop)
-      val sq = e.sparkSession
-      import sq.implicits._
-      return local.toDF("node", "hop")
+    val sq = e.sparkSession
+    import sq.implicits._
+    // BOTH the seed set and the edge list must prove small: the output is
+    // at least seed-sized, so a corpus-scale seed frame stays distributed
+    // regardless of edge count
+    val local = for {
+      ss <- Adaptive.collectIfSmall[Long](visited.select(col("node")),
+        localMaxRows)
+      es <- Adaptive.collectIfSmall[(Long, Long)](e, localMaxRows)
+    } yield localBfsHops(es, ss, maxHop)
+    local match {
+      case Some(hops) => hops.toDF("node", "hop")
+      case None => distributedBfsHops(e, visited, maxHop)
     }
-    var frontier = visited
+  }
+
+  /** Frontier expansion over the checkpointed edges from the checkpointed
+    * hop-0 seed frame (see [[bfsHops]]). */
+  private def distributedBfsHops(e: DataFrame, seeds: DataFrame,
+      maxHop: Int): DataFrame = {
+    var visited = seeds
+    var frontier = seeds
     var h = 1
     var done = false
     while (h <= maxHop && !done) {

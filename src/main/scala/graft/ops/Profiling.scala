@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Adaptive, Q, Tables}
 import graft.Ckpt._
 
 /** Corpus / feature profiling operators — the statistical companions to the
@@ -718,7 +718,7 @@ object Profiling {
         |$steps
         |SELECT node AS doc_id, deg, CAST(r AS BIGINT) AS rank_micro
         |FROM r5 ORDER BY doc_id""".stripMargin
-    }) { (s, d) => dedupPagerankImpl(s, d, LocalGraphMaxEdges) },
+    }) { (s, d) => dedupPagerankImpl(s, d, Adaptive.LocalMaxRows) },
 
     // k-anonymity / l-diversity audit — the privacy screen a corpus runs
     // before release: treating (source, lang) as the quasi-identifier and
@@ -851,18 +851,6 @@ object Profiling {
           .as("global_cc"))
   }
 
-  /** Adaptive-path bound for [[dedupPagerankImpl]] (q314): a near-dup
-    * graph PROVEN (by one count over the checkpointed directed edge list)
-    * to have at most this many directed edges runs the 5 power iterations
-    * on the driver instead of as ~15 scheduled join/aggregate jobs. Same
-    * rationale as the q142 [[LocalVocabMaxTypes]] bound (guide §1.2:
-    * "don't distribute a tiny loop"): the sf0.1 near-dup graph has ~160
-    * nodes, and each distributed iteration pays ~0.3 s of pure job-launch
-    * + shuffle machinery on it. 1M edges ≈ 16 MB of two longs — a
-    * trivially driver-safe collect; a corpus-sized dedup graph stays on
-    * the distributed path. */
-  private[graft] val LocalGraphMaxEdges = 1L << 20
-
   /** Driver-local exact integer PageRank — the SAME millionth fixed-point
     * arithmetic as the distributed loop (floor division on nonnegative
     * longs, contributions summed per destination, 150000 + 0.85·mass),
@@ -893,22 +881,29 @@ object Profiling {
   }
 
   /** q314's engine with the local-path edge bound exposed for the
-    * ProfilingSpec path-equality pin (0 forces the distributed loop). */
+    * ProfilingSpec path-equality pin (-1 forces the distributed loop). A
+    * near-dup graph proven small by [[graft.Adaptive.collectIfSmall]]
+    * runs the 5 power iterations on the driver instead of as ~15
+    * scheduled join/aggregate jobs (the sf0.1 graph has ~160 nodes, and
+    * each distributed iteration pays ~0.3 s of job-launch and shuffle
+    * machinery on it). */
   private[graft] def dedupPagerankImpl(s: SparkSession, d: String,
       localMaxEdges: Long): DataFrame = {
     val pairs = TextOps.exactJaccardPairs(s, d, 0.5)
       .select(col("doc_a"), col("doc_b")).eagerCkpt
     val e = pairs.union(pairs.select(col("doc_b"), col("doc_a")))
       .toDF("u", "v").eagerCkpt // sparse; reused 5×
-    // adaptive probe (one count over the checkpointed edges — the q142
-    // pattern): a PROVEN-small graph iterates driver-local
-    if (e.count() <= localMaxEdges) {
-      val local = localPagerank(
-        e.collect().map(r => (r.getLong(0), r.getLong(1))))
-      val sq = s
-      import sq.implicits._
-      return local.toDF("doc_id", "deg", "rank_micro").orderBy("doc_id")
+    import s.implicits._
+    Adaptive.collectIfSmall[(Long, Long)](e, localMaxEdges) match {
+      case Some(es) => localPagerank(es)
+        .toDF("doc_id", "deg", "rank_micro").orderBy("doc_id")
+      case None => distributedPagerank(e)
     }
+  }
+
+  /** The 5 fixed-point power iterations as join/aggregate rounds over the
+    * checkpointed directed edge list (u, v). */
+  private def distributedPagerank(e: DataFrame): DataFrame = {
     val n = e.groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("deg")).eagerCkpt
     var r = n.select(col("node"), col("deg"), lit(1000000L).as("r"))
@@ -1042,7 +1037,7 @@ object Profiling {
     bpeMergesImpl(s, d, merges, LocalVocabMaxTypes)
 
   /** [[bpeMerges]] with the local-path type bound exposed for the
-    * ProfilingSpec path-equality pin (0 forces the distributed loop,
+    * ProfilingSpec path-equality pin (-1 forces the distributed loop,
     * Long.MaxValue forces local whenever the char bound also holds). */
   private[graft] def bpeMergesImpl(s: SparkSession, d: String,
       merges: Int, localMaxTypes: Long): DataFrame = {
@@ -1064,21 +1059,21 @@ object Profiling {
       // ~ms tasks; for an adversarial vocab they are the difference
       // between serial and parallel training.
       .repartition(s.sparkContext.defaultParallelism).eagerCkpt
-    // adaptive probe (one tiny aggregate over the checkpointed vocab —
-    // the AdaptivePlan byte-stats pattern): a PROVEN-small vocabulary
-    // runs the merge loop driver-local; see LocalVocabMaxTypes
-    val st = words.agg(count(lit(1)).as("n"),
-      coalesce(sum(length(col("s"))), lit(0L)).as("chars")).head()
-    if (st.getLong(0) <= localMaxTypes &&
-        st.getLong(1) <= LocalVocabMaxChars) {
-      val local = localBpeMerges(
-        words.select(col("freq"), col("s")).collect()
-          .map(r => (r.getLong(0), r.getString(1))), merges)
-      val sq = s
-      import sq.implicits._
-      return local.toDF("merge_rank", "lhs", "rhs", "pair_count")
-        .orderBy("merge_rank")
+    // a PROVEN-small vocabulary runs the merge loop driver-local; see
+    // LocalVocabMaxTypes
+    import s.implicits._
+    Adaptive.collectIfSmall[(Long, String)](words, localMaxTypes,
+        length(col("s")), LocalVocabMaxChars) match {
+      case Some(vocab) => localBpeMerges(vocab, merges)
+        .toDF("merge_rank", "lhs", "rhs", "pair_count").orderBy("merge_rank")
+      case None => distributedBpeMerges(words, merges)
     }
+  }
+
+  /** The round-17 incremental merge loop over the checkpointed (freq, s)
+    * vocabulary (the trainer doc above [[LocalVocabMaxTypes]]). */
+  private def distributedBpeMerges(words: DataFrame,
+      merges: Int): DataFrame = {
     // weighted bigram counts of a vocabulary slice (shared by the initial
     // build and every delta) — ONE mergeable typed aggregate walking each
     // encoded string in place; the explode/groupBy form materialized ~190M
@@ -1124,7 +1119,7 @@ object Profiling {
           .eagerCkpt
       }
     }
-    val sq = s
+    val sq = words.sparkSession
     import sq.implicits._
     out.result().toDF("merge_rank", "lhs", "rhs", "pair_count")
       .orderBy("merge_rank")

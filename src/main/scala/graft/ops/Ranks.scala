@@ -11,17 +11,19 @@ import graft.Ckpt._
   * map-side arithmetic on (rank, n) — no further shuffle, no window. */
 object Ranks {
 
-  /** Exact integer FLOOR division a div b (b > 0): (a − a mod b) is
-    * exactly divisible by b, so the double division is exact for quotients
-    * below 2^53 — no float-misrounding hazard at any realistic row count.
+  /** Exact integer FLOOR division a div b (b > 0), equal to
+    * `Math.floorDiv` wherever a − pmod(a, b) fits a long (RetailSpec pins
+    * it past 2^53): (a − a mod b) is exactly divisible by b, so the
+    * integral `div` (IntegralDivide, a long result — no double anywhere,
+    * which would round dividends past 2^53) truncating it IS the floor.
     * pmod keeps the remainder nonnegative, so negative dividends floor
     * (like DuckDB's `//` on nonnegative operands; NOTE DuckDB truncates
     * negatives — callers that cross engines must keep operands ≥ 0 or
-    * guard the sign structurally, see q300). Lazy inside when/otherwise
-    * branches, so callers may guard the b = 0 case structurally (see
-    * [[ntileExpr]]). */
+    * guard the sign structurally, see q300). A zero divisor raises under
+    * ANSI. Lazy inside when/otherwise branches, so callers may guard the
+    * b = 0 case structurally (see [[ntileExpr]]). */
   def intDiv(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
+    call_function("div", a - pmod(a, b), b)
 
   /** `ntile(buckets)` of 1-based rank `r` among `n` rows — the SQL-standard
     * split (first n mod buckets buckets get one extra row): with

@@ -73,12 +73,16 @@ object TextOps {
     exactJaccardPairsFrom(
       shingles(Tables.documents(s, d), "text", 3).eagerCkpt, minJac)
 
-  /** Shingle-row count above which the exact self-join switches from
-    * direct shared-shingle enumeration to the prefix-filtered plan.
+  /** Honest-bytes threshold above which [[exactJaccardPairsFrom]] takes
+    * the prefix-filtered plan instead of direct shared-shingle
+    * enumeration, read at optimizer time ([[graft.plans.AdaptivePlan]]):
+    * the statsChild is a [[graft.Ckpt]] eager checkpoint carrying its
+    * MATERIALIZED block-manager size (~70 B/shingle row; 866 MB at sf3's
+    * 7.8M rows, 1.82 GB at sf10's 26M), so this is real bytes.
     *
-    * Round-13 recalibration, measured TWICE: the earlier "measured
+    * Round-13 calibration, measured TWICE: the earlier "measured
     * crossover" (~5M rows, direct 92s vs prefix 90s at sf3) was an
-    * ARTIFACT of two stats bugs fixed this round — the origin-estimate
+    * ARTIFACT of two stats bugs fixed that round — the origin-estimate
     * checkpoint statistics let JoinSelection broadcast an 866 MB shingle
     * frame (poisoning the direct plan ~4×), and the 4 MB
     * `files.openCostInBytes` floor left small document files at 5 scan
@@ -88,31 +92,19 @@ object TextOps {
     * measurable size and scales linearly (3.0× per 3.3× data), because
     * this corpus's shingle document-frequency is FLAT (max df 25,
     * Σdf² exactly linear in corpus size), so the direct enumeration has
-    * no quadratic term for the prefix filter to prune. The default
-    * therefore sits far above the test corpora. The prefix plan remains
-    * the ZIPFIAN escape hatch: on real text, boilerplate shingles with
-    * df in the millions make the direct Σdf² term quadratic-in-df and
-    * the rarest-first prefix excludes exactly those — there, tune DOWN
-    * via the Spark conf `spark.graft.jaccard.prefixThreshold`. A size
-    * statistic cannot distinguish flat from Zipfian; the threshold
-    * encodes the measured-flat default and the conf encodes corpus
-    * knowledge the engine cannot infer without a df-sketch job. */
-  private val PrefixPathDefault = 200L * 1000 * 1000
-
-  /** Honest-bytes threshold for the optimizer-time plan choice
-    * ([[graft.plans.AdaptivePlan]]): since round 13 the statsChild is a
-    * [[graft.Ckpt]] eager checkpoint carrying its MATERIALIZED
-    * block-manager size (~70 B/shingle row; 866 MB at sf3's 7.8M rows,
-    * 1.82 GB at sf10's 26M), so this is real bytes, not the old ~1 B/row
-    * origin estimate. 16 GB ≈ the 200M-row [[PrefixPathDefault]] at the
-    * measured bytes/row. Conf-tunable:
-    * `spark.graft.jaccard.prefixThresholdBytes`. */
-  private val PrefixBytesDefault = BigInt(16L * 1024 * 1024 * 1024)
+    * no quadratic term for the prefix filter to prune. The threshold
+    * therefore sits far above the test corpora: 16 GB ≈ 200M shingle
+    * rows at the measured bytes/row. The prefix plan is the ZIPFIAN
+    * escape hatch: on real text, boilerplate shingles with df in the
+    * millions make the direct Σdf² term quadratic-in-df and the
+    * rarest-first prefix excludes exactly those — a size statistic
+    * cannot see that, which is what [[AmpThreshold]]'s probe is for. */
+  private[graft] val PrefixThresholdBytes = BigInt(16L * 1024 * 1024 * 1024)
 
   /** Shingle-df amplification (Σdf²/rows) above which the pair kernels
     * abandon their direct plans REGARDLESS of size — the round-14 fix
     * for the measured Zipfian mis-pick (BENCH_NOTES round 14: the byte
-    * thresholds above are calibrated on the flat-df driver corpus, and
+    * thresholds are calibrated on the flat-df driver corpus, and
     * a Zipfian corpus 30× SMALLER in bytes runs the direct plan 5×
     * slower). Because the direct plans cost ~Σdf² (candidate mass) and
     * the prefix/variant plans ~rows, the crossover of the RATIO is
@@ -120,22 +112,19 @@ object TextOps {
     * amp 75 → plans tie, amp 223 → prefix 3× faster, amp 744 → prefix
     * 20× faster; the flat corpus sits at amp 2.1–10.7 across sf0.01–sf1
     * (scale-stable, as a ratio should be). 120 splits the measured tie
-    * point from the first decisive win with margin on both sides.
-    * Conf: `spark.graft.pair.ampThreshold`. */
-  private val AmpThresholdDefault = 120.0
+    * point from the first decisive win with margin on both sides. */
+  private val AmpThreshold = 120.0
 
   /** Honest-bytes floor below which the amplification probe is skipped:
     * under ~32 MB of checkpointed shingle rows even a worst-case-skew
     * direct plan is cheap (measured: the plans tie at skew01's 36 MB /
     * amp 75; the flat sf0.1 driver corpus sits at 26.7 MB and so never
     * pays the probe), so the probe job would cost more than it can
-    * save.
-    * Conf: `spark.graft.pair.ampProbeFloorBytes`. */
-  private val AmpFloorDefault = BigInt(32L * 1024 * 1024)
+    * save. */
+  private val AmpProbeFloorBytes = BigInt(32L * 1024 * 1024)
 
-  /** Row-sampling modulus for the probe (keep 1/mod of shingle rows).
-    * Conf: `spark.graft.pair.ampProbeMod`. */
-  private val AmpProbeModDefault = 8L
+  /** Row-sampling modulus for the probe (keep 1/mod of shingle rows). */
+  private val AmpProbeMod = 8L
 
   /** Build the lazy amplification-probe plan over a (doc_id, shingle)
     * stream: estimate amp = Σ_s df(s)² / Σ_s df(s) from a deterministic
@@ -164,18 +153,12 @@ object TextOps {
     org.apache.spark.sql.GraftSql.analyzedPlan(probe)
   }
 
-  /** The pair family's [[graft.plans.AmpProbe]] from the session confs. */
-  private def ampProbe(keyed: DataFrame): graft.plans.AmpProbe = {
-    val spark = keyed.sparkSession
-    graft.plans.AmpProbe(
-      ampProbePlan(keyed, spark.conf
-        .getOption("spark.graft.pair.ampProbeMod").map(_.toLong)
-        .getOrElse(AmpProbeModDefault)),
-      spark.conf.getOption("spark.graft.pair.ampThreshold")
-        .map(_.toDouble).getOrElse(AmpThresholdDefault),
-      spark.conf.getOption("spark.graft.pair.ampProbeFloorBytes")
-        .map(BigInt(_)).getOrElse(AmpFloorDefault))
-  }
+  /** The pair family's [[graft.plans.AmpProbe]]; `floorBytes` is
+    * [[AmpProbeFloorBytes]] except where a spec forces the probe on. */
+  private def ampProbe(keyed: DataFrame,
+      floorBytes: BigInt): graft.plans.AmpProbe =
+    graft.plans.AmpProbe(ampProbePlan(keyed, AmpProbeMod), AmpThreshold,
+      floorBytes)
 
   /** The direct shared-shingle self-join branch (exact, no prefix). */
   private def directJaccardSelfJoin(sh: DataFrame,
@@ -189,36 +172,26 @@ object TextOps {
     * one shared localCheckpoint so the tokenize+explode runs once.
     *
     * ADAPTIVE plan choice (both plans are EXACT — identical output):
-    * small corpora take the direct shared-shingle self-join, large ones
-    * [[prefixJaccardSelfJoin]] (PPJoin-style prefix filter). The
-    * decision runs at OPTIMIZER time by default ([[graft.plans
+    * small corpora take the direct shared-shingle self-join, large or
+    * df-skewed ones [[prefixJaccardSelfJoin]] (PPJoin-style prefix
+    * filter). The decision runs at OPTIMIZER time ([[graft.plans
     * .AdaptivePlan]]): both candidate plans are built lazily (zero jobs
     * at construction) and the injected rule collapses to one branch by
-    * reading the shingle frame's Catalyst size estimate — the same
-    * statistic Spark's JoinSelection consults. Set
-    * `spark.graft.jaccard.planVia=count` for the driver-side form (one
-    * count() job against the caller's checkpointed frame, row threshold
-    * `spark.graft.jaccard.prefixThreshold`). */
-  def exactJaccardPairsFrom(sh: DataFrame, minJac: Double): DataFrame = {
-    val spark = sh.sparkSession
-    spark.conf.getOption("spark.graft.jaccard.planVia")
-        .getOrElse("stats") match {
-      case "count" =>
-        val threshold = spark.conf
-          .getOption("spark.graft.jaccard.prefixThreshold").map(_.toLong)
-          .getOrElse(PrefixPathDefault)
-        if (sh.count() <= threshold) directJaccardSelfJoin(sh, minJac)
-        else prefixJaccardSelfJoin(sh, minJac)
-      case _ =>
-        val thresholdBytes = spark.conf
-          .getOption("spark.graft.jaccard.prefixThresholdBytes")
-          .map(BigInt(_)).getOrElse(PrefixBytesDefault)
-        graft.plans.AdaptivePlan.choose(spark,
-          directJaccardSelfJoin(sh, minJac),
-          prefixJaccardSelfJoin(sh, minJac, eagerShare = false),
-          sh, thresholdBytes, Some(ampProbe(sh)))
-    }
-  }
+    * reading the shingle frame's honest size ([[PrefixThresholdBytes]])
+    * and, above [[AmpProbeFloorBytes]], its sampled Σdf²/rows. */
+  def exactJaccardPairsFrom(sh: DataFrame, minJac: Double): DataFrame =
+    exactJaccardPairsFromImpl(sh, minJac, PrefixThresholdBytes,
+      AmpProbeFloorBytes)
+
+  /** [[exactJaccardPairsFrom]] with the byte threshold and probe floor
+    * exposed for the TextOpsSpec forced-branch pins (thresholdBytes 0
+    * forces the prefix plan, floorBytes 0 forces the probe on). */
+  private[graft] def exactJaccardPairsFromImpl(sh: DataFrame, minJac: Double,
+      thresholdBytes: BigInt, floorBytes: BigInt): DataFrame =
+    graft.plans.AdaptivePlan.choose(sh.sparkSession,
+      directJaccardSelfJoin(sh, minJac),
+      prefixJaccardSelfJoin(sh, minJac),
+      sh, thresholdBytes, Some(ampProbe(sh, floorBytes)))
 
   /** Prefix-filtered exact Jaccard self-join (the PPJoin family: Bayardo
     * et al. WWW'07, Xiao et al. ICDE'08 — see PAPERS.md): order each
@@ -242,7 +215,7 @@ object TextOps {
     * UP on IEEE error (0.9·10 = 9.000…002) and would silently SHORTEN
     * the prefix below the lemma's bound. */
   private[graft] def prefixJaccardSelfJoin(sh: DataFrame,
-      minJac: Double, eagerShare: Boolean = true): DataFrame = {
+      minJac: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tMicro = math.round(minJac * 1000000L)
     val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -255,17 +228,14 @@ object TextOps {
       .filter(col("rn") <= col("n_sh") - need + 1)
       .select(col("shingle"), col("doc_id"),
         col("n_sh").cast("long").as("n_sh"), col("rn").cast("long").as("rn"))
-    val setsBase = sh.groupBy(col("doc_id"))
-      .agg(collect_set(col("shingle")).as("ss"))
-      .select(col("doc_id"), col("ss"), size(col("ss")).as("n_sh"))
-    // eagerShare: checkpoint so both verify endpoints read one
-    // materialization (the count-mode form — construction may run jobs).
-    // Otherwise stay FULLY lazy: under the optimizer-time plan choice
+    // FULLY lazy, no checkpoint: under the optimizer-time plan choice
     // (plans.AdaptivePlan) merely BUILDING this branch must run zero
     // jobs — under AQE even a lazy checkpoint's toRdd starts stage
-    // materialization. The two endpoints then read the identical
+    // materialization. The two verify endpoints read the identical
     // aggregate subtree, which exchange reuse dedupes at execution.
-    val sets = if (eagerShare) setsBase.eagerCkpt else setsBase
+    val sets = sh.groupBy(col("doc_id"))
+      .agg(collect_set(col("shingle")).as("ss"))
+      .select(col("doc_id"), col("ss"), size(col("ss")).as("n_sh"))
     // Two more PPJoin prunes, both EXACTNESS-PRESERVING, both killing
     // candidates before they reach the array-verify join (the expensive
     // stage — every surviving pair drags two full shingle arrays through
@@ -2616,21 +2586,22 @@ object TextOps {
         graft.functions.TextHash.simhash64(col("ss")).as("sh"))
       .eagerCkpt
 
-  /** Document count above which the simhash candidate join switches from
-    * the 8×8-bit chunk scheme to the 4×16-bit one-error-variant scheme
-    * (multi-index Hamming search — the Manku et al. WWW'07 / HmSearch
-    * SIGMOD'13 family; public algorithms, own implementation). Both
-    * schemes are COMPLETE for the ≤7 band, so the plans are
-    * output-identical (TextOpsSpec pins it); the switch is pure cost.
-    * Why it matters: the 8-bit chunk key has only 2048 distinct values,
-    * so enumerated collision pairs grow ~n²/256 — fine for thousands of
-    * docs, the dominant term at many millions. The variant scheme pays
-    * 17 probe keys per block (the value plus its 16 one-bit flips) to
-    * join on an 18-bit key space, cutting enumeration ~3.75× per pair
-    * budget but paying a FLAT 68-keys/doc probe expansion (17× the
-    * chunk scheme's map volume).
+  /** Honest-bytes threshold of the shingleSets frame above which the
+    * simhash candidate join switches from the 8×8-bit chunk scheme to the
+    * 4×16-bit one-error-variant scheme (multi-index Hamming search — the
+    * Manku et al. WWW'07 / HmSearch SIGMOD'13 family; public algorithms,
+    * own implementation), read at optimizer time
+    * ([[graft.plans.AdaptivePlan]]). Both schemes are COMPLETE for the ≤7
+    * band, so the plans are output-identical (TextOpsSpec pins it); the
+    * switch is pure cost. Why it matters: the 8-bit chunk key has only
+    * 2048 distinct values, so enumerated collision pairs grow ~n²/256 —
+    * fine for thousands of docs, the dominant term at many millions. The
+    * variant scheme pays 17 probe keys per block (the value plus its 16
+    * one-bit flips) to join on an 18-bit key space, cutting enumeration
+    * ~3.75× per pair budget but paying a FLAT 68-keys/doc probe expansion
+    * (17× the chunk scheme's map volume).
     *
-    * Round-13 recalibration on the honest-stats build (the old 50k-doc
+    * Round-13 calibration on the honest-stats build (the old 50k-doc
     * crossover was measured with JoinSelection poisoned by ~1 B/row
     * checkpoint estimates): q44, idle box — 50k docs chunk 17.2s vs
     * variant 17.4s; 150k docs 31.5 vs 31.8; 500k docs chunk 96.8s vs
@@ -2638,9 +2609,10 @@ object TextOps {
     * size — the variant's probe expansion costs more than the extra
     * collisions it avoids until the n²/256 term dominates, projected
     * ~1.5M docs (chunk's enumeration grows 3.75× faster; equal-cost
-    * extrapolation from the 500k gap). Conf-tunable:
-    * `spark.graft.simhash.variantThreshold`. */
-  private val SimhashVariantDefault = 1500L * 1000
+    * extrapolation from the 500k gap). The frame is a [[graft.Ckpt]]
+    * eager checkpoint of ~1.9 kB/doc (972 MB at sf10's 500k docs), so the
+    * ~1.5M-doc crossover sits at ~3 GB. */
+  private[graft] val VariantThresholdBytes = BigInt(3L * 1024 * 1024 * 1024)
 
   /** Candidate (doc_a, doc_b, hamming ≤ 7) pairs via the 8-chunk exact
     * scheme: pigeonhole — 7 differing bits can dirty at most 7 of the 8
@@ -2710,48 +2682,30 @@ object TextOps {
       .distinct()
   }
 
-  /** Estimated-bytes twin of [[SimhashVariantDefault]] for the
-    * optimizer-time switch ([[graft.plans.AdaptivePlan]]) — the Catalyst
-    * size estimate of the shingleSets frame at the same document-count
-    * crossover — HONEST block-manager bytes since round 13 (the frame is
-    * a [[graft.Ckpt]] eager checkpoint): ~1.9 kB/doc (972 MB at sf10's
-    * 500k docs), so the projected ~1.5M-doc crossover sits at ~3 GB.
-    * Conf: `spark.graft.simhash.variantThresholdBytes`. */
-  private val SimhashBytesDefault = BigInt(3L * 1024 * 1024 * 1024)
-
   /** SimHash pairs over a prebuilt shingleSets frame (shareable with the
     * exact reference and the band membership check in q44). ADAPTIVE like
-    * [[exactJaccardPairsFrom]]: candidate generation switches plans at a
-    * corpus-size threshold — both plans are exact for the ≤7 band, so
-    * the output is plan-independent. The decision defaults to the
+    * [[exactJaccardPairsFrom]]: candidate generation switches plans at
+    * [[VariantThresholdBytes]] or under df skew — both plans are exact for
+    * the ≤7 band, so the output is plan-independent. The decision is the
     * optimizer-time stats read ([[graft.plans.AdaptivePlan]], zero jobs
-    * at construction); `spark.graft.simhash.planVia=count` restores the
-    * driver-side count() form with the row threshold
-    * `spark.graft.simhash.variantThreshold`. */
-  def simhashPairsFromSets(sets: DataFrame): DataFrame = {
-    val spark = sets.sparkSession
-    val cand = spark.conf.getOption("spark.graft.simhash.planVia")
-        .getOrElse("stats") match {
-      case "count" =>
-        val threshold = spark.conf
-          .getOption("spark.graft.simhash.variantThreshold").map(_.toLong)
-          .getOrElse(SimhashVariantDefault)
-        if (sets.count() <= threshold) simhashCandChunk(sets)
-        else simhashCandVariant(sets)
-      case _ =>
-        val thresholdBytes = spark.conf
-          .getOption("spark.graft.simhash.variantThresholdBytes")
-          .map(BigInt(_)).getOrElse(SimhashBytesDefault)
-        // the probe key stream is the exploded shingle sets — the same
-        // corpus-shape statistic as the jaccard site (skewed templates
-        // correlate the fingerprints, which is exactly what floods the
-        // chunk join with collisions), at the same measured crossover
-        graft.plans.AdaptivePlan.choose(spark,
-          simhashCandChunk(sets), simhashCandVariant(sets),
-          sets, thresholdBytes,
-          Some(ampProbe(sets.select(col("doc_id"),
-            explode(col("ss")).as("shingle")))))
-    }
+    * at construction). */
+  def simhashPairsFromSets(sets: DataFrame): DataFrame =
+    simhashPairsFromSetsImpl(sets, VariantThresholdBytes, AmpProbeFloorBytes)
+
+  /** [[simhashPairsFromSets]] with the byte threshold and probe floor
+    * exposed for the TextOpsSpec forced-branch pins (thresholdBytes 0
+    * forces the variant scheme, floorBytes 0 forces the probe on). */
+  private[graft] def simhashPairsFromSetsImpl(sets: DataFrame,
+      thresholdBytes: BigInt, floorBytes: BigInt): DataFrame = {
+    // the probe key stream is the exploded shingle sets — the same
+    // corpus-shape statistic as the jaccard site (skewed templates
+    // correlate the fingerprints, which is exactly what floods the
+    // chunk join with collisions), at the same measured crossover
+    val cand = graft.plans.AdaptivePlan.choose(sets.sparkSession,
+      simhashCandChunk(sets), simhashCandVariant(sets),
+      sets, thresholdBytes,
+      Some(ampProbe(sets.select(col("doc_id"),
+        explode(col("ss")).as("shingle")), floorBytes)))
     val jac = rawJaccard
     cand
       .join(sets.select(col("doc_id").as("doc_a"), col("ss").as("ssa"),

@@ -5,21 +5,21 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Optimizer-time choice between two exact-equivalent plans — the
-  * Catalyst tier of the adaptive kernel switches in
+/** Optimizer-time choice between two exact-equivalent plans — the one
+  * mechanism behind the adaptive kernel switches in
   * `TextOps.exactJaccardPairsFrom` (direct shared-shingle join vs the
   * PPJoin prefix-filtered plan) and `TextOps.simhashPairsFromSets`
   * (8-chunk join vs the 4×16-bit one-error-variant scheme).
   *
-  * The driver-side form of those switches runs a `count()` at plan
-  * CONSTRUCTION time — one extra Spark job per query, paid even when
-  * the consumer never executes the frame. This node defers the decision
-  * to the optimizer: construction is free (both candidate plans are
-  * built lazily — zero jobs, TextOpsSpec pins it with a listener), and
-  * when an action optimizes the consuming query the rule reads the
-  * input frame's Catalyst size estimate (`stats.sizeInBytes` — the SAME
-  * statistic Spark's own JoinSelection consults for broadcast
-  * decisions) and collapses the node to one branch. Both branches are
+  * Deciding while the frame is BUILT would cost a Spark job per query,
+  * paid even when the consumer never executes the frame. This node
+  * defers the decision to the optimizer: construction is free (both
+  * candidate plans are built lazily — zero jobs, TextOpsSpec pins it
+  * with a listener), and when an action optimizes the consuming query
+  * the rule reads the input frame's Catalyst size estimate
+  * (`stats.sizeInBytes` — the SAME statistic Spark's own JoinSelection
+  * consults for broadcast decisions) and collapses the node to one
+  * branch. Both branches are
   * EXACT (identical output — the plan-equivalence specs), so the choice
   * is pure cost, like every other stats-driven decision the optimizer
   * already makes.
@@ -46,10 +46,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * `statsChild` is the INPUT frame both branches read (not a child of
   * this node — only its statistics are consulted). Thresholds are in
-  * estimated bytes, calibrated per call site to the same measured
-  * crossover as the row-count threshold they replace: the estimate
-  * descends from the parquet scan through the projections, so it scales
-  * linearly with the corpus exactly like the row counts do.
+  * honest materialized bytes ([[HonestRddStats]]), calibrated per call
+  * site against measured plan crossovers (the scaladoc of the TextOps
+  * byte-threshold constants): the size scales linearly with the corpus,
+  * exactly like the row counts the crossovers were measured in.
   */
 /** Deferred data-SHAPE probe for [[AdaptivePlan]] — the round-14 answer
   * to the measured Zipfian mis-pick (BENCH_NOTES round 14): the direct

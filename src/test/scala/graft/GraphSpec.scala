@@ -48,28 +48,94 @@ class GraphSpec extends SparkSpec {
 
   test("cc + bfs: driver-local and distributed paths return identical " +
     "frames (round 18 adaptive path)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
     // chains, cliques, self-loops, duplicate/reversed edges, an island —
-    // the same fixture family the behavioral tests above use, compared
-    // path against path
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (5L, 5L),
+    // the same fixture family the behavioral tests above use — plus an
+    // empty edge list, a lone self-loop and seeded random graphs, compared
+    // path against path (-1 forces the distributed loop even on an empty
+    // edge list, whose 0 rows would pass a 0 bound)
+    val fixture = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (5L, 5L),
       (10L, 11L), (11L, 12L), (12L, 10L), (11L, 10L), (20L, 21L),
       (21L, 20L), (30L, 31L))
-    val df = edges.toDF("src", "dst")
-    val dist = Graph.connectedComponentsImpl(df, 50, localMaxRows = 0L)
-      .collect().map(_.toSeq).toSet
-    val local = Graph.connectedComponentsImpl(df, 50,
+    val edgeGen = Gen.listOfN(12,
+      Gen.zip(Gen.choose(0L, 9L), Gen.choose(0L, 9L)))
+    val random = (1L to 6L).map(i =>
+      edgeGen.pureApply(Gen.Parameters.default, Seed(i)))
+    def rows(df: DataFrame) = df.collect()
+      .map(_.toSeq.map { case n: Number => n.longValue; case x => x }).toSet
+    def keyType(df: DataFrame) = df.schema.head.dataType
+    (Seq(fixture, Seq.empty[(Long, Long)], Seq((5L, 5L))) ++ random)
+        .foreach { edges =>
+      val df = edges.toDF("src", "dst")
+      val dist = Graph.connectedComponentsImpl(df, 50, localMaxRows = -1L)
+      val local = Graph.connectedComponentsImpl(df, 50,
         localMaxRows = Long.MaxValue)
-      .collect().map(_.toSeq).toSet
-    assert(dist == local, s"cc: distributed $dist != local $local")
-    val raw = df.toDF("a", "b")
-    val bEdges = raw.union(raw.select(col("b").as("a"), col("a").as("b")))
-    val seeds = Seq(1L, 30L).toDF("node")
-    val bDist = Graph.bfsHopsImpl(bEdges, seeds, 3, localMaxRows = 0L)
-      .collect().map(_.toSeq).toSet
-    val bLocal = Graph.bfsHopsImpl(bEdges, seeds, 3,
+      val (d, lo) = (rows(dist), rows(local))
+      assert(d == lo, s"cc on $edges: distributed $d != local $lo")
+      assert(dist.schema.map(_.dataType) == local.schema.map(_.dataType))
+      // Int-keyed edges cannot take the Long-typed local path: they fall
+      // back to the distributed loop (Int output) with the same answer
+      val intDf = edges.map { case (a, b) => (a.toInt, b.toInt) }
+        .toDF("src", "dst")
+      val intCc = Graph.connectedComponentsImpl(intDf, 50,
         localMaxRows = Long.MaxValue)
-      .collect().map(_.toSeq).toSet
-    assert(bDist == bLocal, s"bfs: distributed $bDist != local $bLocal")
+      assert(keyType(intCc) == IntegerType && rows(intCc) == lo)
+      val raw = df.toDF("a", "b")
+      val bEdges = raw.union(raw.select(col("b").as("a"), col("a").as("b")))
+      val first = edges.headOption.fold(0L)(_._1)
+      // a two-row and a one-row seed set
+      Seq(Seq(first, 30L), Seq(first)).foreach { seedIds =>
+        val seeds = seedIds.toDF("node")
+        val bDist = Graph.bfsHopsImpl(bEdges, seeds, 3, localMaxRows = -1L)
+        val bLocal = Graph.bfsHopsImpl(bEdges, seeds, 3,
+          localMaxRows = Long.MaxValue)
+        val (bd, bl) = (rows(bDist), rows(bLocal))
+        assert(bd == bl,
+          s"bfs on $edges from $seedIds: distributed $bd != local $bl")
+        assert(keyType(bLocal) == LongType &&
+          bDist.schema.map(_.dataType) == bLocal.schema.map(_.dataType))
+        val intBfs = Graph.bfsHopsImpl(
+          bEdges.select(col("a").cast("int"), col("b").cast("int")),
+          seedIds.map(_.toInt).toDF("node"), 3, localMaxRows = Long.MaxValue)
+        assert(keyType(intBfs) == IntegerType && rows(intBfs) == bl)
+      }
+    }
+  }
+
+  test("default bounds keep the registry's own frames at sf0.001 on the " +
+    "driver-local paths (CC, BFS, PageRank, BPE)") {
+    // collectIfSmall's typed collect runs only on the local path, and its
+    // job's call site names Adaptive.scala: count those jobs per query,
+    // attributed by a per-query job group. BFS collects its seeds and its
+    // edges; the others collect once.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val want = Seq("q79_dedup_clusters" -> 1, "q217_contamination_bfs" -> 2,
+      "q259_bipartite_audit" -> 3, "q314_dedup_pagerank" -> 1,
+      "q142_bpe_merges" -> 1)
+    val collects = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val l = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        if (s.stageInfos.exists(_.name.startsWith("collect at Adaptive.scala")))
+          collects.merge(Option(s.properties)
+            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .getOrElse(""), 1, (a, b) => a + b)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      want.foreach { case (name, _) =>
+        spark.sparkContext.setJobGroup(s"local-path-$name", name)
+        try SparkEntry.queries(name)(spark, sf0001).collect()
+        finally spark.sparkContext.clearJobGroup()
+      }
+      Thread.sleep(1000) // listener bus drain window
+      want.foreach { case (name, n) =>
+        val got = collects.getOrDefault(s"local-path-$name", 0)
+        assert(got == n, s"$name: $got driver-local collects, want $n")
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("bfsHops: Int seeds with Long edges fall back to the distributed " +

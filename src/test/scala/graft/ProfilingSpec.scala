@@ -153,14 +153,15 @@ class ProfilingSpec extends SparkSpec {
     val corpora = Seq(
       (Seq.fill(30)(randDoc()), 4),      // random mixed-plane tokens
       (Seq("zy xw vu"), 3),              // the all-hapax adversary
-      (Seq("aa aa ab", "ab ba aa"), 3))  // heavy ties
+      (Seq("aa aa ab", "ab ba aa"), 3),  // heavy ties
+      (Seq("abab"), 2))                  // a one-row vocabulary
     corpora.zipWithIndex.foreach { case ((docs, merges), i) =>
       val dir = java.nio.file.Files.createTempDirectory(s"graft_bpe_ab_$i")
       try {
         docs.toDF("text")
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
         val dist = ops.Profiling
-          .bpeMergesImpl(spark, dir.toString, merges, localMaxTypes = 0L)
+          .bpeMergesImpl(spark, dir.toString, merges, localMaxTypes = -1L)
           .collect().map(_.toSeq).toSeq
         val local = ops.Profiling
           .bpeMergesImpl(spark, dir.toString, merges,
@@ -193,21 +194,55 @@ class ProfilingSpec extends SparkSpec {
       (20L, "pp qq rr ss tt uu"),
       (21L, "pp qq rr ss tt uu"),
       (30L, "xx yy zz ww vv uu ii jj"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr_ab")
-    try {
-      docs.toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val dist = ops.Profiling
-        .dedupPagerankImpl(spark, dir.toString, localMaxEdges = 0L)
-        .collect().map(_.toSeq).toSeq
-      val local = ops.Profiling
-        .dedupPagerankImpl(spark, dir.toString, localMaxEdges = Long.MaxValue)
-        .collect().map(_.toSeq).toSeq
-      assert(dist.nonEmpty, "fixture produced no near-dup edges")
-      assert(local.map(_.last).distinct.size > 1,
-        s"fixture graph is rank-degenerate: $local")
-      assert(dist == local, s"distributed $dist != local $local")
-    } finally graft.streaming.EventStreams.wipe(dir)
+    // Also: a corpus with no near-dup pair (empty graph), seeded random
+    // template-plus-edit corpora, and every corpus again with Int doc ids,
+    // which cannot take the Long-typed local path — they fall back to the
+    // distributed loop (Int doc_id) and must give the same answer.
+    def randomCorpus(seed: Int) = {
+      val rng = new scala.util.Random(seed)
+      val words = Seq("aa", "bb", "cc", "dd", "ee", "ff", "gg", "hh")
+      val templates = Seq.fill(3)(Seq.fill(8)(words(rng.nextInt(8))))
+      (1L to 14L).map { id =>
+        val t = templates(rng.nextInt(3))
+        val edited = if (rng.nextBoolean()) t.updated(rng.nextInt(8), "zz")
+          else t
+        (id, edited.mkString(" "))
+      }
+    }
+    val corpora = Seq(docs,
+      Seq((1L, "aa bb cc dd"), (2L, "ee ff gg hh"))) ++
+      (1 to 3).map(randomCorpus)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(_.toSeq.map { case n: Number => n.longValue; case x => x }).toSeq
+    corpora.zipWithIndex.foreach { case (corpus, i) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_pr_ab_$i")
+      val intDir = java.nio.file.Files.createTempDirectory(s"graft_pr_int_$i")
+      try {
+        corpus.toDF("doc_id", "text")
+          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        corpus.map { case (id, t) => (id.toInt, t) }.toDF("doc_id", "text")
+          .write.mode("overwrite").parquet(s"$intDir/documents.parquet")
+        val dist = ops.Profiling
+          .dedupPagerankImpl(spark, dir.toString, localMaxEdges = -1L)
+        val local = ops.Profiling.dedupPagerankImpl(spark, dir.toString,
+          localMaxEdges = Long.MaxValue)
+        val intKeyed = ops.Profiling.dedupPagerankImpl(spark,
+          intDir.toString, localMaxEdges = Long.MaxValue)
+        val (d, lo, ik) = (rows(dist), rows(local), rows(intKeyed))
+        // corpus 1 has no near-dup pair; every other one has edges
+        assert(lo.isEmpty == (i == 1), s"corpus $i: graph nodes $lo")
+        if (i == 0) assert(lo.map(_.last).distinct.size > 1,
+          s"fixture graph is rank-degenerate: $lo")
+        assert(d == lo, s"corpus $i: distributed $d != local $lo")
+        assert(dist.schema.map(_.dataType) == local.schema.map(_.dataType))
+        assert(intKeyed.schema.head.dataType ==
+          org.apache.spark.sql.types.IntegerType)
+        assert(ik == lo, s"corpus $i: Int-keyed $ik != local $lo")
+      } finally {
+        graft.streaming.EventStreams.wipe(dir)
+        graft.streaming.EventStreams.wipe(intDir)
+      }
+    }
   }
 
   test("triangles: K4 has 4, a chain has 0, counts match closed forms") {

@@ -110,6 +110,39 @@ class RetailSpec extends SparkSpec {
     assert(one.getDouble(0) == 0.0 && one.getDouble(1) == 1.0)
   }
 
+  test("Ranks.intDiv equals Math.floorDiv on boundary and random longs") {
+    import spark.implicits._
+    // dividends past 2^53 are where a division routed through double
+    // rounds; b = 1 and huge b are the quotient extremes
+    val p53 = 1L << 53
+    val boundary = for {
+      a <- Seq(0L, 5L, -1L, -7L, p53 - 1, p53, p53 + 1, p53 + 3,
+        1L << 62, (1L << 62) + 1, -(p53 + 1), -(1L << 62) - 3)
+      b <- Seq(1L, 2L, 7L, 1000000L, (1L << 40) + 1, p53 + 1, 1L << 62)
+    } yield (a, b)
+    // |a| ≤ 2^62 and 0 < b ≤ 2^62 keep a − pmod(a, b) inside Long
+    val rng = new scala.util.Random(20261018)
+    val random = Seq.fill(2000)((rng.nextLong() >> (1 + rng.nextInt(62)),
+      1L + (rng.nextLong() >>> (2 + rng.nextInt(61)))))
+    val cases = boundary ++ random
+    val want = cases.map { case (a, b) => (a, b, Math.floorDiv(a, b)) }
+    val df = cases.toDF("a", "b")
+    // the LocalRelation is folded by interpreted eval; after the exchange
+    // the projection is whole-stage codegen
+    Seq(df, df.repartition(3)).foreach { in =>
+      val got = in.select(col("a"), col("b"),
+          graft.ops.Ranks.intDiv(col("a"), col("b")).as("q"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val bad = got.toSet -- want.toSet
+      assert(got.length == want.length && bad.isEmpty,
+        s"intDiv != floorDiv on ${bad.take(5)}")
+    }
+    // a zero divisor still raises (ANSI) instead of returning a value
+    val e = intercept[Exception](Seq((5L, 0L)).toDF("a", "b")
+      .select(graft.ops.Ranks.intDiv(col("a"), col("b"))).collect())
+    assert(String.valueOf(e.getMessage).contains("BY_ZERO"), e.getMessage)
+  }
+
   test("seasonal index: 12 months, shares sum to 12 within rounding") {
     val rows = run("q149_seasonal_index").collect()
     assert(rows.map(_.getAs[Int]("month")).toSeq == (1 to 12))

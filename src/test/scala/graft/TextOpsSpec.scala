@@ -546,28 +546,18 @@ class TextOpsSpec extends SparkSpec {
     }
   }
 
-  test("adaptive kernel honors the plan-choice confs in both modes") {
+  test("adaptive kernel: the default and the forced-prefix branch return the same pairs") {
     val sh = TextOps.shingles(
       Tables.documents(spark, sf0001), "text", 3).localCheckpoint(true)
-    def pairs() = TextOps.exactJaccardPairsFrom(sh, 0.5).collect()
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bytesKey = "spark.graft.jaccard.prefixThresholdBytes"
-    val rowsKey = "spark.graft.jaccard.prefixThreshold"
-    val viaKey = "spark.graft.jaccard.planVia"
-    try {
-      val default = pairs() // stats mode, sf0.001: the direct branch
-      spark.conf.set(bytesKey, "0") // stats mode, prefix branch forced
-      val forcedStats = pairs()
-      spark.conf.unset(bytesKey)
-      spark.conf.set(viaKey, "count") // legacy count() mode, direct
-      val countDirect = pairs()
-      spark.conf.set(rowsKey, "0")    // count() mode, prefix forced
-      val countPrefix = pairs()
-      assert(default.nonEmpty)
-      assert(forcedStats == default && countDirect == default &&
-        countPrefix == default)
-    } finally { spark.conf.unset(bytesKey); spark.conf.unset(rowsKey)
-      spark.conf.unset(viaKey) }
+    // sf0.001: the direct branch
+    val default = pairs(TextOps.exactJaccardPairsFrom(sh, 0.5))
+    // bytes threshold 0: the prefix branch
+    val forced = pairs(TextOps.exactJaccardPairsFromImpl(sh, 0.5,
+      thresholdBytes = 0, floorBytes = 0))
+    assert(default.nonEmpty)
+    assert(forced == default)
   }
 
   test("AdaptivePlan: zero jobs at construction; stats pick the plan shape") {
@@ -596,14 +586,11 @@ class TextOpsSpec extends SparkSpec {
       assert(direct.collect { case w: Window => w }.isEmpty,
         "sf0.001 default should optimize to the direct (window-free) branch")
       // bytes threshold 0: the prefix branch — row_number window present
-      val key = "spark.graft.jaccard.prefixThresholdBytes"
-      try {
-        spark.conf.set(key, "0")
-        val prefix = TextOps.exactJaccardPairsFrom(sh, 0.5)
-          .queryExecution.optimizedPlan
-        assert(prefix.collect { case w: Window => w }.nonEmpty,
-          "bytes=0 should optimize to the prefix (windowed) branch")
-      } finally spark.conf.unset(key)
+      val prefix = TextOps.exactJaccardPairsFromImpl(sh, 0.5,
+          thresholdBytes = 0, floorBytes = 0)
+        .queryExecution.optimizedPlan
+      assert(prefix.collect { case w: Window => w }.nonEmpty,
+        "bytes=0 should optimize to the prefix (windowed) branch")
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
@@ -625,20 +612,18 @@ class TextOpsSpec extends SparkSpec {
     // full (doc_a, doc_b, hamming, jaccard) output must be bit-identical.
     val sets = TextOps.shingleSets(TextOps.shingles(
       Tables.documents(spark, sf0001), "text", 3).localCheckpoint(true))
-    val key = "spark.graft.simhash.variantThresholdBytes"
-    def pairs() = TextOps.simhashPairsFromSets(sets).collect()
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .toSet
-    try {
-      spark.conf.set(key, "0") // force the 4x16-bit one-error-variant plan
-      val variant = pairs()
-      spark.conf.unset(key)    // default: sf0.001 takes the 8-chunk plan
-      val chunk = pairs()
-      assert(chunk.nonEmpty, "no simhash pairs at sf0.001 — vacuous equivalence")
-      assert(variant == chunk,
-        s"variant plan diverged (missing ${chunk -- variant}, " +
-          s"extra ${variant -- chunk})")
-    } finally spark.conf.unset(key)
+    // bytes threshold 0 forces the 4x16-bit one-error-variant plan
+    val variant = pairs(TextOps.simhashPairsFromSetsImpl(sets,
+      thresholdBytes = 0, floorBytes = 0))
+    // default: sf0.001 takes the 8-chunk plan
+    val chunk = pairs(TextOps.simhashPairsFromSets(sets))
+    assert(chunk.nonEmpty, "no simhash pairs at sf0.001 — vacuous equivalence")
+    assert(variant == chunk,
+      s"variant plan diverged (missing ${chunk -- variant}, " +
+        s"extra ${variant -- chunk})")
   }
 
   // ---- round-14: the df-amplification probe (AdaptivePlan.AmpProbe) ----
@@ -681,24 +666,24 @@ class TextOpsSpec extends SparkSpec {
 
   test("amp probe flips the jaccard plan to prefix on a skewed stream below the byte threshold") {
     import org.apache.spark.sql.catalyst.plans.logical.Window
-    val floorKey = "spark.graft.pair.ampProbeFloorBytes"
-    try {
-      spark.conf.set(floorKey, "0") // fixture is tiny; force the probe on
-      val skewPlan = TextOps.exactJaccardPairsFrom(skewedShingleRows(), 0.5)
-      // accessing optimizedPlan runs the rule, which runs the probe job
-      assert(skewPlan.queryExecution.optimizedPlan
-          .collect { case w: Window => w }.nonEmpty,
-        "amp ~401 > 120 must pick the prefix (windowed) branch even " +
-          "though the frame is far below the byte threshold")
-      // the prefix of every 5-shingle doc at t=0.5 is its 3 RAREST
-      // shingles — the hot shingle never enters candidate generation, so
-      // the probe-picked plan also EXECUTES without the n^2 blowup
-      assert(skewPlan.count() == 0)
-      val flatPlan = TextOps.exactJaccardPairsFrom(flatShingleRows(), 0.5)
-      assert(flatPlan.queryExecution.optimizedPlan
-          .collect { case w: Window => w }.isEmpty,
-        "amp 1.0 < 120 must keep the direct (window-free) branch")
-    } finally spark.conf.unset(floorKey)
+    // the fixture is tiny: floorBytes 0 forces the probe on
+    def probed(sh: org.apache.spark.sql.DataFrame) =
+      TextOps.exactJaccardPairsFromImpl(sh, 0.5,
+        TextOps.PrefixThresholdBytes, floorBytes = 0)
+    val skewPlan = probed(skewedShingleRows())
+    // accessing optimizedPlan runs the rule, which runs the probe job
+    assert(skewPlan.queryExecution.optimizedPlan
+        .collect { case w: Window => w }.nonEmpty,
+      "amp ~401 > 120 must pick the prefix (windowed) branch even " +
+        "though the frame is far below the byte threshold")
+    // the prefix of every 5-shingle doc at t=0.5 is its 3 RAREST
+    // shingles — the hot shingle never enters candidate generation, so
+    // the probe-picked plan also EXECUTES without the n^2 blowup
+    assert(skewPlan.count() == 0)
+    val flatPlan = probed(flatShingleRows())
+    assert(flatPlan.queryExecution.optimizedPlan
+        .collect { case w: Window => w }.isEmpty,
+      "amp 1.0 < 120 must keep the direct (window-free) branch")
   }
 
   test("amp probe flips the simhash plan to the one-error-variant scheme under skew") {
@@ -706,29 +691,26 @@ class TextOpsSpec extends SparkSpec {
     val sets = TextOps.shingleSets(skewedShingleRows())
     def generates(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.collect { case g: Generate => g }.length
-    val bytesKey = "spark.graft.simhash.variantThresholdBytes"
-    val floorKey = "spark.graft.pair.ampProbeFloorBytes"
-    try {
-      // self-calibrate the two branch shapes via the byte-threshold forcing
-      spark.conf.set(bytesKey, "0")
-      val variantShape = generates(TextOps.simhashPairsFromSets(sets))
-      spark.conf.unset(bytesKey)
-      val chunkShape = generates(TextOps.simhashPairsFromSets(sets))
-      assert(variantShape != chunkShape,
-        "fixture cannot distinguish the branches by Generate count")
-      spark.conf.set(floorKey, "0")
-      assert(generates(TextOps.simhashPairsFromSets(sets)) == variantShape,
-        "amp ~401 > 120 must pick the one-error-variant branch")
-      val flatSets = TextOps.shingleSets(flatShingleRows())
-      assert(generates(TextOps.simhashPairsFromSets(flatSets)) == chunkShape,
-        "amp 1.0 < 120 must keep the chunk-join branch")
-    } finally { spark.conf.unset(bytesKey); spark.conf.unset(floorKey) }
+    // self-calibrate the two branch shapes via the byte-threshold forcing
+    val variantShape = generates(TextOps.simhashPairsFromSetsImpl(sets,
+      thresholdBytes = 0, floorBytes = 0))
+    val chunkShape = generates(TextOps.simhashPairsFromSets(sets))
+    assert(variantShape != chunkShape,
+      "fixture cannot distinguish the branches by Generate count")
+    // the fixture is tiny: floorBytes 0 forces the probe on
+    def probed(s: org.apache.spark.sql.DataFrame) =
+      TextOps.simhashPairsFromSetsImpl(s, TextOps.VariantThresholdBytes,
+        floorBytes = 0)
+    assert(generates(probed(sets)) == variantShape,
+      "amp ~401 > 120 must pick the one-error-variant branch")
+    val flatSets = TextOps.shingleSets(flatShingleRows())
+    assert(generates(probed(flatSets)) == chunkShape,
+      "amp 1.0 < 120 must keep the chunk-join branch")
   }
 
   test("amp probe runs ONE job per frame: cached across consumers, zero jobs at construction") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sh = skewedShingleRows()
-    val floorKey = "spark.graft.pair.ampProbeFloorBytes"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new SparkListener {
       override def onJobStart(s: SparkListenerJobStart): Unit =
@@ -736,11 +718,13 @@ class TextOpsSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      spark.conf.set(floorKey, "0")
       Thread.sleep(1000)
       jobs.set(0)
-      val q1 = TextOps.exactJaccardPairsFrom(sh, 0.5)
-      val q2 = TextOps.exactJaccardPairsFrom(sh, 0.9)
+      // the fixture is tiny: floorBytes 0 forces the probe on
+      val q1 = TextOps.exactJaccardPairsFromImpl(sh, 0.5,
+        TextOps.PrefixThresholdBytes, floorBytes = 0)
+      val q2 = TextOps.exactJaccardPairsFromImpl(sh, 0.9,
+        TextOps.PrefixThresholdBytes, floorBytes = 0)
       Thread.sleep(1000)
       assert(jobs.get() == 0,
         s"construction ran ${jobs.get()} job(s); the probe must be deferred")
@@ -752,10 +736,7 @@ class TextOpsSpec extends SparkSpec {
       assert(after1 == before + 1, s"first optimize cached ${after1 - before}")
       assert(after2 == after1,
         "second consumer of the same frame re-ran the probe")
-    } finally {
-      spark.conf.unset(floorKey)
-      spark.sparkContext.removeSparkListener(l)
-    }
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("amp probe: a FAILING probe is not cached — next optimization " +
