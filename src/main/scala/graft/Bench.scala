@@ -63,11 +63,12 @@ object Bench {
       // (they'd distort later queries' memory profile) — outside the timer,
       // like the driver's own per-query accounting
       spark.catalog.clearCache()
-      // Checkpoint blocks (eagerCkpt) are reclaimed by the ContextCleaner
-      // only after GC proves the frame unreachable; between back-to-back
-      // heavy queries the heap can fill with dead checkpoint RDDs faster
-      // than a natural GC cycle notices them (measured: a 19-query
-      // text-family sequence at the 12.8M-token long-docs shape killed the
+      // Checkpoint blocks (eagerCkpt, 115 tagged sites) are reclaimed by
+      // the ContextCleaner only after GC proves the frame unreachable;
+      // between back-to-back heavy queries the heap can fill with dead
+      // checkpoint RDDs faster than a natural GC cycle notices them
+      // (measured: a 19-query text-family sequence at the 12.8M-token
+      // long-docs shape killed the
       // context inside its LAST query at -Xmx8g, while the same query
       // passed alone — cumulative retention, not a per-query cost). One
       // explicit GC per query, outside the timer, lets the cleaner run —

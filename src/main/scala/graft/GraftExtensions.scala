@@ -44,7 +44,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (graft.plans.HonestRddStats) CANNOT be an injected optimizer rule —
     // LogicalRDD's equality excludes its curried originStats, so
     // mapChildren discards a stats-only leaf swap; the fix runs at
-    // checkpoint time instead (GraftSql.eagerCkpt)
+    // checkpoint time instead (graft.Ckpt)
     // whole-plan rewrites (the (c) tier of the extension ladder): bounded
     // edit-distance predicates — see graft.plans.BoundLevenshtein
     ext.injectOptimizerRule(_ => graft.plans.BoundLevenshtein)

@@ -99,8 +99,9 @@ object Tables {
     *
     * Returns the chosen batch size (4096 = left at default). Call once per
     * session before the first scan: `GraftSession.local` does for Bench,
-    * Verify, RunOne, ProbeAb and ProbeBpe, and GenShape's blob report
-    * does before it scans the corpus it wrote. */
+    * Verify and RunOne, and GenShape's blob report does before it scans
+    * the corpus it wrote (the per-batch A/B is BENCH_NOTES "Round 17: the
+    * narrow-scan batch A/B"). */
   def tuneVectorBatch(spark: SparkSession, dir: String): Int = {
     import scala.jdk.CollectionConverters._
     val hconf = spark.sessionState.newHadoopConf()

@@ -180,7 +180,7 @@ case class BpeSymbolSum(left: Expression, right: Expression)
   * hash aggregate collapses them. On the blob-shape vocabulary (3.1M
   * unique 64-char hex types → ~190M pair rows feeding a 256-entry result)
   * that interpreted explode chain was 102 s of q142's 129 s, measured
-  * phase by phase (ProbeBpe). This aggregate walks each encoded string
+  * phase by phase (BENCH_NOTES r17). This aggregate walks each encoded string
   * once, updating a per-partition hash map in place — the pair stream
   * never exists as rows; only the ≤|symbols|² partial maps merge across
   * partitions. Value-identical to the explode form: same Σfreq per

@@ -708,6 +708,7 @@ object Advanced {
       def digest(df: org.apache.spark.sql.DataFrame) =
         df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
           .agg(expr("bit_xor(h)").as("digest"), count(lit(1)).as("n"))
+      // ckpt(a): q122 base digest + comparisons; slower lazy at sf0.1
       val base = digest(li).eagerCkpt
       val scrambled = digest(li.repartition(7, col("l_partkey"))
         .sortWithinPartitions(col("l_extendedprice")))
@@ -799,7 +800,8 @@ object Advanced {
         .select(col("o_orderkey"), col("o_custkey"))
         .repartitionByRange(32, col("o_orderkey"))
         .withColumn("pid", spark_partition_id())
-        .eagerCkpt // offsets + rank consumers share one shuffle
+        // ckpt(e): spark_partition_id after repartitionByRange, read twice
+        .eagerCkpt
       val wOff = Window.orderBy(col("pid"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val offsets = parted.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
@@ -859,6 +861,7 @@ object Advanced {
       // aggregate and the hot-key threshold scan
       val per = side("view", "cnt_v").join(side("purchase", "cnt_p"), "user_id")
         .select(col("user_id"), (col("cnt_v") * col("cnt_p")).as("est"))
+        // ckpt(a): q131 totals + hot-key scan; slower lazy at sf0.1
         .eagerCkpt
       val totals = per.agg(
         count(lit(1)).as("n_keys"),
@@ -922,7 +925,8 @@ object Advanced {
           .cast("long").as("m"))
         .repartitionByRange(32, col("m"), col("ck"))
         .withColumn("pid", spark_partition_id())
-        .eagerCkpt // offsets + rank consumers share one shuffle
+        // ckpt(e): spark_partition_id after repartitionByRange, read twice
+        .eagerCkpt
       val wOff = Window.orderBy(col("pid"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val offsets = parted.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
@@ -932,7 +936,6 @@ object Advanced {
         .orderBy(col("m"), col("ck"))
       val ranked = parted.join(broadcast(offsets), "pid")
         .withColumn("rk", col("off") + row_number().over(wLocal))
-        .eagerCkpt
       val t = ranked.agg(count(lit(1)).as("n"),
         sum(col("m")).cast("long").as("total"),
         sum(col("rk").cast("decimal(19,0)") * col("m")).as("s"))
@@ -981,7 +984,6 @@ object Advanced {
       // per-size minima: |distinct sizes| rows (value-domain-bounded, not
       // data-bounded) — the broadcastable reduction all else hangs off
       val sz = q.groupBy(col("p_size").as("s")).agg(min(col("pc")).as("mn"))
-        .eagerCkpt
       val bounds = sz.toDF("s", "mn")
         .join(broadcast(sz.toDF("s2", "mn2")), col("s2") >= col("s"))
         .groupBy(col("s"))
@@ -1025,7 +1027,8 @@ object Advanced {
       val per = e.groupBy(col("event_type").as("scope"))
         .agg(countDistinct(col("user_id")).as("n_exact"),
           hll_sketch_agg(col("user_id")).as("sk"))
-        .eagerCkpt // feeds both the per-type rows and the union
+        // ckpt(a): per-type rows + union; lazy plan rescans events
+        .eagerCkpt
       val perOut = per.select(col("scope"), col("n_exact"),
         (abs(hll_sketch_estimate(col("sk")).cast("double") - col("n_exact"))
           <= lit(0.02) * col("n_exact")).as("est_ok"))
@@ -1101,6 +1104,7 @@ object Advanced {
       // per-day sketches + per-day exact sets reduced ONCE
       val perDay = days.groupBy(col("d"))
         .agg(hll_sketch_agg(col("user_id")).as("sk"))
+        // ckpt(a): window merge + exact sets; lazy plan rescans events
         .eagerCkpt
       val windows = perDay.select(col("d").as("win_day"))
       val merged = windows
@@ -1361,6 +1365,7 @@ object Advanced {
       val ev = Tables.events(s, d)
       def side(t: String, cn: String) = ev.filter(col("event_type") === t)
         .groupBy(col("user_id")).agg(count(lit(1)).as(cn))
+        // ckpt(a): both sides + the bounds; lazy plan rescans events
         .eagerCkpt
       val v = side("view", "cv")
       val p = side("purchase", "cp")

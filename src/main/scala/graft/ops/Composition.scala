@@ -232,11 +232,13 @@ object Composition {
       val s2 = s1.filter(col("n_chars").between(100, 500))
         .select(col("doc_id"), col("source"), col("n_chars"),
           md5(col("text").cast("binary")).as("h"))
-        .eagerCkpt // digest computed once; feeds dedup + funnel
+        // ckpt(a): q200 dedup + funnel; slower lazy at sf0.1
+        .eagerCkpt
       val keep = s2.groupBy(col("h")).agg(min(col("doc_id")).as("keep"))
       val s3 = s2.join(keep, "h").filter(col("doc_id") === col("keep"))
         .select(col("doc_id"), col("source"), col("n_chars"))
-        .eagerCkpt // feeds mix rates, mix filter, funnel
+        // ckpt(a): q200 mix rates, filter + funnel; slower lazy at sf0.1
+        .eagerCkpt
       val counts = s3.groupBy(col("source")).agg(count(lit(1)).as("n_s"))
       val tot = counts.agg(sum(col("n_s")).cast("long").as("n_all"),
         sum(sqrt(col("n_s").cast("double"))).as("sum_w"))

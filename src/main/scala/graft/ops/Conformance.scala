@@ -55,7 +55,8 @@ object Conformance {
       val f = Tables.lineitem(s, d)
         .select(col("l_returnflag").as("g"),
           nullif(col("l_quantity").cast("long"), lit(50L)).as("q"))
-        .eagerCkpt // aggregate battery + group census share it
+        // ckpt(a): aggregate battery + group census; lazy plan rescans lineitem
+        .eagerCkpt
       val a = f.groupBy(col("g")).agg(
         count(lit(1)).as("n_rows"),
         (count(lit(1)) - count(col("q"))).cast("long").as("n_null"),
@@ -214,7 +215,7 @@ object Conformance {
           col("l_quantity").cast("long").as("w"))
         .groupBy(col("v")).agg(sum(col("w")).as("a"))
         .withColumn("b", lit(0L))
-      val cum = Stats.withCumBelow(counts).eagerCkpt
+      val cum = Stats.withCumBelow(counts)
       val tot = cum.agg(count(lit(1)).cast("long").as("n_values"),
         sum(col("a")).cast("long").as("total_weight"))
       cum.crossJoin(broadcast(tot))
@@ -512,7 +513,8 @@ object Conformance {
         |            END AS BIGINT) AS first_missing
         |FROM b, r""".stripMargin) { (s, d) =>
       val k = Tables.orders(s, d).select(col("o_orderkey").as("key"))
-        .eagerCkpt // bounds + both self-join sides share it
+        // ckpt(a): bounds + both self-join sides; lazy plan rescans orders
+        .eagerCkpt
       val b = k.agg(min(col("key")).as("mn"), max(col("key")).as("mx"),
         count(lit(1)).cast("long").as("n"))
       // keys with an absent successor: the max key always qualifies, so

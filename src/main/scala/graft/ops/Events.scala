@@ -388,6 +388,7 @@ object Events {
       val keys = Seq("user_id", "session_start", "n_events")
       // the SAME aggregate q25 verifies against DuckDB — a shared def, so
       // the parity baseline cannot drift from the oracle-checked query
+      // ckpt(a): count + both anti-joins; lazy plan rescans events
       val batch = sessionAgg(Tables.events(s, d)).eagerCkpt
       val stream = graft.streaming.EventStreams.runToMemory(s,
         graft.streaming.EventStreams.sessions(
@@ -395,6 +396,7 @@ object Events {
         shufflePartitions = Some(8))
         .select(col("user_id"), col("session_start"), col("n_events"),
           col("total_value").as("stream_value"))
+        // ckpt(a): q76 count + both anti-joins; slower lazy at sf0.1
         .eagerCkpt
       batch.agg(count(lit(1)).as("n_sessions"))
         .crossJoin(stream.join(batch, keys, "left_anti")
@@ -659,10 +661,12 @@ object Events {
       val stream = emitted
         .select(col("user_id"), col("session_start"), col("n_events"),
           col("total_value").as("stream_value"))
+        // ckpt(a): q127 three anti-join checks; slower lazy at sf0.1
         .eagerCkpt
       val keys = Seq("user_id", "session_start", "n_events")
       val ev = Tables.events(s, d)
       val all = StatefulSessions.batchReference(s, ev, includeOpen = true)
+        // ckpt(a): q127 count + anti-joins; slower lazy at sf0.1
         .eagerCkpt
       val closed = StatefulSessions.batchReference(s, ev, includeOpen = false)
       all.agg(count(lit(1)).as("n_sessions"))
@@ -721,7 +725,8 @@ object Events {
           col("event_type") === "purchase")
         .select(col("user_id"), col("event_id"),
           col("ts").cast("timestamp_ntz").as("ts"))
-        .eagerCkpt // feeds both the result and the checksum
+        // ckpt(a): the result + the checksum; lazy plan rescans events
+        .eagerCkpt
       val chkCols = Seq(col("user_id"), col("event_id"),
         unix_micros(col("ts").cast("timestamp")))
       val chk = sum(pmod(xxhash64(chkCols: _*), lit(1L << 31))).cast("long")
@@ -799,7 +804,8 @@ object Events {
         .select(col("user_id"), col("event_id"),
           col("ts").cast("timestamp_ntz").as("ts"),
           col("n_views"), col("n_clicks"))
-        .eagerCkpt // feeds both the result and the checksum
+        // ckpt(a): the result + the checksum; lazy plan rescans events
+        .eagerCkpt
       val chkCols = Seq(col("user_id"), col("event_id"),
         unix_micros(col("ts").cast("timestamp")),
         col("n_views"), col("n_clicks"))
@@ -1264,7 +1270,8 @@ object Events {
         |ORDER BY 1, 2""".stripMargin) { (s, d) =>
       val ut = Tables.events(s, d)
         .select(col("user_id"), col("event_type")).distinct()
-        .eagerCkpt // both pair sides + the audience sizes
+        // ckpt(a): both pair sides + audience sizes; lazy plan rescans events
+        .eagerCkpt
       val n = ut.groupBy(col("event_type"))
         .agg(count(lit(1)).cast("long").as("na"))
       val pairs = ut.toDF("user_id", "type_a")
@@ -1382,14 +1389,16 @@ object Events {
         .groupBy(col("user_id")).agg(max(col("op")).as("last"))
         .filter(col("last.del") === 1)
         .select(col("user_id"))
-        .eagerCkpt // three cascade hops reuse the erased set
+        // ckpt(a): three cascade hops; lazy plan rescans events
+        .eagerCkpt
       val evRows = Tables.events(s, d)
         .join(erased, Seq("user_id"), "left_semi")
         .agg(count(lit(1)).cast("long").as("ev_rows"))
       val ords = Tables.orders(s, d)
         .join(erased.withColumnRenamed("user_id", "o_custkey"),
           Seq("o_custkey"), "left_semi")
-        .eagerCkpt // counted AND joined to lineitem
+        // ckpt(a): the count + the lineitem join; lazy plan rescans orders
+        .eagerCkpt
       val ordRows = ords.agg(count(lit(1)).cast("long").as("ord_rows"))
       val liRows = Tables.lineitem(s, d)
         .join(ords.select(col("o_orderkey").as("l_orderkey")),
@@ -1656,7 +1665,8 @@ object Events {
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
         .withColumn("us", unix_micros(col("ts").cast("timestamp")))
-        .eagerCkpt // thirds + the batch reference share it
+        // ckpt(a): the bounds head() job, the three stream thirds and the reference
+        .eagerCkpt
       val Array(lo, hi) = batch.agg(min(col("us")), max(col("us")))
         .head() match { case r => Array(r.getLong(0), r.getLong(1)) }
       val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
@@ -1801,7 +1811,6 @@ object Events {
         .agg(count(lit(1)).as("n"),
           sum(when(col("event_type") === "error", 1L).otherwise(0L))
             .as("k"))
-        .eagerCkpt // baseline + grid share the cell frame
       val t = c.agg((sum(col("k")) / sum(col("n")).cast("double")).as("p0"))
       c.join(broadcast(t), lit(true))
         .filter(col("n") >= 5 && col("p0") > 0)
@@ -2013,7 +2022,8 @@ object Events {
           .as("v"),
           sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
             .as("p"))
-        .eagerCkpt // both band-join sides read the day frame
+        // ckpt(a): both band-join sides; lazy plan rescans events
+        .eagerCkpt
       val b = days.select(col("day").as("bday"), col("v"), col("p"))
       val w = days.select(col("day").as("day"))
         .join(broadcast(b),
@@ -2128,7 +2138,8 @@ object Events {
         .select(col("user_id"), col("event_id"),
           col("ts").cast("timestamp").cast("long").as("sec"),
           round(col("value") * 100, 0).cast("long").as("cents"))
-        .eagerCkpt // both self-join sides share the reduction
+        // ckpt(a): both self-join sides; lazy plan rescans events
+        .eagerCkpt
       val a = p.toDF("user_id", "id_a", "sec_a", "cents")
       val b = p.toDF("user_id", "id_b", "sec_b", "cents")
       a.join(b, Seq("user_id", "cents"))
@@ -2235,7 +2246,8 @@ object Events {
         .agg(max(col("ts").cast("date")).as("mxd"))
       val f = Tables.events(s, d).groupBy(col("user_id"))
         .agg(min(col("ts").cast("date")).as("fd"))
-        .eagerCkpt // base + active both read it
+        // ckpt(a): base + active; lazy plan rescans events
+        .eagerCkpt
       val act = Tables.events(s, d)
         .select(col("user_id"), col("ts").cast("date").as("day")).distinct()
       val ks = s.range(1, 9).select(col("id").cast("int").as("k"))
@@ -2254,7 +2266,8 @@ object Events {
           coalesce(col("n_active"), lit(0L)).as("n_active"))
         .withColumn("rr",
           col("n_active") / col("n_base").cast("double"))
-        .eagerCkpt // fit + output rows share it
+        // ckpt(a): fit + output rows; lazy plan rescans events
+        .eagerCkpt
       val fit = r.filter(col("n_active") > 0)
         .agg(count(lit(1)).as("n"), sum(col("k")).as("sk"),
           sum(log(col("rr"))).as("sy"),
@@ -2336,7 +2349,6 @@ object Events {
       def nm(i: Int) =
         sum(when(col("mask") === i, 1L).otherwise(0L)).cast("long").as(s"n$i")
       val h = u.agg(nm(0), nm(1), nm(2), nm(3), nm(4), nm(5), nm(6), nm(7))
-        .eagerCkpt // three channel rows read the one-row frame
       val nConv = (col("n0") + col("n1") + col("n2") + col("n3") + col("n4")
         + col("n5") + col("n6") + col("n7")).as("n_conv")
       def row(name: String, sixths: org.apache.spark.sql.Column) =

@@ -76,6 +76,7 @@ object Graph {
     val e = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
+      // ckpt(a): collectIfSmall's probe + collect jobs or each distributed round read it
       .eagerCkpt
     val sq = e.sparkSession
     import sq.implicits._
@@ -91,7 +92,7 @@ object Graph {
       maxIters: Int): DataFrame = {
     var labels = e.select(col("src").as("node")).distinct()
       .withColumn("component", col("node"))
-      .eagerCkpt
+      .eagerCkpt // ckpt(c): components loop state
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
@@ -113,7 +114,7 @@ object Graph {
         .join(lookup, col("component") === col("lnode"), "left")
         .select(col("node"), coalesce(col("lcomp"), col("component"))
           .as("component"))
-        .eagerCkpt
+        .eagerCkpt // ckpt(c): components loop state
       converged = next.as("n")
         .join(labels.as("o"), col("n.node") === col("o.node"))
         .filter(col("n.component") =!= col("o.component"))
@@ -181,9 +182,11 @@ object Graph {
     * path-equality pin (-1 forces the distributed loop). */
   private[graft] def bfsHopsImpl(edges: DataFrame, seeds: DataFrame,
       maxHop: Int, localMaxRows: Long): DataFrame = {
+    // ckpt(a): collectIfSmall's probe + collect jobs or each BFS round read it
     val e = edges.select(col("a"), col("b")).eagerCkpt
     val visited = seeds.select(col("node")).distinct()
       .withColumn("hop", lit(0))
+      // ckpt(a): collectIfSmall's probe + collect jobs or each BFS round read it
       .eagerCkpt
     val sq = e.sparkSession
     import sq.implicits._
@@ -215,8 +218,10 @@ object Graph {
         .select(col("b").as("node")).distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
         .withColumn("hop", lit(h))
+        // ckpt(c): BFS loop state; the isEmpty job and the next round read it
         .eagerCkpt
       done = frontier.isEmpty
+      // ckpt(c): BFS loop state
       if (!done) visited = visited.unionByName(frontier).eagerCkpt
       h += 1
     }

@@ -539,7 +539,6 @@ object Ml {
       val l = Tables.embeddings(s, d)
         .groupBy(col("label"))
         .agg(count(lit(1)).cast("long").as("n"))
-        .eagerCkpt // class frame + normalizer share the count
       val t = l.agg(count(lit(1)).cast("long").as("k"),
         sum(lit(0.001) / (lit(1.0) - pow(lit(0.999), col("n")))).as("sw"))
       l.join(broadcast(t), lit(true))
@@ -597,7 +596,8 @@ object Ml {
           .map(col): _*)
         .withColumn("split",
           when(hex < "d", "train").when(hex < "f", "cal").otherwise("test"))
-        .eagerCkpt // counts + fit + scoring share one scan
+        // ckpt(a): counts, forest fit and scoring are separate jobs over it
+        .eagerCkpt
       val counts = li.groupBy().agg(
         sum(when(col("split") === "train", 1).otherwise(0)).cast("long")
           .as("n_train"),
@@ -616,7 +616,8 @@ object Ml {
       val scored = transformers
         .foldLeft(li.filter(col("split") =!= "train"))((f, t) => t.transform(f))
         .select(col("split"), abs(col(label) - col("prediction")).as("r"))
-        .eagerCkpt // quantile rank + coverage count share it
+        // ckpt(a): the quantile checkpoint job and the coverage count read it
+        .eagerCkpt
       // conformal quantile: k-th smallest calibration residual,
       // k = ceil((1-alpha) * (n_cal + 1))
       val k = math.ceil(0.9 * (nCal + 1)).toLong
@@ -629,6 +630,7 @@ object Ml {
       val parted = scored.filter(col("split") === "cal").select(col("r"))
         .repartitionByRange(16, col("r"))
         .withColumn("pid", spark_partition_id())
+        // ckpt(e): spark_partition_id after repartitionByRange, read twice
         .eagerCkpt
       val wOff = Window.orderBy(col("pid"))
         .rowsBetween(Window.unboundedPreceding, -1)

@@ -78,6 +78,7 @@ object Profiling {
       val c = Tables.documents(s, d)
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("n_xy"))
+        // ckpt(a): margins, spine + join; unshared, the plan rescans documents
         .eagerCkpt
       val mx = c.groupBy("lang").agg(sum(col("n_xy")).cast("long").as("n_x"))
       val my = c.groupBy("source").agg(sum(col("n_xy")).cast("long").as("n_y"))
@@ -137,16 +138,15 @@ object Profiling {
         |ORDER BY c_ab DESC, bg""".stripMargin) { (s, d) =>
       val t = Tables.documents(s, d)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("a"))
+        // ckpt(a): unigram + bigram counts; unshared, tokenize runs twice
         .eagerCkpt
       val uc = t.select(explode(col("a")).as("tok"))
         .filter(col("tok") =!= "")
         .groupBy("tok").agg(count(lit(1)).as("c"))
-        .eagerCkpt
       val ut = uc.agg(sum(col("c")).cast("long").as("tu"))
       val bc = t.filter(size(col("a")) > 1)
         .select(explode(bigrams(col("a"))).as("bg"))
         .groupBy("bg").agg(count(lit(1)).as("c_ab"))
-        .eagerCkpt
       val bt = bc.agg(sum(col("c_ab")).cast("long").as("tb"))
       val k = bc.orderBy(col("c_ab").desc, col("bg")).limit(100)
       k.crossJoin(broadcast(ut)).crossJoin(broadcast(bt))
@@ -210,11 +210,11 @@ object Profiling {
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
       val t = Tables.documents(s, d)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("a"))
+        // ckpt(a): unigram counts + bigram rows; unshared, tokenize runs twice
         .eagerCkpt
       val uc = t.select(explode(col("a")).as("tok"))
         .filter(col("tok") =!= "")
         .groupBy("tok").agg(count(lit(1)).as("c"))
-        .eagerCkpt
       val ut = uc.agg(sum(col("c")).cast("long").as("tu"))
       val bg = t.filter(size(col("a")) > 1)
         .select(col("doc_id"),
@@ -223,6 +223,7 @@ object Profiling {
           col("a"))
         .withColumn("w2", element_at(col("a"), col("i") + 2))
         .select(col("doc_id"), col("w1"), col("w2"))
+        // ckpt(a): bigram counts + bigram join; unshared, posexplode runs twice
         .eagerCkpt
       val bc = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_ab"))
       bg.join(broadcast(bc), Seq("w1", "w2"))
@@ -418,6 +419,7 @@ object Profiling {
         .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
       val parted = v.repartitionByRange(32, col("freq").desc, col("tok"))
         .withColumn("pid", spark_partition_id())
+        // ckpt(e): spark_partition_id after repartitionByRange, read twice
         .eagerCkpt
       val wOff = Window.orderBy(col("pid"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -620,6 +622,7 @@ object Profiling {
       val nd = docs.agg(count(lit(1)).as("nd"))
       val parted = docs.repartitionByRange(32, col("doc_id"))
         .withColumn("pid", spark_partition_id())
+        // ckpt(e): spark_partition_id after repartitionByRange, read twice
         .eagerCkpt
       val wOff = Window.orderBy(col("pid"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -643,7 +646,6 @@ object Profiling {
         .select(col("bucket"), explode(TextOps.tokens(col("text"))).as("tok"))
         .filter(col("tok") =!= "")
         .groupBy(col("bucket"), col("tok")).agg(count(lit(1)).as("c"))
-        .eagerCkpt
       val tc = g.groupBy("bucket").agg(sum(col("c")).as("n_toks"))
       val nt = g.groupBy("tok").agg(min(col("bucket")).as("bucket"))
         .groupBy("bucket").agg(count(lit(1)).as("n_new"))
@@ -749,7 +751,6 @@ object Profiling {
         .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("sz"),
           countDistinct(col("n_chars")).as("l_div"))
-        .eagerCkpt // ≤|src|·|lang| rows; 3-k sweep shares it
       val ks = s.range(1).select(
         explode(array(lit(2), lit(5), lit(10))).as("k"))
       g.crossJoin(broadcast(ks))
@@ -793,10 +794,12 @@ object Profiling {
     * the wedge apex — each triangle exactly once. */
   private def triangleParts(edgeList: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
+    // ckpt(a): q144/q160 degrees, orientation + edge count; slower lazy at sf0.1
     val edges = edgeList.eagerCkpt
     val deg = edges.select(col("a").as("v"))
       .unionByName(edges.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
+      // ckpt(a): q144/q160 both orientation joins; slower lazy at sf0.1
       .eagerCkpt
     // orient every edge from its lower-(degree, id) endpoint: wedges
     // form only at low-degree vertices, bounding fan-out by arboricity
@@ -809,6 +812,7 @@ object Profiling {
         when(aLow, col("a")).otherwise(col("b")).as("u"),
         when(aLow, col("b")).otherwise(col("a")).as("w"),
         when(aLow, col("db")).otherwise(col("da")).as("dw"))
+      // ckpt(a): q144/q160 both wedge sides + closing join; slower lazy at sf0.1
       .eagerCkpt
     // wedge at u between its out-neighbors x < y in (degree, id) order;
     // the connecting edge, if present, is stored oriented (x, y)
@@ -820,6 +824,7 @@ object Profiling {
     val tris = wedges.join(
         oriented.select(col("u").as("x"), col("w").as("y")), Seq("x", "y"))
       .select(col("u"), col("x"), col("y"))
+      // ckpt(a): q144/q160 triangle stats; slower lazy at sf0.1
       .eagerCkpt
     (edges, deg, tris)
   }
@@ -890,9 +895,10 @@ object Profiling {
   private[graft] def dedupPagerankImpl(s: SparkSession, d: String,
       localMaxEdges: Long): DataFrame = {
     val pairs = TextOps.exactJaccardPairs(s, d, 0.5)
-      .select(col("doc_a"), col("doc_b")).eagerCkpt
+      .select(col("doc_a"), col("doc_b"))
     val e = pairs.union(pairs.select(col("doc_b"), col("doc_a")))
-      .toDF("u", "v").eagerCkpt // sparse; reused 5×
+      // ckpt(a): collectIfSmall's probe + collect jobs or each distributed round read it
+      .toDF("u", "v").eagerCkpt
     import s.implicits._
     Adaptive.collectIfSmall[(Long, Long)](e, localMaxEdges) match {
       case Some(es) => localPagerank(es)
@@ -905,7 +911,7 @@ object Profiling {
     * checkpointed directed edge list (u, v). */
   private def distributedPagerank(e: DataFrame): DataFrame = {
     val n = e.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("deg")).eagerCkpt
+      .agg(count(lit(1)).as("deg"))
     var r = n.select(col("node"), col("deg"), lit(1000000L).as("r"))
     for (_ <- 1 to 5) {
       val contrib = e
@@ -968,12 +974,13 @@ object Profiling {
     * checkpoint overhead PER MERGE on a tiny table (measured: the driver
     * corpus has 31 types / 82 distinct pairs, and the round-17 incremental
     * trainer regressed q142 from 1.7 s to 2.9 s on the sf0.1 board —
-    * ProbeBpe put HIT+DELTA+VOCAB at 0.9–2.1 s per merge on 31 rows, all
-    * scheduling). The bound keeps the collect trivially driver-safe
-    * (≤64Ki rows, ≤16M chars ≈ ≤64 MB) while any Heaps-law 100 TB
-    * vocabulary (blob shape: 3.06M types) stays on the distributed
-    * incremental path. Guide §1.2: the distributed algorithm is the thing
-    * to fix first — and "don't distribute a 31-row loop" is that fix. */
+    * the round-17 phase table in BENCH_NOTES puts HIT+DELTA+VOCAB at
+    * 0.9–2.1 s per merge on 31 rows, all scheduling). The bound keeps
+    * the collect trivially driver-safe (≤64Ki rows, ≤16M chars ≈ ≤64 MB)
+    * while any Heaps-law 100 TB vocabulary (blob shape: 3.06M types)
+    * stays on the distributed incremental path. Guide §1.2: the
+    * distributed algorithm is the thing to fix first — and "don't
+    * distribute a 31-row loop" is that fix. */
   private[graft] val LocalVocabMaxTypes = 65536L
   private[graft] val LocalVocabMaxChars = 16L << 20
 
@@ -1058,6 +1065,7 @@ object Profiling {
       // merge. For a natural-text vocab the extra partitions are empty-ish
       // ~ms tasks; for an adversarial vocab they are the difference
       // between serial and parallel training.
+      // ckpt(a): collectIfSmall's probe + collect jobs and the merge loop read it
       .repartition(s.sparkContext.defaultParallelism).eagerCkpt
     // a PROVEN-small vocabulary runs the merge loop driver-local; see
     // LocalVocabMaxTypes
@@ -1078,7 +1086,7 @@ object Profiling {
     // build and every delta) — ONE mergeable typed aggregate walking each
     // encoded string in place; the explode/groupBy form materialized ~190M
     // interpreted pair rows on the blob vocabulary and was 102 s of the
-    // 129 s trainer, measured phase by phase (ProbeBpe, BENCH_NOTES r17)
+    // 129 s trainer, measured phase by phase (BENCH_NOTES, round 17 BPE table)
     def pairsOf(df: DataFrame): DataFrame = {
       val pc = udaf(new graft.functions.BpePairCounts(),
         org.apache.spark.sql.Encoders.tuple(
@@ -1089,6 +1097,7 @@ object Profiling {
         .select(col("key").as("pair"), col("value").as("c"))
     }
     var vocab = words
+    // ckpt(c): BPE merge loop state; each merge's head() job reads it
     var counts = pairsOf(words).eagerCkpt
     val out = Seq.newBuilder[(Int, String, String, Long)]
     for (k <- 1 to merges) {
@@ -1099,12 +1108,13 @@ object Profiling {
         val pat = s" $a  $b "
         // hit words are read twice (pre- and post-rewrite pair counts) →
         // checkpoint them. The full vocabulary IS still checkpointed per
-        // merge: an A/B at blob shape (ProbeBpe) showed the lazily-chained
-        // alternative — re-applying k pending replaces over the one words
-        // checkpoint per scan — measures SLOWER end-to-end (100 s vs 60 s
-        // trainer) and far noisier: the chain re-allocates every encoded
+        // merge: an A/B at blob shape (BENCH_NOTES round 17) showed the
+        // lazily-chained alternative — re-applying k pending replaces over
+        // the one words checkpoint per scan — measures SLOWER end-to-end
+        // (100 s vs 60 s trainer) and far noisier: the chain re-allocates every encoded
         // string k times per pass, and two passes consume each snapshot
         // (HIT filter + next merge), so materializing once wins.
+        // ckpt(c): BPE merge loop; counts update + vocab rewrite read it
         val hit = vocab.filter(col("s").contains(pat)).eagerCkpt
         val rewritten = hit.withColumn("s",
           replace(col("s"), lit(pat), lit(s" $a$b ")))
@@ -1113,10 +1123,10 @@ object Profiling {
           .union(pairsOf(hit).select(col("pair"), (-col("c")).as("c")))
           .groupBy("pair").agg(sum(col("c")).cast("long").as("c"))
           .filter(col("c") > 0)
-          .eagerCkpt
+          .eagerCkpt // ckpt(c): BPE merge loop state
         vocab = vocab
           .withColumn("s", replace(col("s"), lit(pat), lit(s" $a$b ")))
-          .eagerCkpt
+          .eagerCkpt // ckpt(c): BPE merge loop state
       }
     }
     val sq = words.sparkSession
@@ -1224,9 +1234,11 @@ object Profiling {
       // |event_types|² rows: one partition keeps every iteration's jobs at
       // 1-2 tasks instead of shuffle.partitions-many empty ones (the edge
       // table would be hash-partitioned by src at real graph scale)
+      // ckpt(a): every power-iteration job reads the edge table
       .coalesce(1).eagerCkpt
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
+      // ckpt(a): the count() job and every power-iteration job read it
       .distinct().coalesce(1).eagerCkpt
     val nN = nodes.count()
     var rank = nodes.withColumn("r", lit(1.0 / nN))
@@ -1244,7 +1256,7 @@ object Profiling {
         .select(col("node"),
           (lit(0.15 / nN) + lit(0.85) *
             (coalesce(col("inflow"), lit(0.0)) + col("dm") / nN)).as("r"))
-        .eagerCkpt
+        .eagerCkpt // ckpt(c): power-iteration state
     }
     rank.select(col("node").as("event_type"), round(col("r"), 6).as("rank"))
       .orderBy("event_type")

@@ -64,6 +64,7 @@ object Ranks {
   def globalIndex(df: DataFrame, parts: Int, sortExprs: Column*): DataFrame = {
     val parted = df.repartitionByRange(parts, sortExprs: _*)
       .withColumn("pid", spark_partition_id())
+      // ckpt(e): spark_partition_id after repartitionByRange, read twice
       .eagerCkpt
     val wOff = Window.orderBy(col("pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -92,6 +93,7 @@ object Ranks {
     val parted = df.repartitionByRange(parts, sortExprs: _*)
       .withColumn("pid", spark_partition_id())
       .withColumn("cs_v", value.cast("long"))
+      // ckpt(e): spark_partition_id after repartitionByRange, read twice
       .eagerCkpt
     val wOff = Window.orderBy(col("pid"))
       .rowsBetween(Window.unboundedPreceding, -1)

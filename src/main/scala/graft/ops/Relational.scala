@@ -300,7 +300,8 @@ object Relational {
         .repartitionByRange(parts, col("c_mktsegment"), col("c_acctbal"),
           col("c_custkey"))
         .withColumn("_pid", spark_partition_id())
-        .eagerCkpt // offsets + rank consumers share one shuffle
+        // ckpt(e): spark_partition_id after repartitionByRange, read twice
+        .eagerCkpt
       val wOff = Window.partitionBy(col("c_mktsegment")).orderBy(col("_pid"))
       val offsets = parted.groupBy(col("c_mktsegment"), col("_pid"))
         .agg(count(lit(1)).as("_cnt"))
@@ -833,7 +834,6 @@ object Relational {
         .select(round(col("l_extendedprice") * 100, 0).cast("long").as("pc"))
       val b = q.agg(min(col("pc")).as("mn"),
         (max(col("pc")) - min(col("pc")) + 1).as("span"))
-        .eagerCkpt
       q.crossJoin(broadcast(b))
         .groupBy(expr("CAST(((pc - mn) * 20) div span AS INT)").as("bucket"))
         .agg(count(lit(1)).as("n"), sum(col("pc")).cast("long").as("sum_cents"))
@@ -906,7 +906,6 @@ object Relational {
           && col("l_shipdate") < lit("1998-01-01").cast("timestamp_ntz"))
         .groupBy(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
         .agg(sum(col("l_quantity").cast("long")).cast("long").as("q"))
-        .eagerCkpt // per-part totals + the dominance probe
       val tot = pq.groupBy(col("pk"))
         .agg(sum(col("q")).cast("long").as("tq"),
           count(lit(1)).as("n_sup"))

@@ -67,7 +67,8 @@ object Retail {
       math.max(2, df.sparkSession.sparkContext.defaultParallelism))
     val parted = df.repartitionByRange(parts, order: _*)
       .withColumn("_pid", spark_partition_id())
-      .eagerCkpt // offset job + rank consumer share one shuffle
+      // ckpt(e): spark_partition_id after repartitionByRange, read twice
+      .eagerCkpt
     val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val n = counts.map(_._2).sum
@@ -114,10 +115,10 @@ object Retail {
         |ORDER BY n_ab DESC, part_a, part_b""".stripMargin) { (s, d) =>
       val b = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+        // ckpt(a): basket count, item counts + pair join; lazy plan rescans lineitem
         .distinct().eagerCkpt
       val n = b.agg(countDistinct(col("ok")).as("n_baskets"))
       val ic = b.groupBy(col("pk")).agg(count(lit(1)).as("n_item"))
-        .eagerCkpt
       val pc = b.toDF("ok", "part_a")
         .join(b.toDF("ok", "part_b"), "ok")
         .filter(col("part_a") < col("part_b"))
@@ -205,6 +206,7 @@ object Retail {
         .agg(count(lit(1)).as("n_orders"),
           sum(round(col("o_totalprice") * 100, 0).cast("long"))
             .cast("long").as("rev_cents"))
+        // ckpt(a): the total + month rows; lazy plan rescans orders
         .eagerCkpt
       val t = m.agg(sum(col("rev_cents")).cast("long").as("total"))
       m.crossJoin(broadcast(t))
@@ -245,6 +247,7 @@ object Retail {
           month(col("o_orderdate")).cast("int").as("mo"))
         .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
           .cast("long").as("rev"))
+        // ckpt(a): both join sides; lazy plan rescans orders
         .eagerCkpt
       m.select(col("y"), col("mo"), col("rev").as("actual"))
         .join(broadcast(m.select((col("y") + 1).as("y"), col("mo"),
@@ -324,7 +327,6 @@ object Retail {
         .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
           .cast("long").as("rev"))
         .withColumn("idx", col("y") * 12 + col("mo"))
-        .eagerCkpt
       val past = broadcast(m.select(col("idx").as("jdx"),
         col("rev").as("jrev")))
       val w = pow(lit(2.0), lit(11) - (col("idx") - col("jdx"))).cast("long")
@@ -400,7 +402,8 @@ object Retail {
         .groupBy(col("n_regionkey").as("rk"), col("c_nationkey").as("nk"))
         .agg(sum(round(col("o_totalprice"), 0).cast("long")).cast("long")
           .as("hist"))
-        .eagerCkpt // ≤|nations| rows drive everything below
+        // ckpt(a): q178 every allocation level; slower lazy at sf0.1
+        .eagerCkpt
       val rt = nt.groupBy(col("rk"))
         .agg(sum(col("hist")).cast("long").as("rtot"),
           expr("CAST((sum(hist) * 107) div 100 AS BIGINT)").as("fcast"))
@@ -453,7 +456,8 @@ object Retail {
         .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
           .cast("long").as("ext"),
           sum(col("l_quantity").cast("long")).cast("long").as("qty"))
-        .eagerCkpt // both sides of the base join
+        // ckpt(a): both sides of the base join; lazy plan rescans lineitem
+        .eagerCkpt
       val b = pm.filter(col("mo") === 1)
         .select(col("pk"), col("ext").as("ext0"), col("qty").as("qty0"))
       pm.join(b, "pk")
@@ -783,7 +787,8 @@ object Retail {
           .cast("long").as("rev"))
       val parted = per.repartitionByRange(32, col("rev").desc, col("pk"))
         .withColumn("pid", spark_partition_id())
-        .eagerCkpt // offsets + cumsum consumers share a shuffle
+        // ckpt(e): spark_partition_id after repartitionByRange, read twice
+        .eagerCkpt
       val wOff = Window.orderBy(col("pid"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val offsets = parted.groupBy(col("pid"))
@@ -834,7 +839,8 @@ object Retail {
           month(col("o_orderdate")).cast("int").as("mo"))
         .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
           .cast("long").as("rev"))
-        .eagerCkpt // both join sides read the reduced frame
+        // ckpt(a): both join sides; lazy plan rescans orders
+        .eagerCkpt
       val p = m.select(col("y").as("py"), col("mo").as("pmo"),
         col("rev").as("prev_rev_cents"))
       m.join(broadcast(p),
@@ -884,7 +890,8 @@ object Retail {
           .otherwise(0L)).cast("long").as("rev97"),
           sum(when(year(col("l_shipdate")) === 1998, cents)
             .otherwise(0L)).cast("long").as("rev98"))
-        .eagerCkpt // median + classification share the frame
+        // ckpt(a): median + classification; lazy plan rescans lineitem
+        .eagerCkpt
       val m = b.agg(expr("percentile(rev98, 0.5)").as("med"))
       b.join(broadcast(m), lit(true))
         .select(col("brand"), col("rev97").as("rev97_cents"),
@@ -968,7 +975,8 @@ object Retail {
         .select((round(col("l_extendedprice") * 100, 0).cast("long") % 100)
           .as("ending"))
         .groupBy(col("ending")).agg(count(lit(1)).as("o"))
-        .eagerCkpt // totals + charm cells share the frame
+        // ckpt(a): totals + charm cells; lazy plan rescans lineitem
+        .eagerCkpt
       def cell(e: Int) = c.filter(col("ending") === e)
         .agg(coalesce(sum(col("o")), lit(0L)).cast("long").as(s"n_$e"))
       val t = c.agg(sum(col("o")).cast("long").as("n"),
@@ -1064,7 +1072,6 @@ object Retail {
       val top5 = graft.plans.TopKPerKey.topK(yearly, Seq("y"),
           Seq("rev" -> false, "pk" -> true), 5)
         .select(col("y"), col("pk"))
-        .eagerCkpt // both churn-join sides read the top sets
       val mn = top5.agg(min(col("y")).as("mny"))
       val j = top5.toDF("ya", "pk")
         .join(top5.toDF("yb", "pk2"),
@@ -1227,7 +1234,6 @@ object Retail {
         .groupBy(col("p_brand").as("brand"), col("l_suppkey").as("sk"))
         .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
           .cast("long").as("rev"))
-        .eagerCkpt // totals + entropy share the cell frame
       val t = c.groupBy(col("brand")).agg(sum(col("rev")).cast("long")
         .as("tot"))
       val share = col("rev").cast("double") / col("tot")
@@ -1267,7 +1273,8 @@ object Retail {
         .groupBy(year(col("o_orderdate")).cast("int").as("y"),
           col("o_orderpriority").as("p"))
         .agg(count(lit(1)).as("n"))
-        .eagerCkpt // totals + spine + both join sides
+        // ckpt(a): totals, spine + join; lazy plan rescans orders
+        .eagerCkpt
       val t = c.groupBy(col("y")).agg(sum(col("n")).cast("long").as("tot"))
       val spine = c.select(col("y")).distinct()
         .join(broadcast(c.select(col("p")).distinct()), lit(true))
@@ -1277,7 +1284,6 @@ object Retail {
         .select(col("y"), col("p"),
           (coalesce(col("n"), lit(0L)) / col("tot").cast("double"))
             .as("sh"))
-        .eagerCkpt
       m.toDF("y", "p", "sh")
         .join(broadcast(m.toDF("yb", "p", "shb")),
           Seq("p")).filter(col("yb") === col("y") - 1)
@@ -1332,7 +1338,8 @@ object Retail {
           // per-day Σcents² ≈ 2e18 at sf1 (~5× BIGINT headroom, gone by
           // sf5) — accumulate in DECIMAL(38,0) / HUGEINT like q178/q246.
           sum(cents.cast("decimal(19,0)") * cents).as("s2"))
-        .eagerCkpt // totals + per-day z share the day frame
+        // ckpt(a): totals + per-day z; lazy plan rescans orders
+        .eagerCkpt
       val t = dd.agg(sum(col("n")).cast("long").as("nn"),
         sum(col("s")).cast("long").as("ss"),
         sum(col("s2").cast("double")
@@ -1402,7 +1409,7 @@ object Retail {
         .select(col("o_custkey").as("ck"),
           col("o_orderdate").cast("timestamp").cast("long").as("sec"),
           round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-        .eagerCkpt // bounds + both halves share the reduction
+        .eagerCkpt // ckpt(a): the midpoint head() job and both halves read it
       val mid = o.agg(expr("(min(sec) + max(sec)) div 2").as("mid"))
         .head().getLong(0)
       def half(cond: org.apache.spark.sql.Column)

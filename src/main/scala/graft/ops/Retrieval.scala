@@ -56,6 +56,7 @@ object Retrieval {
     // it (len = Σc per doc, df = rows per tok) — the q70 pattern.
     val tf = t.filter(col("doc_id") =!= queryDoc)
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
+      // ckpt(a): q132/q133 len, df + scoring; slower lazy at sf0.1
       .eagerCkpt
     val len = tf.groupBy("doc_id").agg(sum(col("c")).as("len"))
     val dfT = tf.groupBy("tok").agg(count(lit(1)).as("df"))

@@ -178,17 +178,14 @@ object Similarity {
         |       CAST(1 AS BOOLEAN) AS recall_ok
         |FROM sims WHERE sim_raw >= 0.4""".stripMargin) { (s, d) =>
       // ONE pass of the broadcast-BNLJ kernel at the relaxed threshold;
-      // the strict set is a filter over it. Small pair lists with expensive
-      // lineages, each consumed 2-3 times below — materialize once.
+      // the strict set is a filter over it.
       val exactAll = exactCosinePairs(s, d, qBound = 200,
         threshold = 0.4 - 1e-6)
         .select(col("vec_a"), col("vec_b"), col("sim_raw"))
-        .eagerCkpt
       val exact = exactAll.filter(col("sim_raw") >= 0.4).select("vec_a", "vec_b")
       val exactRelaxed = exactAll.select("vec_a", "vec_b")
       val lsh = annLsh(s, d, threshold = 0.4)
         .filter(col("vec_a") < 200).select("vec_a", "vec_b")
-        .eagerCkpt
       exact.agg(count(lit(1)).as("n_exact"))
         .crossJoin(lsh.join(exactRelaxed, Seq("vec_a", "vec_b"), "left_anti")
           .agg(count(lit(1)).as("n_false")))
@@ -345,12 +342,10 @@ object Similarity {
         |JOIN cnt ca ON p.doc_a = ca.doc_id
         |JOIN cnt cb ON p.doc_b = cb.doc_id
         |WHERE inter / (ca.n_sh + cb.n_sh - inter) >= 0.5""".stripMargin) { (s, d) =>
-      // ONE tokenize+explode materialization feeds both the banding pipeline
-      // and the exact self-join reference
       val sh = TextOps.shingles(Tables.documents(s, d), "text", 3)
+        // ckpt(b): AdaptivePlan's pair-plan choice reads this explode's honest size
         .eagerCkpt
       val exactAll = TextOps.exactJaccardPairsFrom(sh, minJac = 0.5)
-        .eagerCkpt
       val exact09 = exactAll.filter(col("jac_raw") >= 0.9)
         .select("doc_a", "doc_b")
       val cand = minHashCandidatesFrom(sh).select("doc_a", "doc_b")
@@ -391,11 +386,11 @@ object Similarity {
       // full-corpus LSH dedup: every candidate pair is exact-verified at
       // sim >= 0.5 inside annLsh, so dropping vec_b needs no re-check
       val lshDropped = annLsh(s, d, threshold = 0.5)
-        .select(col("vec_b")).distinct().eagerCkpt
+        .select(col("vec_b")).distinct()
       // exact keep-first drops inside the bounded slice (both ends < 200)
       val exactDropped = exactCosinePairs(s, d, qBound = 200, threshold = 0.5)
         .filter(col("vec_b") < 200)
-        .select(col("vec_b")).distinct().eagerCkpt
+        .select(col("vec_b")).distinct()
       exactDropped.agg(count(lit(1)).as("n_slice_dropped"))
         .crossJoin(exactDropped.join(lshDropped, Seq("vec_b"), "left_semi")
           .agg(count(lit(1)).as("n_hit")))
@@ -531,6 +526,7 @@ object Similarity {
         .select(col("vec_id"),
           transform(col("pv"), x => (x.cast("double") / col("nrm")).cast("float"))
             .as("embedding"))
+        // ckpt(a): q101 shortlist + rerank; slower lazy at sf0.1
         .eagerCkpt
       // stage 1: shortlist in prefix space; stage 2: exact rerank of the
       // m candidates (only the shortlist — nQ*m rows — carries full vectors)
@@ -663,7 +659,6 @@ object Similarity {
           .as(Seq("dim", "v")))
         .groupBy(col("label"), col("dim"))
         .agg(sum(col("v").cast("double")).as("cs"))
-        .eagerCkpt // both pair sides + the norm frame
       val n2 = cent.groupBy(col("label"))
         .agg(sum(col("cs") * col("cs")).as("n2"))
       val dots = cent.toDF("la", "dim", "sa")
@@ -742,6 +737,7 @@ object Similarity {
         .select(col("vec_id"), col("embedding"),
           cosine(col("embedding"), col("qv")).as("rel"))
         .orderBy(desc("rel"), asc("vec_id")).limit(20)
+        // ckpt(a): q236 both shortlist sides; slower lazy at sf0.1
         .eagerCkpt
       // bounded 20×20 shortlist similarity matrix, computed in-engine
       val a = cands.select(col("vec_id").as("ia"), col("embedding").as("ea"))
@@ -824,7 +820,6 @@ object Similarity {
         .filter(col("label") === label && col("vec_id") < 640)
         .orderBy(col("vec_id")).limit(64)
         .select(col("vec_id"), col("embedding"))
-        .eagerCkpt // each slice feeds two distance passes
       val xs = slice(0)
       val ys = slice(1)
       def dist(a: org.apache.spark.sql.DataFrame,
@@ -975,20 +970,19 @@ object Similarity {
         |JOIN cnt cb ON p.doc_b = cb.doc_id
         |WHERE inter / (ca.n_sh + cb.n_sh - inter) >= 0.5""".stripMargin) { (s, d) =>
       val sh = TextOps.shingles(Tables.documents(s, d), "text", 3)
+        // ckpt(b): AdaptivePlan's pair-plan choice reads this explode's honest size
         .eagerCkpt
       val mins = (0 until 16).map(i =>
         min(xxhash64(lit(i), col("shingle"))).as(s"mh_$i"))
       val sig = sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
         .select(col("doc_id"),
           array((0 until 16).map(i => col(s"mh_$i")): _*).as("sig"))
-        .eagerCkpt
       val estOf = expr(
         """aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),
           |0, (acc, v) -> acc + v) / 16.0""".stripMargin)
       // ground-truth pair frame: shared by the n_exact05 anchor and both
-      // selection-free calibration aggregates (one adaptive enumeration,
-      // checkpointed)
-      val exact = TextOps.exactJaccardPairsFrom(sh, minJac = 0.5).eagerCkpt
+      // selection-free calibration aggregates
+      val exact = TextOps.exactJaccardPairsFrom(sh, minJac = 0.5)
       val nExact = exact.agg(count(lit(1)).as("n_exact05"))
       val gt = exact
         .join(sig.toDF("doc_a", "sig_a"), "doc_a")
@@ -1081,7 +1075,6 @@ object Similarity {
         .select(col("query_id"), col("neighbor_id"),
           ArrayMath.quantDot(col("qc"), col("cc")).as("int_dot"),
           ArrayMath.dot(col("qv"), col("cv")).as("fdot"))
-        .eagerCkpt // both rankings + the overlap share one pass
       graft.plans.TopKPerKey.register(s)
       val approx = graft.plans.TopKPerKey.topK(
         scored.select("query_id", "neighbor_id", "int_dot"),
@@ -1156,7 +1149,6 @@ object Similarity {
         min(md5(concat(lit(s"$i:"), col("shingle")).cast("binary")))
           .as(s"mh_$i"))
       val sig = sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-        .eagerCkpt // shared by the band fan-out and the count
       val cfgs = Seq(2 -> 8, 4 -> 4, 8 -> 2, 16 -> 1)
       val bandRows = array(cfgs.flatMap { case (b, r) =>
         (0 until b).map { j =>
@@ -1215,7 +1207,6 @@ object Similarity {
         .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv")),
       "neighbor_id", "cv", 1)
       .select("cell", "neighbor_id")
-      .eagerCkpt
     val queries = emb.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val probed = rankCells(cdf, queries, "query_id", "qv", probes)
@@ -1232,7 +1223,6 @@ object Similarity {
     // the IVF stage: only vectors in a probed cell reach the ADC lookup
     val cand = probed.join(assigned, Seq("cell"))
       .select("query_id", "neighbor_id")
-      .eagerCkpt
     val adc = cand
       .join(codes.select(col("vec_id").as("neighbor_id"), col("sub"),
         col("code")), "neighbor_id")
@@ -1243,7 +1233,6 @@ object Similarity {
         Window.partitionBy(col("query_id"))
           .orderBy(asc("adc_dist"), asc("neighbor_id"))))
       .filter(col("rank") <= topK)
-      .eagerCkpt
     val exact = emb.filter(col("vec_id") >= nQ)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
       .crossJoin(broadcast(queries))
@@ -1253,7 +1242,6 @@ object Similarity {
           .orderBy(asc("d2"), asc("neighbor_id"))))
       .filter(col("rank") <= topK)
       .select("query_id", "neighbor_id")
-      .eagerCkpt
     emb.agg(count(lit(1)).as("n_vectors"))
       .crossJoin(cand.agg(count(lit(1)).as("n_candidates")))
       .crossJoin(adc.agg(count(lit(1)).as("n_results"),
@@ -1346,6 +1334,7 @@ object Similarity {
         transform(sequence(lit(0), lit(m - 1)),
           i => slice(col("embedding"), i * subDim + 1, lit(subDim))))
         .as(Seq("sub", "svec")))
+      // ckpt(a): the m codebook fits are separate jobs over this explode
       .eagerCkpt
     val spark = s
     import spark.implicits._
@@ -1364,7 +1353,7 @@ object Similarity {
         (sub, i, v.toArray.toSeq.map(_.toFloat)) }
     })
     val codebook = books.flatten.toDF("sub", "code", "cvec")
-      .coalesce(1).eagerCkpt
+      .coalesce(1)
     // encode: argmin squared-L2 over the sub's k centroids, deterministic
     // code tie-break
     val w = Window.partitionBy(col("vec_id"), col("sub"))
@@ -1374,7 +1363,6 @@ object Similarity {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("sub"), col("code"), col("e2").as("err2"))
-      .eagerCkpt
     (codes, codebook, m, k, subDim)
   }
 

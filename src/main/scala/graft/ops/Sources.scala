@@ -277,7 +277,8 @@ object Sources {
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(s"$dir/events_jsonl")
-        .eagerCkpt // two consumers: accounting + quarantine audit
+        // ckpt(a): accounting + quarantine audit; unshared, the JSON parses twice
+        .eagerCkpt
       val acct = read.agg(
         count(lit(1)).as("n_lines"),
         sum(col("_corrupt_record").isNull.cast("int")).cast("long").as("n_parsed"),

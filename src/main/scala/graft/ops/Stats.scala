@@ -53,7 +53,8 @@ object Stats {
   private[graft] def withCumBelow(counts: DataFrame): DataFrame = {
     val parted = counts.repartitionByRange(32, col("v"))
       .withColumn("pid", spark_partition_id())
-      .eagerCkpt // offsets + rank consumers share one shuffle
+      // ckpt(e): spark_partition_id after repartitionByRange, read twice
+      .eagerCkpt
     val wOff = Window.orderBy(col("pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = parted.groupBy(col("pid"))
@@ -163,7 +164,7 @@ object Stats {
         |       round(CAST(max(abs((ca + a) * n_b - (cb + b) * n_a)) AS DOUBLE)
         |             / (CAST(n_a AS DOUBLE) * n_b), 6) AS ks_d
         |FROM w, n GROUP BY n_a, n_b""".stripMargin) { (s, d) =>
-      val cum = withCumBelow(twoSampleCounts(s, d)).eagerCkpt
+      val cum = withCumBelow(twoSampleCounts(s, d))
       val tot = cum.agg(sum(col("a")).cast("long").as("n_a"),
         sum(col("b")).cast("long").as("n_b"))
       cum.crossJoin(broadcast(tot))
@@ -203,7 +204,8 @@ object Stats {
         .select(substring(col("cents").cast("string"), 1, 1).cast("int")
           .as("digit"))
         .groupBy(col("digit")).agg(count(lit(1)).as("n_obs"))
-        .eagerCkpt // shared by the total and the per-digit rows
+        // ckpt(a): q168 total + digit rows; slower lazy at sf0.1
+        .eagerCkpt
       val tot = digits.agg(sum(col("n_obs")).cast("long").as("n_total"))
       val expected = col("n_total") * log10(lit(1) + lit(1.0) / col("digit"))
       digits.crossJoin(broadcast(tot))
@@ -354,7 +356,6 @@ object Stats {
           col("l_quantity").cast("long").as("q"),
           round(col("l_discount") * 100, 0).cast("long").as("dc"))
         .agg(count(lit(1)).as("c"))
-        .eagerCkpt // both sides of the cell-pair join + totals
       val r = cells.select(col("g"), col("q").as("q2"),
         col("dc").as("dc2"), col("c").as("c2"))
       def pairSum(cond: Column) =
@@ -494,7 +495,8 @@ object Stats {
           + month(col("o_orderdate")).cast("int")).as("idx"))
         .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
           .cast("long").as("rev"))
-        .eagerCkpt // both pair sides + the month count
+        // ckpt(a): both pair sides + month count; lazy plan rescans orders
+        .eagerCkpt
       val nm = m.agg(count(lit(1)).cast("long").as("n_months"))
       m.select(col("idx").as("i"), col("rev").as("ri"))
         .join(broadcast(m.select(col("idx").as("j"), col("rev").as("rj"))),
@@ -599,7 +601,8 @@ object Stats {
         .groupBy(round(col("l_discount") * 100, 0).cast("long").as("x"))
         .agg(count(lit(1)).as("nn"),
           sum(col("l_quantity").cast("long")).cast("long").as("sy"))
-        .eagerCkpt // reused by every interval stage below
+        // ckpt(a): every interval stage; lazy plan rescans lineitem
+        .eagerCkpt
       val xs = cells.select(col("x"))
       val iv = xs.toDF("j")
         .join(broadcast(xs.toDF("k")), col("j") <= col("k"))
@@ -798,7 +801,8 @@ object Stats {
       val g = cust.groupBy(col("t"))
         .agg(sum(col("ev")).cast("long").as("d"),
           sum(lit(1L) - col("ev")).cast("long").as("c"))
-        .eagerCkpt // bounded frame reused by all stages below
+        // ckpt(a): q215 every survival stage; slower lazy at sf0.1
+        .eagerCkpt
       val nTot = g.agg(sum(col("d") + col("c")).cast("long").as("n_total"))
       val past = g.select(col("t").as("pt"), (col("d") + col("c")).as("pw"))
       val r = g.join(broadcast(past), col("pt") < col("t"), "left")
@@ -807,6 +811,7 @@ object Stats {
         .join(broadcast(nTot), lit(true))
         .select(col("t"), col("d"), col("c"),
           (col("n_total") - col("below")).cast("long").as("n_risk"))
+      // ckpt(a): q215 both fold sides; slower lazy at sf0.1
       val e = r.filter(col("d") > 0).eagerCkpt
       // a duration whose events exhaust its whole risk set pins S(t)=0 for
       // every t at or beyond it; its ln(0) is guarded OUT of the fold in
@@ -858,7 +863,6 @@ object Stats {
         .groupBy(col("l_suppkey").as("sk"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("k"))
-        .eagerCkpt // prior fit + posterior share one reduction
       val prior = per
         .agg(avg(col("k").cast("double") / col("n")).as("mu"),
           var_pop(col("k").cast("double") / col("n")).as("v"))
@@ -925,7 +929,8 @@ object Stats {
       val cells = Tables.lineitem(s, d)
         .groupBy(col("l_quantity").cast("long").as("q"))
         .agg(count(lit(1)).as("n"))
-        .eagerCkpt // every interval stage re-reads the frame
+        // ckpt(a): every interval stage; lazy plan rescans lineitem
+        .eagerCkpt
       val xs = cells.select(col("q"))
       val iv = xs.toDF("lo")
         .join(broadcast(xs.toDF("hi")), col("lo") <= col("hi"))
@@ -936,6 +941,7 @@ object Stats {
             * sum(col("n") * col("q")) / sum(col("n"))).as("sse"),
           sum(col("n")).cast("long").as("nn"),
           sum(col("n") * col("q")).cast("long").as("sq"))
+        // ckpt(a): q228 both interval sides + bounds; slower lazy at sf0.1
         .eagerCkpt
       val bounds = cells.agg(min(col("q")).as("mn"), max(col("q")).as("mx"))
       val i1 = iv.select(col("lo").as("lo1"), col("hi").as("s1"),
@@ -1088,7 +1094,8 @@ object Stats {
           sum(when(treated, cents).otherwise(0L)).as("s_t"),
           sum(when(!treated, 1L).otherwise(0L)).as("n_c"),
           sum(when(!treated, cents).otherwise(0L)).as("s_c"))
-        .eagerCkpt // matched estimate + dropped audit share it
+        // ckpt(a): matched estimate + dropped audit; lazy plan rescans lineitem
+        .eagerCkpt
       val dropped = strata.filter(col("n_t") > 0 && col("n_c") === 0)
         .agg(coalesce(sum(col("n_t")), lit(0L)).cast("long")
           .as("n_treated_dropped"))
@@ -1164,7 +1171,8 @@ object Stats {
           // (~18k orders/cell × 3e15 ≈ 5e19 > 2⁶³) — accumulate in
           // DECIMAL(38,0), mirroring the oracle's HUGEINT.
           sum(cents.cast("decimal(19,0)") * cents).as("s2"))
-        .eagerCkpt // totals + three fits share the cell frame
+        // ckpt(a): three fit head() jobs + the output read the cell frame
+        .eagerCkpt
       def fit(df: org.apache.spark.sql.DataFrame) =
         df.agg(sum(col("s").cast("double") * col("s") / col("n")))
           .head().getDouble(0)
@@ -1230,13 +1238,11 @@ object Stats {
           sum(col("n_chars").cast("double") * col("n_chars")).as("s2"))
         .withColumn("sd", sqrt(col("s2") / col("n")
           - (col("s1") / col("n")) * (col("s1") / col("n"))))
-        .eagerCkpt // totals + allocation share the frame
       val tot = st.agg(sum(col("n") * col("sd")).as("tot"))
       val r = st.join(broadcast(tot), lit(true))
         .withColumn("raw", lit(1000) * col("n") * col("sd") / col("tot"))
         .withColumn("base", floor(col("raw")))
         .withColumn("rem", col("raw") - col("base"))
-        .eagerCkpt
       val leftover = r.agg((lit(1000) - sum(col("base"))).as("leftover"))
       // bounded |sources| frame: the remainder-rank window is domain-sized
       val rk = Window.orderBy(desc("rem"), asc("source"))
@@ -1408,7 +1414,6 @@ object Stats {
           .cast("long").as("a"),
           sum(when(col("o_custkey").isNull, 1L).otherwise(0L))
             .cast("long").as("b"))
-        .eagerCkpt // totals + OR rows share the cell frame
       val t = seg.agg(sum(col("a")).cast("long").as("ta"),
         sum(col("b")).cast("long").as("tb"))
       val orv = col("a").cast("double") * (col("tb") - col("b")) /
@@ -1454,7 +1459,6 @@ object Stats {
       val h = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey")).agg(count(lit(1)).as("k"))
         .groupBy(col("k")).agg(count(lit(1)).as("o"))
-        .eagerCkpt // MLE + expected rows share the frame
       val t = h.agg(sum(col("o")).cast("long").as("n"),
         (sum(col("k").cast("double") * col("o")) / sum(col("o"))).as("lam"))
       val kfact = when(col("k") === 1, 1.0).when(col("k") === 2, 2.0)
@@ -1522,7 +1526,8 @@ object Stats {
           + weekofyear(col("o_orderdate")).cast("int")).as("wk"))
         .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
           .cast("long").as("x"))
-        .eagerCkpt // pairs, count and ties share the frame
+        // ckpt(a): pairs, count + ties; lazy plan rescans orders
+        .eagerCkpt
       val sStat = w.toDF("wa", "xa")
         .join(broadcast(w.toDF("wb", "xb")), col("wa") < col("wb"))
         .agg(sum(when(col("xb") > col("xa"), 1L)
@@ -1581,7 +1586,6 @@ object Stats {
           .cast("binary")), 1, 1) < "8", "a").otherwise("b").as("split"),
           col("c_mktsegment").as("seg"))
         .agg(count(lit(1)).as("o"))
-        .eagerCkpt // margins + chi2 share the cell frame
       val m = c.groupBy(col("split")).agg(sum(col("o")).as("rs"))
       val g = c.groupBy(col("seg")).agg(sum(col("o")).as("cs"))
       val t = c.agg(sum(col("o")).cast("long").as("n"))
@@ -1674,7 +1678,8 @@ object Stats {
       val v = o.select(round(col("o_totalprice") * 100, 0).cast("long")
           .as("cents"))
         .orderBy(desc("cents")).limit(101)
-        .eagerCkpt // top-101 shared by the min and the fold
+        // ckpt(a): the min + the fold; lazy plan rescans orders
+        .eagerCkpt
       val m = v.agg(min(col("cents")).cast("long").as("xk"))
       val h = v.join(broadcast(m), lit(true))
         .agg((sum(log(col("cents").cast("double") / col("xk"))) / 100.0)
@@ -1751,7 +1756,6 @@ object Stats {
             .as("st"),
           sum(when(!col("treated"), col("rev")).otherwise(0L)).cast("long")
             .as("sc"))
-        .eagerCkpt // totals + the stratified sum share it
       val t = g.agg(sum(col("n_seg")).cast("long").as("n"),
         sum(col("nt")).cast("long").as("n_t"),
         sum(col("st")).cast("long").as("tot_t"),

@@ -71,6 +71,7 @@ object TextOps {
     * consumers — counts + both self-join sides (see q51 for the rationale). */
   def exactJaccardPairs(s: SparkSession, d: String, minJac: Double): DataFrame =
     exactJaccardPairsFrom(
+      // ckpt(b): AdaptivePlan's pair-plan choice reads this explode's honest size
       shingles(Tables.documents(s, d), "text", 3).eagerCkpt, minJac)
 
   /** Honest-bytes threshold above which [[exactJaccardPairsFrom]] takes
@@ -514,13 +515,11 @@ object TextOps {
         |JOIN cnt ca ON p.doc_a = ca.doc_id
         |JOIN cnt cb ON p.doc_b = cb.doc_id
         |WHERE inter / (ca.n_sh + cb.n_sh - inter) >= 0.9""".stripMargin) { (s, d) =>
-      // ONE tokenize+explode materialization feeds the simhash pipeline,
-      // the exact self-join reference AND the band-membership check
+      // ckpt(b): AdaptivePlan's pair-plan choice reads this explode's honest size
       val sh = shingles(Tables.documents(s, d), "text", 3).eagerCkpt
       val sets = shingleSets(sh)
       val found = simhashPairsFromSets(sets).select("doc_a", "doc_b")
-      // the tiny pair list feeds three consumers below, so truncate its
-      // lineage rather than re-running the self-join
+      // ckpt(a): q44 three consumers; slower lazy at sf0.1
       val exactAll = exactJaccardPairsFrom(sh, minJac = 0.5).eagerCkpt
       val exact05 = exactAll.select("doc_a", "doc_b")
       // exact 0.9-pairs inside the h <= 7 band: the pigeonhole-complete set
@@ -560,6 +559,7 @@ object TextOps {
         |WHERE inter / (ca.n_sh + cb.n_sh - inter) >= 0.9""".stripMargin) { (s, d) =>
       val found = winnowPairs(s, d).select("doc_a", "doc_b")
       val exact09 = exactJaccardPairs(s, d, minJac = 0.9).select("doc_a", "doc_b")
+        // ckpt(a): q51 count + anti-join; slower lazy at sf0.1
         .eagerCkpt
       exact09.agg(count(lit(1)).as("n_exact_09"))
         .crossJoin(exact09.join(found, Seq("doc_a", "doc_b"), "left_anti")
@@ -662,6 +662,7 @@ object TextOps {
       // Σc per doc; df = rows per tok, since tf is unique per (doc, tok))
       // instead of re-running the explode three times
       val tf = t.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
+        // ckpt(a): q70 len, df + scores; slower lazy at sf0.1
         .eagerCkpt
       val len = tf.groupBy(col("doc_id")).agg(sum(col("c")).as("len"))
       val dfT = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -767,6 +768,7 @@ object TextOps {
             col("n.text") === col("c.text"), "left_semi")
         .select(col("doc_id").as("id")).distinct()
         .withColumn("ex", lit(1))
+      // ckpt(b): explode frame on both join sides; static estimate is too low
       val sh = shingles(docs, "text", 3).eagerCkpt
       val nearDup = jaccardPairsAcross(
         sh.filter(col("doc_id") % 7 === 0),
@@ -827,9 +829,11 @@ object TextOps {
         .withColumn("nt", size(split(trim(col("text")), "[ \\t\\n\\f\\r]+")))
         .withColumn("lang_ok", col("predicted") === "en")
         .withColumn("qual_ok", col("lang_ok") && col("nt") >= 12)
-        .eagerCkpt // one classify pass for shingles + accounting
+        // ckpt(a): shingle join + accounting; unshared, the UDF pass runs twice
+        .eagerCkpt
       val surv = classified.filter(col("qual_ok")).select("doc_id", "text")
       val droppedIds = exactJaccardPairsFrom(
+        // ckpt(b): AdaptivePlan's pair-plan choice reads this explode's honest size
         shingles(surv, "text", 3).eagerCkpt, minJac = 0.5)
         .select(col("doc_b").as("doc_id")).distinct()
         .withColumn("dropped", lit(1))
@@ -1391,6 +1395,7 @@ object TextOps {
         .select(col("doc_id"), col("source"),
           explode(array_distinct(filter(tokens(col("text")),
             t => t =!= ""))).as("token"))
+        // ckpt(a): df aggregate + join; unshared, tokenize runs twice
         .eagerCkpt
       val tdf = toks.groupBy(col("token")).agg(count(lit(1)).as("dfq"))
       val nCorpus = Tables.documents(s, d).agg(count(lit(1)).as("n_corpus"))
@@ -1462,14 +1467,12 @@ object TextOps {
         |       (SELECT CAST(coalesce(sum(n_a + n_b - inter), 0) AS BIGINT)
         |        FROM q) AS sum_union""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      // one shingle pass serves all consumers (df counts, prefix ranking,
-      // verify arrays) — the q112/q70/q51 materialize-once pattern
       val sh = shingles(Tables.documents(s, d), "text", 3)
+        // ckpt(b): explode under the prefix self-join; static estimate too low
         .eagerCkpt
       val sets = sh.groupBy(col("doc_id"))
         .agg(collect_set(col("shingle")).as("ss"))
         .select(col("doc_id"), col("ss"), size(col("ss")).as("n_sh"))
-        .eagerCkpt
       val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       // canonical global order: ascending (document frequency, shingle) —
       // rarest first, deterministic tie-break shared with the oracle.
@@ -1547,6 +1550,7 @@ object TextOps {
       val t = Tables.documents(s, d)
         .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
         .filter(col("tok") =!= "")
+        // ckpt(a): three consumers; unshared, tokenize runs three times
         .eagerCkpt
       val v = t.groupBy("tok").agg(count(lit(1)).as("c"))
       val tot = t.agg(count(lit(1)).as("tot"))
@@ -1756,7 +1760,8 @@ object TextOps {
         |FROM k GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       val counts = docs.groupBy(col("source")).agg(count(lit(1)).as("n_s"))
-        .eagerCkpt // totals + the per-source threshold rows
+        // ckpt(a): q174 totals + threshold rows; slower lazy at sf0.1
+        .eagerCkpt
       val tot = counts.agg(sum(col("n_s")).cast("long").as("n_all"),
         sum(sqrt(col("n_s").cast("double"))).as("sum_w"))
       val rates = counts.crossJoin(broadcast(tot))
@@ -1915,6 +1920,7 @@ object TextOps {
         |         AS pair_checksum
         |FROM j, t GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       val sh = shingles(Tables.documents(s, d), "text", 3)
+        // ckpt(b): explode frame on both join sides; static estimate is too low
         .eagerCkpt
       val cnt = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
       val pairs = sh.toDF("doc_a", "shingle")
@@ -1972,7 +1978,8 @@ object TextOps {
         .select(col("source"), explode(tokens(col("text"))).as("tok"))
         .filter(col("tok") =!= "")
         .distinct()
-        .eagerCkpt // counts + both join sides share it
+        // ckpt(b): explode frame on both join sides; static estimate is too low
+        .eagerCkpt
       val c = st.groupBy(col("source")).agg(count(lit(1)).as("n_types"))
       val p = st.toDF("src_a", "tok")
         .join(st.toDF("src_b", "tok"), Seq("tok"))
@@ -2023,7 +2030,7 @@ object TextOps {
           posexplode(tokens(col("text"))).as(Seq("p0", "tok")))
         .filter(col("tok").isin("sort", "merge")) // postings pruned early
         .select(col("doc_id"), col("tok"), (col("p0") + 1).as("p"))
-        .eagerCkpt // both phrase sides read the pruned frame
+        .eagerCkpt // ckpt(a): both phrase sides; unshared, tokenize runs twice
       val a = pos.filter(col("tok") === "sort")
         .select(col("doc_id"), col("p"))
       val b = pos.filter(col("tok") === "merge")
@@ -2111,6 +2118,7 @@ object TextOps {
       import org.apache.spark.sql.expressions.Window
       val jp = exactJaccardPairs(s, d, minJac = 0.5)
         .select(col("doc_a"), col("doc_b"))
+        // ckpt(a): q270 members + hits; slower lazy at sf0.1
         .eagerCkpt
       val members = jp.select(col("doc_a").as("doc_id"))
         .union(jp.select(col("doc_b").as("doc_id"))).distinct()
@@ -2135,7 +2143,8 @@ object TextOps {
           .otherwise(array().cast("array<string>"))))
         .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col")
           .as("shingle"))
-        .eagerCkpt // probe side + member set share it
+        // ckpt(a): probe side + member set; unshared, the posexplode runs twice
+        .eagerCkpt
       val bSet = posSh.select(col("doc_id").as("doc_b"),
         col("shingle")).distinct()
       val hits = jp
@@ -2202,20 +2211,18 @@ object TextOps {
         |       (SELECT count(*) FROM root)
         |         = (SELECT count(*) FROM h) AS all_reached""".stripMargin) {
       (s, d) =>
-      // the pair enumeration feeds BOTH the edge list and the components
-      // iteration — materialize it once or the shingle join runs twice
       val pairs = exactJaccardPairs(s, d, minJac = 0.5)
+        // ckpt(a): collectIfSmall's probe + collect jobs and the edge list read it
         .eagerCkpt
       val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
         .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
         .distinct()
+        // ckpt(a): collectIfSmall's probe + collect jobs and the odd-edge join read it
         .eagerCkpt
       val cc = Graph.connectedComponents(
         pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-        .eagerCkpt
       val roots = cc.select(col("component").as("node")).distinct()
       val hops = Graph.bfsHops(edges, roots, maxHop = 16)
-        .eagerCkpt
       val oddEdges = edges
         .join(hops.toDF("a", "ha"), Seq("a"))
         .join(hops.toDF("b", "hb"), Seq("b"))
@@ -2272,7 +2279,6 @@ object TextOps {
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
-        .eagerCkpt // pooled rank + per-source rank share it
       val pooled = Ranks.globalIndex(docs, 32, col("n_chars"), col("doc_id"))
         .select(col("idx").as("g"), col("n_chars").as("after_v"))
       val nn = docs.agg(count(lit(1)).as("nn"))
@@ -2343,7 +2349,7 @@ object TextOps {
         |FROM sp GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       val pairs = exactJaccardPairs(s, d, minJac = 0.5)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val cc = Graph.connectedComponents(pairs).eagerCkpt
+      val cc = Graph.connectedComponents(pairs)
       val keyed = Tables.documents(s, d).select(col("doc_id"))
         .join(cc, col("doc_id") === cc("node"), "left")
         .select(col("doc_id"),
@@ -2352,7 +2358,8 @@ object TextOps {
       val sp = keyed
         .withColumn("split", when(hex < "c", "train")
           .when(hex < "e", "val").otherwise("test"))
-        .eagerCkpt // split table + straddle audit share it
+        // ckpt(a): split table + straddle audit; unshared, scan + cc join rerun
+        .eagerCkpt
       val straddle = cc.join(sp, cc("node") === sp("doc_id"))
         .groupBy(col("component"))
         .agg(countDistinct(col("split")).as("nsp"))
@@ -2440,7 +2447,8 @@ object TextOps {
         .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
           "doc_id")
         .select(col("source"), col("shingle")).distinct()
-        .eagerCkpt // feeds the source-count agg AND the join
+        // ckpt(b): explode frame on both join sides; static estimate is too low
+        .eagerCkpt
       val sc = ds.groupBy(col("shingle"))
         .agg(count(lit(1)).as("n_src"))
       ds.join(sc, "shingle")
@@ -2523,7 +2531,7 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     val tok = docs
       .select(col("doc_id"), tokens(col("text")).as("w"))
-      .eagerCkpt // one tokenize pass feeds stats + bigrams
+      .eagerCkpt // ckpt(a): stats + bigrams; unshared, tokenize runs twice
     val base = tok.select(col("doc_id"),
       size(col("w")).cast("long").as("n_toks"),
       size(array_distinct(col("w"))).cast("long").as("n_distinct"))
@@ -2584,6 +2592,7 @@ object TextOps {
       .agg(collect_set(col("shingle")).as("ss"))
       .select(col("doc_id"), col("ss"), size(col("ss")).as("n_sh"),
         graft.functions.TextHash.simhash64(col("ss")).as("sh"))
+      // ckpt(b): the simhash chunk-vs-variant choice reads its honest size
       .eagerCkpt
 
   /** Honest-bytes threshold of the shingleSets frame above which the
@@ -2737,15 +2746,7 @@ object TextOps {
     // the surviving (discriminative) fingerprint universe
     val rare = ex.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") <= 10).select("fp")
-    // Materialize the surviving fingerprints ONCE via an eager
-    // localCheckpoint: the four downstream consumers (self-join sides,
-    // per-doc counts ×2) would otherwise each re-evaluate the rolling-hash
-    // explode — measured 16 parquet scans in the executed plan, with
-    // exchange reuse defeated by the differing pushed filters. Unlike
-    // cache(), checkpoint blocks are lineage-truncated and reclaimed by
-    // the ContextCleaner once the frame is unreachable, so a library
-    // caller leaks nothing across queries. A production pipeline at scale
-    // would write the fingerprint table to reliable storage instead.
+    // ckpt(a): four consumers; unshared, the plan ran 16 parquet scans
     val exRare = ex.join(rare, "fp").eagerCkpt
     val cnt = exRare.groupBy("doc_id").agg(count(lit(1)).as("n_fp"))
     val a = exRare.toDF("fp", "doc_a")

@@ -523,7 +523,8 @@ object Training {
         .select(col("source"), explode(TextOps.tokens(col("text"))).as("token"))
         .groupBy(col("source"), col("token"))
         .agg(count(lit(1)).as("c"))
-        .eagerCkpt // three consumers share the one reduction
+        // ckpt(a): q305 three consumers; slower lazy at sf0.1
+        .eagerCkpt
       val v = st.groupBy(col("token")).agg(sum(col("c")).as("ct"))
       val tot = st.groupBy(col("source"))
         .agg(sum(col("c")).as("n_s"), count(lit(1)).as("n_types"))
@@ -584,6 +585,7 @@ object Training {
         .groupBy(col("token")).agg(count(lit(1)).as("ct"))
       val parted = v.repartitionByRange(32, col("ct").desc, col("token"))
         .withColumn("pid", spark_partition_id())
+        // ckpt(e): spark_partition_id after repartitionByRange, read twice
         .eagerCkpt
       val wOff = Window.orderBy(col("pid"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -882,7 +884,6 @@ object Training {
             .as("h3"),
           size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
         .groupBy(col("h3")).agg(sum(col("ntok")).as("mass"))
-        .eagerCkpt // ≤4096 rows; three rollups share it
       val perS = Seq(16 -> 1, 256 -> 2, 4096 -> 3).map { case (ns, p) =>
         g3.groupBy(substring(col("h3"), 1, p).as("shard"))
           .agg(sum(col("mass")).as("mass"))
@@ -981,7 +982,6 @@ object Training {
         |FROM c CROSS JOIN ts GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       val c = Tables.lineitem(s, d)
         .groupBy(col("l_suppkey")).agg(count(lit(1)).as("ct"))
-        .eagerCkpt // |keys| rows; the 3-T sweep shares it
       val ts = s.range(1).select(
         explode(array(lit(100), lit(250), lit(1000))).as("t"))
       def ceilDiv(a: Column, b: Column): Column =

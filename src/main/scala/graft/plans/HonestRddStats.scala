@@ -35,7 +35,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * rebuilding its parent ("child unchanged"). An optimizer rule that
   * swaps the leaf therefore silently no-ops for any leaf that sits
   * below another node, i.e. always. Instead
-  * [[org.apache.spark.sql.GraftSql.eagerCkpt]] applies [[fix]] at
+  * [[graft.Ckpt]] applies [[fix]] at
   * CHECKPOINT TIME, before any parent captures the poisoned node, and
   * [[AdaptivePlanRule]] applies it to its detached `statsChild`
   * reference (not part of the query tree, so no parent to fight).

@@ -44,19 +44,4 @@ object GraftSql {
   def analyzedPlan(df: DataFrame):
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
-
-  /** Eager local checkpoint with HONEST statistics: materialize, then
-    * rewrap the resulting LogicalRDD with its real block-manager size
-    * (`graft.plans.HonestRddStats`) so JoinSelection and the
-    * AdaptivePlan thresholds read materialized truth instead of the
-    * origin plan's pre-explode estimate (~100x low on shingle streams,
-    * measured -- low enough to turn an 866 MB self-join side into a
-    * "broadcastable" build). Must happen HERE, at checkpoint time: once
-    * a parent node captures the poisoned leaf, LogicalRDD's
-    * first-param-list-only equality makes any later stats-only swap
-    * invisible to mapChildren (see HonestRddStats's scaladoc). */
-  def eagerCkpt(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(true)
-    ofRows(cp.sparkSession, graft.plans.HonestRddStats.fix(analyzedPlan(cp)))
-  }
 }

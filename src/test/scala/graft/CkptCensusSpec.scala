@@ -1,0 +1,50 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every eager checkpoint in the engine names its reason. `.eagerCkpt`
+  * runs a construction-time job and copies the frame into the block
+  * manager before the query is even returned, so a call site must carry a
+  * `// ckpt(<a|b|c|e>): <reason>` tag on its own line or the line before:
+  * (a) several consumers that AQE cannot reuse, (b) a join or adaptive
+  * choice that needs the honest size, (c) a lineage cut in an iterative
+  * loop, (e) a nondeterministic value read by several consumers. A site
+  * with none of these reasons is deleted, not tagged (BENCH_NOTES
+  * "Eager checkpoint census"). */
+class CkptCensusSpec extends AnyFunSuite {
+
+  private val Tag = """//\s*ckpt\([abce]\):\s*\S""".r
+
+  /** (file:line, line) of every `.eagerCkpt` in code, comments excluded. */
+  private def sites(root: java.io.File): Seq[(String, Int, Array[String])] = {
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    files(root).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toArray finally src.close()
+      lines.indices.collect {
+        case i if {
+          val t = lines(i).trim
+          !t.startsWith("*") && !t.startsWith("/*") &&
+            lines(i).split("//", 2)(0).contains(".eagerCkpt")
+        } => (f.getPath, i, lines)
+      }
+    }
+  }
+
+  test("every .eagerCkpt in src/main carries a ckpt(a|b|c|e) tag") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: $root missing")
+    val all = sites(root)
+    assert(all.nonEmpty, "no .eagerCkpt call site found: the scan is broken")
+    val untagged = all.collect {
+      case (path, i, lines) if Tag.findFirstIn(lines(i)).isEmpty &&
+          (i == 0 || Tag.findFirstIn(lines(i - 1)).isEmpty) =>
+        s"$path:${i + 1}: ${lines(i).trim}"
+    }
+    assert(untagged.isEmpty,
+      s"${untagged.size} of ${all.size} eager checkpoints name no reason:\n" +
+        untagged.mkString("\n"))
+  }
+}

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Ckpt._
 
 /** Pins the honest-checkpoint-statistics contract
-  * ([[org.apache.spark.sql.GraftSql.eagerCkpt]] /
+  * ([[graft.Ckpt]] /
   * [[graft.plans.HonestRddStats]]): the round-13 find that the origin
   * plan's Catalyst estimate on an eager localCheckpoint runs ~100× below
   * the materialized size on exploding streams, silently steering

@@ -559,4 +559,75 @@ class PlanQualitySpec extends SparkSpec {
     }
     assert(offenders.isEmpty, s"Spark case-mapping nodes in: ${offenders.mkString("; ")}")
   }
+
+  /** Committed construction-job counts at sf0.001 (see the budget test). */
+  /** Construction jobs per query at sf0.001 after the eager-checkpoint
+    * census: the perfbench tail workload plus every query that lost a
+    * checkpoint (BENCH_NOTES "Eager checkpoint census"). */
+  private val ConstructBudget: Seq[(String, Int)] = Seq(
+    "q15_date_features" -> 1, "q29_quality_score" -> 1, "q35_ann_lsh" -> 2,
+    "q36_minhash_lsh" -> 2, "q39_lag_features" -> 1, "q74_topk_sketch" -> 1,
+    "q78_bucketed_join" -> 6, "q80_stratified_sample" -> 1,
+    "q95_semantic_dedup" -> 2, "q104_shuffle_shards" -> 1,
+    "q129_prefix_setsim" -> 2, "q139_pmi_collocations" -> 2,
+    "q141_bigram_lm" -> 3, "q143_product_quantization" -> 71,
+    "q144_triangle_count" -> 15, "q147_market_basket" -> 3,
+    "q158_ivf_pq" -> 89, "q161_revenue_concentration" -> 5,
+    "q162_ewma_trend" -> 1, "q164_skyline" -> 1, "q165_histogram" -> 1,
+    "q167_ks_test" -> 5, "q172_kendall_tau" -> 1, "q180_stream_enrich" -> 2,
+    "q194_weighted_median" -> 5, "q199_dominant_supplier" -> 1,
+    "q201_label_separation" -> 1, "q215_kaplan_meier" -> 12,
+    "q216_jw_reconcile" -> 1, "q218_eb_shrinkage" -> 1,
+    "q238_quantile_normalize" -> 4, "q239_cluster_split" -> 14,
+    "q242_key_gap_audit" -> 2, "q247_funnel_hazard" -> 1,
+    "q248_neyman_allocation" -> 1, "q259_bipartite_audit" -> 23,
+    "q260_shapley_attribution" -> 1, "q262_segment_odds" -> 2,
+    "q263_price_endings" -> 3, "q264_poisson_baskets" -> 1,
+    "q268_error_lift_grid" -> 1, "q269_energy_distance" -> 2,
+    "q271_leaderboard_churn" -> 1, "q278_split_balance" -> 1,
+    "q279_brand_diversity" -> 2, "q280_priority_mix_drift" -> 3,
+    "q282_class_weights" -> 1, "q285_minhash_estimator" -> 3,
+    "q289_stratified_ate" -> 2, "q291_heaps_fit" -> 4, "q297_int8_ann" -> 1,
+    "q308_ngram_dup_mass" -> 1, "q310_lsh_workload" -> 1,
+    "q311_shard_skew" -> 1, "q313_salt_plan" -> 1, "q314_dedup_pagerank" -> 10,
+    "q315_k_anonymity" -> 1)
+
+  test("construction-job budget: the eager work before a query returns stays " +
+    "at its committed count") {
+    // Every job that runs before `fn(spark, dir)` returns is construction
+    // work: eager checkpoints (and the AQE stage jobs under them), ML fits,
+    // driver-side probes and collects. Counted per query under a per-query
+    // job group at sf0.001; a count above its budget means a new eager job
+    // crept into query construction. The list is the perfbench tail
+    // workload's 16 queries plus every query whose checkpoints were found
+    // to have no reason and deleted (BENCH_NOTES "Eager checkpoint census").
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val budget = ConstructBudget
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val l = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        Option(s.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("construct-"))
+          .foreach(g => jobs.merge(g, 1, (a, b) => a + b))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      budget.foreach { case (name, _) =>
+        spark.sparkContext.setJobGroup(s"construct-$name", name)
+        try SparkEntry.queries(name)(spark, sf0001)
+        finally spark.sparkContext.clearJobGroup()
+      }
+      Thread.sleep(1000) // listener bus drain window
+      val got = budget.map { case (name, _) =>
+        name -> jobs.getOrDefault(s"construct-$name", 0) }
+      // vacuity guard: the tail list holds checkpointing queries, so a
+      // listener that sees nothing is broken, not a clean result
+      assert(got.map(_._2).sum > 0, "no construction job seen: listener broken?")
+      val over = budget.zip(got).collect {
+        case ((name, n), (_, g)) if g > n => s"$name: $g jobs > budget $n"
+      }
+      assert(over.isEmpty, s"construction jobs over budget:\n${over.mkString("\n")}")
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
