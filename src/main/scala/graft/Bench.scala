@@ -63,7 +63,7 @@ object Bench {
       // (they'd distort later queries' memory profile) — outside the timer,
       // like the driver's own per-query accounting
       spark.catalog.clearCache()
-      // Checkpoint blocks (eagerCkpt, 115 tagged sites) are reclaimed by
+      // Checkpoint blocks (eagerCkpt, 104 tagged sites) are reclaimed by
       // the ContextCleaner only after GC proves the frame unreachable;
       // between back-to-back heavy queries the heap can fill with dead
       // checkpoint RDDs faster than a natural GC cycle notices them

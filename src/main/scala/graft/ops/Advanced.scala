@@ -771,14 +771,13 @@ object Advanced {
     // o_orderkey order WITHOUT the single-task global window. The naive
     // `row_number() OVER (ORDER BY k)` plans Exchange SinglePartition —
     // ONE task sorts the whole table, the definitional scale-killer (the
-    // same trap as collect-based zipWithIndex). Instead: range-repartition
-    // on the key (range partitions are ordered by construction, so
-    // spark_partition_id IS the block order), per-partition ranks in a
-    // pid-partitioned window (fully parallel; the checkpoint hides the
-    // range partitioning from the planner, so this costs one extra — but
-    // parallel — hash exchange on pid), plus running-sum block
-    // offsets over the ≤32-row per-pid counts (that tiny window is the
-    // only SinglePartition in the plan) broadcast back. For a unique key
+    // same trap as collect-based zipWithIndex). Instead
+    // [[Ranks.globalIndex]]: range-repartition on the key, per-partition
+    // ranks in a pid-partitioned window (fully parallel; the checkpoint
+    // hides the range partitioning from the planner, so this costs one
+    // extra — but parallel — hash exchange on pid), plus running-sum
+    // block offsets over the ≤32-row per-pid counts (that tiny window is
+    // the only SinglePartition in the plan) broadcast back. For a unique key
     // the result is independent of where sampling placed the range
     // boundaries: offset + local rank = global rank for ANY range-disjoint
     // partitioning, so the output is deterministic and the oracle
@@ -795,21 +794,8 @@ object Advanced {
         |       CAST(max(idx) AS BIGINT) AS max_idx,
         |       CAST(sum(idx * (o_custkey % 97)) AS BIGINT) AS align_checksum
         |FROM r""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val parted = Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_custkey"))
-        .repartitionByRange(32, col("o_orderkey"))
-        .withColumn("pid", spark_partition_id())
-        // ckpt(e): spark_partition_id after repartitionByRange, read twice
-        .eagerCkpt
-      val wOff = Window.orderBy(col("pid"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = parted.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
-        .withColumn("off", coalesce(sum(col("cnt")).over(wOff), lit(0L)))
-        .select(col("pid"), col("off"))
-      val wLocal = Window.partitionBy(col("pid")).orderBy(col("o_orderkey"))
-      parted.join(broadcast(offsets), "pid")
-        .withColumn("idx", col("off") + row_number().over(wLocal))
+      Ranks.globalIndex(Tables.orders(s, d)
+          .select(col("o_orderkey"), col("o_custkey")), 32, col("o_orderkey"))
         .agg(
           count(lit(1)).as("n_rows"),
           min(col("idx")).cast("long").as("min_idx"),
@@ -887,14 +873,14 @@ object Advanced {
     // per-customer revenue plus top-1%/top-10% revenue shares. Gini uses
     // the rank identity G = (2·Σrankᵢxᵢ − (n+1)·Σxᵢ) / (n·Σxᵢ) on EXACT
     // cents — ties contribute identically under any tie order, so the
-    // row_number tie-break never moves the sum. Ranking is the q130
-    // topology (range partitions + per-partition row_number + broadcast
-    // block offsets): no per-customer row crosses a SinglePartition
-    // exchange. The rank·cents sum grows QUADRATICALLY with customer
-    // count (Σrk·m ≈ m̄·n²/2 ≈ 1.7e16 at sf1 → int64 gone by ~sf23), so
-    // it accumulates in DECIMAL(38,0) / HUGEINT; it is only ever read
-    // back as a double in the gini division. Floats appear only in the
-    // 3 final divisions, identical operand grouping both engines.
+    // row_number tie-break never moves the sum. Ranking is
+    // [[Ranks.globalIndex]] (range partitions + per-partition ranks +
+    // broadcast block offsets): no per-customer row crosses a
+    // SinglePartition exchange. The rank·cents sum grows QUADRATICALLY
+    // with customer count (Σrk·m ≈ m̄·n²/2 ≈ 1.7e16 at sf1 → int64 gone
+    // by ~sf23), so it accumulates in DECIMAL(38,0) / HUGEINT; it is only
+    // ever read back as a double in the gini division. Floats appear only
+    // in the 3 final divisions, identical operand grouping both engines.
     Q("q161_revenue_concentration",
       """WITH c AS (
         |  SELECT o_custkey AS ck,
@@ -918,24 +904,11 @@ object Advanced {
         |       round((2.0 * s - (CAST(n AS DOUBLE) + 1) * total) /
         |             (CAST(n AS DOUBLE) * total), 6) AS gini
         |FROM t, s1, s10""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val parted = Tables.orders(s, d)
-        .groupBy(col("o_custkey").as("ck"))
-        .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
-          .cast("long").as("m"))
-        .repartitionByRange(32, col("m"), col("ck"))
-        .withColumn("pid", spark_partition_id())
-        // ckpt(e): spark_partition_id after repartitionByRange, read twice
-        .eagerCkpt
-      val wOff = Window.orderBy(col("pid"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = parted.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
-        .withColumn("off", coalesce(sum(col("cnt")).over(wOff), lit(0L)))
-        .select(col("pid"), col("off"))
-      val wLocal = Window.partitionBy(col("pid"))
-        .orderBy(col("m"), col("ck"))
-      val ranked = parted.join(broadcast(offsets), "pid")
-        .withColumn("rk", col("off") + row_number().over(wLocal))
+      val ranked = Ranks.globalIndex(Tables.orders(s, d)
+          .groupBy(col("o_custkey").as("ck"))
+          .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
+            .cast("long").as("m")), 32, col("m"), col("ck"))
+        .withColumnRenamed("idx", "rk")
       val t = ranked.agg(count(lit(1)).as("n"),
         sum(col("m")).cast("long").as("total"),
         sum(col("rk").cast("decimal(19,0)") * col("m")).as("s"))

@@ -585,7 +585,6 @@ object Ml {
         |       CAST(1 AS BOOLEAN) AS qhat_pos_ok,
         |       CAST(1 AS BOOLEAN) AS coverage_ok
         |FROM s""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val feats = Seq("l_quantity", "l_discount", "l_tax", "l_returnflag",
         "l_linestatus")
       val label = "l_extendedprice"
@@ -627,20 +626,11 @@ object Ml {
       // hash mismatch — fail loudly at the cause instead
       require(nTest > 0,
         s"n_test=$nTest — the md5 split left no test rows at this corpus size")
-      val parted = scored.filter(col("split") === "cal").select(col("r"))
-        .repartitionByRange(16, col("r"))
-        .withColumn("pid", spark_partition_id())
-        // ckpt(e): spark_partition_id after repartitionByRange, read twice
-        .eagerCkpt
-      val wOff = Window.orderBy(col("pid"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = parted.groupBy(col("pid")).agg(count(lit(1)).as("c"))
-        .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-        .select(col("pid"), col("off"))
-      val qhat = parted.join(broadcast(offsets), "pid")
-        .withColumn("rn", col("off") +
-          row_number().over(Window.partitionBy("pid").orderBy(col("r"))))
-        .filter(col("rn") === k)
+      // ranking on r alone (no tie-break) is safe: tied residuals are
+      // equal values, so the value at rank k is the same in any tie order
+      val qhat = Ranks.globalIndex(
+          scored.filter(col("split") === "cal").select(col("r")), 16, col("r"))
+        .filter(col("idx") === k)
         .head().getAs[Double]("r")
       val covered = scored.filter(col("split") === "test" &&
         col("r") <= qhat).count()

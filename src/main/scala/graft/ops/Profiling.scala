@@ -378,9 +378,9 @@ object Profiling {
     // ≈ −1; a slope near 0 flags boilerplate/duplication, steeper than
     // −1.5 flags a collapsed vocabulary): OLS of ln(freq) on ln(rank)
     // over the full rank-frequency curve. The frequency-descending rank
-    // is GLOBAL, so it runs through the q130/q223 block-offset topology
+    // is GLOBAL, so it runs through [[Ranks.globalIndex]]
     // (range-repartition on (freq DESC, tok), parallel per-partition
-    // row_numbers, ≤32-row offset broadcast) — no vocabulary-sized
+    // ranks, ≤32-row offset broadcast) — no vocabulary-sized
     // SinglePartition sort; the OLS reduces to four double power sums in
     // the same pass (q173's sufficient-statistics shape). The slope/r²
     // divisions happen once, on near-identical accumulations, rounded
@@ -412,27 +412,14 @@ object Profiling {
         |             / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
         |         AS r2
         |FROM m""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val v = Tables.documents(s, d)
         .select(explode(TextOps.tokens(col("text"))).as("tok"))
         .filter(col("tok") =!= "")
         .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
-      val parted = v.repartitionByRange(32, col("freq").desc, col("tok"))
-        .withColumn("pid", spark_partition_id())
-        // ckpt(e): spark_partition_id after repartitionByRange, read twice
-        .eagerCkpt
-      val wOff = Window.orderBy(col("pid"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = parted.groupBy(col("pid")).agg(count(lit(1)).as("c"))
-        .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-        .select(col("pid"), col("off"))
-      val wLoc = Window.partitionBy(col("pid"))
-        .orderBy(col("freq").desc, col("tok"))
       val slope = (col("n") * col("sxy") - col("sx") * col("sy")) /
         (col("n") * col("sxx") - col("sx") * col("sx"))
-      parted.join(broadcast(offsets), "pid")
-        .select(
-          log((col("off") + row_number().over(wLoc)).cast("double")).as("x"),
+      Ranks.globalIndex(v, 32, col("freq").desc, col("tok"))
+        .select(log(col("idx").cast("double")).as("x"),
           log(col("freq").cast("double")).as("y"), col("freq"))
         .agg(count(lit(1)).as("n"),
           sum(col("freq")).cast("long").as("n_tokens"),
@@ -570,9 +557,9 @@ object Profiling {
     // ranked in doc_id order and cut into 10 equal prefixes; each prefix
     // records cumulative tokens read and cumulative NEW types (a type
     // counts once, at its first-occurrence prefix), and β/K come from a
-    // log-log OLS over the 10 checkpoints. Scale shape: the doc ranking is
-    // the q130/q225 block-offset pattern (range repartition + per-block
-    // row_number + broadcast offsets — no global-sort funnel); the token
+    // log-log OLS over the 10 checkpoints. Scale shape: the doc ranking and
+    // the doc count are one [[Ranks.groupIndex]] (range repartition +
+    // per-block ranks + broadcast offsets — no global-sort funnel); the token
     // stream reduces twice (per-bucket counts, per-type min bucket) and
     // every later frame is ≤10 rows. Cross-engine: cum counts are exact
     // BIGINTs, bucket boundaries are integer `div` arithmetic, and only
@@ -619,24 +606,11 @@ object Profiling {
         |FROM c, m ORDER BY c.bucket""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val nd = docs.agg(count(lit(1)).as("nd"))
-      val parted = docs.repartitionByRange(32, col("doc_id"))
-        .withColumn("pid", spark_partition_id())
-        // ckpt(e): spark_partition_id after repartitionByRange, read twice
-        .eagerCkpt
-      val wOff = Window.orderBy(col("pid"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = parted.groupBy(col("pid")).agg(count(lit(1)).as("c"))
-        .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-        .select(col("pid"), col("off"))
-      val wLoc = Window.partitionBy(col("pid")).orderBy(col("doc_id"))
-      val ranked = parted.join(broadcast(offsets), "pid")
-        .withColumn("rn", col("off") + row_number().over(wLoc))
-        .crossJoin(broadcast(nd))
+      val ranked = Ranks.groupIndex(docs, 32, Nil, col("doc_id"))
         // integer div, not double /: bucket boundaries must be exact at
         // any corpus size (the oracle's `//`)
         .withColumn("bucket",
-          least(expr("((rn - 1) * 10) div nd"), lit(9L)).cast("int"))
+          least(expr("((idx - 1) * 10) div n"), lit(9L)).cast("int"))
         .select(col("bucket"), col("text"))
       // ONE tokenize+explode, reduced map-side to the (bucket, token)
       // frame (≤ 10×|vocabulary| rows); both the per-bucket token totals

@@ -5,10 +5,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Ckpt._
 
-/** Shared rank→statistic arithmetic for the scale-safe ranking topology
-  * (q130 global index, q148 RFM quartiles, q53 segment windows): once a
-  * global 1-based rank exists, every SQL ranking-window function is pure
-  * map-side arithmetic on (rank, n) — no further shuffle, no window. */
+/** The scale-safe ranking topology and its rank→statistic arithmetic.
+  * [[blockRunning]] is the engine's one block-offset implementation:
+  * every global rank, running count and running sum (q130 global index,
+  * q148 RFM quartiles, q53 segment windows, the Stats CDFs) goes through
+  * its entry points. Once a 1-based rank and its group size n exist,
+  * every SQL ranking-window function is pure map-side arithmetic on
+  * (rank, n) — no further shuffle, no window. */
 object Ranks {
 
   /** Exact integer FLOOR division a div b (b > 0), equal to
@@ -50,60 +53,83 @@ object Ranks {
   def cumeDistExpr(r: Column, n: Column): Column =
     r.cast("double") / n
 
-  /** Global 1-based `row_number() OVER (ORDER BY sortExprs…)` WITHOUT the
-    * single-task global sort — the q130 block-offset topology packaged:
-    * range-repartition on the sort expressions (range partitions are
-    * ordered by construction, so `spark_partition_id` IS the block
-    * order), rank per-partition in a fully parallel pid-partitioned
-    * window, and broadcast the ≤`parts`-row running block-offset table
-    * back. The only SinglePartition in the plan carries `parts` aggregate
-    * rows. `sortExprs` must be a TOTAL order (add a key tie-breaker) or
-    * ranks at range boundaries become nondeterministic. Returns the input
-    * plus an `idx` column; the input is localCheckpointed (offsets and
-    * rank consumers share one shuffle). */
-  def globalIndex(df: DataFrame, parts: Int, sortExprs: Column*): DataFrame = {
-    val parted = df.repartitionByRange(parts, sortExprs: _*)
-      .withColumn("pid", spark_partition_id())
+  /** The one block-offset implementation (the q130 topology): running
+    * values of each `running` aggregate (`count` or `sum`, under a ROWS
+    * frame) in `orderBy` order within `partitionBy` groups (Nil = the whole
+    * frame), WITHOUT the single-task sort of a global window.
+    * Range-repartition on (partitionBy ++ orderBy) — range partitions are
+    * ordered by construction, so `spark_partition_id` IS the block order
+    * and a group's rows in block p all precede its rows in block p+1 —
+    * aggregate per block in a fully parallel (block, group)-partitioned
+    * window, and broadcast back the running totals of the earlier blocks:
+    * an offsets frame of ≤`parts` rows per group (without groups, all the
+    * only SinglePartition in the plan carries). With `withN` the offsets
+    * frame also carries the group's row count `n`, at no extra job.
+    * `orderBy` must be a TOTAL order within a group (add a key tie-break)
+    * or values at range boundaries become nondeterministic. The input is
+    * localCheckpointed (offsets and the local window share one shuffle);
+    * callers should project it down to the columns they need first.
+    * Group keys join back null-safe, so a null group is a group. */
+  private def blockRunning(df: DataFrame, parts: Int, partitionBy: Seq[String],
+      orderBy: Seq[Column], running: Seq[(String, Column)],
+      withN: Boolean): DataFrame = {
+    val groups = partitionBy.map(col)
+    val parted = df.repartitionByRange(parts, groups ++ orderBy: _*)
+      .withColumn("_pid", spark_partition_id())
       // ckpt(e): spark_partition_id after repartitionByRange, read twice
       .eagerCkpt
-    val wOff = Window.orderBy(col("pid"))
+    val blockAggs = running.map { case (out, f) => f.as(s"_b_$out") } ++
+      (if (withN) Seq(count(lit(1)).as("_b_n")) else Nil)
+    val group = Window.partitionBy(groups: _*)
+    val before = group.orderBy(col("_pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = parted.groupBy(col("pid")).agg(count(lit(1)).as("c"))
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .select(col("pid"), col("off"))
-    val wLoc = Window.partitionBy(col("pid")).orderBy(sortExprs: _*)
-    parted.join(broadcast(offsets), "pid")
-      .withColumn("idx", col("off") + row_number().over(wLoc))
-      .drop("pid", "off")
+    val gKeys = partitionBy.indices.map(i => s"_g$i")
+    val offsets = parted.groupBy(groups :+ col("_pid"): _*)
+      .agg(blockAggs.head, blockAggs.tail: _*)
+      .select(groups.zip(gKeys).map { case (g, k) => g.as(k) } ++
+        Seq(col("_pid").as("_opid")) ++
+        running.map { case (out, _) =>
+          coalesce(sum(col(s"_b_$out")).over(before), lit(0L)).as(s"_o_$out")
+        } ++
+        (if (withN) Seq(sum(col("_b_n")).over(group).as("n")) else Nil): _*)
+    val on = groups.zip(gKeys).foldLeft(col("_pid") === col("_opid")) {
+      case (c, (g, k)) => c && (g <=> col(k)) }
+    val local = Window.partitionBy(col("_pid") +: groups: _*)
+      .orderBy(orderBy: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    running.foldLeft(parted.join(broadcast(offsets), on)) {
+      case (f, (out, agg)) =>
+        f.withColumn(out, col(s"_o_$out") + agg.over(local))
+    }.drop(Seq("_pid", "_opid") ++ gKeys ++ running.map("_o_" + _._1): _*)
   }
 
-  /** Global inclusive running sum of `value` under the total order
-    * `sortExprs` — `sum(value) OVER (ORDER BY … ROWS UNBOUNDED
-    * PRECEDING..CURRENT ROW)` in the same block-offset topology as
-    * [[globalIndex]]: range-repartition on the sort expressions, run the
-    * prefix sum per block in a fully parallel pid-partitioned window, and
-    * broadcast the ≤`parts`-row running block-total table back. The only
-    * SinglePartition in the plan carries `parts` aggregate rows. `value`
-    * must reference columns of `df`; callers should project the frame down
-    * to the columns they need BEFORE calling (the parted frame is
-    * localCheckpointed for its two consumers — block totals and the local
-    * window). Returns the input plus a `cum` column (LongType). */
+  /** Global 1-based `row_number() OVER (ORDER BY sortExprs…)` — a LONG
+    * `idx` column — in the block-offset topology ([[blockRunning]]). */
+  def globalIndex(df: DataFrame, parts: Int, sortExprs: Column*): DataFrame =
+    blockRunning(df, parts, Nil, sortExprs, Seq("idx" -> count(lit(1))),
+      withN = false)
+
+  /** [[globalIndex]] within each `partitionBy` group (Nil = one group,
+    * the whole frame) plus the group's row count `n` — the (rank, n) pair
+    * [[ntileExpr]], [[percentRankExpr]] and [[cumeDistExpr]] read. */
+  def groupIndex(df: DataFrame, parts: Int, partitionBy: Seq[String],
+      sortExprs: Column*): DataFrame =
+    blockRunning(df, parts, partitionBy, sortExprs,
+      Seq("idx" -> count(lit(1))), withN = true)
+
+  /** Global inclusive running sum of `value` (cast to LONG) under the total
+    * order `sortExprs` — `sum(value) OVER (ORDER BY … ROWS UNBOUNDED
+    * PRECEDING..CURRENT ROW)` as a `cum` column, in the block-offset
+    * topology ([[blockRunning]]). */
   def globalCumSum(df: DataFrame, parts: Int, value: Column,
-      sortExprs: Column*): DataFrame = {
-    val parted = df.repartitionByRange(parts, sortExprs: _*)
-      .withColumn("pid", spark_partition_id())
-      .withColumn("cs_v", value.cast("long"))
-      // ckpt(e): spark_partition_id after repartitionByRange, read twice
-      .eagerCkpt
-    val wOff = Window.orderBy(col("pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = parted.groupBy(col("pid")).agg(sum(col("cs_v")).as("c"))
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .select(col("pid"), col("off"))
-    val wLoc = Window.partitionBy(col("pid")).orderBy(sortExprs: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    parted.join(broadcast(offsets), "pid")
-      .withColumn("cum", col("off") + sum(col("cs_v")).over(wLoc))
-      .drop("pid", "off", "cs_v")
-  }
+      sortExprs: Column*): DataFrame =
+    globalCumSums(df, parts, Seq("cum" -> value), sortExprs: _*)
+
+  /** [[globalCumSum]] of several measures under one order, one column per
+    * (name, value) pair, all from the same blocks. An exclusive ("strictly
+    * below") sum is the inclusive one minus the row's own value. */
+  def globalCumSums(df: DataFrame, parts: Int, values: Seq[(String, Column)],
+      sortExprs: Column*): DataFrame =
+    blockRunning(df, parts, Nil, sortExprs,
+      values.map { case (out, v) => out -> sum(v.cast("long")) }, withN = false)
 }

@@ -272,12 +272,13 @@ object Relational {
     // percent_rank and cume_dist per customer segment. NOT a
     // PARTITION BY c_mktsegment window: 5 segments means a 5-task sort
     // funnel at 10⁹ customers — the partitioned cousin of the q130/q148
-    // scale-killer. Instead, range-repartition on (segment, acctbal,
-    // custkey) — range partitions are ordered, so each segment's rows in
-    // block p all precede its rows in block p+1 — rank per (block,
-    // segment) in a fully parallel window, add per-(segment, block)
-    // broadcast offsets, then derive all three statistics as map-side
-    // arithmetic on (rank, n) via graft.ops.Ranks: bit-equal to the SQL
+    // scale-killer. Instead, [[Ranks.groupIndex]] by segment:
+    // range-repartition on (segment, acctbal, custkey) — range partitions
+    // are ordered, so each segment's rows in block p all precede its rows
+    // in block p+1 — rank per (block, segment) in a fully parallel window,
+    // add per-(segment, block) broadcast offsets and the segment size n,
+    // then derive all three statistics as map-side arithmetic on
+    // (rank, n) via graft.ops.Ranks: bit-equal to the SQL
     // window forms because the (acctbal, custkey) order is total (custkey
     // is unique in this corpus; were a regeneration to introduce ties,
     // the oracle's true peer semantics would hash-mismatch LOUDLY rather
@@ -295,30 +296,13 @@ object Relational {
         |       round(max(pr), 6) AS max_pr, round(max(cd), 6) AS max_cd
         |FROM w GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       val parts = math.max(2, s.sparkContext.defaultParallelism)
-      val parted = Tables.customer(s, d)
-        .select(col("c_mktsegment"), col("c_acctbal"), col("c_custkey"))
-        .repartitionByRange(parts, col("c_mktsegment"), col("c_acctbal"),
-          col("c_custkey"))
-        .withColumn("_pid", spark_partition_id())
-        // ckpt(e): spark_partition_id after repartitionByRange, read twice
-        .eagerCkpt
-      val wOff = Window.partitionBy(col("c_mktsegment")).orderBy(col("_pid"))
-      val offsets = parted.groupBy(col("c_mktsegment"), col("_pid"))
-        .agg(count(lit(1)).as("_cnt"))
-        .select(col("c_mktsegment"), col("_pid"),
-          coalesce(sum(col("_cnt")).over(
-            wOff.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-            .as("_off"),
-          sum(col("_cnt")).over(wOff.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing)).as("_n"))
-      val wLocal = Window.partitionBy(col("_pid"), col("c_mktsegment"))
-        .orderBy(col("c_acctbal"), col("c_custkey"))
-      parted.join(broadcast(offsets), Seq("c_mktsegment", "_pid"))
-        .withColumn("_r", col("_off") + row_number().over(wLocal))
+      Ranks.groupIndex(Tables.customer(s, d)
+          .select(col("c_mktsegment"), col("c_acctbal"), col("c_custkey")),
+          parts, Seq("c_mktsegment"), col("c_acctbal"), col("c_custkey"))
         .select(col("c_mktsegment"),
-          Ranks.ntileExpr(col("_r"), col("_n"), 4).as("quartile"),
-          Ranks.percentRankExpr(col("_r"), col("_n")).as("pr"),
-          Ranks.cumeDistExpr(col("_r"), col("_n")).as("cd"))
+          Ranks.ntileExpr(col("idx"), col("n"), 4).as("quartile"),
+          Ranks.percentRankExpr(col("idx"), col("n")).as("pr"),
+          Ranks.cumeDistExpr(col("idx"), col("n")).as("cd"))
         .groupBy(col("c_mktsegment"), col("quartile"))
         .agg(count(lit(1)).as("n"),
           round(max(col("pr")), 6).as("max_pr"),

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -18,7 +17,7 @@ import graft.Ckpt._
   *
   * Scale shapes: the basket pair explode is bounded by basket size (≤ 7
   * items per TPC-H order ⇒ ≤ 21 pairs) and partial-aggregates before its
-  * one shuffle; RFM quartiles rank through [[distributedNtile]] (range
+  * one shuffle; RFM quartiles rank through [[Ranks.groupIndex]] (range
   * partitions + per-partition ranks — no per-customer row ever crosses a
   * SinglePartition exchange); the seasonal index is a 12-group
   * conditional aggregate of one scan.
@@ -34,55 +33,6 @@ object Retail {
     * the Spark side and the oracle SQL use this same formula. */
   private def fl6(x: org.apache.spark.sql.Column) =
     floor(x * 1000000 + 0.5) / 1000000
-
-  /** `ntile(buckets) OVER (ORDER BY order…)` without the single-task global
-    * sort. The naive global window funnels EVERY row through one Exchange
-    * SinglePartition — the definitional scale-killer on a per-customer
-    * frame (10⁸–10⁹ rows at 100 TB). Instead, the q130 topology: range-
-    * repartition on the sort key (range partitions are ordered by
-    * construction, so `spark_partition_id` IS the block order), rank
-    * per-partition in a fully parallel pid-partitioned window, then add
-    * per-block offsets. The ≤`parts` per-block counts are collected and
-    * re-emitted as a LITERAL lookup (like q48's cells / q131's argmax —
-    * scalar-bound driver metadata): one tiny job against the checkpointed
-    * blocks replaces an offsets window + broadcast exchange per call,
-    * and the plan then contains NO SinglePartition exchange at all. The
-    * bucket is pure map-side arithmetic on (rank, n) via [[Ranks]]
-    * (RetailSpec pins equality against Spark's own ntile, remainder and
-    * n<k cases included). REQUIRES a total order (tie-broken sort key):
-    * with distinct keys the rank — hence the bucket — is independent of
-    * where range sampling placed the partition boundaries. */
-  private[graft] def distributedNtile(df: org.apache.spark.sql.DataFrame,
-      buckets: Int, out: String, order: org.apache.spark.sql.Column*)
-      : org.apache.spark.sql.DataFrame = {
-    // parts CAPPED at 128, not bare defaultParallelism: the offsets ride a
-    // constant-folded literal map whose element_at is a per-row O(parts)
-    // scan (and whose expression tree grows with parts — a 32k-slot
-    // cluster would build a 64k-child CreateMap). 128 ordered blocks keep
-    // the lookup at ns scale and the per-block sort at ~10⁷ rows even for
-    // 10⁹ customers; a corpus needing more width should switch the
-    // offsets back to the q53 broadcast-join form, which scales in parts
-    // but pays an extra plan stage per call.
-    val parts = math.min(128,
-      math.max(2, df.sparkSession.sparkContext.defaultParallelism))
-    val parted = df.repartitionByRange(parts, order: _*)
-      .withColumn("_pid", spark_partition_id())
-      // ckpt(e): spark_partition_id after repartitionByRange, read twice
-      .eagerCkpt
-    val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val n = counts.map(_._2).sum
-    val offs = counts.map(_._1).zip(
-      counts.map(_._2).scanLeft(0L)(_ + _)).toMap
-    val offExpr = element_at(
-      map(counts.flatMap { case (pid, _) =>
-        Seq(lit(pid), lit(offs(pid))) }: _*), col("_pid"))
-    val wLocal = Window.partitionBy(col("_pid")).orderBy(order: _*)
-    parted
-      .withColumn("_r", offExpr + row_number().over(wLocal))
-      .withColumn(out, Ranks.ntileExpr(col("_r"), lit(n), buckets))
-      .drop("_pid", "_r")
-  }
 
   val queries: Seq[Q] = Seq(
 
@@ -142,11 +92,14 @@ object Retail {
     // segments. Every quartile ranks on integers with a custkey tie-break —
     // bit-deterministic; ntile semantics (equal buckets, remainder to the
     // leading buckets) agree between engines given the identical total
-    // order. Each quartile is a [[distributedNtile]] pass — one parallel
-    // range exchange + pid-local ranks per dimension; the raw per-customer
+    // order. Each quartile is a [[Ranks.groupIndex]] pass — one parallel
+    // range exchange + pid-local ranks per dimension, the bucket map-side
+    // arithmetic on (idx, n) via [[Ranks.ntileExpr]]; the raw per-customer
     // frame NEVER crosses a SinglePartition exchange (the naive global
     // ntile window would funnel all 10⁸–10⁹ customers through one sorting
-    // task, three times — PlanQualitySpec pins the shape).
+    // task, three times — PlanQualitySpec pins the shape). With distinct
+    // (tie-broken) keys the rank, hence the bucket, is independent of
+    // where range sampling placed the partition boundaries.
     Q("q148_rfm_segments",
       """WITH c AS (
         |  SELECT o_custkey AS ck, max(o_orderdate) AS r_ts,
@@ -170,12 +123,15 @@ object Retail {
           count(lit(1)).as("f"),
           sum(round(col("o_totalprice") * 100, 0).cast("long"))
             .cast("long").as("m_cents"))
+      val parts = math.max(2, s.sparkContext.defaultParallelism)
       val q = Seq[(String, Seq[org.apache.spark.sql.Column])](
         ("rq", Seq(col("r_ts").desc, col("ck"))),
         ("fq", Seq(col("f").desc, col("ck"))),
         ("mq", Seq(col("m_cents").desc, col("ck"))))
         .foldLeft(c) { case (df, (name, ord)) =>
-          distributedNtile(df, 4, name, ord: _*)
+          Ranks.groupIndex(df, parts, Nil, ord: _*)
+            .withColumn(name, Ranks.ntileExpr(col("idx"), col("n"), 4))
+            .drop("idx", "n")
         }
       q.groupBy(concat(lit("R"), col("rq"), lit("F"), col("fq"),
           lit("M"), col("mq")).as("segment"))
@@ -780,28 +736,13 @@ object Retail {
         |       CAST(sum(rev) AS BIGINT) AS class_rev_cents,
         |       round(sum(rev) / CAST(min(tot) AS DOUBLE), 6) AS rev_share
         |FROM k GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val per = Tables.lineitem(s, d)
         .groupBy(col("l_partkey").as("pk"))
         .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
           .cast("long").as("rev"))
-      val parted = per.repartitionByRange(32, col("rev").desc, col("pk"))
-        .withColumn("pid", spark_partition_id())
-        // ckpt(e): spark_partition_id after repartitionByRange, read twice
-        .eagerCkpt
-      val wOff = Window.orderBy(col("pid"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = parted.groupBy(col("pid"))
-        .agg(sum(col("rev")).as("s"))
-        .withColumn("off", coalesce(sum(col("s")).over(wOff), lit(0L)))
-        .select(col("pid"), col("off"))
       val tot = per.agg(sum(col("rev")).cast("long").as("tot"))
-      val wLoc = Window.partitionBy(col("pid"))
-        .orderBy(col("rev").desc, col("pk"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      parted.join(broadcast(offsets), "pid")
-        .withColumn("cumb",
-          col("off") + sum(col("rev")).over(wLoc) - col("rev"))
+      Ranks.globalCumSum(per, 32, col("rev"), col("rev").desc, col("pk"))
+        .withColumn("cumb", col("cum") - col("rev"))
         .join(broadcast(tot), lit(true))
         .withColumn("abc_class",
           when(col("cumb") * 5 < col("tot") * 4, "A")

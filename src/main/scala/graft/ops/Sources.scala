@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets
@@ -21,6 +22,35 @@ import graft.Ckpt._
   * repair, cast — is hash-verified.
   */
 object Sources {
+
+  /** q123's line accounting and quarantine audit over a PERMISSIVE JSON
+    * frame with a `_corrupt_record` column. Spark rejects a raw-JSON query
+    * whose only referenced column is the corrupt-record column, so the
+    * accounting also counts the parsed `event_id`s: a clean quarantine
+    * parses an id on exactly the parsed lines (`n_ids` = `n_parsed`).
+    * Correct on a lazily read frame; q123 checkpoints its frame only so
+    * the two aggregates do not parse the JSON twice. */
+  private[graft] def corruptAccounting(read: DataFrame): DataFrame = {
+    val acct = read.agg(
+      count(lit(1)).as("n_lines"),
+      sum(col("_corrupt_record").isNull.cast("int")).cast("long").as("n_parsed"),
+      sum(col("_corrupt_record").isNotNull.cast("int")).cast("long")
+        .as("n_quarantined"),
+      count(col("event_id")).as("n_ids"))
+    // quarantine audit: every bad row kept its raw bytes (reprocessable),
+    // and no parsed row was secretly malformed
+    val audit = read.agg(
+      sum((col("_corrupt_record").isNotNull &&
+        !col("_corrupt_record").endsWith("}")).cast("int")).as("bad_kept"),
+      sum((col("_corrupt_record").isNotNull).cast("int")).as("bad_total"),
+      sum((col("_corrupt_record").isNull && col("event_id").isNull).cast("int"))
+        .as("parsed_but_null"))
+    acct.crossJoin(audit)
+      .select(col("n_lines"), col("n_parsed"), col("n_quarantined"),
+        (col("bad_kept") === col("bad_total") &&
+          col("parsed_but_null") === 0 &&
+          col("n_ids") === col("n_parsed")).as("quarantine_ok"))
+  }
 
   /** Scratch dir keyed by Spark applicationId: stable within a session
     * (repeated query runs overwrite in place), unique across concurrent
@@ -279,23 +309,7 @@ object Sources {
         .json(s"$dir/events_jsonl")
         // ckpt(a): accounting + quarantine audit; unshared, the JSON parses twice
         .eagerCkpt
-      val acct = read.agg(
-        count(lit(1)).as("n_lines"),
-        sum(col("_corrupt_record").isNull.cast("int")).cast("long").as("n_parsed"),
-        sum(col("_corrupt_record").isNotNull.cast("int")).cast("long")
-          .as("n_quarantined"))
-      // quarantine audit: every bad row kept its raw bytes (reprocessable),
-      // and no parsed row was secretly malformed
-      val audit = read.agg(
-        sum((col("_corrupt_record").isNotNull &&
-          !col("_corrupt_record").endsWith("}")).cast("int")).as("bad_kept"),
-        sum((col("_corrupt_record").isNotNull).cast("int")).as("bad_total"),
-        sum((col("_corrupt_record").isNull && col("event_id").isNull).cast("int"))
-          .as("parsed_but_null"))
-      acct.crossJoin(audit)
-        .select(col("n_lines"), col("n_parsed"), col("n_quarantined"),
-          (col("bad_kept") === col("bad_total") &&
-            col("parsed_but_null") === 0).as("quarantine_ok"))
+      corruptAccounting(read)
     },
 
     // Schema drift across ingest batches: two parquet slices of the same

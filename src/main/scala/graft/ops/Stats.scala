@@ -24,10 +24,10 @@ import graft.Ckpt._
   *  - Rank-based statistics (U, KS-D) need a global cumulative count over
   *    ordered distinct values. The naive `sum() OVER (ORDER BY v)` plans an
   *    Exchange SinglePartition — one task sorts everything. Instead the
-  *    q130 topology: range-repartition the count frame, per-partition prefix
-  *    sums in a pid-partitioned (fully parallel) window, and a running-sum
-  *    block-offset table (≤32 rows — the only SinglePartition in the plan)
-  *    broadcast back. Exact for any range-disjoint boundary placement.
+  *    q130 block-offset topology of [[Ranks.globalCumSums]]: per-block
+  *    prefix sums in parallel, and a ≤32-row block-offset table (the only
+  *    SinglePartition in the plan) broadcast back. Exact for any
+  *    range-disjoint boundary placement.
   *  - All statistic numerators stay in BIGINT (counts, cents, rank sums);
   *    doubles appear only in the final rounded ratio, so the DuckDB oracle
   *    hash-matches bit-for-bit on the integer columns and at round-6 on the
@@ -47,29 +47,14 @@ object Stats {
         sum(when(!col("is_a"), 1L).otherwise(0L)).as("b"))
 
   /** Adds exact cumulative sample counts STRICTLY BELOW each distinct value
-    * (`ca`, `cb`) without a global single-task sort — the q130 block-offset
-    * topology (see the object doc). Input: one row per distinct `v` with
-    * per-sample counts `a`, `b`. */
-  private[graft] def withCumBelow(counts: DataFrame): DataFrame = {
-    val parted = counts.repartitionByRange(32, col("v"))
-      .withColumn("pid", spark_partition_id())
-      // ckpt(e): spark_partition_id after repartitionByRange, read twice
-      .eagerCkpt
-    val wOff = Window.orderBy(col("pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = parted.groupBy(col("pid"))
-      .agg(sum(col("a")).as("sa"), sum(col("b")).as("sb"))
-      .withColumn("off_a", coalesce(sum(col("sa")).over(wOff), lit(0L)))
-      .withColumn("off_b", coalesce(sum(col("sb")).over(wOff), lit(0L)))
-      .select(col("pid"), col("off_a"), col("off_b"))
-    val wLoc = Window.partitionBy(col("pid")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    parted.join(broadcast(offsets), "pid")
-      .withColumn("ca",
-        col("off_a") + coalesce(sum(col("a")).over(wLoc), lit(0L)))
-      .withColumn("cb",
-        col("off_b") + coalesce(sum(col("b")).over(wLoc), lit(0L)))
-  }
+    * (`ca`, `cb`) without a global single-task sort: one two-measure
+    * [[Ranks.globalCumSums]] call, minus each row's own counts. Input: one
+    * row per distinct `v` with per-sample counts `a`, `b`. */
+  private def withCumBelow(counts: DataFrame): DataFrame =
+    Ranks.globalCumSums(counts, 32, Seq("ca" -> col("a"), "cb" -> col("b")),
+      col("v"))
+      .withColumn("ca", col("ca") - col("a"))
+      .withColumn("cb", col("cb") - col("b"))
 
   /** Shared oracle prelude: per-distinct-cents counts of the two samples
     * with cumulative-below counts (DuckDB recomputes the distributed prefix
@@ -983,8 +968,8 @@ object Stats {
     // jump). Scale shape: gaps come from per-customer lag windows
     // (parallel, bounded per customer); distinct gap values are a
     // DOMAIN-bounded frame whose cumulative counts run through the same
-    // block-offset machinery as the q167 two-sample KS ([[withCumBelow]]
-    // — the b-sample is simply empty); one row out.
+    // block-offset machinery as the q167 two-sample KS, one measure
+    // ([[Ranks.globalCumSum]] minus the row's own count); one row out.
     Q("q231_exp_gap_fit",
       """WITH g0 AS (
         |  SELECT o_custkey, CAST(o_orderdate AS DATE) AS d,
@@ -1028,12 +1013,12 @@ object Stats {
           .cast("long").as("v"))
         .filter(col("v") > 0)
       val c = gaps.groupBy(col("v")).agg(count(lit(1)).as("a"))
-        .withColumn("b", lit(0L))
       val t = c.agg(sum(col("a")).cast("long").as("n"),
         sum(col("a") * col("v")).cast("long").as("sg"))
       val lam = col("n").cast("double") / col("sg")
       val fexp = lit(1) - exp(-lam * col("v"))
-      val kd = withCumBelow(c)
+      val kd = Ranks.globalCumSum(c, 32, col("a"), col("v"))
+        .withColumn("ca", col("cum") - col("a"))
         .join(broadcast(t), lit(true))
         .select(greatest(
           abs((col("ca") + col("a")) / col("n").cast("double") - fexp),

@@ -548,13 +548,10 @@ object Training {
     // to q291's Heaps fit and q225's Zipf fit: at vocab cutoffs k ∈
     // {100, 1000, 10000}, what fraction of the corpus TOKEN MASS do the
     // top-k types cover, and what OOV mass falls outside? Types rank by
-    // (count desc, token) — a TOTAL order — in the q130 block-offset
-    // topology spelled inline because the rank consumer and the cutoff
-    // sweep share ONE range shuffle (globalIndex would re-shuffle for
-    // its own layout): range-partition the vocabulary, take per-block
-    // row counts, broadcast the ≤32-row offset table, and one pid-local
-    // window yields the global rank; covered mass then falls out of the
-    // CASE sums over rk. The corpus reduces to the vocabulary in
+    // (count desc, token) — a TOTAL order — through [[Ranks.globalIndex]]
+    // (range-partitioned vocabulary, per-block ranks, ≤32-row offset
+    // broadcast); covered mass then falls out of the CASE sums over the
+    // rank. The corpus reduces to the vocabulary in
     // one explode+partial-agg pass and is never touched again; the
     // cutoff sweep is a conditional aggregation over the ranked
     // vocabulary (3 CASE sums, one scan) reshaped through a 3-row
@@ -583,24 +580,11 @@ object Training {
       val v = Tables.documents(s, d)
         .select(explode(TextOps.tokens(col("text"))).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("ct"))
-      val parted = v.repartitionByRange(32, col("ct").desc, col("token"))
-        .withColumn("pid", spark_partition_id())
-        // ckpt(e): spark_partition_id after repartitionByRange, read twice
-        .eagerCkpt
-      val wOff = Window.orderBy(col("pid"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = parted.groupBy(col("pid"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("roff", coalesce(sum(col("c")).over(wOff), lit(0L)))
-        .select(col("pid"), col("roff"))
-      val wLoc = Window.partitionBy(col("pid"))
-        .orderBy(col("ct").desc, col("token"))
-      val r = parted.join(broadcast(offsets), "pid")
-        .withColumn("rk", col("roff") + row_number().over(wLoc))
+      val r = Ranks.globalIndex(v, 32, col("ct").desc, col("token"))
       val ks = Seq(100, 1000, 10000)
       val aggCols = Seq(
         sum(col("ct")).as("total"), count(lit(1)).as("n_types")) ++
-        ks.map(k => sum(when(col("rk") <= k, col("ct")).otherwise(0L))
+        ks.map(k => sum(when(col("idx") <= k, col("ct")).otherwise(0L))
           .as(s"cov_$k"))
       val agg = r.agg(aggCols.head, aggCols.tail: _*)
       val spine = s.range(1)

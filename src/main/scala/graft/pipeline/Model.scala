@@ -75,10 +75,7 @@ object Model {
     * (q153) so every estimator trains on the identical featurization. */
   private def featureStages(df: DataFrame, labelCol: String,
       featureCols: Seq[String]): Array[org.apache.spark.ml.PipelineStage] = {
-    val distinctFeatures = featureCols.distinct.filter(_ != labelCol)
-    val catCols = df.schema.fields
-      .collect { case f if f.dataType == StringType => f.name }
-      .filter(distinctFeatures.contains)
+    val (catCols, assembled) = featureLayout(df, labelCol, featureCols)
     // ONE multi-column StringIndexer, not one per column: each single-column
     // fit is its own countByValue pass over the training data (measured 2.5s
     // per string column at sf0.1); the multi-column form builds every
@@ -89,7 +86,6 @@ object Model {
         .setInputCols(catCols.toArray)
         .setOutputCols(catCols.map(c => s"${c}_idx").toArray)
         .setHandleInvalid("keep"))
-    val assembled = distinctFeatures.map(c => if (catCols.contains(c)) s"${c}_idx" else c)
     val assembler = new VectorAssembler()
       .setInputCols(assembled.toArray).setOutputCol("features")
     (indexers :+ assembler).toArray[org.apache.spark.ml.PipelineStage]
@@ -126,12 +122,6 @@ object Model {
     fitScore(train, valid, labelCol, featureCols, rf)
   }
 
-  /** The fit/score/metrics core behind [[fitPredict]], parameterized on the
-    * estimator and an EXPLICIT train/holdout pair — q154 swaps in a
-    * GBTRegressor under the same featurization + holdout, and q153's
-    * rolling-origin backtest passes date-cutoff splits instead of the
-    * reference's leaky randomSplit-on-a-time-series (model.py:69: a random
-    * split trains on rows from the future of its own test rows). */
   /** The fit half of [[fitScore]]: featurize (cached, right-sized — see
     * below) + fit `regressor`, returning the fitted transformer chain.
     * q152 uses this alone (persist → reload needs the model, not a
@@ -198,10 +188,19 @@ object Model {
       featureCols: Seq[String],
       regressor: org.apache.spark.ml.Predictor[org.apache.spark.ml.linalg.Vector, _, _])
       : (Seq[Transformer], Long, Double, Double) = {
-    import org.apache.spark.sql.functions._
     val transformers = fitTransformers(train, labelCol, featureCols, regressor)
-    val m = transformers.foldLeft(valid)((d, t) => t.transform(d))
-      .select(col(labelCol), col("prediction"))
+    val (n, r2, rmse) = holdoutMetrics(
+      transformers.foldLeft(valid)((d, t) => t.transform(d)), labelCol)
+    (transformers, n, r2, rmse)
+  }
+
+  /** (n, r2, rmse) of a scored holdout in ONE aggregation pass over the
+    * label and prediction columns: r2 = 1 − SSR/SST with
+    * SST = Σy² − (Σy)²/n. */
+  private def holdoutMetrics(scored: DataFrame,
+      labelCol: String): (Long, Double, Double) = {
+    import org.apache.spark.sql.functions._
+    val m = scored.select(col(labelCol), col("prediction"))
       .agg(
         count(lit(1)).as("n"),
         sum(pow(col(labelCol) - col("prediction"), 2)).as("ssr"),
@@ -209,17 +208,20 @@ object Model {
         sum(col(labelCol)).as("ysum")).head()
     val (n, ssr) = (m.getLong(0), m.getDouble(1))
     val sst = m.getDouble(2) - m.getDouble(3) * m.getDouble(3) / n
-    val r2 = 1.0 - ssr / sst
-    val rmse = math.sqrt(ssr / n)
-    (transformers, n, r2, rmse)
+    (n, 1.0 - ssr / sst, math.sqrt(ssr / n))
   }
 
+  /** The fit/score/metrics core behind [[fitPredict]], parameterized on the
+    * estimator and an EXPLICIT train/holdout pair — q154 swaps in a
+    * GBTRegressor under the same featurization + holdout, and q153's
+    * rolling-origin backtest passes date-cutoff splits instead of the
+    * reference's leaky randomSplit-on-a-time-series (model.py:69: a random
+    * split trains on rows from the future of its own test rows). */
   def fitScore(
       train: DataFrame, valid: DataFrame, labelCol: String,
       featureCols: Seq[String],
       regressor: org.apache.spark.ml.Predictor[org.apache.spark.ml.linalg.Vector, _, _])
       : (Seq[Transformer], DataFrame, Double, Double) = {
-    import org.apache.spark.sql.functions._
     val transformers = fitTransformers(train, labelCol, featureCols, regressor)
     // cached: the metrics pass below populates it and the caller's read
     // hits it (without the cache the whole featurize+score lineage runs
@@ -227,15 +229,7 @@ object Model {
     // unpersist it when done (Walmart.runModel does; Bench clears caches
     // between queries).
     val scored = transformers.foldLeft(valid)((d, t) => t.transform(d)).cache()
-    val m = scored.agg(
-      count(lit(1)).cast("double").as("n"),
-      sum(pow(col(labelCol) - col("prediction"), 2)).as("ssr"),
-      sum(pow(col(labelCol), 2)).as("yy"),
-      sum(col(labelCol)).as("ysum")).head()
-    val (n, ssr) = (m.getDouble(0), m.getDouble(1))
-    val sst = m.getDouble(2) - m.getDouble(3) * m.getDouble(3) / n
-    val r2 = 1.0 - ssr / sst
-    val rmse = math.sqrt(ssr / n)
+    val (_, r2, rmse) = holdoutMetrics(scored, labelCol)
     (transformers, scored, r2, rmse)
   }
 

@@ -15,8 +15,10 @@ class CkptCensusSpec extends AnyFunSuite {
 
   private val Tag = """//\s*ckpt\([abce]\):\s*\S""".r
 
-  /** (file:line, line) of every `.eagerCkpt` in code, comments excluded. */
-  private def sites(root: java.io.File): Seq[(String, Int, Array[String])] = {
+  /** (file, line index, lines) of every `needle` in code, comments
+    * excluded. */
+  private def sites(root: java.io.File,
+      needle: String): Seq[(String, Int, Array[String])] = {
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(files)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
@@ -27,16 +29,20 @@ class CkptCensusSpec extends AnyFunSuite {
         case i if {
           val t = lines(i).trim
           !t.startsWith("*") && !t.startsWith("/*") &&
-            lines(i).split("//", 2)(0).contains(".eagerCkpt")
+            lines(i).split("//", 2)(0).contains(needle)
         } => (f.getPath, i, lines)
       }
     }
   }
 
-  test("every .eagerCkpt in src/main carries a ckpt(a|b|c|e) tag") {
+  private def mainRoot: java.io.File = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repository root: $root missing")
-    val all = sites(root)
+    root
+  }
+
+  test("every .eagerCkpt in src/main carries a ckpt(a|b|c|e) tag") {
+    val all = sites(mainRoot, ".eagerCkpt")
     assert(all.nonEmpty, "no .eagerCkpt call site found: the scan is broken")
     val untagged = all.collect {
       case (path, i, lines) if Tag.findFirstIn(lines(i)).isEmpty &&
@@ -46,5 +52,20 @@ class CkptCensusSpec extends AnyFunSuite {
     assert(untagged.isEmpty,
       s"${untagged.size} of ${all.size} eager checkpoints name no reason:\n" +
         untagged.mkString("\n"))
+  }
+
+  test("spark_partition_id() appears in src/main only inside Ranks") {
+    // the block-offset ranking (range-repartition, block id, checkpoint,
+    // broadcast offsets) has one implementation, Ranks.blockRunning; a
+    // block id anywhere else is a hand copy of it
+    val found = sites(mainRoot, "spark_partition_id()")
+    assert(found.nonEmpty, "no spark_partition_id() found: the scan is broken")
+    val outside = found.collect {
+      case (path, i, lines) if !path.endsWith("ops/Ranks.scala") =>
+        s"$path:${i + 1}: ${lines(i).trim}"
+    }
+    assert(outside.isEmpty,
+      s"${outside.size} block ids outside ops/Ranks.scala:\n" +
+        outside.mkString("\n"))
   }
 }

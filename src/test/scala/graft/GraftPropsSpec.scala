@@ -91,27 +91,55 @@ class GraftPropsSpec extends SparkSpec {
   }
 
   test("property: block-offset global cumsum equals the single-window form") {
-    // Ranks.globalCumSum (q299's topology) against the direct
-    // SQL-semantics reference — a driver-side prefix sum over the sorted
-    // rows — on random values INCLUDING duplicate sort keys resolved by
-    // the id tie-break, and partition counts that leave some range
-    // partitions empty (parts > n). Few trials: each is a Spark job with
-    // a shuffle + checkpoint.
+    // Every Ranks entry point (q299's cumsum, q130's index, q53's grouped
+    // index with n, the Stats two-measure CDF) against a driver-side
+    // reference over the sorted rows: seeded random values with DUPLICATE
+    // sort keys (8 key values), a null group, partition counts that leave
+    // range partitions empty (parts > rows), one row and the empty frame.
+    // Few trials: each call is a shuffle + a checkpoint job.
+    import graft.ops.Ranks
     val rnd = new scala.util.Random(13L)
-    (1 to 3).foreach { trial =>
-      val n = 40 + rnd.nextInt(60)
-      val rows = (0 until n).map(i =>
-        (i.toLong, rnd.nextInt(8).toLong, 1L + rnd.nextInt(50)))
-      val df = rows.toDF("id", "key", "v")
-      val got = graft.ops.Ranks
-        .globalCumSum(df, 7, col("v"), col("key").desc, col("id"))
-        .select(col("id"), col("cum")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      var acc = 0L
-      val want = rows.sortBy { case (id, k, _) => (-k, id) }.map { r =>
-        acc += r._3; r._1 -> acc
-      }.toMap
-      assert(got == want, s"trial $trial ($n rows)")
+    val sizes = Seq(40 + rnd.nextInt(60), 40 + rnd.nextInt(60), 5, 1, 0)
+    sizes.zipWithIndex.foreach { case (n, trial) =>
+      val rows = (0 until n).map(i => (i.toLong, rnd.nextInt(8).toLong,
+        Seq("a", "b", null)(rnd.nextInt(3)), 1L + rnd.nextInt(50),
+        rnd.nextInt(1000).toLong))
+      val df = rows.toDF("id", "key", "grp", "v", "w")
+      val ctx = s"trial $trial ($n rows)"
+      def byId(d: org.apache.spark.sql.DataFrame, c: String*) =
+        d.select(col("id") +: c.map(col): _*).collect()
+          .map(r => r.getLong(0) -> (1 to c.size).map(r.getLong)).toMap
+      // total order (key desc, id): the exact row_number / running sums
+      val total = rows.sortBy { case (id, k, _, _, _) => (-k, id) }
+      val cum = total.scanLeft((0L, 0L, 0L)) { case ((i, v, w), r) =>
+        (i + 1, v + r._4, w + r._5) }.tail
+      val want = total.map(_._1).zip(cum).toMap
+      assert(byId(Ranks.globalIndex(df, 7, col("key").desc, col("id")),
+        "idx") == want.map { case (id, c) => id -> Seq(c._1) }, s"index, $ctx")
+      assert(byId(Ranks.globalCumSum(df, 7, col("v"), col("key").desc,
+        col("id")), "cum") == want.map { case (id, c) => id -> Seq(c._2) },
+        s"cumsum, $ctx")
+      assert(byId(Ranks.globalCumSums(df, 7, Seq("cv" -> col("v"),
+          "cw" -> col("w")), col("key").desc, col("id")), "cv", "cw") ==
+        want.map { case (id, c) => id -> Seq(c._2, c._3) }, s"two sums, $ctx")
+      // tied key only: ties share one block, so each key holds the same
+      // contiguous range of indices in any tie order
+      def perKey(idx: Iterable[(Long, Long)]) =
+        idx.groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2).toSet }
+      val tied = Ranks.globalIndex(df, 7, col("key")).select("key", "idx")
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(perKey(tied) == perKey(rows.map(_._2).sorted.zipWithIndex
+        .map { case (k, i) => k -> (i + 1L) }), s"tied index, $ctx")
+      // grouped (null group included) with the group size n, and the
+      // one-group form whose n is the row count
+      val grouped = rows.groupBy(_._3).values.flatMap { g =>
+        g.sortBy(r => (r._2, r._1)).zipWithIndex
+          .map { case (r, i) => r._1 -> Seq(i + 1L, g.size.toLong) } }.toMap
+      assert(byId(Ranks.groupIndex(df, 7, Seq("grp"), col("key"), col("id")),
+        "idx", "n") == grouped, s"grouped index, $ctx")
+      assert(byId(Ranks.groupIndex(df, 7, Nil, col("key").desc, col("id")),
+        "idx", "n") == want.map { case (id, c) => id -> Seq(c._1, n.toLong) },
+        s"one-group index, $ctx")
     }
   }
 

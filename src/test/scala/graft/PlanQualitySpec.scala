@@ -129,7 +129,7 @@ class PlanQualitySpec extends SparkSpec {
     // the table-wide rank window must be partitioned (by pid) — the naive
     // row_number() OVER (ORDER BY k) would put the whole table through one
     // Exchange SinglePartition + one sorting task
-    assert(p.contains("hashpartitioning(pid"),
+    assert(p.contains("hashpartitioning(_pid"),
       s"table-wide window not partitioned by pid:\n$p")
     // a SinglePartition exchange may only carry pre-aggregated rows (its
     // child must be an aggregate: the ≤32-row per-pid counts, the map-side
@@ -167,19 +167,20 @@ class PlanQualitySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val df = spark.range(1000).toDF("id")
       .withColumn("v", col("id") * 37 % 97)
-    val hp = ops.Retail.distributedNtile(df, 4, "b", col("v"), col("id"))
+    val hp = ops.Ranks.groupIndex(df, 4, Nil, col("v"), col("id"))
+      .withColumn("b", ops.Ranks.ntileExpr(col("idx"), col("n"), 4))
       .queryExecution.executedPlan.toString
     val hLines = hp.linesIterator.toVector
     hLines.zipWithIndex
       .filter(_._1.contains("Exchange SinglePartition"))
       .foreach { case (_, i) =>
         assert(i + 1 < hLines.size && hLines(i + 1).contains("HashAggregate"),
-          s"distributedNtile single-partitions non-aggregated rows:\n$hp")
+          s"groupIndex single-partitions non-aggregated rows:\n$hp")
       }
   }
 
   test("q166/q167: rank CDF never single-partitions the value frame") {
-    // the block-offset topology (Stats.withCumBelow): per-value rows rank
+    // the block-offset topology (Ranks.globalCumSums): per-value rows rank
     // inside a pid-partitioned window; the only SinglePartition exchanges
     // may carry pre-aggregated rows (per-pid offsets, final statistics) —
     // never the per-distinct-value frame itself. q167's extra checkpoint
@@ -195,22 +196,23 @@ class PlanQualitySpec extends SparkSpec {
             s"$name: SinglePartition exchange feeding a non-aggregate:\n$p")
         }
     }
-    assert(planOf("q166_mann_whitney").contains("hashpartitioning(pid"),
+    assert(planOf("q166_mann_whitney").contains("hashpartitioning(_pid"),
       "q166: value-frame window not partitioned by pid")
     // helper over a synthetic frame: same contract, end to end
     import org.apache.spark.sql.functions.{col, lit}
     val counts = spark.range(5000).toDF("v")
       .withColumn("a", col("v") % 7).withColumn("b", col("v") % 5)
-    val hp = ops.Stats.withCumBelow(counts)
+    val hp = ops.Ranks.globalCumSums(counts, 32,
+        Seq("ca" -> col("a"), "cb" -> col("b")), col("v"))
       .queryExecution.executedPlan.toString
-    assert(hp.contains("hashpartitioning(pid"),
-      s"withCumBelow window not partitioned by pid:\n$hp")
+    assert(hp.contains("hashpartitioning(_pid"),
+      s"globalCumSums window not partitioned by pid:\n$hp")
     val hLines = hp.linesIterator.toVector
     hLines.zipWithIndex
       .filter(_._1.contains("Exchange SinglePartition"))
       .foreach { case (_, i) =>
         assert(i + 1 < hLines.size && hLines(i + 1).contains("HashAggregate"),
-          s"withCumBelow single-partitions non-aggregated rows:\n$hp")
+          s"globalCumSums single-partitions non-aggregated rows:\n$hp")
       }
   }
 
@@ -590,7 +592,12 @@ class PlanQualitySpec extends SparkSpec {
     "q289_stratified_ate" -> 2, "q291_heaps_fit" -> 4, "q297_int8_ann" -> 1,
     "q308_ngram_dup_mass" -> 1, "q310_lsh_workload" -> 1,
     "q311_shard_skew" -> 1, "q313_salt_plan" -> 1, "q314_dedup_pagerank" -> 10,
-    "q315_k_anonymity" -> 1)
+    "q315_k_anonymity" -> 1,
+    // the block-offset rankings folded into Ranks
+    "q53_window_stats" -> 4, "q130_global_index" -> 4,
+    "q148_rfm_segments" -> 19, "q166_mann_whitney" -> 5,
+    "q223_abc_classes" -> 5, "q225_zipf_fit" -> 5, "q231_exp_gap_fit" -> 6,
+    "q293_conformal_interval" -> 23, "q306_vocab_truncation" -> 5)
 
   test("construction-job budget: the eager work before a query returns stays " +
     "at its committed count") {
@@ -600,7 +607,9 @@ class PlanQualitySpec extends SparkSpec {
     // job group at sf0.001; a count above its budget means a new eager job
     // crept into query construction. The list is the perfbench tail
     // workload's 16 queries plus every query whose checkpoints were found
-    // to have no reason and deleted (BENCH_NOTES "Eager checkpoint census").
+    // to have no reason and deleted, and every query whose hand-copied
+    // block-offset ranking now runs through Ranks (BENCH_NOTES "Eager
+    // checkpoint census").
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val budget = ConstructBudget
     val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()

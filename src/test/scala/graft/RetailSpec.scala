@@ -68,7 +68,7 @@ class RetailSpec extends SparkSpec {
       "brand groups must partition the fact table")
   }
 
-  test("distributedNtile matches Spark's own ntile: remainder, exact, n<k") {
+  test("groupIndex + ntileExpr match Spark's own ntile: remainder, exact, n<k") {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     // n=10 (remainder 2), n=8 (exact), n=3 (< buckets), n=1 (degenerate);
@@ -79,8 +79,9 @@ class RetailSpec extends SparkSpec {
         .map(r => (r.getAs[Long]("id"), r.getAs[Int]("b"))).toSeq
       val expected = pairs(df.withColumn("b",
         ntile(4).over(Window.orderBy(col("v").desc, col("id")))))
-      val got = pairs(Retail.distributedNtile(df, 4, "b",
-        col("v").desc, col("id")))
+      val got = pairs(graft.ops.Ranks.groupIndex(df, 4, Nil,
+          col("v").desc, col("id"))
+        .withColumn("b", graft.ops.Ranks.ntileExpr(col("idx"), col("n"), 4)))
       assert(got == expected, s"n=$n: $got != $expected")
     }
   }

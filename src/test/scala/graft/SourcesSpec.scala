@@ -104,4 +104,26 @@ class SourcesSpec extends SparkSpec {
       "XML escape→parse cycle must preserve every text byte")
     assert(viaXml.nonEmpty)
   }
+
+  test("q123 accounting is correct on a lazily read PERMISSIVE JSON frame") {
+    // no checkpoint in between: Spark rejects a raw-JSON query whose only
+    // referenced column is the corrupt-record column, so the accounting
+    // must stand on the parsed columns too, not on q123's checkpoint
+    val dir = ops.Sources.scratchDir(spark, "graft_corrupt_spec")
+    val good = (1L to 5L).map(i =>
+      s"""{"event_id":$i,"user_id":7,"event_type":"view","value":1.5}""")
+    val bad = Seq("""{"event_id":6,"user_id":7""", "not json at all")
+    (good ++ bad).toDF("value").write.mode("overwrite").text(s"$dir/jsonl")
+    val read = spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
+        "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, " +
+          "_corrupt_record STRING"))
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .json(s"$dir/jsonl")
+    val r = ops.Sources.corruptAccounting(read).collect().head
+    assert(r.getAs[Long]("n_lines") == 7L)
+    assert(r.getAs[Long]("n_parsed") == 5L)
+    assert(r.getAs[Long]("n_quarantined") == 2L)
+    assert(r.getAs[Boolean]("quarantine_ok"))
+  }
 }
