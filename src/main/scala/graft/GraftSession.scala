@@ -59,6 +59,20 @@ object GraftSession {
     spark
   }
 
+  /** Run `body` with each `key -> value` set on the session, then restore
+    * each key's prior value, or unset it if it had none, even when `body`
+    * throws. The confs are session-global for the scope's duration. */
+  def withConfs[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Uncounted warm-up against `sfDir`: the first query in a fresh JVM
     * otherwise absorbs one-time costs — noop-sink init, codegen/JIT,
     * parquet footer reads — that belong to the session, not that query.

@@ -28,24 +28,34 @@ object Tables {
     // Oracle parity: session must be UTC for LTZ<->NTZ conversions below.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     name match {
-      case "events" =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val raw = spark.read.parquet(s"$dir/events.parquet")
-        raw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            // ns-as-long corpus: integer `div` keeps full precision (double
-            // division would lose low bits at 2^60 magnitudes); floor
-            // semantics match DuckDB's ns→µs cast.
-            raw.withColumn("ts",
-              timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
-          case _ =>
-            // µs-timestamp corpus: already sub-µs-free; only pin the type.
-            raw.withColumn("ts", col("ts").cast("timestamp_ntz"))
-        }
-      case other =>
-        spark.read.parquet(s"$dir/$other.parquet")
+      case "events" => eventsTs(eventsFile(spark, dir), "timestamp_ntz")
+      case other => spark.read.parquet(s"$dir/$other.parquet")
     }
   }
+
+  /** `events.parquet` as stored, `ts` still INT64 ns or TIMESTAMP µs. Its
+    * schema is what the streaming replay reads the file with. */
+  private[graft] def eventsFile(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read.parquet(s"$dir/events.parquet")
+  }
+
+  /** `ts` of a batch or streaming [[eventsFile]] frame as a µs timestamp of
+    * type `to`: `timestamp_ntz` for batch queries, `timestamp` where a
+    * watermark needs a zoned type (same wall-clock values in the UTC
+    * session). */
+  private[graft] def eventsTs(raw: DataFrame, to: String): DataFrame =
+    raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        // ns-as-long corpus: integer `div` keeps full precision (double
+        // division would lose low bits at 2^60 magnitudes); floor
+        // semantics match DuckDB's ns→µs cast.
+        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")).cast(to))
+      case _ =>
+        // µs-timestamp corpus: already sub-µs-free; only pin the type.
+        raw.withColumn("ts", col("ts").cast(to))
+    }
 
   def region(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "nation")

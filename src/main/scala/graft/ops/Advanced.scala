@@ -1240,7 +1240,6 @@ object Advanced {
         |       CAST(l_linenumber AS INT) AS l_linenumber, cents
         |FROM x WHERE rn <= 2
         |ORDER BY l_returnflag, l_linestatus, rn""".stripMargin) { (s, d) =>
-      graft.plans.TopKPerKey.register(s)
       val li = Tables.lineitem(s, d)
         .select(col("l_returnflag"), col("l_linestatus"), col("l_orderkey"),
           col("l_linenumber"),

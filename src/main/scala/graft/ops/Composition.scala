@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{GraftSession, Q, Tables}
 import graft.pipeline.Walmart
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
@@ -129,12 +129,9 @@ object Composition {
       // at session width 32 the run is pure task-launch overhead): sizing
       // shuffle width to the data, not the core count, is the same lever a
       // 100 TB run pulls in the opposite direction.
-      val key = "spark.sql.shuffle.partitions"
-      val prev = s.conf.get(key)
-      try {
-        s.conf.set(key, "4")
+      GraftSession.withConfs(s, "spark.sql.shuffle.partitions" -> "4") {
         Walmart.run(s, raw.toString, out.toString)
-      } finally s.conf.set(key, prev)
+      }
       val mt = s.read.parquet(s"$out/merged_train.parquet")
       val etlAgg = mt.agg(
         count(lit(1)).as("n_train"),

@@ -93,7 +93,6 @@ object EmbedDiag {
         .filter(col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"),
           ArrayMath.cosine(col("cv"), col("qv")).as("sim_raw"))
-      graft.plans.TopKPerKey.register(s)
       graft.plans.TopKPerKey.topK(scored, Seq("query_id"),
           Seq("sim_raw" -> false, "neighbor_id" -> true), 5)
         .groupBy(col("neighbor_id"))
@@ -135,7 +134,6 @@ object EmbedDiag {
         .filter(col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"),
           ArrayMath.squaredL2(col("cv"), col("qv")).as("d2_raw"))
-      graft.plans.TopKPerKey.register(s)
       graft.plans.TopKPerKey.topK(scored, Seq("query_id"),
           Seq("d2_raw" -> true, "neighbor_id" -> true), 5)
         .filter(col("rn") === 5)
@@ -184,7 +182,6 @@ object EmbedDiag {
         .filter(col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"),
           ArrayMath.squaredL2(col("cv"), col("qv")).as("d2_raw"))
-      graft.plans.TopKPerKey.register(s)
       graft.plans.TopKPerKey.topK(scored, Seq("query_id"),
           Seq("d2_raw" -> true, "neighbor_id" -> true), 2)
         .groupBy(col("query_id"))

@@ -105,23 +105,6 @@ object Events {
       .select(col("user_id"), col("session_window.start").as("session_start"),
         col("n_events"), col("total_value"))
 
-  /** transformWithState requires a RocksDB-backed state store; scope the
-    * session-wide provider override to one streaming run and restore the
-    * previous provider even on failure (q127, q145). */
-  private def withRocksDbStateStore[A](
-      s: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    try {
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-        ".state.RocksDBStateStoreProvider")
-      body
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   val queries: Seq[Q] = Seq(
 
     // JSON-in-string property extraction (events.props, SURVEY.md §2.7).
@@ -432,19 +415,14 @@ object Events {
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
       // O(1)-driver parity fold (round-9 fix — the old memory sink held
-      // the full deduped row stream driver-side): emitted count plus an
-      // order-independent sum-of-hash checksum of the emitted ids, both
-      // reduced executor-side per micro-batch. count==|distinct| AND
-      // checksum==batch-distinct checksum pins the emitted MULTISET to
-      // the batch-distinct id set — subsuming the old countDistinct
-      // check, which would not compose across micro-batches anyway.
-      val idChk = sum(pmod(xxhash64(col("event_id")), lit(1L << 31)))
-        .cast("long")
-      // full-width XOR fold alongside the sum (see q145's rationale)
-      val idXor = bit_xor(xxhash64(col("event_id"))).cast("long")
+      // the full deduped row stream driver-side): the emitted ids'
+      // multiset fingerprint, reduced executor-side per micro-batch.
+      // Equal to the table's fingerprint with count==|distinct| pins the
+      // emitted MULTISET to the batch-distinct id set — subsuming the old
+      // countDistinct check, which would not compose across micro-batches
+      // anyway.
       val st = EventStreams.runFolded(s, feed.select(col("event_id")),
-        Seq(count(lit(1)), idChk, idXor), shufflePartitions = Some(8),
-        combine = Seq(_ + _, _ + _, _ ^ _))
+        EventStreams.fingerprint(col("event_id")), shufflePartitions = Some(8))
       // the dedup passing is only evidence if duplicates actually flowed:
       // count the PRE-dedup stream too (a glob/source regression that fed
       // each event once would otherwise green-light an unexercised path)
@@ -453,14 +431,11 @@ object Events {
       Tables.events(s, d).agg(
           count(lit(1)).as("n_rows"),
           countDistinct(col("event_id")).as("n_unique"),
-          // n_rows===n_unique (asserted below via n_stream) makes this
-          // the checksum of the DISTINCT id set
-          idChk.as("id_chk"), idXor.as("id_xor"))
+          // the stream's count is also n_unique below, so the table's ids
+          // are distinct and the stream emitted exactly that id set
+          EventStreams.sameFingerprint(st, col("event_id")).as("same"))
         .select(col("n_unique"),
-          (lit(st(0)) === col("n_unique") &&
-            lit(st(1)) === col("id_chk") &&
-            lit(st(2)) === col("id_xor") &&
-            lit(st(0)) === col("n_rows") &&
+          (col("same") && lit(st(0)) === col("n_unique") &&
             lit(nFeed) === col("n_rows") * 2).as("dedup_ok"))
     },
 
@@ -538,8 +513,9 @@ object Events {
       // 8 state partitions, not the session's 32: a stream-stream join
       // holds FOUR state stores per partition, so width-32 means 128 store
       // inits + checkpoint files per micro-batch for a bounded replay —
-      // pure fixed cost (the data is a few MB). See runToMemory's scale
-      // note: state width should track key cardinality, not core count.
+      // pure fixed cost (the data is a few MB). See EventStreams.run's
+      // width note: state width should track key cardinality, not core
+      // count.
       // O(1)-driver parity fold (round-9 fix — the old memory sink held
       // the full joined row stream driver-side): emitted count plus an
       // order-independent sum-of-hash checksum over the FULL join output
@@ -653,11 +629,9 @@ object Events {
         |SELECT count(*) AS n_sessions, CAST(1 AS BOOLEAN) AS tws_ok
         |FROM (SELECT DISTINCT user_id, sid FROM s)""".stripMargin) { (s, d) =>
       import graft.streaming.{EventStreams, StatefulSessions, TwsSessions}
-      val emitted = withRocksDbStateStore(s) {
-        EventStreams.runToMemory(s,
-          TwsSessions.run(s, EventStreams.readEvents(s, d)).toDF(),
-          "q127_tws", outputMode = "append", shufflePartitions = Some(8))
-      }
+      val emitted = EventStreams.runToMemory(s,
+        TwsSessions.run(s, EventStreams.readEvents(s, d)).toDF(),
+        "q127_tws", outputMode = "append", shufflePartitions = Some(8))
       val stream = emitted
         .select(col("user_id"), col("session_start"), col("n_events"),
           col("total_value").as("stream_value"))
@@ -729,24 +703,12 @@ object Events {
         .eagerCkpt
       val chkCols = Seq(col("user_id"), col("event_id"),
         unix_micros(col("ts").cast("timestamp")))
-      val chk = sum(pmod(xxhash64(chkCols: _*), lit(1L << 31))).cast("long")
-      // a bit_xor of the FULL-width hash rides alongside the sum: a
-      // differing and a phantom row could in principle cancel in one sum,
-      // but simultaneously cancelling an additive and an XOR fold of
-      // independent 64-bit hashes is vanishingly unlikely
-      val xchk = bit_xor(xxhash64(chkCols: _*)).cast("long")
-      val st = withRocksDbStateStore(s) {
-        EventStreams.runFolded(s,
-          TwsPatterns.run(s, EventStreams.readEvents(s, d)).toDF(),
-          Seq(count(lit(1)), chk, xchk), shufflePartitions = Some(8),
-          combine = Seq(_ + _, _ + _, _ ^ _))
-      }
-      val b = batch.agg(count(lit(1)), chk, xchk).head()
-      require(st(0) == b.getLong(0) &&
-        st(1) == (if (b.isNullAt(1)) 0L else b.getLong(1)) &&
-        st(2) == (if (b.isNullAt(2)) 0L else b.getLong(2)),
-        s"q145 stream/batch divergence: streamed (n=${st(0)}, chk=${st(1)}," +
-          s" xor=${st(2)}) vs batch (n=${b.getLong(0)}) — the" +
+      val st = EventStreams.runFolded(s,
+        TwsPatterns.run(s, EventStreams.readEvents(s, d)).toDF(),
+        EventStreams.fingerprint(chkCols: _*), shufflePartitions = Some(8))
+      require(batch.agg(EventStreams.sameFingerprint(st, chkCols: _*))
+          .head().getBoolean(0),
+        s"q145 stream/batch divergence: streamed fingerprint $st — the" +
           " transformWithState pattern matcher and the window-lag" +
           " reference disagree")
       batch.orderBy("user_id", "event_id")
@@ -809,21 +771,12 @@ object Events {
       val chkCols = Seq(col("user_id"), col("event_id"),
         unix_micros(col("ts").cast("timestamp")),
         col("n_views"), col("n_clicks"))
-      val chk = sum(pmod(xxhash64(chkCols: _*), lit(1L << 31))).cast("long")
-      // full-width XOR fold alongside the sum (see q145's rationale)
-      val xchk = bit_xor(xxhash64(chkCols: _*)).cast("long")
-      val st = withRocksDbStateStore(s) {
-        EventStreams.runFolded(s,
-          TwsAttribution.run(s, EventStreams.readEvents(s, d)).toDF(),
-          Seq(count(lit(1)), chk, xchk), shufflePartitions = Some(8),
-          combine = Seq(_ + _, _ + _, _ ^ _))
-      }
-      val b = batch.agg(count(lit(1)), chk, xchk).head()
-      require(st(0) == b.getLong(0) &&
-        st(1) == (if (b.isNullAt(1)) 0L else b.getLong(1)) &&
-        st(2) == (if (b.isNullAt(2)) 0L else b.getLong(2)),
-        s"q146 stream/batch divergence: streamed (n=${st(0)}, chk=${st(1)}," +
-          s" xor=${st(2)}) vs batch (n=${b.getLong(0)}) — the" +
+      val st = EventStreams.runFolded(s,
+        TwsAttribution.run(s, EventStreams.readEvents(s, d)).toDF(),
+        EventStreams.fingerprint(chkCols: _*), shufflePartitions = Some(8))
+      require(batch.agg(EventStreams.sameFingerprint(st, chkCols: _*))
+          .head().getBoolean(0),
+        s"q146 stream/batch divergence: streamed fingerprint $st — the" +
           " transformWithState attribution and the windowed-group" +
           " reference disagree")
       batch.orderBy("user_id", "event_id")
@@ -1220,15 +1173,14 @@ object Events {
             .as("sum_cents"))
       def runOnce(name: String): Long =
         // width 4 for BOTH the state stage and the micro-batch scan splits
-        // (withStreamWidth): 5 grouping keys, few-MB replay files — the
+        // (EventStreams.run): 5 grouping keys, few-MB replay files — the
         // session's 32-wide defaults are pure task-launch overhead here,
         // and the checkpoint bakes the state width, so both runs must pin
         // the same value
-        EventStreams.withStreamWidth(s, Some(4)) {
-          val q = agg.writeStream.outputMode("complete").format("memory")
-            .queryName(name).option("checkpointLocation", ckDir.toString)
-            .start()
-          try { q.processAllAvailable() } finally q.stop()
+        EventStreams.run(s, agg, Some(4))(_.outputMode("complete")
+          .format("memory").queryName(name)
+          .option("checkpointLocation", ckDir.toString)) { q =>
+          q.processAllAvailable()
           q.recentProgress.map(_.numInputRows).sum
         }
       runOnce("q197_run1")
@@ -1435,25 +1387,21 @@ object Events {
         .agg(count(lit(1)).cast("long").as("n_events"),
           sum(round(col("value") * 100, 0).cast("long")).cast("long")
             .as("sum_cents"))
-      // width 4 (withStreamWidth): 5 grouping keys, a few-MB source —
+      // width 4 (EventStreams.run): 5 grouping keys, a few-MB source —
       // the session's 32-wide state + scan splits are launch overhead
-      EventStreams.withStreamWidth(s, Some(4)) {
-        val q = agg.writeStream.outputMode("update")
-          .foreachBatch { (delta: org.apache.spark.sql.Dataset[
-              org.apache.spark.sql.Row], _: Long) =>
-            val next = version + 1
-            val merged =
-              if (version == 0) delta
-              else s.read.parquet(s"$stateRoot/v$version")
-                .join(delta.select(col("event_type")), Seq("event_type"),
-                  "left_anti")
-                .unionByName(delta)
-            merged.write.mode("overwrite").parquet(s"$stateRoot/v$next")
-            version = next
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      EventStreams.run(s, agg, Some(4))(_.outputMode("update")
+        .foreachBatch { (delta: org.apache.spark.sql.Dataset[
+            org.apache.spark.sql.Row], _: Long) =>
+          val next = version + 1
+          val merged =
+            if (version == 0) delta
+            else s.read.parquet(s"$stateRoot/v$version")
+              .join(delta.select(col("event_type")), Seq("event_type"),
+                "left_anti")
+              .unionByName(delta)
+          merged.write.mode("overwrite").parquet(s"$stateRoot/v$next")
+          version = next
+        })(_.processAllAvailable())
       val ok = version >= 1
       s.read.parquet(s"$stateRoot/v$version")
         .withColumn("merged_ok", lit(ok))
@@ -1497,19 +1445,16 @@ object Events {
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 day"))
         .agg(count(lit(1)).cast("long").as("n_events"))
-      // width 4 (withStreamWidth): ~30 daily windows of state, few-MB
+      // width 4 (EventStreams.run): ~30 daily windows of state, few-MB
       // replay files — see q208/q197
-      val (nLate, dropped) = EventStreams.withStreamWidth(s, Some(4)) {
-        val q = agg.writeStream.outputMode("append").format("memory")
-          .queryName("q213_wmk").start()
-        try {
-          q.processAllAvailable() // batch 1: fresh rows set the watermark
-          EventStreams.landFile(late, inDir, "f2")
-          val n = late.count()
-          q.processAllAvailable() // batch 2: every row is behind the mark
-          (n, q.recentProgress
-            .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum)
-        } finally q.stop()
+      val (nLate, dropped) = EventStreams.run(s, agg, Some(4))(
+        _.outputMode("append").format("memory").queryName("q213_wmk")) { q =>
+        q.processAllAvailable() // batch 1: fresh rows set the watermark
+        EventStreams.landFile(late, inDir, "f2")
+        val n = late.count()
+        q.processAllAvailable() // batch 2: every row is behind the mark
+        (n, q.recentProgress
+          .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum)
       }
       s.table("q213_wmk")
         .select(col("window.start").cast("timestamp_ntz").cast("timestamp")

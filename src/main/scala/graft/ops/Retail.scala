@@ -740,9 +740,12 @@ object Retail {
         .groupBy(col("l_partkey").as("pk"))
         .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
           .cast("long").as("rev"))
-      val tot = per.agg(sum(col("rev")).cast("long").as("tot"))
-      Ranks.globalCumSum(per, 32, col("rev"), col("rev").desc, col("pk"))
-        .withColumn("cumb", col("cum") - col("rev"))
+      val ranked =
+        Ranks.globalCumSum(per, 32, col("rev"), col("rev").desc, col("pk"))
+      // the total reads the per-part rows globalCumSum's checkpoint holds;
+      // an aggregate over `per` would rescan lineitem in the sink
+      val tot = ranked.agg(sum(col("rev")).cast("long").as("tot"))
+      ranked.withColumn("cumb", col("cum") - col("rev"))
         .join(broadcast(tot), lit(true))
         .withColumn("abc_class",
           when(col("cumb") * 5 < col("tot") * 4, "A")
@@ -1004,7 +1007,6 @@ object Retail {
         |         AS jaccard
         |FROM yrs LEFT JOIN j ON yrs.y = j.y ORDER BY year""".stripMargin) {
       (s, d) =>
-      graft.plans.TopKPerKey.register(s)
       val yearly = Tables.lineitem(s, d)
         .groupBy(year(col("l_shipdate")).cast("int").as("y"),
           col("l_partkey").as("pk"))

@@ -907,7 +907,6 @@ object Similarity {
         .withColumn("is_pos", when(col("cl") === col("ql"), 1).otherwise(0))
         .select(col("query_id"), col("is_pos"), col("neighbor_id"),
           col("sim_raw"))
-      graft.plans.TopKPerKey.register(s)
       val top1 = graft.plans.TopKPerKey.topK(scored,
         Seq("query_id", "is_pos"),
         Seq("sim_raw" -> false, "neighbor_id" -> true), 1)
@@ -1075,7 +1074,6 @@ object Similarity {
         .select(col("query_id"), col("neighbor_id"),
           ArrayMath.quantDot(col("qc"), col("cc")).as("int_dot"),
           ArrayMath.dot(col("qv"), col("cv")).as("fdot"))
-      graft.plans.TopKPerKey.register(s)
       val approx = graft.plans.TopKPerKey.topK(
         scored.select("query_id", "neighbor_id", "int_dot"),
         Seq("query_id"), Seq("int_dot" -> false, "neighbor_id" -> true), 10)
@@ -1439,7 +1437,6 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .withColumn("sim_raw", cosine(col("cv"), col("qv")))
       .select(col("query_id"), col("neighbor_id"), col("sim_raw"))
-    graft.plans.TopKPerKey.register(scored.sparkSession)
     graft.plans.TopKPerKey.topK(scored, Seq("query_id"),
       Seq("sim_raw" -> false, "neighbor_id" -> true), k)
       .select(col("query_id"), col("neighbor_id"),

@@ -157,11 +157,13 @@ case class PartialTopKPerKeyExec(
 object TopKPerKey {
 
   /** Insert the map-side prune below whatever consumes `df`. `orderBy`
-    * follows the (column, ascending?) convention. */
+    * follows the (column, ascending?) convention. Registers the planner
+    * strategy on the live session (idempotent), so the node always plans. */
   def pruned(df: DataFrame, keys: Seq[String],
       orderBy: Seq[(String, Boolean)], k: Int,
       maxKeys: Int = 1 << 20): DataFrame = {
     val spark = df.sparkSession
+    register(spark)
     val plan = GraftSql.analyzedPlan(df)
     val resolve: String => Expression = name =>
       plan.output.find(_.name == name).getOrElse(

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import graft.{GraftSession, Tables}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSql, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, BitXorAgg}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, TransformWithState}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types.LongType
 
 /** Structured Streaming over the events table (SURVEY.md §2.9): the same
@@ -17,28 +20,16 @@ import org.apache.spark.sql.types.LongType
   */
 object EventStreams {
 
-  /** The events stream, replayed from the batch parquet. ts has arrived as
-    * INT64 nanos in some corpus generations and plain TIMESTAMP(MICROS) in
-    * others (see Tables.load); both normalize to µs here. */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // Watermarks require TIMESTAMP (with zone), not TIMESTAMP_NTZ — with a
-    // UTC session the wall-clock values are identical to the batch NTZ form;
-    // each aggregate casts window bounds back to NTZ for batch parity.
-    // The file-stream source wants a directory: stream the table dir with a
-    // glob picking just the events file.
-    val raw = spark.readStream.schema(schema)
+  /** The events stream, replayed from the batch parquet, `ts` decoded by
+    * [[Tables.eventsTs]] to a zoned TIMESTAMP: watermarks require one, not
+    * TIMESTAMP_NTZ. With the UTC session the wall-clock values equal the
+    * batch NTZ form; each aggregate casts window bounds back to NTZ for
+    * batch parity. The file-stream source wants a directory, so the stream
+    * reads the table dir with a glob picking just the events file. */
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
+    Tables.eventsTs(spark.readStream.schema(Tables.eventsFile(spark, dir).schema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-    }
-  }
+      .parquet(dir), "timestamp")
 
   /** Tumbling 1-day aggregate with a 1-hour watermark (≡ batch q23). */
   def tumblingDaily(events: DataFrame): DataFrame =
@@ -91,19 +82,6 @@ object EventStreams {
       col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"))
   }
 
-  /** Run a streaming DataFrame to completion against the static input via a
-    * memory sink; returns the collected result table.
-    *
-    * `shufflePartitions`: stateful-operator width for THIS query. A
-    * micro-batch pays fixed machinery per state partition (store init +
-    * snapshot/delta checkpoint files per partition per batch — a
-    * stream-stream join holds FOUR stores per partition), so a bounded
-    * replay at session width (32) spends more on state plumbing than on
-    * rows. The conf is read at query START and baked into the checkpoint,
-    * so setting it around `start()` pins the width for the query's whole
-    * life; the session value is restored immediately after. At production
-    * scale the same lever applies in reverse — size state partitions to
-    * the key cardinality, not the session default. */
   /** Recursively delete a scratch subtree if it exists (the wipe step the
     * file-replay streaming queries all need for per-session idempotence). */
   def wipe(path: java.nio.file.Path): Unit = {
@@ -168,101 +146,124 @@ object EventStreams {
   def landFile(df: DataFrame, inDir: String, name: String): Unit =
     landSingle(df, s"$inDir/$name")
 
+  /** The one streaming run: starts `df` on the sink that `sink` shapes,
+    * runs `feed` on the caller thread (it must drain the source) and stops
+    * the query in `finally`. The run's session confs are scoped with
+    * [[GraftSession.withConfs]] around start, feed and stop: the stream's
+    * session is cloned at query start, which races a restore placed right
+    * after `start()`, so they restore only once the query has stopped.
+    *
+    * `shufflePartitions` is the declared stream width, a ceiling: the run
+    * uses min(declared, session `spark.sql.shuffle.partitions`) for both
+    * the stateful width and the scan-split floor
+    * (`spark.sql.files.minPartitionNum`, which defaults to the core count).
+    * A micro-batch pays fixed machinery per state partition (store init +
+    * snapshot/delta checkpoint files per partition per batch; a
+    * stream-stream join holds four stores per partition) and per scan
+    * split, so a bounded replay at a 32-wide session spends more on that
+    * plumbing than on rows. The state width is baked into the checkpoint,
+    * so it holds for the query's whole life. At production scale the same
+    * lever sizes state partitions to the key cardinality and splits to
+    * the landed batch, not the cluster width. `None` keeps the session's.
+    *
+    * A frame whose plan holds a `transformWithState` operator runs on the
+    * RocksDB state store, which that API requires. */
+  def run[T](spark: SparkSession, df: DataFrame,
+      shufflePartitions: Option[Int] = None)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row])(
+      feed: StreamingQuery => T): T = {
+    val width = shufflePartitions.map(
+      _.min(spark.conf.get("spark.sql.shuffle.partitions").toInt).toString)
+    val widthConfs = width.toSeq.flatMap(w => Seq(
+      "spark.sql.shuffle.partitions" -> w,
+      "spark.sql.files.minPartitionNum" -> w))
+    val storeConfs =
+      if (GraftSql.analyzedPlan(df).exists(_.isInstanceOf[TransformWithState]))
+        Seq("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil
+    GraftSession.withConfs(spark, widthConfs ++ storeConfs: _*) {
+      val q = sink(df.writeStream).start()
+      try feed(q) finally q.stop()
+    }
+  }
+
   /** Drive a ROW-LEVEL streaming frame to completion while keeping the
     * driver O(1) at ANY scale factor: each micro-batch is reduced
     * EXECUTOR-side to one row of batch-additive BIGINT aggregates
-    * (counts / exact-cent sums / order-independent sum-of-hash
-    * checksums — NOT countDistinct, which does not compose across
-    * batches), and only that one row's values fold into a driver array.
-    * This replaces the row-level memory sink the parity harnesses used
-    * before round 9 — the sink there held the full joined/deduped row
-    * stream driver-resident, a bottleneck at 100× SF even though every
-    * operator around it was distributed. Returns the per-aggregate
-    * totals in input order (null partial aggregates — e.g. sum over an
-    * empty batch — fold as 0).
+    * (counts / exact-cent sums / order-independent hash checksums — NOT
+    * countDistinct, which does not compose across batches), and only that
+    * one row's values fold into a driver array: a `bit_xor` aggregate
+    * with `^`, every other with `+` (both identities are 0). This
+    * replaces the row-level memory sink the parity harnesses used before
+    * round 9 — the sink there held the full joined/deduped row stream
+    * driver-resident, a bottleneck at 100× SF even though every operator
+    * around it was distributed. Returns the per-aggregate totals in input
+    * order (null partial aggregates — e.g. sum over an empty batch — fold
+    * as 0).
     *
     * `feed` runs on the caller thread after start() and must drain the
-    * source (default: one processAllAvailable; q267 overrides it with
-    * its sentinel-flush dance). `shufflePartitions` follows
-    * [[runToMemory]]'s state-width note.
-    */
-  /** Scope BOTH stream-width confs to a streaming run: the stateful
-    * width (`shuffle.partitions`) AND the scan-split floor
-    * (`files.minPartitionNum`, which defaults to the session's core count
-    * — so every micro-batch's file scan otherwise fans a few-MB replay
-    * file into 32 tiny tasks, pure launch overhead repeated per batch;
-    * the round-17 8-core board beating the 32-core board on exactly the
-    * streaming queries was this machinery, guide §2 right-size
-    * partitions). Both confs are captured by the stream's cloned session
-    * at query START, so set-around-start pins them for the query's life;
-    * session values restore after. At production replay scale the same
-    * lever sizes splits to the landed batch, not the cluster width. */
-  def withStreamWidth[T](spark: SparkSession,
-      width: Option[Int])(body: => T): T = {
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.files.minPartitionNum")
-    width match {
-      case None => body
-      case Some(n) =>
-        val prev = keys.map(k => k -> spark.conf.getOption(k))
-        keys.foreach(k => spark.conf.set(k, n.toString))
-        try body
-        finally prev.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-    }
-  }
-
+    * source (default: one processAllAvailable; q267 overrides it with its
+    * sentinel-flush dance). `shufflePartitions` is [[run]]'s width. */
   def runFolded(spark: SparkSession, rows: DataFrame, aggs: Seq[Column],
       shufflePartitions: Option[Int] = None,
-      feed: StreamingQuery => Unit = _.processAllAvailable(),
-      // cross-batch combiner per aggregate (default: +). A bit_xor
-      // aggregate must fold with ^ across micro-batches — XOR's identity
-      // is also 0, so the zero-initialised totals work for both.
-      combine: Seq[(Long, Long) => Long] = Nil): Seq[Long] = {
+      feed: StreamingQuery => Unit = _.processAllAvailable()): Seq[Long] = {
     require(aggs.nonEmpty)
-    require(combine.isEmpty || combine.size == aggs.size,
-      s"combine (${combine.size}) must match aggs (${aggs.size}) when given")
-    val comb: Array[(Long, Long) => Long] =
-      if (combine.isEmpty) Array.fill(aggs.size)(_ + _) else combine.toArray
+    val xor = GraftSql.analyzedPlan(rows.agg(aggs.head, aggs.tail: _*))
+      .collectFirst { case a: Aggregate => a.aggregateExpressions }.get
+      .map(_.collectFirst { case ae: AggregateExpression => ae.aggregateFunction }
+        .exists(_.isInstanceOf[BitXorAgg])).toArray
     val totals = Array.fill(aggs.size)(0L)
-    withStreamWidth(spark, shufflePartitions) {
-      val q: StreamingQuery = rows.writeStream.outputMode("append")
-        .foreachBatch { (bdf: org.apache.spark.sql.Dataset[Row], _: Long) =>
-          val reduced = bdf.agg(aggs.head, aggs.tail: _*)
-          // the O(1) contract, asserted: the sink-side frame is ONE row
-          // of BIGINT aggregates, never event rows
-          require(reduced.schema.fields.forall(_.dataType == LongType),
-            s"runFolded aggregates must all be BIGINT (batch-additive); " +
-              s"got ${reduced.schema.simpleString}")
-          val r = reduced.head()
-          var i = 0
-          while (i < totals.length) {
-            if (!r.isNullAt(i)) totals(i) = comb(i)(totals(i), r.getLong(i))
-            i += 1
-          }
+    run(spark, rows, shufflePartitions)(_.outputMode("append")
+      .foreachBatch { (bdf: Dataset[Row], _: Long) =>
+        val reduced = bdf.agg(aggs.head, aggs.tail: _*)
+        // the O(1) contract, asserted: the sink-side frame is ONE row of
+        // BIGINT aggregates, never event rows
+        require(reduced.schema.fields.forall(_.dataType == LongType),
+          s"runFolded aggregates must all be BIGINT (batch-additive); " +
+            s"got ${reduced.schema.simpleString}")
+        val r = reduced.head()
+        var i = 0
+        while (i < totals.length) {
+          if (!r.isNullAt(i))
+            totals(i) =
+              if (xor(i)) totals(i) ^ r.getLong(i) else totals(i) + r.getLong(i)
+          i += 1
         }
-        .start()
-      try feed(q) finally q.stop()
-    }
+      })(feed)
     totals.toSeq
   }
 
+  /** Run a streaming aggregate to completion against the static input
+    * into a memory sink named `name`; returns that table.
+    * `shufflePartitions` is [[run]]'s width. */
   def runToMemory(spark: SparkSession, agg: DataFrame, name: String,
       outputMode: String = "complete",
       shufflePartitions: Option[Int] = None): DataFrame = {
-    // width confs restore only after the run completes: they are captured
-    // when the stream's session is CLONED at query start, which races a
-    // restore placed right after start() — see withStreamWidth
-    withStreamWidth(spark, shufflePartitions) {
-      val q: StreamingQuery = agg.writeStream
-        .outputMode(outputMode)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    run(spark, agg, shufflePartitions)(
+      _.outputMode(outputMode).format("memory").queryName(name))(
+      _.processAllAvailable())
     spark.table(name)
   }
+
+  /** The order-independent multiset fingerprint of the rows' `cols`:
+    * (count, Σ pmod(xxhash64, 2³¹), bit_xor(xxhash64)), all BIGINT and
+    * batch-additive, so [[runFolded]] folds it across micro-batches and
+    * [[sameFingerprint]] checks the batch side against the fold. A
+    * differing and a phantom row could in principle cancel in the sum, but
+    * cancelling the sum and the XOR of independent 64-bit hashes at once
+    * is vanishingly unlikely. */
+  def fingerprint(cols: Column*): Seq[Column] = Seq(
+    count(lit(1)),
+    sum(pmod(xxhash64(cols: _*), lit(1L << 31))).cast("long"),
+    bit_xor(xxhash64(cols: _*)).cast("long"))
+
+  /** An aggregate column: whether the aggregated rows' [[fingerprint]] of
+    * `cols` equals `folded`, a [[runFolded]] result of the same
+    * fingerprint (null aggregates of an empty side read as 0, like the
+    * fold's). */
+  def sameFingerprint(folded: Seq[Long], cols: Column*): Column =
+    fingerprint(cols: _*).zip(folded)
+      .map { case (c, v) => coalesce(c, lit(0L)) === lit(v) }
+      .reduce(_ && _)
 }

@@ -68,4 +68,34 @@ class CkptCensusSpec extends AnyFunSuite {
       s"${outside.size} block ids outside ops/Ranks.scala:\n" +
         outside.mkString("\n"))
   }
+
+  /** Sites of any of `needles` in src/main outside the files `allowed`. */
+  private def outsideOf(needles: Seq[String], allowed: Seq[String]): Seq[String] = {
+    val found = needles.flatMap(sites(mainRoot, _))
+    assert(found.nonEmpty, s"no ${needles.mkString("/")} found: the scan is broken")
+    found.collect {
+      case (path, i, lines) if !allowed.exists(f => path.endsWith("/" + f)) =>
+        s"$path:${i + 1}: ${lines(i).trim}"
+    }.distinct
+  }
+
+  test("writeStream appears in src/main only in EventStreams") {
+    // every streaming run starts, scopes its confs and stops in
+    // EventStreams.run; a writeStream anywhere else is a second lifecycle
+    val outside = outsideOf(Seq("writeStream"), Seq("EventStreams.scala"))
+    assert(outside.isEmpty,
+      s"${outside.size} streams started outside EventStreams.run:\n" +
+        outside.mkString("\n"))
+  }
+
+  test("conf.set( and conf.unset( appear in src/main only in GraftSession and Tables") {
+    // session confs are set once when the session is built or a corpus is
+    // read (GraftSession.local, Tables), and every scoped change goes
+    // through GraftSession.withConfs, which restores what it set
+    val outside = outsideOf(Seq("conf.set(", "conf.unset("),
+      Seq("GraftSession.scala", "Tables.scala"))
+    assert(outside.isEmpty,
+      s"${outside.size} session conf writes outside GraftSession/Tables:\n" +
+        outside.mkString("\n"))
+  }
 }

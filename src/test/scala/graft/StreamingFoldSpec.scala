@@ -20,7 +20,9 @@ class StreamingFoldSpec extends SparkSpec {
     val totals = EventStreams.runFolded(spark, raw,
       Seq(count(lit(1)), sum(col("b")).cast("long"),
         // null partial (sum over an all-null batch column) folds as 0
-        sum(when(col("a") > 1000, col("b"))).cast("long")),
+        sum(when(col("a") > 1000, col("b"))).cast("long"),
+        // a bit_xor aggregate folds with ^ across batches, not +
+        bit_xor(col("b")).cast("long")),
       feed = { q =>
         q.processAllAvailable()
         EventStreams.landFile(
@@ -28,7 +30,8 @@ class StreamingFoldSpec extends SparkSpec {
           inDir, "f2")
         q.processAllAvailable()
       })
-    assert(totals == Seq(15L, (1 to 15).map(_ * 2L).sum, 0L),
+    assert(totals == Seq(15L, (1 to 15).map(_ * 2L).sum, 0L,
+        (1 to 15).map(_ * 2L).reduce(_ ^ _)),
       s"cross-batch fold mismatch: $totals")
   }
 

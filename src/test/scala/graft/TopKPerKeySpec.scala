@@ -85,6 +85,19 @@ class TopKPerKeySpec extends SparkSpec {
       .contains(graft.plans.TopKStrategy))
   }
 
+  test("topK plans on a session whose strategy was never registered") {
+    // the builder of the node registers its planner: no caller has to
+    spark.experimental.extraStrategies =
+      spark.experimental.extraStrategies.filterNot(_ == graft.plans.TopKStrategy)
+    val got = TopKPerKey.topK(synthetic, Seq("g"),
+      Seq("v" -> false, "id" -> true), 3)
+      .select("id").collect().map(_.getLong(0)).toSet
+    val want = windowTopK(synthetic, 3)
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(got == want)
+    assert(spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
+  }
+
   test("unknown column names fail loudly") {
     intercept[IllegalArgumentException] {
       TopKPerKey.pruned(synthetic, Seq("nope"), Seq("v" -> false), 3)

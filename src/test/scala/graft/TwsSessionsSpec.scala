@@ -14,25 +14,17 @@ class TwsSessionsSpec extends SparkSpec {
     .collect().map(_.toSeq).toSet
 
   test("transformWithState emits closed sessions plus expired tails (RocksDB store)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val got = canon(EventStreams.runToMemory(spark,
-        TwsSessions.run(spark, EventStreams.readEvents(spark, sf0001)).toDF(),
-        "t_tws_sessions", outputMode = "append"))
-      val closedByEvent = canon(StatefulSessions.batchReference(spark,
-        Tables.events(spark, sf0001), includeOpen = false))
-      val all = canon(StatefulSessions.batchReference(spark,
-        Tables.events(spark, sf0001), includeOpen = true))
-      assert(closedByEvent.subsetOf(got),
-        s"missing closed sessions: ${closedByEvent -- got}")
-      assert(got.subsetOf(all), s"phantom sessions: ${got -- all}")
-      assert(got.size > closedByEvent.size)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    // EventStreams.run scopes the RocksDB provider the API requires
+    val got = canon(EventStreams.runToMemory(spark,
+      TwsSessions.run(spark, EventStreams.readEvents(spark, sf0001)).toDF(),
+      "t_tws_sessions", outputMode = "append"))
+    val closedByEvent = canon(StatefulSessions.batchReference(spark,
+      Tables.events(spark, sf0001), includeOpen = false))
+    val all = canon(StatefulSessions.batchReference(spark,
+      Tables.events(spark, sf0001), includeOpen = true))
+    assert(closedByEvent.subsetOf(got),
+      s"missing closed sessions: ${closedByEvent -- got}")
+    assert(got.subsetOf(all), s"phantom sessions: ${got -- all}")
+    assert(got.size > closedByEvent.size)
   }
 }
