@@ -20,6 +20,7 @@ import graft.functions.{BpeSymbolSum, CosineSim, DotProduct, HyperplaneBands, Ja
   * Registered functions (arguments after the column must be int literals —
   * they parameterize codegen and cannot vary per row):
   *  - `graft_dot(array, array): double`
+  *  - `graft_cosine(array, array): double`
   *  - `graft_simhash64(array<string>): bigint`
   *  - `graft_winnow(text, k, w): array<bigint>`
   *  - `graft_word_shingles(text, n): array<string>`

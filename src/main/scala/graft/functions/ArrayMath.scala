@@ -2,56 +2,57 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.types._
 
-/** Native Catalyst dot product over two numeric arrays (`array<float>` or
-  * `array<double>`), accumulating in double precision in ascending index
-  * order — the exact fold `aggregate(zip_with(a, b, _*_), 0.0, _+_)`
-  * computes, and the exact fold the DuckDB oracle's
-  * `list_sum(list_transform(...))` computes, so results are bit-comparable
-  * across engines.
+/** The shape the four binary array kernels share: two arrays of an accepted
+  * element type in, one call to the static kernel `ArrayMath.<kernel>` out,
+  * from both evaluation paths (`run` is that same kernel, for `nullSafeEval`).
+  * The kernel gets the left/right float flags (which getter widens each side
+  * to double) and the null-check flag, and returns a boxed result where
+  * `null` is SQL NULL.
   *
-  * Why a custom expression (SURVEY.md §2.7 extension surface): the
+  * Why custom expressions (SURVEY.md §2.7 extension surface): the
   * higher-order-function fold allocates an intermediate array and evaluates a
   * lambda per element per row; on an all-pairs similarity join (|V|² pairs ×
-  * 64 dims) that interpretation cost dominates the whole benchmark. This
-  * expression stays inside whole-stage codegen: `doGenCode` emits a tight
-  * primitive loop over the two `ArrayData`, no allocation, no virtual calls —
-  * the inner kernel a native engine would use, expressed as a first-class
-  * Catalyst operator that composes with every other Spark expression.
+  * 64 dims) that interpretation cost dominates the whole benchmark. These
+  * expressions stay inside whole-stage codegen: the generated code calls a
+  * primitive loop over the two `ArrayData` with no allocation the JIT keeps
+  * (escape analysis removes the box), as a first-class Catalyst operator that
+  * composes with every other Spark expression.
   *
   * Semantics: length mismatch → NULL, a null element → NULL — exactly what
-  * the `zip_with`/`aggregate` fold it replaces produces (`zip_with` pads
-  * the shorter array with nulls, so any ragged pair folds to null; a
+  * the `zip_with`/`aggregate` fold the kernels replace produces (`zip_with`
+  * pads the shorter array with nulls, so any ragged pair folds to null; a
   * silent common-prefix sum would be a numeric result where the reference
   * computes NULL). Parquet list columns arrive as containsNull=true even
   * when no element is ever null, so the check is explicit rather than
   * rejected at type-check time; when BOTH inputs declare containsNull=false
-  * the codegen path skips the per-element null test entirely.
+  * the kernel skips the per-element null test entirely.
   */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def supported(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _ => false
-  }
+abstract class ArrayPairKernel(
+    kernel: String,
+    run: (ArrayData, ArrayData, Boolean, Boolean, Boolean) => AnyRef,
+    accepted: DataType*) extends BinaryExpression with Serializable {
+  // Serializable so that Java deserialization of a task's plan restores the
+  // constructor fields here instead of needing a no-argument constructor
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (supported(left.dataType) && supported(right.dataType)) {
-      TypeCheckResult.TypeCheckSuccess
-    } else {
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float>/array<double> inputs, " +
-          s"got ${left.dataType.sql} and ${right.dataType.sql}")
+    (left.dataType, right.dataType) match {
+      case (ArrayType(l, _), ArrayType(r, _))
+          if accepted.contains(l) && accepted.contains(r) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires ${accepted.map(t => s"array<${t.simpleString}>")
+          .mkString("/")} inputs, got ${l.sql} and ${r.sql}")
     }
 
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot"
+  // nullable regardless of child nullability: a ragged pair nulls the result
+  // and array lengths are not statically known
+  override def nullable: Boolean = true
 
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
@@ -61,57 +62,27 @@ case class DotProduct(left: Expression, right: Expression)
     left.dataType.asInstanceOf[ArrayType].containsNull ||
       right.dataType.asInstanceOf[ArrayType].containsNull
 
-  // nullable regardless of child nullability: a ragged pair nulls the result
-  // and array lengths are not statically known
-  override def nullable: Boolean = true
+  override def nullSafeEval(a: Any, b: Any): Any =
+    run(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      isFloat(left), isFloat(right), elementsNullable)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val lf = isFloat(left)
-    val rf = isFloat(right)
-    val checkNulls = elementsNullable
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (checkNulls && (x.isNullAt(i) || y.isNullAt(i))) return null
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      s += xv * yv
-      i += 1
-    }
-    s
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => ArrayMath.storeOrNull(ctx, ev, dataType,
+      s"$kernel($a, $b, ${isFloat(left)}, ${isFloat(right)}, $elementsNullable)"))
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (isFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (isFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      // per-element null test only when the schema allows null elements —
-      // non-null-typed inputs keep the branch-free tight loop
-      val nullCheck = if (elementsNullable) {
-        s"""if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"""
-      } else ""
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $nullCheck
-         |    $s += ((double) $a.$lGet($i)) * ((double) $b.$rGet($i));
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
-  }
+/** Native Catalyst dot product over two numeric arrays (`array<float>` or
+  * `array<double>`), accumulating in double precision in ascending index
+  * order — the exact fold `aggregate(zip_with(a, b, _*_), 0.0, _+_)`
+  * computes, and the exact fold the DuckDB oracle's
+  * `list_sum(list_transform(...))` computes, so results are bit-comparable
+  * across engines.
+  */
+case class DotProduct(left: Expression, right: Expression)
+    extends ArrayPairKernel("dot", ArrayMath.dot, FloatType, DoubleType) {
+
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "graft_dot"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -127,91 +98,10 @@ case class DotProduct(left: Expression, right: Expression)
   * expression. NULL on: null input, ragged pair, null element, zero norm
   * (the ANSI-safe zero-denominator contract of the unfused form). */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def supported(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (supported(left.dataType) && supported(right.dataType)) {
-      TypeCheckResult.TypeCheckSuccess
-    } else {
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float>/array<double> inputs, " +
-          s"got ${left.dataType.sql} and ${right.dataType.sql}")
-    }
+    extends ArrayPairKernel("cosine", ArrayMath.cosine, FloatType, DoubleType) {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
-  override def nullable: Boolean = true
-
-  private def isFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  private def elementsNullable: Boolean =
-    left.dataType.asInstanceOf[ArrayType].containsNull ||
-      right.dataType.asInstanceOf[ArrayType].containsNull
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val lf = isFloat(left)
-    val rf = isFloat(right)
-    val checkNulls = elementsNullable
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var s = 0.0; var xx = 0.0; var yy = 0.0
-    var i = 0
-    while (i < n) {
-      if (checkNulls && (x.isNullAt(i) || y.isNullAt(i))) return null
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      s += xv * yv; xx += xv * xv; yy += yv * yv
-      i += 1
-    }
-    val denom = math.sqrt(xx) * math.sqrt(yy)
-    if (denom == 0.0) null else s / denom
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (isFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (isFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val xx = ctx.freshName("xx")
-      val yy = ctx.freshName("yy")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val denom = ctx.freshName("denom")
-      val nullCheck = if (elementsNullable) {
-        s"""if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"""
-      } else ""
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0; double $xx = 0.0; double $yy = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $nullCheck
-         |    final double $xv = (double) $a.$lGet($i);
-         |    final double $yv = (double) $b.$rGet($i);
-         |    $s += $xv * $yv; $xx += $xv * $xv; $yy += $yv * $yv;
-         |  }
-         |  if (!${ev.isNull}) {
-         |    final double $denom =
-         |      java.lang.Math.sqrt($xx) * java.lang.Math.sqrt($yy);
-         |    if ($denom == 0.0) { ${ev.isNull} = true; }
-         |    else { ${ev.value} = $s / $denom; }
-         |  }
-         |}
-       """.stripMargin
-    })
-  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -236,6 +126,17 @@ case class CosineSim(left: Expression, right: Expression)
   * element per (vector × centroid) pair; this keeps the kernel inside
   * whole-stage codegen. NULL on: null input, ragged pair, null element —
   * the zip_with contract. */
+case class SquaredL2(left: Expression, right: Expression)
+    extends ArrayPairKernel("squaredL2", ArrayMath.squaredL2, FloatType, DoubleType) {
+
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "graft_sql2"
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Native Catalyst INT8 dot product over two `array<tinyint>` code columns,
   * accumulating in a 64-bit integer — the int8 GEMM/ADC microkernel shape
   * (quantized similarity search reads 4× less memory per vector than
@@ -246,158 +147,13 @@ case class CosineSim(left: Expression, right: Expression)
   * same codes produces the same BIGINT, so quantized rankings are
   * bit-stable across engines, partitionings and retries. Scaling back to
   * an approximate float dot (scale_a·scale_b·Σ) is left to plain column
-  * arithmetic outside the kernel.
-  *
-  * Null semantics match [[DotProduct]]: ragged pair → NULL, null element →
-  * NULL; when both schemas declare containsNull=false the codegen loop is
-  * branch-free.
+  * arithmetic outside the kernel. Null semantics match [[DotProduct]].
   */
 case class QuantizedDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def supported(dt: DataType): Boolean = dt match {
-    case ArrayType(ByteType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (supported(left.dataType) && supported(right.dataType)) {
-      TypeCheckResult.TypeCheckSuccess
-    } else {
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<tinyint> inputs, " +
-          s"got ${left.dataType.sql} and ${right.dataType.sql}")
-    }
+    extends ArrayPairKernel("quantDot", ArrayMath.quantDot, ByteType) {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_qdot"
-
-  private def elementsNullable: Boolean =
-    left.dataType.asInstanceOf[ArrayType].containsNull ||
-      right.dataType.asInstanceOf[ArrayType].containsNull
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    val checkNulls = elementsNullable
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      if (checkNulls && (x.isNullAt(i) || y.isNullAt(i))) return null
-      s += x.getByte(i).toLong * y.getByte(i).toLong
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val nullCheck = if (elementsNullable) {
-        s"""if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"""
-      } else ""
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $s = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $nullCheck
-         |    $s += ((long) $a.getByte($i)) * ((long) $b.getByte($i));
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-case class SquaredL2(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def supported(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (supported(left.dataType) && supported(right.dataType)) {
-      TypeCheckResult.TypeCheckSuccess
-    } else {
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float>/array<double> inputs, " +
-          s"got ${left.dataType.sql} and ${right.dataType.sql}")
-    }
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_sql2"
-  override def nullable: Boolean = true
-
-  private def isFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  private def elementsNullable: Boolean =
-    left.dataType.asInstanceOf[ArrayType].containsNull ||
-      right.dataType.asInstanceOf[ArrayType].containsNull
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val lf = isFloat(left)
-    val rf = isFloat(right)
-    val checkNulls = elementsNullable
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (checkNulls && (x.isNullAt(i) || y.isNullAt(i))) return null
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      val d = xv - yv
-      s += d * d
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (isFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (isFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val dv = ctx.freshName("d")
-      val nullCheck = if (elementsNullable) {
-        s"""if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"""
-      } else ""
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $nullCheck
-         |    final double $dv = ((double) $a.$lGet($i)) - ((double) $b.$rGet($i));
-         |    $s += $dv * $dv;
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
-  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -408,13 +164,14 @@ case class SquaredL2(left: Expression, right: Expression)
   * per-vector scale (max|x| / 127) and the code array
   * round-half-away-from-zero(x / scale) — the exact values the unfused
   * two-projection form (`array_max(transform(x, abs))` then
-  * `transform(x, round(x / scale, 0))`) produces, in one codegen loop
-  * pair instead of three interpreted higher-order-function passes plus a
+  * `transform(x, round(x / scale, 0))`) produces, in one kernel call
+  * instead of three interpreted higher-order-function passes plus a
   * per-element `BigDecimal` round (Spark's `round` on DoubleType routes
   * every element through `BigDecimal.setScale(0, HALF_UP)`; on a corpus
   * scan that allocation dominates the quantization).
   *
-  * Rounding equivalence (why the primitive branch below IS `HALF_UP`):
+  * Rounding equivalence (why the primitive branch in
+  * [[ArrayMath.int8Codes]] IS `HALF_UP`):
   * `BigDecimal(q).setScale(0, HALF_UP)` rounds the EXACT decimal value of
   * the double `q` away from zero iff its fractional part ≥ 0.5 — and for
   * `a = |q|`, `a - floor(a)` is exact in double arithmetic (floor(a) is
@@ -448,16 +205,11 @@ case class SquaredL2(left: Expression, right: Expression)
   * now holds unconditionally rather than by corpus luck). */
 case class Int8Quantize(child: Expression) extends UnaryExpression {
 
-  private def supported(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _ => false
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<float>/array<double> input, got ${t.sql}")
   }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (supported(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<float>/array<double> input, " +
-        s"got ${child.dataType.sql}")
 
   override def dataType: DataType = ArrayType(ByteType, containsNull = false)
   override def prettyName: String = "graft_int8q"
@@ -469,86 +221,21 @@ case class Int8Quantize(child: Expression) extends UnaryExpression {
   private def elementsNullable: Boolean =
     child.dataType.asInstanceOf[ArrayType].containsNull
 
-  override def nullSafeEval(input: Any): Any = {
-    val x = input.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    val checkNulls = elementsNullable
-    var mx = 0.0
-    var i = 0
-    while (i < n) {
-      if (checkNulls && x.isNullAt(i)) return null
-      val v = if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)
-      val a = math.abs(v)
-      if (a != a) return null // NaN element: NULL immediately (ADVICE r15)
-      if (a > mx) mx = a
-      i += 1
-    }
-    val scale = mx / 127.0
-    if (!(scale > 0)) return null
-    val out = new Array[Byte](n)
-    i = 0
-    while (i < n) {
-      val q = (if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)) / scale
-      val a = math.abs(q)
-      val f = math.floor(a)
-      val r0 = if (a - f >= 0.5) f + 1.0 else f
-      val r = if (r0 > 127.0) 127.0 else r0 // subnormal-scale wrap guard
-      out(i) = (if (q < 0) -r else r).toByte
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    ArrayMath.int8Codes(input.asInstanceOf[ArrayData], isFloat, elementsNullable)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (isFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val mx = ctx.freshName("mx")
-      val sc = ctx.freshName("sc")
-      val out = ctx.freshName("out")
-      val q = ctx.freshName("q")
-      val av = ctx.freshName("av")
-      val fv = ctx.freshName("fv")
-      val rv = ctx.freshName("rv")
-      val nullCheck = if (elementsNullable) {
-        s"if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }"
-      } else ""
-      s"""
-         |final int $n = $a.numElements();
-         |double $mx = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $nullCheck
-         |  double $av = Math.abs((double) $a.$get($i));
-         |  if ($av != $av) { ${ev.isNull} = true; break; } // NaN: NULL row
-         |  if ($av > $mx) $mx = $av;
-         |}
-         |final double $sc = $mx / 127.0;
-         |if (${ev.isNull} || !($sc > 0)) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  byte[] $out = new byte[$n];
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $q = ((double) $a.$get($i)) / $sc;
-         |    double $av = Math.abs($q);
-         |    double $fv = Math.floor($av);
-         |    double $rv = ($av - $fv >= 0.5) ? $fv + 1.0 : $fv;
-         |    if ($rv > 127.0) $rv = 127.0; // subnormal-scale wrap guard
-         |    $out[$i] = (byte) (long) ($q < 0 ? -$rv : $rv);
-         |  }
-         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |    .UnsafeArrayData.fromPrimitiveArray($out);
-         |}
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => ArrayMath.storeOrNull(ctx, ev, dataType,
+      s"int8Codes($a, $isFloat, $elementsNullable)"))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** Column-level API over the custom expressions. */
+/** Column-level API over the custom expressions, and the static kernels
+  * both evaluation paths of each expression call. Every kernel accumulates
+  * in ascending index order, widens float elements to double before any
+  * arithmetic, and returns `null` for SQL NULL. */
 object ArrayMath {
 
   /** Elementwise dot product in double precision (codegen'd). */
@@ -579,4 +266,133 @@ object ArrayMath {
     * the unfused array_max/transform/round form — see [[Int8Quantize]]. */
   def int8Codes(a: Column): Column =
     GraftSql.column(Int8Quantize(GraftSql.expression(a)))
+
+  /** Generated code storing the boxed result of `call` (a kernel of this
+    * object) into `ev`, null meaning SQL NULL. */
+  private[functions] def storeOrNull(ctx: CodegenContext, ev: ExprCode,
+      dataType: DataType, call: String): String = {
+    val r = ctx.freshName("r")
+    s"""
+       |${CodeGenerator.boxedType(dataType)} $r = ${getClass.getName.stripSuffix("$")}.$call;
+       |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
+     """.stripMargin
+  }
+
+  // One kernel serves every call site, so over a JVM's life the JIT sees
+  // every ArrayData class at its element reads (UnsafeArrayData,
+  // ColumnarArray, GenericArrayData), and a virtual call per element costs
+  // more than the arithmetic. Testing for the final class UnsafeArrayData
+  // (every array read out of a shuffle, a broadcast or a cache) keeps that
+  // read a direct call; without it q33–q35 ran 0.14–0.50 s slower at sf0.1
+  // (BENCH_NOTES "One body per vector kernel").
+  private def at(a: ArrayData, i: Int, float: Boolean): Double = a match {
+    case u: UnsafeArrayData => if (float) u.getFloat(i).toDouble else u.getDouble(i)
+    case _ => if (float) a.getFloat(i).toDouble else a.getDouble(i)
+  }
+
+  private def nullAt(a: ArrayData, i: Int): Boolean = a match {
+    case u: UnsafeArrayData => u.isNullAt(i)
+    case _ => a.isNullAt(i)
+  }
+
+  private def byteAt(a: ArrayData, i: Int): Long = a match {
+    case u: UnsafeArrayData => u.getByte(i).toLong
+    case _ => a.getByte(i).toLong
+  }
+
+  /** Σ x[i]·y[i]; null on a ragged pair or (when `checkNulls`) a null
+    * element. */
+  def dot(x: ArrayData, y: ArrayData, leftFloat: Boolean, rightFloat: Boolean,
+      checkNulls: Boolean): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      if (checkNulls && (nullAt(x, i) || nullAt(y, i))) return null
+      s += at(x, i, leftFloat) * at(y, i, rightFloat)
+      i += 1
+    }
+    java.lang.Double.valueOf(s)
+  }
+
+  /** x·y / (‖x‖·‖y‖) from one loop; null as [[dot]], and on a zero norm. */
+  def cosine(x: ArrayData, y: ArrayData, leftFloat: Boolean,
+      rightFloat: Boolean, checkNulls: Boolean): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var s = 0.0; var xx = 0.0; var yy = 0.0
+    var i = 0
+    while (i < n) {
+      if (checkNulls && (nullAt(x, i) || nullAt(y, i))) return null
+      val xv = at(x, i, leftFloat)
+      val yv = at(y, i, rightFloat)
+      s += xv * yv; xx += xv * xv; yy += yv * yv
+      i += 1
+    }
+    val denom = math.sqrt(xx) * math.sqrt(yy)
+    if (denom == 0.0) null else java.lang.Double.valueOf(s / denom)
+  }
+
+  /** Σ (x[i]-y[i])²; null as [[dot]]. */
+  def squaredL2(x: ArrayData, y: ArrayData, leftFloat: Boolean,
+      rightFloat: Boolean, checkNulls: Boolean): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      if (checkNulls && (nullAt(x, i) || nullAt(y, i))) return null
+      val d = at(x, i, leftFloat) - at(y, i, rightFloat)
+      s += d * d
+      i += 1
+    }
+    java.lang.Double.valueOf(s)
+  }
+
+  /** Exact Σ x[i]·y[i] over byte codes in a long; null as [[dot]]. The
+    * float flags take the shared kernel signature and are always false
+    * here: the elements are bytes. */
+  def quantDot(x: ArrayData, y: ArrayData, leftFloat: Boolean,
+      rightFloat: Boolean, checkNulls: Boolean): java.lang.Long = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var s = 0L
+    var i = 0
+    while (i < n) {
+      if (checkNulls && (nullAt(x, i) || nullAt(y, i))) return null
+      s += byteAt(x, i) * byteAt(y, i)
+      i += 1
+    }
+    java.lang.Long.valueOf(s)
+  }
+
+  /** Symmetric int8 codes of `x` (see [[Int8Quantize]]): null on a null
+    * element (when `checkNulls`), a NaN element, or a zero scale. */
+  def int8Codes(x: ArrayData, float: Boolean, checkNulls: Boolean): ArrayData = {
+    val n = x.numElements()
+    var mx = 0.0
+    var i = 0
+    while (i < n) {
+      if (checkNulls && nullAt(x, i)) return null
+      val a = math.abs(at(x, i, float))
+      if (a != a) return null // NaN element: NULL immediately (ADVICE r15)
+      if (a > mx) mx = a
+      i += 1
+    }
+    val scale = mx / 127.0
+    if (!(scale > 0)) return null
+    val out = new Array[Byte](n)
+    i = 0
+    while (i < n) {
+      val q = at(x, i, float) / scale
+      val a = math.abs(q)
+      val f = math.floor(a)
+      val r0 = if (a - f >= 0.5) f + 1.0 else f
+      val r = if (r0 > 127.0) 127.0 else r0 // subnormal-scale wrap guard
+      out(i) = (if (q < 0) -r else r).toByte
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import graft.{Q, Tables}
 import graft.functions.ArrayMath
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Ckpt._
@@ -22,14 +23,6 @@ import graft.Ckpt._
   * similarity (near-dup text, see q36).
   */
 object Similarity {
-
-  /** Elementwise dot product in double precision (codegen'd expression). */
-  def dot(a: Column, b: Column): Column = ArrayMath.dot(a, b)
-
-  def norm(a: Column): Column = ArrayMath.norm(a)
-
-  /** Cosine similarity, null on zero norm (ANSI-safe). */
-  def cosine(a: Column, b: Column): Column = ArrayMath.cosine(a, b)
 
   /** Greedy MMR selection over a bounded shortlist (q236): `rel` is the
     * candidate list as (id, relevance) sorted by (relevance desc, id);
@@ -315,7 +308,7 @@ object Similarity {
         .withColumn("max_err",
           array_max(zip_with(col("embedding"), col("deq"),
             (a, b) => abs(a.cast("double") - b))))
-        .withColumn("cos_sim", cosine(col("embedding"), col("deq")))
+        .withColumn("cos_sim", ArrayMath.cosine(col("embedding"), col("deq")))
         .agg(
           count(lit(1)).as("n_vectors"),
           round(avg(col("max_err")), 6).as("avg_max_err"),
@@ -521,7 +514,7 @@ object Similarity {
       val emb = Tables.embeddings(s, d)
       val prefix = emb.select(col("vec_id"),
           slice(col("embedding"), 1, keep).as("pv"))
-        .withColumn("nrm", norm(col("pv")))
+        .withColumn("nrm", ArrayMath.norm(col("pv")))
         .filter(col("nrm") > 0)
         .select(col("vec_id"),
           transform(col("pv"), x => (x.cast("double") / col("nrm")).cast("float"))
@@ -537,13 +530,13 @@ object Similarity {
         .join(full.toDF("neighbor_id", "cv"), "neighbor_id")
         .join(broadcast(full.toDF("query_id", "qv").filter(col("query_id") < nQ)),
           "query_id")
-        .withColumn("sim_raw", cosine(col("cv"), col("qv")))
+        .withColumn("sim_raw", ArrayMath.cosine(col("cv"), col("qv")))
         .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
           .orderBy(desc("sim_raw"), asc("neighbor_id"))))
         .filter(col("rank") <= k)
       val exact = knn(emb.filter(col("vec_id") < nQ), emb, k)
       val normErr = prefix
-        .agg(max(abs(norm(col("embedding")) - 1.0)).as("max_err"))
+        .agg(max(abs(ArrayMath.norm(col("embedding")) - 1.0)).as("max_err"))
       prefix.agg(count(lit(1)).as("n_vecs"))
         .crossJoin(normErr)
         .crossJoin(rerank.agg(avg(col("sim_raw")).as("mean_sel")))
@@ -735,7 +728,7 @@ object Similarity {
       val cands = emb.filter(col("vec_id") =!= 0)
         .join(broadcast(qv), lit(true))
         .select(col("vec_id"), col("embedding"),
-          cosine(col("embedding"), col("qv")).as("rel"))
+          ArrayMath.cosine(col("embedding"), col("qv")).as("rel"))
         .orderBy(desc("rel"), asc("vec_id")).limit(20)
         // ckpt(a): q236 both shortlist sides; slower lazy at sf0.1
         .eagerCkpt
@@ -744,7 +737,7 @@ object Similarity {
       val pair = a.join(broadcast(cands
           .select(col("vec_id").as("ib"), col("embedding").as("eb"))),
           col("ia") < col("ib"))
-        .select(col("ia"), col("ib"), cosine(col("ea"), col("eb")).as("s"))
+        .select(col("ia"), col("ib"), ArrayMath.cosine(col("ea"), col("eb")).as("s"))
         .collect().flatMap(r => Seq(
           (r.getLong(0), r.getLong(1)) -> r.getDouble(2),
           (r.getLong(1), r.getLong(0)) -> r.getDouble(2))).toMap
@@ -903,7 +896,7 @@ object Similarity {
         .select(col("vec_id").as("neighbor_id"), col("label").as("cl"),
           col("embedding").as("cv"))
       val scored = corpus.crossJoin(broadcast(q5))
-        .withColumn("sim_raw", cosine(col("cv"), col("qv")))
+        .withColumn("sim_raw", ArrayMath.cosine(col("cv"), col("qv")))
         .withColumn("is_pos", when(col("cl") === col("ql"), 1).otherwise(0))
         .select(col("query_id"), col("is_pos"), col("neighbor_id"),
           col("sim_raw"))
@@ -1371,7 +1364,7 @@ object Similarity {
   def exactCosinePairs(s: SparkSession, d: String, qBound: Int,
       threshold: Double): DataFrame = {
     val normed = Tables.embeddings(s, d)
-      .withColumn("nrm", norm(col("embedding")))
+      .withColumn("nrm", ArrayMath.norm(col("embedding")))
       .filter(col("nrm") * col("nrm") > 0)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double") / col("nrm")).as("nv"))
@@ -1379,7 +1372,7 @@ object Similarity {
       .select(col("vec_id").as("vec_a"), col("nv").as("na"))
     val b = normed.select(col("vec_id").as("vec_b"), col("nv").as("nb"))
     b.crossJoin(broadcast(a)).filter(col("vec_a") < col("vec_b"))
-      .withColumn("sim_raw", dot(col("na"), col("nb")))
+      .withColumn("sim_raw", ArrayMath.dot(col("na"), col("nb")))
       .filter(col("sim_raw") >= threshold)
   }
 
@@ -1435,7 +1428,7 @@ object Similarity {
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
     val scored = c.crossJoin(broadcast(q))
-      .withColumn("sim_raw", cosine(col("cv"), col("qv")))
+      .withColumn("sim_raw", ArrayMath.cosine(col("cv"), col("qv")))
       .select(col("query_id"), col("neighbor_id"), col("sim_raw"))
     graft.plans.TopKPerKey.topK(scored, Seq("query_id"),
       Seq("sim_raw" -> false, "neighbor_id" -> true), k)
@@ -1467,11 +1460,12 @@ object Similarity {
     * survive the kernel (a conservative raw-sim prefilter); the EXACT
     * round-at-6-then-filter contract — and therefore the emitted pair set,
     * bit-identical sims included — is unchanged, applied on the surviving
-    * ~1e3-row stream. The kernel replicates CosineSim's float semantics
-    * exactly (ascending-index double accumulation, sqrt(xx)*sqrt(yy)
-    * denominator, NULL→skip on ragged pairs and zero norms); vectors with
-    * null elements never reach it (their signature is NULL, so posexplode
-    * drops them — same as before). mapPartitions is justified here the same
+    * ~1e3-row stream. The verify calls `ArrayMath.cosine`, the kernel
+    * `graft_cosine` runs, on each member wrapped once per bucket, so sims
+    * are CosineSim's doubles by construction; a NULL (ragged pair, zero
+    * norm) skips the pair. Vectors with null elements never reach it (their
+    * signature is NULL, so posexplode drops them), so the kernel skips the
+    * per-element null test. mapPartitions is justified here the same
     * way the multimodal decode is: Catalyst has no operator for "pairwise
     * kernel within a group without materializing the pairs as rows".
     * At much larger dim the embedding ride-along would dominate the
@@ -1508,27 +1502,16 @@ object Similarity {
         }.flatMap { members =>
           val res = scala.collection.mutable.ArrayBuffer
             .empty[(Long, Long, Double)]
+          val vecs = members.map(mb => UnsafeArrayData.fromPrimitiveArray(mb._2))
           val m = members.length
           var i = 0
           while (i < m) {
-            val (ia, ea) = members(i)
             var j = i + 1
             while (j < m) {
-              val (ib, eb) = members(j)
-              val n = ea.length
-              if (n == eb.length) {
-                var dd = 0.0; var xx = 0.0; var yy = 0.0
-                var k = 0
-                while (k < n) {
-                  val xv = ea(k).toDouble; val yv = eb(k).toDouble
-                  dd += xv * yv; xx += xv * xv; yy += yv * yv
-                  k += 1
-                }
-                val denom = math.sqrt(xx) * math.sqrt(yy)
-                if (denom != 0.0) {
-                  val sim = dd / denom
-                  if (sim >= threshold - 1e-6) res += ((ia, ib, sim))
-                }
+              val sim = ArrayMath.cosine(vecs(i), vecs(j),
+                leftFloat = true, rightFloat = true, checkNulls = false)
+              if (sim != null && sim >= threshold - 1e-6) {
+                res += ((members(i)._1, members(j)._1, sim.doubleValue))
               }
               j += 1
             }
@@ -1578,7 +1561,8 @@ object Similarity {
     val w = Window.partitionBy(col(idCol)).orderBy(asc("dist2"), asc("cell"))
     df.crossJoin(broadcast(cdf))
       .withColumn("dist2",
-        dot(col("cvec"), col("cvec")) - lit(2.0) * dot(col(embCol), col("cvec")))
+        ArrayMath.dot(col("cvec"), col("cvec")) -
+          lit(2.0) * ArrayMath.dot(col(embCol), col("cvec")))
       .withColumn("cell_rank", row_number().over(w))
       .filter(col("cell_rank") <= n)
       .drop("cvec", "dist2", "cell_rank")
@@ -1600,7 +1584,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(desc("sim_raw"), asc("neighbor_id"))
     probed.join(assigned, Seq("cell"))
-      .withColumn("sim_raw", cosine(col("cv"), col("qv")))
+      .withColumn("sim_raw", ArrayMath.cosine(col("cv"), col("qv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
       .select(col("query_id"), col("neighbor_id"),

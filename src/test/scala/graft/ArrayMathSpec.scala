@@ -1,14 +1,47 @@
 package graft
 
 import graft.functions.ArrayMath
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** graft.functions.DotProduct: codegen vs interpreted parity, numeric
-  * semantics, type coverage (array<float> and array<double>). */
+/** The ArrayMath kernels: generated vs interpreted parity against a plain
+  * Scala fold, numeric semantics, type coverage (array<float>,
+  * array<double>, array<tinyint>). */
 class ArrayMathSpec extends SparkSpec {
   import spark.implicits._
 
   private def floats(xs: Double*) = xs.map(_.toFloat).toArray
+
+  /** `cols` over `df`, evaluated by generated code (no fallback to eval)
+    * and then interpreted. The frame is rebuilt from its RDD first: the
+    * optimizer folds a projection over a local Seq with interpreted eval
+    * (ConvertToLocalRelation), so neither run would reach generated code. */
+  private def bothPaths(df: DataFrame, cols: Column*): (Array[Row], Array[Row]) = {
+    def q = spark.createDataFrame(df.rdd, df.schema).select(cols: _*)
+    val gen = GraftSession.withConfs(spark,
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false") {
+      val run = q
+      val rows = run.collect()
+      val plan = run.queryExecution.executedPlan.toString
+      val kernelLines = plan.linesIterator.filter(_.contains("graft_")).toSeq
+      assert(kernelLines.nonEmpty && kernelLines.forall(_.contains("*(")),
+        s"kernels evaluated outside whole-stage codegen:\n$plan")
+      rows
+    }
+    val interpreted = GraftSession.withConfs(spark,
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(q.collect())
+    (gen, interpreted)
+  }
+
+  /** A row's values with each double as its bits (NaN canonical,
+    * -0.0 ≠ 0.0). */
+  private def bits(row: Row): Seq[Any] = row.toSeq.map {
+    case d: Double => java.lang.Double.doubleToLongBits(d)
+    case o => o
+  }
 
   test("dot product over float arrays matches hand computation") {
     val df = Seq((floats(1, 2, 3), floats(4, 5, 6))).toDF("a", "b")
@@ -90,20 +123,82 @@ class ArrayMathSpec extends SparkSpec {
   }
 
   test("codegen and interpreted paths agree bit-for-bit") {
+    // one row per case; each pair runs through every kernel on float,
+    // double, mixed and containsNull=false columns (the last skip the
+    // per-element null test; a case with a null element is a null array
+    // there)
+    val Inf = Double.PositiveInfinity
+    def vals(xs: Double*): Seq[Option[Double]] = xs.map(Option(_))
     val rnd = new scala.util.Random(42)
-    val data = Seq.fill(50)((
-      Array.fill(64)(rnd.nextFloat() * 2 - 1),
-      Array.fill(64)(rnd.nextFloat() * 2 - 1)))
-    val df = data.toDF("a", "b")
-    def run() = df.select(ArrayMath.dot(col("a"), col("b"))).collect().map(_.getDouble(0))
-    val withCodegen = run()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interpreted = try run() finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    val cases: Seq[(Seq[Option[Double]], Seq[Option[Double]])] = Seq(
+      (vals(1, 2, 3), vals(10, 10)), // ragged
+      (Seq(Some(1.0), None, Some(3.0)), vals(4, 5, 6)), // null element
+      (vals(0, 0), vals(1, 1)), // all-zero
+      (Nil, Nil), // empty
+      (vals(Double.NaN, 1), vals(1, 2)),
+      (vals(Inf, 1), vals(-Inf, 2)),
+      (vals(Inf, 0), vals(Inf, 0))) ++
+      Seq.fill(20)((vals(Seq.fill(64)(rnd.nextFloat() * 2.0 - 1): _*),
+        vals(Seq.fill(64)(rnd.nextFloat() * 2.0 - 1): _*)))
+    def code(v: Double): Byte =
+      math.round(math.max(-127.0, math.min(127.0, v * 100))).toByte
+    def cells(f: Double => Any): Seq[Option[Double]] => Any =
+      _.map(_.map(f).orNull)
+    def nonNull(c: Seq[Option[Double]] => Any): Seq[Option[Double]] => Any =
+      v => if (v.contains(None)) null else c(v)
+    val columns = Seq[(String, DataType, Boolean, Seq[Option[Double]] => Any)](
+      ("f", FloatType, true, cells(_.toFloat)),
+      ("d", DoubleType, true, cells(identity)),
+      ("n", FloatType, false, nonNull(cells(_.toFloat))),
+      ("q", ByteType, true, cells(code)),
+      ("qn", ByteType, false, nonNull(cells(code))))
+    val schema = StructType(columns.flatMap { case (c, t, nulls, _) =>
+      Seq(StructField("a" + c, ArrayType(t, nulls)),
+        StructField("b" + c, ArrayType(t, nulls)))
+    })
+    val rows = cases.map { case (a, b) =>
+      Row.fromSeq(columns.flatMap { case (_, _, _, f) => Seq(f(a), f(b)) })
     }
-    assert(withCodegen.sameElements(interpreted))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+
+    val floatKernels = Seq[(String, (Column, Column) => Column)](
+      "dot" -> ArrayMath.dot, "cosine" -> ArrayMath.cosine,
+      "squaredL2" -> ArrayMath.squaredL2)
+    val pairs = Seq("af" -> "bf", "ad" -> "bd", "af" -> "bd", "an" -> "bn")
+    val kernels = floatKernels.flatMap { case (_, k) =>
+      pairs.map { case (a, b) => k(col(a), col(b)) }
+    } ++ Seq(ArrayMath.quantDot(col("aq"), col("bq")),
+      ArrayMath.quantDot(col("aqn"), col("bqn"))) ++
+      Seq("af", "ad", "an").map(c => ArrayMath.int8Codes(col(c)))
+    val (gen, interpreted) = bothPaths(df, kernels: _*)
+    assert(gen.map(bits) sameElements interpreted.map(bits))
+
+    // plain-Scala reference for the float kernels and quantDot: widen each
+    // element as its column stores it, fold in ascending index order
+    def fold(kernel: String, x: Array[Double], y: Array[Double]): Any = {
+      def sum(f: Int => Double) = x.indices.foldLeft(0.0)((s, i) => s + f(i))
+      kernel match {
+        case "dot" => sum(i => x(i) * y(i))
+        case "squaredL2" => sum(i => (x(i) - y(i)) * (x(i) - y(i)))
+        case "cosine" =>
+          val d = math.sqrt(sum(i => x(i) * x(i))) * math.sqrt(sum(i => y(i) * y(i)))
+          if (d == 0.0) null else sum(i => x(i) * y(i)) / d
+      }
+    }
+    def widen(c: String)(v: Double): Double =
+      if (c.endsWith("d")) v else v.toFloat.toDouble
+    val expected = cases.map { case (a, b) =>
+      val whole = a.length == b.length && !a.contains(None) && !b.contains(None)
+      val floats = for ((name, _) <- floatKernels; (ca, cb) <- pairs) yield
+        if (whole) fold(name, a.flatten.map(widen(ca)).toArray,
+          b.flatten.map(widen(cb)).toArray)
+        else null
+      val qdot = if (whole) {
+        a.flatten.zip(b.flatten).map { case (x, y) => code(x).toLong * code(y) }.sum
+      } else null
+      bits(Row.fromSeq(floats ++ Seq(qdot, qdot)))
+    }
+    assert(gen.map(r => bits(r).take(expected.head.length)).toSeq == expected)
   }
 
   test("dot matches the higher-order-function fold it replaced") {
@@ -126,17 +221,10 @@ class ArrayMathSpec extends SparkSpec {
     val data = Seq.fill(25)((
       Seq.fill(16)((rnd.nextInt(255) - 127).toByte),
       Seq.fill(16)((rnd.nextInt(255) - 127).toByte)))
-    val df = data.toDF("a", "b")
-    def run() = df.select(ArrayMath.quantDot(col("a"), col("b")))
-      .collect().map(_.getLong(0))
-    val withCodegen = run()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interpreted = try run() finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
-    assert(withCodegen.sameElements(interpreted))
+    val (gen, interp) =
+      bothPaths(data.toDF("a", "b"), ArrayMath.quantDot(col("a"), col("b")))
+    val withCodegen = gen.map(_.getLong(0))
+    assert(withCodegen.sameElements(interp.map(_.getLong(0))))
     // exact integer reference — no float anywhere
     val ref = data.map { case (a, b) =>
       a.zip(b).map { case (x, y) => x.toLong * y.toLong }.sum
@@ -193,16 +281,10 @@ class ArrayMathSpec extends SparkSpec {
     // `floor(x + 0.5)` trap: 0.4999…94 + 0.5 == 1.0 in double) → 0.
     val df = Seq(Array(127.0, 0.5, -0.5, 0.49999999999999994,
         -0.49999999999999994, 1.4999999999999998, 126.5)).toDF("v")
-    def run() = df.select(ArrayMath.int8Codes(col("v"))).head().getSeq[Byte](0)
-    val gen = run()
+    val (genRows, interpRows) = bothPaths(df, ArrayMath.int8Codes(col("v")))
+    val gen = genRows.head.getSeq[Byte](0)
     assert(gen == Seq[Byte](127, 1, -1, 0, 0, 1, 127))
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interp = try run() finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
-    assert(gen == interp)
+    assert(gen == interpRows.head.getSeq[Byte](0))
   }
 
   test("int8Codes: all-zero / empty / null-element inputs yield NULL") {
@@ -229,19 +311,12 @@ class ArrayMathSpec extends SparkSpec {
     val df = Seq(Array(5.0, Double.NaN), Array(Double.NaN), Array(5.0, 1.0),
         Array(Double.NaN, 5.0), Array(Double.NaN, 5.0, 1.0))
       .toDF("v")
-    def run() = df.select(ArrayMath.int8Codes(col("v"))).collect()
-    val gen = run()
+    val (gen, interp) = bothPaths(df, ArrayMath.int8Codes(col("v")))
     assert(gen(0).isNullAt(0), "mixed-NaN row must be NULL")
     assert(gen(1).isNullAt(0), "all-NaN row must be NULL")
     assert(gen(2).getSeq[Byte](0) == Seq[Byte](127, 25))
     assert(gen(3).isNullAt(0), "NaN-FIRST row must be NULL (sticky)")
     assert(gen(4).isNullAt(0), "NaN-first-then-finite row must be NULL")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interp = try run() finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
     assert(interp(0).isNullAt(0) && interp(1).isNullAt(0))
     assert(interp(2).getSeq[Byte](0) == Seq[Byte](127, 25))
     assert(interp(3).isNullAt(0), "NaN-FIRST row must be NULL (interpreted)")
@@ -256,20 +331,14 @@ class ArrayMathSpec extends SparkSpec {
     // [-127, 127].
     val tiny = java.lang.Double.MIN_VALUE
     val df = Seq(Array(255 * tiny, -255 * tiny, tiny)).toDF("v")
-    def run() = df.select(ArrayMath.int8Codes(col("v"))).head()
-    val gen = run()
+    val (genRows, interpRows) = bothPaths(df, ArrayMath.int8Codes(col("v")))
+    val gen = genRows.head
     assert(!gen.isNullAt(0))
     val codes = gen.getSeq[Byte](0)
     assert(codes(0) == 127.toByte, s"clamped max code, got ${codes(0)}")
     assert(codes(1) == (-127).toByte, s"clamped min code, got ${codes(1)}")
     assert(codes.forall(c => c >= -127 && c <= 127),
       s"no code may wrap past ±127: $codes")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interp = try run() finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
-    assert(interp.getSeq[Byte](0) == codes, "codegen == interpreted")
+    assert(interpRows.head.getSeq[Byte](0) == codes, "codegen == interpreted")
   }
 }

@@ -98,4 +98,15 @@ class CkptCensusSpec extends AnyFunSuite {
       s"${outside.size} session conf writes outside GraftSession/Tables:\n" +
         outside.mkString("\n"))
   }
+
+  test("no for (int loop in src/main: generated code calls a shared kernel") {
+    // a vector kernel is one static loop that the interpreted and the
+    // generated path both call (ArrayMath); a loop written out as Java in
+    // a doGenCode string is a second copy of it
+    val found = sites(mainRoot, "for (int").map { case (path, i, lines) =>
+      s"$path:${i + 1}: ${lines(i).trim}"
+    }
+    assert(found.isEmpty,
+      s"${found.size} hand-written generated-code loops:\n" + found.mkString("\n"))
+  }
 }
