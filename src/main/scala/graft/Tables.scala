@@ -1,6 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftSql, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver's test corpus (see /root/repo/TESTDATA.md and
@@ -15,8 +23,12 @@ import org.apache.spark.sql.functions._
   *    µs TIMESTAMP_NTZ, floor-truncated exactly like DuckDB's ns→µs cast so
   *    the oracle agrees; a native timestamp column is only normalized to
   *    TIMESTAMP_NTZ so every downstream query sees one stable type.
-  *  - All loads are plain `spark.read.parquet` scans: column pruning and
-  *    predicate pushdown reach the scan untouched (no eager work here).
+  *  - All loads are plain parquet scans: column pruning and predicate
+  *    pushdown reach the scan untouched. A schema-less `spark.read.parquet`
+  *    would run a one-task Spark job to merge footers before it returns;
+  *    [[read]] reads the same footer on the driver instead and passes the
+  *    schema, so a load starts no Spark job (BENCH_NOTES "Zero-job table
+  *    loads").
   */
 object Tables {
 
@@ -29,7 +41,7 @@ object Tables {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     name match {
       case "events" => eventsTs(eventsFile(spark, dir), "timestamp_ntz")
-      case other => spark.read.parquet(s"$dir/$other.parquet")
+      case other => read(spark, s"$dir/$other.parquet")
     }
   }
 
@@ -38,8 +50,71 @@ object Tables {
   private[graft] def eventsFile(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet")
+    read(spark, s"$dir/events.parquet")
   }
+
+  /** `spark.read.parquet(path)` with the schema Spark would infer, read
+    * here on the driver from the one footer its inference reads
+    * (`ParquetUtils.inferSchema`, no schema merging): `_common_metadata`,
+    * else `_metadata`, else the first data file in path order. The footer
+    * is converted by Spark's own `readSchemaFromFooter` with the converter
+    * settings inference takes from the session conf at this moment, so
+    * `nanosAsLong` and the Spark schema stored in the footer apply exactly
+    * as they would there. Anything else (a missing path, no data file,
+    * partition subdirectories, `mergeSchema` on) is left to Spark's own
+    * inference, with its own errors. Read fresh on every load: a file
+    * rewritten in place is seen as it is now. */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.conf
+    val hconf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(hconf)
+    val files = listTable(fs, root)
+    val toTouch =
+      if (conf.isParquetSchemaMergingEnabled || files.exists(_.isDirectory)) None
+      else files.find(_.getPath.getName == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+        .orElse(files.find(_.getPath.getName == ParquetFileWriter.PARQUET_METADATA_FILE))
+        .orElse(files.find(f => !isSummary(f)))
+    toTouch match {
+      case None => spark.read.parquet(path)
+      case Some(f) =>
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+        val footer = new Footer(f.getPath,
+          readFooter(f, hconf, ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer, converter))
+          .parquet(path)
+    }
+  }
+
+  /** What Spark's file index lists for a table path: nothing when it is
+    * missing, the path itself when it is a file, else its visible children
+    * (Spark's hidden-file rule) in path order. */
+  private def listTable(fs: FileSystem, root: Path): Seq[FileStatus] =
+    if (!fs.exists(root)) Seq.empty
+    else {
+      val st = fs.getFileStatus(root)
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(root).toSeq
+        .filterNot(c => GraftSql.hiddenPath(c.getPath.getName))
+        .sortBy(_.getPath.toString)
+    }
+
+  private def isSummary(f: FileStatus): Boolean = {
+    val n = f.getPath.getName
+    n == ParquetFileWriter.PARQUET_METADATA_FILE ||
+      n == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE
+  }
+
+  /** One parquet footer, `filter` choosing how much row-group metadata to
+    * decode. */
+  private def readFooter(f: FileStatus, hconf: Configuration,
+      filter: ParquetMetadataConverter.MetadataFilter): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, hconf), filter)
 
   /** `ts` of a batch or streaming [[eventsFile]] frame as a µs timestamp of
     * type `to`: `timestamp_ntz` for batch queries, `timestamp` where a
@@ -117,46 +192,36 @@ object Tables {
     val hconf = spark.sessionState.newHadoopConf()
     var maxAvg = 0.0
     for (t <- names) {
-      val root = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
+      val root = new Path(s"$dir/$t.parquet")
       val fs = root.getFileSystem(hconf)
-      if (fs.exists(root)) {
-        // single file or a directory of part files — footers of each
-        val files =
-          if (fs.getFileStatus(root).isDirectory)
-            fs.listStatus(root).toSeq.map(_.getPath)
-              .filter(_.getName.endsWith(".parquet"))
-          else Seq(root)
-        var rows = 0L
-        val perCol = scala.collection.mutable.Map.empty[String, Long]
-        for (f <- files) {
-          // a zero-byte part, a stray non-parquet file, or a subdirectory
-          // named *.parquet must degrade to "no stats from this file", not
-          // abort the main before the first query — this is a tuning
-          // helper, never a correctness dependency. Missing stats can only
-          // leave the batch LARGER (toward the 4096 default), never wrong.
-          try {
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(f, hconf)
-            val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try {
-              for (b <- reader.getFooter.getBlocks.asScala) {
-                rows += b.getRowCount
-                for (c <- b.getColumns.asScala) {
-                  val k = c.getPath.toDotString
-                  perCol(k) = perCol.getOrElse(k, 0L) + c.getTotalUncompressedSize
-                }
-              }
-            } finally reader.close()
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[tables] tuneVectorBatch: skipping " +
-                s"unreadable footer $f (${e.getClass.getSimpleName}: " +
-                s"${e.getMessage})")
+      // single file or a directory of part files — footers of each
+      val files = listTable(fs, root).filter(f => f.isFile && !isSummary(f))
+      var rows = 0L
+      val perCol = scala.collection.mutable.Map.empty[String, Long]
+      for (f <- files) {
+        // a zero-byte part or a stray non-parquet file must degrade to
+        // "no stats from this file", not abort the main before the first
+        // query — this is a tuning helper, never a correctness dependency.
+        // Missing stats can only leave the batch LARGER (toward the 4096
+        // default), never wrong.
+        try {
+          val footer = readFooter(f, hconf, ParquetMetadataConverter.NO_FILTER)
+          for (b <- footer.getBlocks.asScala) {
+            rows += b.getRowCount
+            for (c <- b.getColumns.asScala) {
+              val k = c.getPath.toDotString
+              perCol(k) = perCol.getOrElse(k, 0L) + c.getTotalUncompressedSize
+            }
           }
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[tables] tuneVectorBatch: skipping " +
+              s"unreadable footer ${f.getPath} (${e.getClass.getSimpleName}: " +
+              s"${e.getMessage})")
         }
-        if (rows > 0 && perCol.nonEmpty)
-          maxAvg = math.max(maxAvg, perCol.values.max.toDouble / rows)
       }
+      if (rows > 0 && perCol.nonEmpty)
+        maxAvg = math.max(maxAvg, perCol.values.max.toDouble / rows)
     }
     val batch =
       if (maxAvg <= 0) DefaultBatchRows

@@ -44,4 +44,11 @@ object GraftSql {
   def analyzedPlan(df: DataFrame):
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+
+  /** Spark's hidden-file rule for a listed name (`_`/`.` prefixes other
+    * than the parquet summary files, `._COPYING_` suffixes) —
+    * `HadoopFSUtils` is private[spark]; `graft.Tables` lists a table the
+    * way Spark's file index does. */
+  def hiddenPath(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }
