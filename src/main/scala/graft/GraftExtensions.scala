@@ -32,8 +32,9 @@ import graft.functions.{BpeSymbolSum, CosineSim, DotProduct, HyperplaneBands, Ja
   *
   * Beyond functions, the injector also installs the whole-plan surface:
   * the [[graft.plans.BoundLevenshtein]] optimizer rule and the
-  * [[graft.plans.TopKStrategy]] planner strategy (map-side partial
-  * top-k-per-key — custom logical + physical operator).
+  * [[graft.plans.TopKStrategy]] planner strategy (Spark's own grouped
+  * `row_number` `WindowGroupLimit`, its partial planned as a per-key heap
+  * instead of a partition sort).
   *
   * For sessions built without the conf, [[GraftExtensions.register]] installs
   * the same functions on a live session.
@@ -52,8 +53,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // stats-driven choice between exact-equivalent kernel plans — see
     // graft.plans.AdaptivePlan
     ext.injectOptimizerRule(_ => graft.plans.AdaptivePlanRule)
-    // custom operator: map-side partial top-k-per-key (logical node +
-    // strategy + physical operator) — see graft.plans.TopKPerKey
+    // grouped row_number top-k: the partial runs as per-key heaps — see
+    // graft.plans.TopKStrategy
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
 }
@@ -124,6 +125,8 @@ object GraftExtensions {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.BoundLevenshtein
     graft.plans.AdaptivePlan.register(spark)
-    graft.plans.TopKPerKey.register(spark)
+    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ graft.plans.TopKStrategy
   }
 }

@@ -1214,18 +1214,13 @@ object Advanced {
         .orderBy(col("event_type"))
     },
 
-    // Grouped top-k through the CUSTOM OPERATOR (graft.plans.TopKPerKey):
-    // the two highest-value lineitems per (returnflag, linestatus), with
-    // the map-side partial top-k-per-key exec pruning each scan partition
-    // to ≤ k rows per key BEFORE the exchange — the per-key analogue of
-    // TakeOrderedAndProject, which Spark has only for global top-k. The
-    // rank window downstream sees ≤ k·|keys|·|partitions| survivor rows
-    // instead of the corpus; at 100 TB with 6 flag/status cells that is
-    // the difference between shuffling 6×k×partitions rows and shuffling
-    // everything. The DuckDB oracle runs the plain window form — the
-    // operator must be EXACTLY invisible in the result, ties
-    // (cents, orderkey, linenumber) included; TopKPerKeySpec separately
-    // pins the plan shape and the overflow valve.
+    // Grouped top-k: the two highest-value lineitems per (returnflag,
+    // linestatus), in the oracle's own row_number form. Spark infers a
+    // WindowGroupLimit from the `rn <= 2` filter, and graft's TopKStrategy
+    // plans its partial as per-key heaps (graft.plans.TopKPerKey): each
+    // scan partition forwards ≤ 2 rows per key to the exchange without
+    // sorting the partition. The order (cents, orderkey, linenumber) is
+    // total, so the heaps cannot change the result.
     Q("q244_native_grouped_topk",
       """WITH x AS (
         |  SELECT l_returnflag, l_linestatus, l_orderkey, l_linenumber,
@@ -1244,10 +1239,9 @@ object Advanced {
         .select(col("l_returnflag"), col("l_linestatus"), col("l_orderkey"),
           col("l_linenumber"),
           round(col("l_extendedprice") * 100, 0).cast("long").as("cents"))
-      graft.plans.TopKPerKey.topK(li,
-          Seq("l_returnflag", "l_linestatus"),
-          Seq("cents" -> false, "l_orderkey" -> true,
-            "l_linenumber" -> true), 2)
+      val w = Window.partitionBy(col("l_returnflag"), col("l_linestatus"))
+        .orderBy(col("cents").desc, col("l_orderkey"), col("l_linenumber"))
+      li.withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
         .select(col("l_returnflag"), col("l_linestatus"),
           col("rn").cast("int").as("rn"),
           col("l_orderkey").cast("long").as("l_orderkey"),

@@ -370,7 +370,8 @@ object Conformance {
     // this rewrite agrees exactly with DuckDB's dependent-join execution,
     // including the cents-then-key tie order. Cents are exact BIGINTs;
     // priorities are a ≤5-value domain, so the decorrelated rank runs
-    // per-priority, fully parallel.
+    // per-priority, fully parallel, limited to 3 rows per priority before
+    // the exchange (a heap-planned WindowGroupLimit, as in q244).
     Q("q221_lateral_topk",
       """SELECT p.prio, t.o_orderkey, t.cents
         |FROM (SELECT DISTINCT o_orderpriority AS prio FROM orders) p

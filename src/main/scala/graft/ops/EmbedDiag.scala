@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -24,8 +25,8 @@ import graft.functions.ArrayMath
   *
   * Scale shapes: every kNN here is the q33/q34 bounded-slice pattern —
   * the query slice broadcasts, the corpus streams through ONE codegen
-  * kernel evaluation per (corpus row × slice row) and reduces through
-  * the map-side TopKPerKey heaps; nothing corpus-sized is ever
+  * kernel evaluation per (corpus row × slice row) and reduces through a
+  * heap-pruned `row_number` window (q244); nothing corpus-sized is ever
   * collected or re-shuffled wider than (id, id, measure). Cross-engine
   * float discipline: distances/similarities are the SAME ascending-
   * index double folds the oracles spell (q33/q41 precedent), compared
@@ -93,8 +94,9 @@ object EmbedDiag {
         .filter(col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"),
           ArrayMath.cosine(col("cv"), col("qv")).as("sim_raw"))
-      graft.plans.TopKPerKey.topK(scored, Seq("query_id"),
-          Seq("sim_raw" -> false, "neighbor_id" -> true), 5)
+      val w = Window.partitionBy(col("query_id"))
+        .orderBy(col("sim_raw").desc, col("neighbor_id"))
+      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
         .groupBy(col("neighbor_id"))
         .agg(count(lit(1)).as("in_degree"))
         .orderBy(col("in_degree").desc, col("neighbor_id"))
@@ -134,9 +136,9 @@ object EmbedDiag {
         .filter(col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"),
           ArrayMath.squaredL2(col("cv"), col("qv")).as("d2_raw"))
-      graft.plans.TopKPerKey.topK(scored, Seq("query_id"),
-          Seq("d2_raw" -> true, "neighbor_id" -> true), 5)
-        .filter(col("rn") === 5)
+      val w = Window.partitionBy(col("query_id"))
+        .orderBy(col("d2_raw"), col("neighbor_id"))
+      scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 5)
         .orderBy(col("d2_raw").desc, col("query_id"))
         .limit(20)
         .select(col("query_id"), round(col("d2_raw"), 6).as("d5_sq"))
@@ -182,8 +184,9 @@ object EmbedDiag {
         .filter(col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"),
           ArrayMath.squaredL2(col("cv"), col("qv")).as("d2_raw"))
-      graft.plans.TopKPerKey.topK(scored, Seq("query_id"),
-          Seq("d2_raw" -> true, "neighbor_id" -> true), 2)
+      val w = Window.partitionBy(col("query_id"))
+        .orderBy(col("d2_raw"), col("neighbor_id"))
+      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
         .groupBy(col("query_id"))
         .agg(max(when(col("rn") === 1, col("d2_raw"))).as("d1_raw"),
           max(when(col("rn") === 2, col("d2_raw"))).as("d2r"))

@@ -976,12 +976,11 @@ object Retail {
     },
 
     // Leaderboard churn — how stable is the "top 5 parts by revenue"
-    // board year over year? Each year's top 5 comes through the CUSTOM
-    // partial top-k-per-key operator (q244's graft.plans.TopKPerKey —
-    // its second production consumer: each scan partition forwards at
-    // most 5 rows per year to the exchange); consecutive years' sets
-    // then join on part to count survivors and the churn Jaccard. Ties
-    // break (rev desc, partkey) in both engines.
+    // board year over year? Each year's top 5 is a row_number window that
+    // Spark limits per group (heap-pruned, as in q244: each partition
+    // forwards at most 5 rows per year to the exchange); consecutive
+    // years' sets then join on part to count survivors and the churn
+    // Jaccard. Ties break (rev desc, partkey) in both engines.
     Q("q271_leaderboard_churn",
       """WITH y AS (
         |  SELECT CAST(year(l_shipdate) AS INT) AS y, l_partkey AS pk,
@@ -1012,9 +1011,10 @@ object Retail {
           col("l_partkey").as("pk"))
         .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
           .cast("long").as("rev"))
-      val top5 = graft.plans.TopKPerKey.topK(yearly, Seq("y"),
-          Seq("rev" -> false, "pk" -> true), 5)
-        .select(col("y"), col("pk"))
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("y"))
+        .orderBy(col("rev").desc, col("pk"))
+      val top5 = yearly.withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 5).select(col("y"), col("pk"))
       val mn = top5.agg(min(col("y")).as("mny"))
       val j = top5.toDF("ya", "pk")
         .join(top5.toDF("yb", "pk2"),

@@ -846,14 +846,13 @@ object Similarity {
     // between them (negative margin = the pair a triplet loss would
     // actually move). Scale shape is q33's with a composite key: queries
     // broadcast, the corpus-side scored frame projects to ids+sim before
-    // ranking, and the top-1-per-(query, polarity) runs through the
-    // custom TopKPerKey operator — each scan partition keeps ONE row per
-    // (query, polarity) in a bounded heap before the exchange, so raw
-    // vectors never shuffle and the exchange moves O(partitions·queries)
-    // rows. Leave-queries-out corpus (the q157/q158 convention): no
-    // self-retrieval freebies. FULL-hash oracle: DuckDB replays the same
-    // double-precision cosine fold via list lambdas and the same
-    // (sim desc, id) argmax per polarity.
+    // ranking, and the top-1-per-(query, polarity) row_number window is
+    // heap-pruned (q244) — each scan partition keeps ONE row per (query,
+    // polarity) before the exchange, so raw vectors never shuffle and the
+    // exchange moves O(partitions·queries) rows. Leave-queries-out corpus
+    // (the q157/q158 convention): no self-retrieval freebies. FULL-hash
+    // oracle: DuckDB replays the same double-precision cosine fold via
+    // list lambdas and the same (sim desc, id) argmax per polarity.
     Q("q281_hard_negatives",
       """WITH q AS (SELECT vec_id AS query_id, label AS ql, embedding AS qv
         |           FROM embeddings WHERE vec_id < 5),
@@ -900,10 +899,10 @@ object Similarity {
         .withColumn("is_pos", when(col("cl") === col("ql"), 1).otherwise(0))
         .select(col("query_id"), col("is_pos"), col("neighbor_id"),
           col("sim_raw"))
-      val top1 = graft.plans.TopKPerKey.topK(scored,
-        Seq("query_id", "is_pos"),
-        Seq("sim_raw" -> false, "neighbor_id" -> true), 1)
-      top1.groupBy(col("query_id"))
+      val w = Window.partitionBy(col("query_id"), col("is_pos"))
+        .orderBy(col("sim_raw").desc, col("neighbor_id"))
+      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 1)
+        .groupBy(col("query_id"))
         .agg(
           max(when(col("is_pos") === 1, col("neighbor_id"))).as("pos_id"),
           max(when(col("is_pos") === 1, col("sim_raw"))).as("pos_raw"),
@@ -1005,10 +1004,9 @@ object Similarity {
     // partitionings, which is what makes this a FULL-hash oracle: DuckDB
     // replays the same deterministic quantization and integer fold).
     // Scale shape: the q33 topology — 5-query slice broadcasts, corpus
-    // streams map-side through the codegen kernels, both rankings prune
-    // through the custom TopKPerKey operator (5th consumer) before any
-    // exchange; the scored frame is |queries|·|corpus| rows of scalars,
-    // never embeddings.
+    // streams map-side through the codegen kernels, both row_number
+    // rankings are heap-pruned (q244) before any exchange; the scored
+    // frame is |queries|·|corpus| rows of scalars, never embeddings.
     Q("q297_int8_ann",
       """WITH s AS (
         |  SELECT vec_id,
@@ -1067,12 +1065,12 @@ object Similarity {
         .select(col("query_id"), col("neighbor_id"),
           ArrayMath.quantDot(col("qc"), col("cc")).as("int_dot"),
           ArrayMath.dot(col("qv"), col("cv")).as("fdot"))
-      val approx = graft.plans.TopKPerKey.topK(
-        scored.select("query_id", "neighbor_id", "int_dot"),
-        Seq("query_id"), Seq("int_dot" -> false, "neighbor_id" -> true), 10)
-      val exact = graft.plans.TopKPerKey.topK(
-        scored.select("query_id", "neighbor_id", "fdot"),
-        Seq("query_id"), Seq("fdot" -> false, "neighbor_id" -> true), 10)
+      def top10(m: String) = scored.select("query_id", "neighbor_id", m)
+        .withColumn("rn", row_number().over(Window.partitionBy(col("query_id"))
+          .orderBy(col(m).desc, col("neighbor_id"))))
+        .filter(col("rn") <= 10)
+      val approx = top10("int_dot")
+      val exact = top10("fdot")
       val overlap = approx.select("query_id", "neighbor_id")
         .join(exact.select("query_id", "neighbor_id"),
           Seq("query_id", "neighbor_id"))
@@ -1203,14 +1201,7 @@ object Similarity {
     val probed = rankCells(cdf, queries, "query_id", "qv", probes)
       .select("query_id", "cell")
     val (codes, codebook, m, _, subDim) = pqEncode(s, d)
-    val dtable = queries
-      .select(col("query_id"), posexplode(
-        transform(sequence(lit(0), lit(m - 1)),
-          i => slice(col("qv"), i * subDim + 1, lit(subDim))))
-        .as(Seq("sub", "qsub")))
-      .join(broadcast(codebook), "sub")
-      .select(col("query_id"), col("sub"), col("code"),
-        ArrayMath.squaredL2(col("qsub"), col("cvec")).as("d2"))
+    val dtable = adcTable(queries, codebook, m, subDim)
     // the IVF stage: only vectors in a probed cell reach the ADC lookup
     val cand = probed.join(assigned, Seq("cell"))
       .select("query_id", "neighbor_id")
@@ -1224,23 +1215,11 @@ object Similarity {
         Window.partitionBy(col("query_id"))
           .orderBy(asc("adc_dist"), asc("neighbor_id"))))
       .filter(col("rank") <= topK)
-    val exact = emb.filter(col("vec_id") >= nQ)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-      .crossJoin(broadcast(queries))
-      .withColumn("d2", ArrayMath.squaredL2(col("cv"), col("qv")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(asc("d2"), asc("neighbor_id"))))
-      .filter(col("rank") <= topK)
-      .select("query_id", "neighbor_id")
     emb.agg(count(lit(1)).as("n_vectors"))
       .crossJoin(cand.agg(count(lit(1)).as("n_candidates")))
       .crossJoin(adc.agg(count(lit(1)).as("n_results"),
         countDistinct(col("query_id")).as("n_answered")))
-      .crossJoin(adc.select("query_id", "neighbor_id")
-        .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-        .crossJoin(exact.agg(count(lit(1)).as("n_exact"))))
+      .crossJoin(exactRecall(emb, queries, adc, nQ, topK))
   }
 
   /** q143's raw metric row (spec-visible): reconstruction error stats,
@@ -1268,14 +1247,7 @@ object Similarity {
     // satisfied by self-retrievals alone.
     val queries = emb.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val dtable = queries
-      .select(col("query_id"), posexplode(
-        transform(sequence(lit(0), lit(m - 1)),
-          i => slice(col("qv"), i * subDim + 1, lit(subDim))))
-        .as(Seq("sub", "qsub")))
-      .join(broadcast(codebook), "sub")
-      .select(col("query_id"), col("sub"), col("code"),
-        ArrayMath.squaredL2(col("qsub"), col("cvec")).as("d2"))
+    val dtable = adcTable(queries, codebook, m, subDim)
     val adc = codes.filter(col("vec_id") >= nQ)
       .select(col("vec_id").as("neighbor_id"), col("sub"), col("code"))
       .join(broadcast(dtable), Seq("sub", "code"))
@@ -1285,7 +1257,34 @@ object Similarity {
         Window.partitionBy(col("query_id"))
           .orderBy(asc("adc_dist"), asc("neighbor_id"))))
       .filter(col("rank") <= topK)
-    // exact squared-L2 top-k baseline over the same bounded query slice
+    relErr.agg(count(lit(1)).as("n_vectors"),
+        sum(col("n_sub")).cast("long").as("n_codes"),
+        max(col("rel_err")).as("worst_rel"),
+        avg(col("rel_err")).as("mean_rel"))
+      .crossJoin(codes.agg(
+        min(col("code")).as("min_code"), max(col("code")).as("max_code"),
+        countDistinct(col("code")).as("n_distinct_codes")))
+      .crossJoin(exactRecall(emb, queries, adc, nQ, topK))
+  }
+
+  /** The query slice's ADC distance table: per (query_id, sub, code), the
+    * squared L2 from the query's `sub`-th subvector to that centroid. */
+  private def adcTable(queries: DataFrame, codebook: DataFrame, m: Int,
+      subDim: Int): DataFrame =
+    queries
+      .select(col("query_id"), posexplode(
+        transform(sequence(lit(0), lit(m - 1)),
+          i => slice(col("qv"), i * subDim + 1, lit(subDim))))
+        .as(Seq("sub", "qsub")))
+      .join(broadcast(codebook), "sub")
+      .select(col("query_id"), col("sub"), col("code"),
+        ArrayMath.squaredL2(col("qsub"), col("cvec")).as("d2"))
+
+  /** One row (n_hit, n_exact): how many of `found`'s (query_id,
+    * neighbor_id) pairs are in the exact squared-L2 top-`topK` of the
+    * leave-queries-out corpus (vec_id ≥ nQ), and that baseline's size. */
+  private def exactRecall(emb: DataFrame, queries: DataFrame,
+      found: DataFrame, nQ: Int, topK: Int): DataFrame = {
     val exact = emb.filter(col("vec_id") >= nQ)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
       .crossJoin(broadcast(queries))
@@ -1294,18 +1293,11 @@ object Similarity {
         Window.partitionBy(col("query_id"))
           .orderBy(asc("d2"), asc("neighbor_id"))))
       .filter(col("rank") <= topK)
-      .select(col("query_id"), col("neighbor_id"))
-    relErr.agg(count(lit(1)).as("n_vectors"),
-        sum(col("n_sub")).cast("long").as("n_codes"),
-        max(col("rel_err")).as("worst_rel"),
-        avg(col("rel_err")).as("mean_rel"))
-      .crossJoin(codes.agg(
-        min(col("code")).as("min_code"), max(col("code")).as("max_code"),
-        countDistinct(col("code")).as("n_distinct_codes")))
-      .crossJoin(adc.select("query_id", "neighbor_id")
-        .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-        .crossJoin(exact.agg(count(lit(1)).as("n_exact"))))
+      .select("query_id", "neighbor_id")
+    found.select("query_id", "neighbor_id")
+      .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
+      .agg(count(lit(1)).as("n_hit"))
+      .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
   }
 
   /** PQ encoder: per-subspace seeded k-means codebooks + per-vector codes.
@@ -1413,16 +1405,14 @@ object Similarity {
 
   /** Brute-force top-k cosine neighbors for each query vector.
     *
-    * The rank runs through the custom [[graft.plans.TopKPerKey]] operator
-    * (round 9, its third consumer after q244/q271): each scan partition
-    * keeps at most k candidates per query in a bounded heap BEFORE the
-    * exchange, so the shuffle moves O(k·|queries|·partitions) scored rows
-    * instead of the full |corpus|·|queries| frame the plain window form
-    * ranks reducer-side — on a 100 TB corpus that map-side combine IS the
-    * operator. The scored frame is projected to (query_id, neighbor_id,
-    * sim_raw) first, so embeddings never enter the heaps or the shuffle;
-    * the order is total ((sim desc, neighbor_id asc)), so the result is
-    * bit-identical to the window formulation per the operator's contract.
+    * The rank is a `row_number` window filtered `<= k`, so Spark limits it
+    * per query before the exchange (a WindowGroupLimit, its partial planned
+    * as per-query heaps by [[graft.plans.TopKStrategy]]): the shuffle moves
+    * O(k·|queries|·partitions) scored rows instead of the full
+    * |corpus|·|queries| frame. The scored frame is projected to (query_id,
+    * neighbor_id, sim_raw) first, so embeddings never enter the heaps or
+    * the shuffle; the order (sim desc, neighbor_id asc) is total, so the
+    * pruning cannot change the result.
     */
   def knn(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -1430,8 +1420,9 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .withColumn("sim_raw", ArrayMath.cosine(col("cv"), col("qv")))
       .select(col("query_id"), col("neighbor_id"), col("sim_raw"))
-    graft.plans.TopKPerKey.topK(scored, Seq("query_id"),
-      Seq("sim_raw" -> false, "neighbor_id" -> true), k)
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim_raw").desc, col("neighbor_id"))
+    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select(col("query_id"), col("neighbor_id"),
         round(col("sim_raw"), 6).as("sim"), col("rn").as("rank"))
   }
@@ -1572,12 +1563,10 @@ object Similarity {
       qBound: Long = 5): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val cdf = ivfIndex(s, d, k)
-    def rankCells(df: DataFrame, idCol: String, embCol: String, n: Int) =
-      Similarity.rankCells(cdf, df, idCol, embCol, n)
-    val assigned = rankCells(
+    val assigned = rankCells(cdf,
       emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv")),
       "neighbor_id", "cv", 1)
-    val probed = rankCells(
+    val probed = rankCells(cdf,
       emb.filter(col("vec_id") < qBound)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv")),
       "query_id", "qv", probes)

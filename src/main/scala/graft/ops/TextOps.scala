@@ -1691,17 +1691,12 @@ object TextOps {
     },
 
     // Stratified exact-k sample — EXACTLY k docs per source, reproducibly
-    // (the balanced-eval-set builder; q156 is the global form). Neither
-    // built-in route survives scale: collect_list-and-slice holds whole
-    // groups in one buffer, and a per-source row_number window sorts each
-    // source in ONE task (the q53 funnel: sources are few and huge at
-    // 100 TB). Instead functions.MinKByKey — a k-bounded, exactly-
-    // mergeable typed Aggregator (the SpaceSavingTopK economics, but
-    // exact): partials carry ≤ k pairs per source per partition, the
-    // merge is associative, no sort, no window, no corpus shuffle beyond
-    // one row per (partition, source). Ranks fall out of the aggregator's
-    // sorted state (posexplode), matching the oracle's per-source
-    // row_number under the identical (md5, id) total order.
+    // (the balanced-eval-set builder; q156 is the global form): the
+    // oracle's own per-source row_number over the (md5, id) total order.
+    // Spark limits the window per source before the exchange (a
+    // WindowGroupLimit whose partial graft plans as per-source k-row
+    // heaps, q244), so a scan partition forwards ≤ k rows per source and
+    // no corpus-sized frame is shuffled or sorted.
     Q("q159_stratified_sample",
       """SELECT source, doc_id, h, rank FROM (
         |  SELECT source, doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
@@ -1710,17 +1705,13 @@ object TextOps {
         |           AS INT) AS rank
         |  FROM documents)
         |WHERE rank <= 5 ORDER BY source, rank""".stripMargin) { (s, d) =>
-      val mink = udaf(new graft.functions.MinKByKey(5),
-        org.apache.spark.sql.Encoders.product[(String, Long)])
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("source")).orderBy(col("h"), col("doc_id"))
       Tables.documents(s, d)
-        .select(col("source"),
-          md5(col("doc_id").cast("string").cast("binary")).as("h"),
-          col("doc_id"))
-        .groupBy(col("source"))
-        .agg(mink(col("h"), col("doc_id")).as("sample"))
-        .select(col("source"), posexplode(col("sample")).as(Seq("pos", "e")))
-        .select(col("source"), col("e._2").as("doc_id"), col("e._1").as("h"),
-          (col("pos") + 1).cast("int").as("rank"))
+        .select(col("source"), col("doc_id"),
+          md5(col("doc_id").cast("string").cast("binary")).as("h"))
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= 5)
         .orderBy("source", "rank")
     },
 

@@ -3,82 +3,59 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftSql, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Ascending, Attribute, Descending, Expression, RowOrdering, SortOrder,
-  UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+  Attribute, Expression, RowNumber, RowOrdering, SortOrder, UnsafeProjection,
+  UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, WindowGroupLimit}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.functions.{col, desc, row_number}
+import org.apache.spark.sql.execution.window.{Final, WindowGroupLimitExec}
 
-/** Map-side partial top-k-per-key — the missing "combiner" for grouped
-  * top-k, built as the full (c) tier of the extension ladder: a custom
-  * logical operator ([[PartialTopKPerKey]]), a planner strategy
-  * ([[TopKStrategy]]) and a physical operator ([[PartialTopKPerKeyExec]]),
-  * registered through `SparkSessionExtensions`
-  * ([[graft.GraftExtensions]]).
+/** Heap-planned grouped top-k. Since Spark 3.5, `InferWindowGroupLimit`
+  * rewrites `row_number() OVER (PARTITION BY keys ORDER BY …) <= k` into a
+  * logical `WindowGroupLimit`, which Spark plans as a Partial
+  * `WindowGroupLimitExec` before the exchange and a Final one after it.
+  * Spark's partial SORTS the whole partition to find the first k rows per
+  * key. This strategy plans the same logical node with the partial
+  * replaced by [[PartialTopKPerKeyExec]], which keeps a k-row heap per key
+  * and never sorts the partition; the Final limit, the exchange and the
+  * window above it are Spark's own. Either partial sends at most k rows
+  * per key seen in the partition to the exchange (past the heap budget,
+  * the overflow valve below passes rows through unpruned).
   *
-  * Why: the standard grouped-top-k plan —
-  * `row_number() OVER (PARTITION BY key ORDER BY …) <= k` — shuffles EVERY
-  * input row to its key's reducer and sorts there; the filter that throws
-  * away all but k rows per key runs entirely AFTER the exchange. Global
-  * top-k has `TakeOrderedAndProject` (per-partition prune, tiny shuffle);
-  * per-KEY top-k has no Spark counterpart. This operator is that
-  * counterpart: each scan partition keeps at most k rows per key in a
-  * bounded heap, so the exchange moves ≤ k·|keys seen in the partition|
-  * rows instead of the whole corpus — on a 100 TB fact table with a
-  * bounded key domain, the shuffle shrinks by orders of magnitude while
-  * the downstream window produces EXACTLY the same result (pruned rows
-  * can never be in the true per-key top k of their own partition, let
-  * alone globally).
+  * Only `RowNumber` is matched: `rank`/`dense_rank` `<= k` can need more
+  * than k rows per key at a tie, so they stay on Spark's partial. A session
+  * without the strategy gets Spark's plan, with the same answer.
   *
-  * Memory safety: per-partition state is one k-row heap per DISTINCT KEY
-  * SEEN IN THAT PARTITION, capped at `maxKeys` heaps. Past the cap, rows
-  * of NEW keys stream through unpruned AND unbuffered — the overflow
-  * valve emits each over-cap row the moment it arrives, so extra memory
-  * past the heap budget is O(1) even when a partition is dominated by
-  * over-cap keys. Pruning is only ever an optimization, so the valve
-  * degrades throughput, never correctness (TopKPerKeySpec pins both
-  * properties).
-  *
-  * ORDER CONTRACT: `order` must be a TOTAL order over rows within a key
-  * (in practice: include a unique tie-break column, e.g. a primary key,
-  * as the last sort term). With a non-total order, rows tied at the heap
-  * boundary are pruned arbitrarily per partition, while the downstream
-  * rank window breaks the same ties by encounter order — so WHICH tied
-  * row survives is nondeterministic across runs/partitionings (the
-  * surviving MULTISET of order-values is still exact). TopKPerKeySpec
-  * ("non-total order") demonstrates the documented behavior.
+  * ORDER CONTRACT (Spark's partial has the same one): with an order that is
+  * not total within a key, WHICH of the rows tied at the k boundary
+  * survives depends on the partitioning; the multiset of order values is
+  * still exact. TopKPerKeySpec ("non-total order") pins that.
   */
-case class PartialTopKPerKey(
-    keyExprs: Seq[Expression],
-    order: Seq[SortOrder],
-    k: Int,
-    maxKeys: Int,
-    child: LogicalPlan) extends UnaryNode {
-  require(k > 0 && maxKeys > 0)
-  override def output: Seq[Attribute] = child.output
-  override def maxRows: Option[Long] = child.maxRows
-  override protected def withNewChildInternal(c: LogicalPlan): LogicalPlan =
-    copy(child = c)
-}
-
-/** Plans [[PartialTopKPerKey]] as [[PartialTopKPerKeyExec]]. */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case PartialTopKPerKey(keys, order, k, maxKeys, child) =>
-      PartialTopKPerKeyExec(keys, order, k, maxKeys, planLater(child)) :: Nil
+    case WindowGroupLimit(keys, order, rn: RowNumber, k, child)
+        if keys.nonEmpty =>
+      WindowGroupLimitExec(keys, order, rn, k, Final,
+        PartialTopKPerKeyExec(keys, order, k, PartialTopKPerKeyExec.MaxKeys,
+          planLater(child))) :: Nil
     case _ => Nil
   }
 }
 
+/** Per-partition state is one k-row heap per DISTINCT KEY SEEN IN THE
+  * PARTITION, capped at `maxKeys` heaps. Past the cap, rows of NEW keys
+  * stream through unpruned AND unbuffered: the overflow valve emits each
+  * over-cap row the moment it arrives, so memory past the heap budget is
+  * O(1). Pruning is only ever an optimization, so the valve costs
+  * throughput, never correctness (TopKPerKeySpec pins both). */
 case class PartialTopKPerKeyExec(
     keyExprs: Seq[Expression],
     order: Seq[SortOrder],
     k: Int,
     maxKeys: Int,
     child: SparkPlan) extends UnaryExecNode {
+  require(k > 0 && maxKeys > 0)
 
   override def output: Seq[Attribute] = child.output
   override def outputPartitioning = child.outputPartitioning
@@ -153,46 +130,7 @@ case class PartialTopKPerKeyExec(
     copy(child = c)
 }
 
-/** Public Column-API surface over the operator. */
-object TopKPerKey {
-
-  /** Insert the map-side prune below whatever consumes `df`. `orderBy`
-    * follows the (column, ascending?) convention. Registers the planner
-    * strategy on the live session (idempotent), so the node always plans. */
-  def pruned(df: DataFrame, keys: Seq[String],
-      orderBy: Seq[(String, Boolean)], k: Int,
-      maxKeys: Int = 1 << 20): DataFrame = {
-    val spark = df.sparkSession
-    register(spark)
-    val plan = GraftSql.analyzedPlan(df)
-    val resolve: String => Expression = name =>
-      plan.output.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(
-          s"column $name not in ${plan.output.map(_.name)}"))
-    val sortOrder = orderBy.map { case (name, asc) =>
-      SortOrder(resolve(name), if (asc) Ascending else Descending)
-    }
-    GraftSql.ofRows(spark,
-      PartialTopKPerKey(keys.map(resolve), sortOrder, k, maxKeys, plan))
-  }
-
-  /** Exact grouped top-k: map-side prune, then the standard rank window
-    * over the (drastically smaller) survivor set. Output = input columns
-    * plus `rn` (1-based rank within key). */
-  def topK(df: DataFrame, keys: Seq[String],
-      orderBy: Seq[(String, Boolean)], k: Int): DataFrame = {
-    val surv = pruned(df, keys, orderBy, k)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(orderBy.map { case (n, asc) =>
-        if (asc) col(n).asc else desc(n) }: _*)
-    surv.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-  }
-
-  /** Install [[TopKStrategy]] on a live session (idempotent); the
-    * spark.sql.extensions path goes through [[graft.GraftExtensions]]. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+object PartialTopKPerKeyExec {
+  /** Heap budget per partition: 2²⁰ keys × k rows. */
+  val MaxKeys: Int = 1 << 20
 }

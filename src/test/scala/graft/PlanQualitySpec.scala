@@ -7,6 +7,12 @@ package graft
   * and still make the plan 100× more expensive at scale. */
 class PlanQualitySpec extends SparkSpec {
 
+  /** Queries whose construction runs a full workload (model fits, a whole
+    * streaming run): the registry sweeps skip them for test minutes. */
+  private val heavyEager = Set("q40_rf_regression", "q41_kmeans_embeddings",
+    "q76_stream_sessions", "q106_stream_dedup",
+    "q127_tws_sessions", "q128_walmart_dag")
+
   private def planOf(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf0001)
     df.queryExecution.executedPlan.toString
@@ -113,9 +119,6 @@ class PlanQualitySpec extends SparkSpec {
     // test minutes cheap — their final frames are single-row aggregate
     // crossJoins (broadcast BNLJ by construction) and their semantics are
     // pinned by RowsOnlySpec/SimilaritySpec/EventsSpec.
-    val heavyEager = Set("q40_rf_regression", "q41_kmeans_embeddings",
-      "q76_stream_sessions", "q106_stream_dedup",
-      "q127_tws_sessions", "q128_walmart_dag")
     val offenders = SparkEntry.registry
       .filterNot(q => heavyEager(q.name)).flatMap { q =>
         val plan = q.fn(spark, sf0001).queryExecution.executedPlan.toString
@@ -240,17 +243,15 @@ class PlanQualitySpec extends SparkSpec {
       s"a deterministic top-k-by-hash must not shuffle the corpus:\n$p")
   }
 
-  test("q159: stratified sample partial-aggregates; no per-source window sort") {
+  test("q159: the stratified sample is heap-pruned per source before the exchange") {
+    GraftExtensions.register(spark)
     val p = planOf("q159_stratified_sample")
-    // the k-bounded typed Aggregator must run as a partial object-hash
-    // aggregate — per-(partition, source) state of ≤ k pairs — never a
-    // per-source row_number window (ONE task per source at any corpus
-    // size) and never a whole-group collect_list buffer
-    assert(p.contains("ObjectHashAggregate"),
-      s"typed min-k aggregator not planned as object hash aggregate:\n$p")
-    assert(p.contains("partial"), s"no map-side partial aggregation:\n$p")
-    assert(!p.contains("Window"),
-      s"stratified sampling fell back to a window sort:\n$p")
+    // the per-source row_number window is heap-pruned map-side: no
+    // corpus-sized frame is shuffled or sorted, and no whole-group
+    // collect_list buffer is built
+    assert(p.contains("PartialTopKPerKey"),
+      s"stratified sample lost its per-source heaps:\n$p")
+    assert(!p.contains("collect_list"), p)
   }
 
   test("q83: latest-by-key compacts as a partial aggregate, not a window sort") {
@@ -489,9 +490,6 @@ class PlanQualitySpec extends SparkSpec {
     // model fits / full streaming runs are excluded for test-minute cost,
     // exactly like the cartesian sweep above; their windows run on frames
     // pinned by their own specs
-    val heavyEager = Set("q40_rf_regression", "q41_kmeans_embeddings",
-      "q76_stream_sessions", "q106_stream_dedup",
-      "q127_tws_sessions", "q128_walmart_dag")
     var seen = 0
     val offenders = SparkEntry.registry
       .filterNot(q => heavyEager(q.name)).flatMap { q =>
@@ -508,6 +506,44 @@ class PlanQualitySpec extends SparkSpec {
     // spines, top-k lists) — zero sightings would mean the sweep stopped
     // looking (e.g. an API change hid WindowExec), not that the repo is clean
     assert(seen > 0, "sweep saw no global WindowExec at all — detector broken?")
+  }
+
+  test("every grouped row_number top-k plans the heap partial, not Spark's sort") {
+    // Spark infers a WindowGroupLimit from `row_number() OVER (PARTITION
+    // BY …) <= k`; with the graft strategy registered, its partial must be
+    // graft.plans.PartialTopKPerKeyExec under Spark's Final limit — the one
+    // grouped top-k mechanism of the engine
+    import org.apache.spark.sql.catalyst.expressions.RowNumber
+    import org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit
+    import org.apache.spark.sql.execution.window.{Final, Partial, WindowGroupLimitExec}
+    import graft.plans.PartialTopKPerKeyExec
+    GraftExtensions.register(spark)
+    def grouped(f: org.apache.spark.sql.catalyst.expressions.Expression,
+        keys: Seq[_]) = f.isInstanceOf[RowNumber] && keys.nonEmpty
+    val topK = SparkEntry.registry.filterNot(q => heavyEager(q.name))
+      .flatMap { q =>
+        val qe = q.fn(spark, sf0001).queryExecution
+        val logical = qe.optimizedPlan.collect {
+          case l: WindowGroupLimit if grouped(l.rankLikeFunction,
+            l.partitionSpec) => l
+        }
+        if (logical.isEmpty) None else Some(q.name -> qe.sparkPlan)
+      }
+    val offenders = topK.collect { case (name, plan) if {
+        val limits = plan.collect {
+          case w: WindowGroupLimitExec if grouped(w.rankLikeFunction,
+            w.partitionSpec) => w
+        }
+        limits.exists(_.mode == Partial) || !limits.exists(w =>
+          w.mode == Final && w.child.isInstanceOf[PartialTopKPerKeyExec])
+      } => name
+    }
+    assert(offenders.isEmpty,
+      s"grouped top-k without the heap partial in: ${offenders.mkString(", ")}")
+    // vacuity guard: q09 q33 q48 q85 q91 q101 q143 q157 q158 q159 q221
+    // q244 q271 q281 q297 q320 q321 q322 are grouped top-ks today
+    assert(topK.size >= 18,
+      s"only ${topK.size} grouped top-k queries seen: ${topK.map(_._1)}")
   }
 
   test("text queries never plan Spark's Lower/Upper/InitCap (no cold ICU title-case table)") {
