@@ -708,8 +708,7 @@ object Advanced {
       def digest(df: org.apache.spark.sql.DataFrame) =
         df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
           .agg(expr("bit_xor(h)").as("digest"), count(lit(1)).as("n"))
-      // ckpt(a): q122 base digest + comparisons; slower lazy at sf0.1
-      val base = digest(li).eagerCkpt
+      val base = digest(li)
       val scrambled = digest(li.repartition(7, col("l_partkey"))
         .sortWithinPartitions(col("l_extendedprice")))
       // perturb the rows of the MIN (orderkey, linenumber) pair (one tiny
@@ -847,7 +846,7 @@ object Advanced {
       // aggregate and the hot-key threshold scan
       val per = side("view", "cnt_v").join(side("purchase", "cnt_p"), "user_id")
         .select(col("user_id"), (col("cnt_v") * col("cnt_p")).as("est"))
-        // ckpt(a): q131 totals + hot-key scan; slower lazy at sf0.1
+        // ckpt(a): q131 totals + hot-key scan; lazy 1.3× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val totals = per.agg(
         count(lit(1)).as("n_keys"),
@@ -1000,8 +999,6 @@ object Advanced {
       val per = e.groupBy(col("event_type").as("scope"))
         .agg(countDistinct(col("user_id")).as("n_exact"),
           hll_sketch_agg(col("user_id")).as("sk"))
-        // ckpt(a): per-type rows + union; lazy plan rescans events
-        .eagerCkpt
       val perOut = per.select(col("scope"), col("n_exact"),
         (abs(hll_sketch_estimate(col("sk")).cast("double") - col("n_exact"))
           <= lit(0.02) * col("n_exact")).as("est_ok"))
@@ -1077,8 +1074,6 @@ object Advanced {
       // per-day sketches + per-day exact sets reduced ONCE
       val perDay = days.groupBy(col("d"))
         .agg(hll_sketch_agg(col("user_id")).as("sk"))
-        // ckpt(a): window merge + exact sets; lazy plan rescans events
-        .eagerCkpt
       val windows = perDay.select(col("d").as("win_day"))
       val merged = windows
         .join(broadcast(perDay),
@@ -1331,8 +1326,6 @@ object Advanced {
       val ev = Tables.events(s, d)
       def side(t: String, cn: String) = ev.filter(col("event_type") === t)
         .groupBy(col("user_id")).agg(count(lit(1)).as(cn))
-        // ckpt(a): both sides + the bounds; lazy plan rescans events
-        .eagerCkpt
       val v = side("view", "cv")
       val p = side("purchase", "cp")
       val b = v.agg(min(col("user_id")).as("vmn"), max(col("user_id")).as("vmx"))

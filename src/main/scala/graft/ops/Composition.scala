@@ -229,12 +229,12 @@ object Composition {
       val s2 = s1.filter(col("n_chars").between(100, 500))
         .select(col("doc_id"), col("source"), col("n_chars"),
           md5(col("text").cast("binary")).as("h"))
-        // ckpt(a): q200 dedup + funnel; slower lazy at sf0.1
+        // ckpt(a): q200 dedup + funnel; lazy 1.3× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val keep = s2.groupBy(col("h")).agg(min(col("doc_id")).as("keep"))
       val s3 = s2.join(keep, "h").filter(col("doc_id") === col("keep"))
         .select(col("doc_id"), col("source"), col("n_chars"))
-        // ckpt(a): q200 mix rates, filter + funnel; slower lazy at sf0.1
+        // ckpt(a): q200 mix rates, filter + funnel; lazy 1.3× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val counts = s3.groupBy(col("source")).agg(count(lit(1)).as("n_s"))
       val tot = counts.agg(sum(col("n_s")).cast("long").as("n_all"),

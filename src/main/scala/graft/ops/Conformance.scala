@@ -3,7 +3,6 @@ package graft.ops
 import graft.{Q, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Ckpt._
 
 /** Row type for the q207 typed-Dataset path (top-level so the product
   * encoder derives statically). */
@@ -55,8 +54,6 @@ object Conformance {
       val f = Tables.lineitem(s, d)
         .select(col("l_returnflag").as("g"),
           nullif(col("l_quantity").cast("long"), lit(50L)).as("q"))
-        // ckpt(a): aggregate battery + group census; lazy plan rescans lineitem
-        .eagerCkpt
       val a = f.groupBy(col("g")).agg(
         count(lit(1)).as("n_rows"),
         (count(lit(1)) - count(col("q"))).cast("long").as("n_null"),
@@ -513,8 +510,6 @@ object Conformance {
         |            END AS BIGINT) AS first_missing
         |FROM b, r""".stripMargin) { (s, d) =>
       val k = Tables.orders(s, d).select(col("o_orderkey").as("key"))
-        // ckpt(a): bounds + both self-join sides; lazy plan rescans orders
-        .eagerCkpt
       val b = k.agg(min(col("key")).as("mn"), max(col("key")).as("mx"),
         count(lit(1)).cast("long").as("n"))
       // keys with an absent successor: the max key always qualifies, so

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -34,14 +34,7 @@ import graft.{Q, Tables}
   */
 object Curation {
 
-  /** BIGINT → DECIMAL(19,0) (overflow-rule promotion; products land in
-    * DECIMAL(38,0) exactly). */
-  private def dec(x: Column): Column = x.cast("decimal(19,0)")
-
-  /** Exact floor division on nonnegative DECIMAL operands (Spark decimal
-    * `/` rounds; the pmod spelling floors, matching DuckDB `//`). */
-  private def fdiv(x: Column, y: Column): Column =
-    ((x - pmod(x, y)) / y).cast("long")
+  import Ranks.{dec, intDiv}
 
   val queries: Seq[Q] = Seq(
 
@@ -214,7 +207,7 @@ object Curation {
           size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
         .groupBy(col("source"), col("lang")).agg(sum(col("ntok")).as("avail"))
       val g = av.agg(count(lit(1)).as("m"),
-        Ranks.intDiv(sum(col("avail")) * 3, lit(2)).as("target"))
+        intDiv(sum(col("avail")) * 3, lit(2)).as("target"))
       val w = Window.orderBy(col("avail"), col("source"), col("lang"))
       val o = av
         .withColumn("cap", col("avail") * 4)
@@ -223,7 +216,7 @@ object Curation {
           sum(col("cap")).over(w.rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)))
         .crossJoin(broadcast(g))
-      val li = Ranks.intDiv(greatest(lit(0L), col("target") - col("pre")),
+      val li = intDiv(greatest(lit(0L), col("target") - col("pre")),
         col("m") - col("i") + 1)
       val lvl = o.withColumn("li", li)
         .filter(col("li") < col("cap") || col("i") === col("m"))
@@ -232,7 +225,7 @@ object Curation {
       o.crossJoin(broadcast(lvl))
         .select(col("source"), col("lang"), col("avail").as("avail_tok"),
           least(col("cap"), col("level")).cast("long").as("alloc_tok"),
-          fdiv(dec(least(col("cap"), col("level"))) * 1000000L,
+          intDiv(dec(least(col("cap"), col("level"))) * 1000000L,
             col("avail")).as("epochs_micro"),
           (col("cap") <= col("level")).as("capped"))
         .orderBy(col("source"), col("lang"))
@@ -269,7 +262,7 @@ object Curation {
       val t = Tables.documents(s, d)
         .select(col("source"), size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
       val b = t.groupBy(col("source"),
-          (Ranks.intDiv(col("ntok"), lit(16L)) * 16).as("bucket_lo"))
+          (intDiv(col("ntok"), lit(16L)) * 16).as("bucket_lo"))
         .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("tok_sum"))
       val tot = b.groupBy(col("source"))
         .agg(sum(col("n_docs")).as("nd"), sum(col("tok_sum")).as("nt"))
@@ -277,9 +270,9 @@ object Curation {
         .select(col("source"), col("bucket_lo").cast("long").as("bucket_lo"),
           col("n_docs").cast("long").as("n_docs"),
           col("tok_sum").cast("long").as("tok_sum"),
-          fdiv(dec(col("n_docs")) * 1000000L, col("nd"))
+          intDiv(dec(col("n_docs")) * 1000000L, col("nd"))
             .as("doc_share_micro"),
-          fdiv(dec(col("tok_sum")) * 1000000L, col("nt"))
+          intDiv(dec(col("tok_sum")) * 1000000L, col("nt"))
             .as("tok_share_micro"))
         .orderBy(col("source"), col("bucket_lo"))
     }

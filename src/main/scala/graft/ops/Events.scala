@@ -371,7 +371,7 @@ object Events {
       val keys = Seq("user_id", "session_start", "n_events")
       // the SAME aggregate q25 verifies against DuckDB — a shared def, so
       // the parity baseline cannot drift from the oracle-checked query
-      // ckpt(a): count + both anti-joins; lazy plan rescans events
+      // ckpt(a): q76 count + both anti-joins; lazy 1.4× at sf0.1 (BENCH_NOTES)
       val batch = sessionAgg(Tables.events(s, d)).eagerCkpt
       val stream = graft.streaming.EventStreams.runToMemory(s,
         graft.streaming.EventStreams.sessions(
@@ -379,7 +379,7 @@ object Events {
         shufflePartitions = Some(8))
         .select(col("user_id"), col("session_start"), col("n_events"),
           col("total_value").as("stream_value"))
-        // ckpt(a): q76 count + both anti-joins; slower lazy at sf0.1
+        // ckpt(a): q76 count + both anti-joins; lazy 1.4× at sf0.1 (BENCH_NOTES)
         .eagerCkpt
       batch.agg(count(lit(1)).as("n_sessions"))
         .crossJoin(stream.join(batch, keys, "left_anti")
@@ -599,8 +599,8 @@ object Events {
     },
 
     // transformWithState sessionizer (Spark 4's arbitrary-state v2 API, the
-    // third streaming path next to session_window/q76 and
-    // flatMapGroupsWithState) run driver-checked end to end: RocksDB-backed
+    // second streaming path next to session_window/q76) run
+    // driver-checked end to end: RocksDB-backed
     // state store (the API requires it), per-key ValueState + event-time
     // timers, append mode. Append-mode emission on a bounded replay is
     // sessions closed by a later event PLUS tails whose timer passed the
@@ -635,12 +635,12 @@ object Events {
       val stream = emitted
         .select(col("user_id"), col("session_start"), col("n_events"),
           col("total_value").as("stream_value"))
-        // ckpt(a): q127 three anti-join checks; slower lazy at sf0.1
+        // ckpt(a): q127 three anti-join checks; lazy 1.8× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val keys = Seq("user_id", "session_start", "n_events")
       val ev = Tables.events(s, d)
       val all = StatefulSessions.batchReference(s, ev, includeOpen = true)
-        // ckpt(a): q127 count + anti-joins; slower lazy at sf0.1
+        // ckpt(a): q127 count + anti-joins; lazy 1.8× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val closed = StatefulSessions.batchReference(s, ev, includeOpen = false)
       all.agg(count(lit(1)).as("n_sessions"))
@@ -699,7 +699,7 @@ object Events {
           col("event_type") === "purchase")
         .select(col("user_id"), col("event_id"),
           col("ts").cast("timestamp_ntz").as("ts"))
-        // ckpt(a): the result + the checksum; lazy plan rescans events
+        // ckpt(a): q145 the result + the checksum; lazy 1.3× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val chkCols = Seq(col("user_id"), col("event_id"),
         unix_micros(col("ts").cast("timestamp")))
@@ -766,7 +766,7 @@ object Events {
         .select(col("user_id"), col("event_id"),
           col("ts").cast("timestamp_ntz").as("ts"),
           col("n_views"), col("n_clicks"))
-        // ckpt(a): the result + the checksum; lazy plan rescans events
+        // ckpt(a): q146 the result + the checksum; lazy 1.5× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val chkCols = Seq(col("user_id"), col("event_id"),
         unix_micros(col("ts").cast("timestamp")),
@@ -1222,8 +1222,6 @@ object Events {
         |ORDER BY 1, 2""".stripMargin) { (s, d) =>
       val ut = Tables.events(s, d)
         .select(col("user_id"), col("event_type")).distinct()
-        // ckpt(a): both pair sides + audience sizes; lazy plan rescans events
-        .eagerCkpt
       val n = ut.groupBy(col("event_type"))
         .agg(count(lit(1)).cast("long").as("na"))
       val pairs = ut.toDF("user_id", "type_a")
@@ -1341,16 +1339,12 @@ object Events {
         .groupBy(col("user_id")).agg(max(col("op")).as("last"))
         .filter(col("last.del") === 1)
         .select(col("user_id"))
-        // ckpt(a): three cascade hops; lazy plan rescans events
-        .eagerCkpt
       val evRows = Tables.events(s, d)
         .join(erased, Seq("user_id"), "left_semi")
         .agg(count(lit(1)).cast("long").as("ev_rows"))
       val ords = Tables.orders(s, d)
         .join(erased.withColumnRenamed("user_id", "o_custkey"),
           Seq("o_custkey"), "left_semi")
-        // ckpt(a): the count + the lineitem join; lazy plan rescans orders
-        .eagerCkpt
       val ordRows = ords.agg(count(lit(1)).cast("long").as("ord_rows"))
       val liRows = Tables.lineitem(s, d)
         .join(ords.select(col("o_orderkey").as("l_orderkey")),
@@ -1967,8 +1961,6 @@ object Events {
           .as("v"),
           sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
             .as("p"))
-        // ckpt(a): both band-join sides; lazy plan rescans events
-        .eagerCkpt
       val b = days.select(col("day").as("bday"), col("v"), col("p"))
       val w = days.select(col("day").as("day"))
         .join(broadcast(b),
@@ -2083,8 +2075,6 @@ object Events {
         .select(col("user_id"), col("event_id"),
           col("ts").cast("timestamp").cast("long").as("sec"),
           round(col("value") * 100, 0).cast("long").as("cents"))
-        // ckpt(a): both self-join sides; lazy plan rescans events
-        .eagerCkpt
       val a = p.toDF("user_id", "id_a", "sec_a", "cents")
       val b = p.toDF("user_id", "id_b", "sec_b", "cents")
       a.join(b, Seq("user_id", "cents"))
@@ -2191,8 +2181,6 @@ object Events {
         .agg(max(col("ts").cast("date")).as("mxd"))
       val f = Tables.events(s, d).groupBy(col("user_id"))
         .agg(min(col("ts").cast("date")).as("fd"))
-        // ckpt(a): base + active; lazy plan rescans events
-        .eagerCkpt
       val act = Tables.events(s, d)
         .select(col("user_id"), col("ts").cast("date").as("day")).distinct()
       val ks = s.range(1, 9).select(col("id").cast("int").as("k"))
@@ -2211,8 +2199,6 @@ object Events {
           coalesce(col("n_active"), lit(0L)).as("n_active"))
         .withColumn("rr",
           col("n_active") / col("n_base").cast("double"))
-        // ckpt(a): fit + output rows; lazy plan rescans events
-        .eagerCkpt
       val fit = r.filter(col("n_active") > 0)
         .agg(count(lit(1)).as("n"), sum(col("k")).as("sk"),
           sum(log(col("rr"))).as("sy"),

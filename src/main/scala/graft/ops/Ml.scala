@@ -168,12 +168,13 @@ object Ml {
           val rf = reloaded.stages.last
             .asInstanceOf[org.apache.spark.ml.regression.RandomForestRegressionModel]
           val metaOk = rf.getNumTrees == 8 && rf.numFeatures == 5
-          li.agg(count(lit(1)).as("n_total"))
-            .select(col("n_total"), lit(8).as("n_trees"),
-              lit(5).as("n_features"),
-              lit(parityOk).as("reload_parity_ok"),
-              lit(metaOk).as("metadata_ok"))
-            .localCheckpoint() // eager: materialize before the caches drop
+          // read the one row while li is still cached: the harness
+          // executes the returned frame after the finally drops the cache
+          val nTotal = li.agg(count(lit(1))).head().getLong(0)
+          s.range(1).select(lit(nTotal).as("n_total"), lit(8).as("n_trees"),
+            lit(5).as("n_features"),
+            lit(parityOk).as("reload_parity_ok"),
+            lit(metaOk).as("metadata_ok"))
         } finally {
           import scala.reflect.io.Directory
           new Directory(dir.toFile).deleteRecursively()
@@ -344,16 +345,14 @@ object Ml {
         val sse = st.getAs[org.apache.spark.ml.linalg.Vector](0)
           .toArray.sum * (n - 1)
         val cost = model.summary.trainingCost
-        model.transform(vecs)
-          .agg(countDistinct(col("prediction")).as("n_clusters"),
-            count(lit(1)).as("n_vectors"))
-          .select(
-            col("n_vectors"),
-            col("n_clusters"),
-            (col("n_vectors") === n).as("partition_ok"),
-            lit(cost > 0 && cost < sse).as("inertia_ok"))
-          // eager 1-row materialization before the finally drops the cache
-          .localCheckpoint()
+        // read the one row before the finally drops the cache
+        val r = model.transform(vecs)
+          .agg(countDistinct(col("prediction")), count(lit(1))).head()
+        s.range(1).select(
+          lit(r.getLong(1)).as("n_vectors"),
+          lit(r.getLong(0)).as("n_clusters"),
+          lit(r.getLong(1) == n).as("partition_ok"),
+          lit(cost > 0 && cost < sse).as("inertia_ok"))
       } finally vecs.unpersist(blocking = false)
     },
 
@@ -400,19 +399,19 @@ object Ml {
           ev.sum <= 1.0 + 1e-9
         // one pass over the projected corpus: row count + the min/max
         // projected dimensionality (every vector must carry exactly k)
-        model.transform(vecs)
+        // read the one row while vecs is still cached: the harness
+        // executes the returned frame after the finally drops the cache
+        val r = model.transform(vecs)
           .select(size(org.apache.spark.ml.functions.vector_to_array(col("pc")))
             .as("sz"))
-          .agg(count(lit(1)).cast("long").as("n_vectors"),
-            min(col("sz")).as("min_sz"), max(col("sz")).as("max_sz"))
-          .select(col("n_vectors"), lit(k).as("k"),
-            lit(orthonormal).as("orthonormal_ok"),
-            lit(varianceOk).as("variance_ok"),
-            (col("min_sz") === k && col("max_sz") === k).as("projection_ok"))
-          // eager: materialize the 1-row aggregate while vecs is still
-          // cached — the harness executes the returned frame after the
-          // finally below has dropped the cache
-          .localCheckpoint()
+          .agg(count(lit(1)), min(col("sz")), max(col("sz"))).head()
+        // no vectors: min/max are NULL, and so is projection_ok
+        val projectionOk =
+          if (r.isNullAt(1)) null else r.getInt(1) == k && r.getInt(2) == k
+        s.range(1).select(lit(r.getLong(0)).as("n_vectors"), lit(k).as("k"),
+          lit(orthonormal).as("orthonormal_ok"),
+          lit(varianceOk).as("variance_ok"),
+          lit(projectionOk).cast("boolean").as("projection_ok"))
       } finally vecs.unpersist(blocking = false)
     },
 
@@ -502,15 +501,16 @@ object Ml {
               .vector_to_array(col("q")), 2).as("q50"),
             element_at(org.apache.spark.ml.functions
               .vector_to_array(col("q")), 3).as("q75"))
-        scored.agg(count(lit(1)).cast("long").as("n_subjects"),
-            sum(col("censor")).cast("long").as("n_events"),
-            min(col("prediction")).as("min_pred"),
-            max(when(col("q25") > col("q50") || col("q50") > col("q75"),
-              1).otherwise(0)).as("bad_q"))
-          .select(col("n_subjects"), col("n_events"),
-            lit(model.scale > 0 && !model.scale.isNaN).as("scale_ok"),
-            (col("min_pred") > 0 && col("bad_q") === 0).as("quantiles_ok"))
-          .localCheckpoint() // materialize before the cache drops
+        // read the one row before the finally drops the cache
+        val r = scored.agg(count(lit(1)).cast("long"),
+            sum(col("censor")).cast("long"),
+            (min(col("prediction")) > 0 && max(when(
+              col("q25") > col("q50") || col("q50") > col("q75"), 1)
+              .otherwise(0)) === 0)).head()
+        s.range(1).select(lit(r.getLong(0)).as("n_subjects"),
+          lit(r.get(1)).cast("long").as("n_events"),
+          lit(model.scale > 0 && !model.scale.isNaN).as("scale_ok"),
+          lit(r.get(2)).cast("boolean").as("quantiles_ok"))
       } finally assembled.unpersist(blocking = false)
     },
 

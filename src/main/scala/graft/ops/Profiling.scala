@@ -768,12 +768,12 @@ object Profiling {
     * the wedge apex — each triangle exactly once. */
   private def triangleParts(edgeList: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    // ckpt(a): q144/q160 degrees, orientation + edge count; slower lazy at sf0.1
+    // ckpt(a): q144/q160 degrees, orientation + edge count; lazy 2.2× at sf0.1 (BENCH_NOTES)
     val edges = edgeList.eagerCkpt
     val deg = edges.select(col("a").as("v"))
       .unionByName(edges.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
-      // ckpt(a): q144/q160 both orientation joins; slower lazy at sf0.1
+      // ckpt(a): q144/q160 both orientation joins; lazy 2.2× at sf0.1 (BENCH_NOTES)
       .eagerCkpt
     // orient every edge from its lower-(degree, id) endpoint: wedges
     // form only at low-degree vertices, bounding fan-out by arboricity
@@ -786,7 +786,7 @@ object Profiling {
         when(aLow, col("a")).otherwise(col("b")).as("u"),
         when(aLow, col("b")).otherwise(col("a")).as("w"),
         when(aLow, col("db")).otherwise(col("da")).as("dw"))
-      // ckpt(a): q144/q160 both wedge sides + closing join; slower lazy at sf0.1
+      // ckpt(a): q144/q160 both wedge sides + closing join; lazy 2.2× at sf0.1 (BENCH_NOTES)
       .eagerCkpt
     // wedge at u between its out-neighbors x < y in (degree, id) order;
     // the connecting edge, if present, is stored oriented (x, y)
@@ -798,7 +798,7 @@ object Profiling {
     val tris = wedges.join(
         oriented.select(col("u").as("x"), col("w").as("y")), Seq("x", "y"))
       .select(col("u"), col("x"), col("y"))
-      // ckpt(a): q144/q160 triangle stats; slower lazy at sf0.1
+      // ckpt(a): q144/q160 triangle stats; lazy 2.2× at sf0.1 (BENCH_NOTES)
       .eagerCkpt
     (edges, deg, tris)
   }

@@ -28,6 +28,11 @@ object Ranks {
   def intDiv(a: Column, b: Column): Column =
     call_function("div", a - pmod(a, b), b)
 
+  /** BIGINT → DECIMAL(19,0): the promotion step of the repo overflow rule
+    * (BENCH_NOTES audit table) — a product of two of these lands in
+    * DECIMAL(38,0) exactly, and [[intDiv]] floors it to a long. */
+  def dec(x: Column): Column = x.cast("decimal(19,0)")
+
   /** `ntile(buckets)` of 1-based rank `r` among `n` rows — the SQL-standard
     * split (first n mod buckets buckets get one extra row): with
     * q = n div buckets and rem = n mod buckets,

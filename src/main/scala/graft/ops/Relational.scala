@@ -366,7 +366,7 @@ object Relational {
         |             round(quantile_cont(l_extendedprice, 0.75), 4) AS q3
         |      FROM lineitem)""".stripMargin) { (s, d) =>
       // sort-based exact quantiles (see Eda.exactQuantiles: the built-in
-      // exact percentile agg is GC-bound on high-cardinality doubles)
+      // exact percentile agg is 2-3x slower at sf0.1)
       val Seq(q1, med, q3) = graft.pipeline.Eda.exactQuantiles(
         Tables.lineitem(s, d), "l_extendedprice", Seq(0.25, 0.50, 0.75))
       s.range(1)

@@ -65,8 +65,7 @@ object Retail {
         |ORDER BY n_ab DESC, part_a, part_b""".stripMargin) { (s, d) =>
       val b = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        // ckpt(a): basket count, item counts + pair join; lazy plan rescans lineitem
-        .distinct().eagerCkpt
+        .distinct()
       val n = b.agg(countDistinct(col("ok")).as("n_baskets"))
       val ic = b.groupBy(col("pk")).agg(count(lit(1)).as("n_item"))
       val pc = b.toDF("ok", "part_a")
@@ -162,8 +161,6 @@ object Retail {
         .agg(count(lit(1)).as("n_orders"),
           sum(round(col("o_totalprice") * 100, 0).cast("long"))
             .cast("long").as("rev_cents"))
-        // ckpt(a): the total + month rows; lazy plan rescans orders
-        .eagerCkpt
       val t = m.agg(sum(col("rev_cents")).cast("long").as("total"))
       m.crossJoin(broadcast(t))
         .select(col("month"), col("n_orders"), col("rev_cents"),
@@ -203,8 +200,6 @@ object Retail {
           month(col("o_orderdate")).cast("int").as("mo"))
         .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
           .cast("long").as("rev"))
-        // ckpt(a): both join sides; lazy plan rescans orders
-        .eagerCkpt
       m.select(col("y"), col("mo"), col("rev").as("actual"))
         .join(broadcast(m.select((col("y") + 1).as("y"), col("mo"),
           col("rev").as("forecast"))), Seq("y", "mo"))
@@ -358,8 +353,6 @@ object Retail {
         .groupBy(col("n_regionkey").as("rk"), col("c_nationkey").as("nk"))
         .agg(sum(round(col("o_totalprice"), 0).cast("long")).cast("long")
           .as("hist"))
-        // ckpt(a): q178 every allocation level; slower lazy at sf0.1
-        .eagerCkpt
       val rt = nt.groupBy(col("rk"))
         .agg(sum(col("hist")).cast("long").as("rtot"),
           expr("CAST((sum(hist) * 107) div 100 AS BIGINT)").as("fcast"))
@@ -412,8 +405,6 @@ object Retail {
         .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
           .cast("long").as("ext"),
           sum(col("l_quantity").cast("long")).cast("long").as("qty"))
-        // ckpt(a): both sides of the base join; lazy plan rescans lineitem
-        .eagerCkpt
       val b = pm.filter(col("mo") === 1)
         .select(col("pk"), col("ext").as("ext0"), col("qty").as("qty0"))
       pm.join(b, "pk")
@@ -783,7 +774,7 @@ object Retail {
           month(col("o_orderdate")).cast("int").as("mo"))
         .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
           .cast("long").as("rev"))
-        // ckpt(a): both join sides; lazy plan rescans orders
+        // ckpt(a): q235 both join sides; lazy 1.2× at sf0.1 (BENCH_NOTES)
         .eagerCkpt
       val p = m.select(col("y").as("py"), col("mo").as("pmo"),
         col("rev").as("prev_rev_cents"))
@@ -834,8 +825,6 @@ object Retail {
           .otherwise(0L)).cast("long").as("rev97"),
           sum(when(year(col("l_shipdate")) === 1998, cents)
             .otherwise(0L)).cast("long").as("rev98"))
-        // ckpt(a): median + classification; lazy plan rescans lineitem
-        .eagerCkpt
       val m = b.agg(expr("percentile(rev98, 0.5)").as("med"))
       b.join(broadcast(m), lit(true))
         .select(col("brand"), col("rev97").as("rev97_cents"),
@@ -919,7 +908,7 @@ object Retail {
         .select((round(col("l_extendedprice") * 100, 0).cast("long") % 100)
           .as("ending"))
         .groupBy(col("ending")).agg(count(lit(1)).as("o"))
-        // ckpt(a): totals + charm cells; lazy plan rescans lineitem
+        // ckpt(a): q263 totals + charm cells; lazy 1.25× at sf0.1 (BENCH_NOTES)
         .eagerCkpt
       def cell(e: Int) = c.filter(col("ending") === e)
         .agg(coalesce(sum(col("o")), lit(0L)).cast("long").as(s"n_$e"))
@@ -1216,7 +1205,7 @@ object Retail {
         .groupBy(year(col("o_orderdate")).cast("int").as("y"),
           col("o_orderpriority").as("p"))
         .agg(count(lit(1)).as("n"))
-        // ckpt(a): totals, spine + join; lazy plan rescans orders
+        // ckpt(a): q280 totals, spine + join; lazy 2.1× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val t = c.groupBy(col("y")).agg(sum(col("n")).cast("long").as("tot"))
       val spine = c.select(col("y")).distinct()
@@ -1281,8 +1270,6 @@ object Retail {
           // per-day Σcents² ≈ 2e18 at sf1 (~5× BIGINT headroom, gone by
           // sf5) — accumulate in DECIMAL(38,0) / HUGEINT like q178/q246.
           sum(cents.cast("decimal(19,0)") * cents).as("s2"))
-        // ckpt(a): totals + per-day z; lazy plan rescans orders
-        .eagerCkpt
       val t = dd.agg(sum(col("n")).cast("long").as("nn"),
         sum(col("s")).cast("long").as("ss"),
         sum(col("s2").cast("double")

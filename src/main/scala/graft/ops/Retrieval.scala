@@ -56,7 +56,7 @@ object Retrieval {
     // it (len = Σc per doc, df = rows per tok) — the q70 pattern.
     val tf = t.filter(col("doc_id") =!= queryDoc)
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-      // ckpt(a): q132/q133 len, df + scoring; slower lazy at sf0.1
+      // ckpt(a): q132/q133 len, df + scoring; lazy 1.5×/1.2× at sf1 (BENCH_NOTES)
       .eagerCkpt
     val len = tf.groupBy("doc_id").agg(sum(col("c")).as("len"))
     val dfT = tf.groupBy("tok").agg(count(lit(1)).as("df"))

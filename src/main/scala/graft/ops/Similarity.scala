@@ -519,8 +519,6 @@ object Similarity {
         .select(col("vec_id"),
           transform(col("pv"), x => (x.cast("double") / col("nrm")).cast("float"))
             .as("embedding"))
-        // ckpt(a): q101 shortlist + rerank; slower lazy at sf0.1
-        .eagerCkpt
       // stage 1: shortlist in prefix space; stage 2: exact rerank of the
       // m candidates (only the shortlist — nQ*m rows — carries full vectors)
       val shortlist = knn(prefix.filter(col("vec_id") < nQ), prefix, m)
@@ -730,7 +728,7 @@ object Similarity {
         .select(col("vec_id"), col("embedding"),
           ArrayMath.cosine(col("embedding"), col("qv")).as("rel"))
         .orderBy(desc("rel"), asc("vec_id")).limit(20)
-        // ckpt(a): q236 both shortlist sides; slower lazy at sf0.1
+        // ckpt(a): q236 both shortlist sides; lazy 1.4× at sf0.1 (BENCH_NOTES)
         .eagerCkpt
       // bounded 20×20 shortlist similarity matrix, computed in-engine
       val a = cands.select(col("vec_id").as("ia"), col("embedding").as("ea"))
@@ -1153,8 +1151,6 @@ object Similarity {
       val nd = sig.agg(count(lit(1)).as("nd"))
       val nDec = col("n").cast("decimal(19,0)")
       val pairsDec = sum(nDec * (nDec - 1)) // 2·pairs; even, halved below
-      def floorDiv(x: Column, y: Column): Column =
-        ((x - pmod(x, y)) / y).cast("long")
       val ndDec = col("nd").cast("decimal(19,0)")
       // share works on the UNhalved numerator/denominator — the /2s cancel
       // as exact rationals, so the floor matches the oracle's halved form
@@ -1165,8 +1161,8 @@ object Similarity {
         .crossJoin(broadcast(nd))
         .select(col("bands"), col("rows_per_band"), col("n_buckets"),
           col("max_bucket").cast("long").as("max_bucket"),
-          floorDiv(col("pr"), lit(2)).as("cand_pairs"),
-          floorDiv(col("pr") * 1000000L, ndDec * (ndDec - 1))
+          Ranks.intDiv(col("pr"), lit(2)).as("cand_pairs"),
+          Ranks.intDiv(col("pr") * 1000000L, ndDec * (ndDec - 1))
             .as("workload_share_micro"))
         .orderBy(col("bands"))
     }

@@ -189,8 +189,6 @@ object Stats {
         .select(substring(col("cents").cast("string"), 1, 1).cast("int")
           .as("digit"))
         .groupBy(col("digit")).agg(count(lit(1)).as("n_obs"))
-        // ckpt(a): q168 total + digit rows; slower lazy at sf0.1
-        .eagerCkpt
       val tot = digits.agg(sum(col("n_obs")).cast("long").as("n_total"))
       val expected = col("n_total") * log10(lit(1) + lit(1.0) / col("digit"))
       digits.crossJoin(broadcast(tot))
@@ -480,8 +478,6 @@ object Stats {
           + month(col("o_orderdate")).cast("int")).as("idx"))
         .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
           .cast("long").as("rev"))
-        // ckpt(a): both pair sides + month count; lazy plan rescans orders
-        .eagerCkpt
       val nm = m.agg(count(lit(1)).cast("long").as("n_months"))
       m.select(col("idx").as("i"), col("rev").as("ri"))
         .join(broadcast(m.select(col("idx").as("j"), col("rev").as("rj"))),
@@ -586,7 +582,7 @@ object Stats {
         .groupBy(round(col("l_discount") * 100, 0).cast("long").as("x"))
         .agg(count(lit(1)).as("nn"),
           sum(col("l_quantity").cast("long")).cast("long").as("sy"))
-        // ckpt(a): every interval stage; lazy plan rescans lineitem
+        // ckpt(a): q185 every interval stage; lazy 1.4× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val xs = cells.select(col("x"))
       val iv = xs.toDF("j")
@@ -786,7 +782,7 @@ object Stats {
       val g = cust.groupBy(col("t"))
         .agg(sum(col("ev")).cast("long").as("d"),
           sum(lit(1L) - col("ev")).cast("long").as("c"))
-        // ckpt(a): q215 every survival stage; slower lazy at sf0.1
+        // ckpt(a): q215 every survival stage; lazy 1.4× at sf0.1 (BENCH_NOTES)
         .eagerCkpt
       val nTot = g.agg(sum(col("d") + col("c")).cast("long").as("n_total"))
       val past = g.select(col("t").as("pt"), (col("d") + col("c")).as("pw"))
@@ -796,7 +792,7 @@ object Stats {
         .join(broadcast(nTot), lit(true))
         .select(col("t"), col("d"), col("c"),
           (col("n_total") - col("below")).cast("long").as("n_risk"))
-      // ckpt(a): q215 both fold sides; slower lazy at sf0.1
+      // ckpt(a): q215 both fold sides; lazy 1.4× at sf0.1 (BENCH_NOTES)
       val e = r.filter(col("d") > 0).eagerCkpt
       // a duration whose events exhaust its whole risk set pins S(t)=0 for
       // every t at or beyond it; its ln(0) is guarded OUT of the fold in
@@ -914,7 +910,7 @@ object Stats {
       val cells = Tables.lineitem(s, d)
         .groupBy(col("l_quantity").cast("long").as("q"))
         .agg(count(lit(1)).as("n"))
-        // ckpt(a): every interval stage; lazy plan rescans lineitem
+        // ckpt(a): q228 every interval stage; lazy 1.4× at sf0.1 (BENCH_NOTES)
         .eagerCkpt
       val xs = cells.select(col("q"))
       val iv = xs.toDF("lo")
@@ -926,7 +922,7 @@ object Stats {
             * sum(col("n") * col("q")) / sum(col("n"))).as("sse"),
           sum(col("n")).cast("long").as("nn"),
           sum(col("n") * col("q")).cast("long").as("sq"))
-        // ckpt(a): q228 both interval sides + bounds; slower lazy at sf0.1
+        // ckpt(a): q228 both interval sides + bounds; lazy 1.4× at sf0.1 (BENCH_NOTES)
         .eagerCkpt
       val bounds = cells.agg(min(col("q")).as("mn"), max(col("q")).as("mx"))
       val i1 = iv.select(col("lo").as("lo1"), col("hi").as("s1"),
@@ -1079,8 +1075,6 @@ object Stats {
           sum(when(treated, cents).otherwise(0L)).as("s_t"),
           sum(when(!treated, 1L).otherwise(0L)).as("n_c"),
           sum(when(!treated, cents).otherwise(0L)).as("s_c"))
-        // ckpt(a): matched estimate + dropped audit; lazy plan rescans lineitem
-        .eagerCkpt
       val dropped = strata.filter(col("n_t") > 0 && col("n_c") === 0)
         .agg(coalesce(sum(col("n_t")), lit(0L)).cast("long")
           .as("n_treated_dropped"))
@@ -1511,7 +1505,7 @@ object Stats {
           + weekofyear(col("o_orderdate")).cast("int")).as("wk"))
         .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
           .cast("long").as("x"))
-        // ckpt(a): pairs, count + ties; lazy plan rescans orders
+        // ckpt(a): q277 pairs, count + ties; lazy 1.5× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val sStat = w.toDF("wa", "xa")
         .join(broadcast(w.toDF("wb", "xb")), col("wa") < col("wb"))
@@ -1663,7 +1657,7 @@ object Stats {
       val v = o.select(round(col("o_totalprice") * 100, 0).cast("long")
           .as("cents"))
         .orderBy(desc("cents")).limit(101)
-        // ckpt(a): the min + the fold; lazy plan rescans orders
+        // ckpt(a): q288 the min + the fold; lazy 1.8× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val m = v.agg(min(col("cents")).cast("long").as("xk"))
       val h = v.join(broadcast(m), lit(true))

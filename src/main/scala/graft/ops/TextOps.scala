@@ -519,7 +519,7 @@ object TextOps {
       val sh = shingles(Tables.documents(s, d), "text", 3).eagerCkpt
       val sets = shingleSets(sh)
       val found = simhashPairsFromSets(sets).select("doc_a", "doc_b")
-      // ckpt(a): q44 three consumers; slower lazy at sf0.1
+      // ckpt(a): q44 three consumers; lazy 1.3× at sf0.1 (BENCH_NOTES)
       val exactAll = exactJaccardPairsFrom(sh, minJac = 0.5).eagerCkpt
       val exact05 = exactAll.select("doc_a", "doc_b")
       // exact 0.9-pairs inside the h <= 7 band: the pigeonhole-complete set
@@ -559,8 +559,6 @@ object TextOps {
         |WHERE inter / (ca.n_sh + cb.n_sh - inter) >= 0.9""".stripMargin) { (s, d) =>
       val found = winnowPairs(s, d).select("doc_a", "doc_b")
       val exact09 = exactJaccardPairs(s, d, minJac = 0.9).select("doc_a", "doc_b")
-        // ckpt(a): q51 count + anti-join; slower lazy at sf0.1
-        .eagerCkpt
       exact09.agg(count(lit(1)).as("n_exact_09"))
         .crossJoin(exact09.join(found, Seq("doc_a", "doc_b"), "left_anti")
           .agg(count(lit(1)).as("n_missed")))
@@ -662,7 +660,7 @@ object TextOps {
       // Σc per doc; df = rows per tok, since tf is unique per (doc, tok))
       // instead of re-running the explode three times
       val tf = t.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
-        // ckpt(a): q70 len, df + scores; slower lazy at sf0.1
+        // ckpt(a): q70 len, df + scores; lazy 1.1× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val len = tf.groupBy(col("doc_id")).agg(sum(col("c")).as("len"))
       val dfT = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -1751,8 +1749,6 @@ object TextOps {
         |FROM k GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       val counts = docs.groupBy(col("source")).agg(count(lit(1)).as("n_s"))
-        // ckpt(a): q174 totals + threshold rows; slower lazy at sf0.1
-        .eagerCkpt
       val tot = counts.agg(sum(col("n_s")).cast("long").as("n_all"),
         sum(sqrt(col("n_s").cast("double"))).as("sum_w"))
       val rates = counts.crossJoin(broadcast(tot))
@@ -2109,7 +2105,7 @@ object TextOps {
       import org.apache.spark.sql.expressions.Window
       val jp = exactJaccardPairs(s, d, minJac = 0.5)
         .select(col("doc_a"), col("doc_b"))
-        // ckpt(a): q270 members + hits; slower lazy at sf0.1
+        // ckpt(a): q270 members + hits; lazy 1.7× at sf0.1 (BENCH_NOTES)
         .eagerCkpt
       val members = jp.select(col("doc_a").as("doc_id"))
         .union(jp.select(col("doc_b").as("doc_id"))).distinct()

@@ -47,16 +47,7 @@ object Training {
     size(filter(t, x => array_contains(array(stopEn.map(lit): _*), x)))
       .cast("long")
 
-  /** BIGINT → DECIMAL(19,0): the promotion step of the repo overflow
-    * rule (BENCH_NOTES audit table) — products of two of these land in
-    * DECIMAL(38,0) exactly. */
-  private def dec(x: Column): Column = x.cast("decimal(19,0)")
-
-  /** Exact floor division on nonnegative DECIMAL operands — Spark's
-    * decimal `/` rounds; the pmod spelling floors, matching DuckDB `//`
-    * (identical on nonnegative operands). */
-  private def fdiv(x: Column, y: Column): Column =
-    ((x - pmod(x, y)) / y).cast("long")
+  import Ranks.{dec, intDiv}
 
   /** DuckDB spelling of the stopword list. */
   private val duckStopList =
@@ -150,8 +141,8 @@ object Training {
       val t = TextOps.tokens(col("text"))
       val sc = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), size(t).cast("long").as("ntok"),
-          Ranks.intDiv(stopHits(t) * 1000, size(t)).as("score_milli"))
-      val budget = sc.agg(Ranks.intDiv(sum(col("ntok")), lit(2)).as("budget"))
+          intDiv(stopHits(t) * 1000, size(t)).as("score_milli"))
+      val budget = sc.agg(intDiv(sum(col("ntok")), lit(2)).as("budget"))
       Ranks.globalCumSum(sc, 32, col("ntok"),
           col("score_milli").desc, col("doc_id"))
         .crossJoin(broadcast(budget))
@@ -222,7 +213,7 @@ object Training {
           size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
         .groupBy(col("source"), col("lang")).agg(sum(col("ntok")).as("avail"))
       val g = av.agg(count(lit(1)).as("m"),
-        Ranks.intDiv(sum(col("avail")) * 3, lit(5)).as("budget"))
+        intDiv(sum(col("avail")) * 3, lit(5)).as("budget"))
       val w = Window.orderBy(col("avail"), col("source"), col("lang"))
       val o = av
         .withColumn("i", row_number().over(w).cast("long"))
@@ -230,7 +221,7 @@ object Training {
           sum(col("avail")).over(w.rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)))
         .crossJoin(broadcast(g))
-      val li = Ranks.intDiv(greatest(lit(0L), col("budget") - col("pre")),
+      val li = intDiv(greatest(lit(0L), col("budget") - col("pre")),
         col("m") - col("i") + 1)
       val lvl = o.withColumn("li", li)
         .filter(col("li") < col("avail") || col("i") === col("m"))
@@ -280,14 +271,12 @@ object Training {
       val c = Tables.documents(s, d)
         .groupBy(col("source")).agg(count(lit(1)).as("cnt"))
       val g = c.agg(sum(col("cnt")).as("nn"),
-        Ranks.intDiv(sum(col("cnt")), lit(10)).as("n"))
+        intDiv(sum(col("cnt")), lit(10)).as("n"))
       // quota in DECIMAL(38,0): 19+19+1 digits clamp inside 38 exactly
       val quota = col("n").cast("decimal(19,0)") * col("cnt").cast("decimal(19,0)")
       val q = c.crossJoin(broadcast(g))
-        .withColumn("base",
-          ((quota - pmod(quota, col("nn").cast("decimal(19,0)"))) /
-            col("nn").cast("decimal(19,0)")).cast("long"))
-        .withColumn("rem", pmod(quota, col("nn").cast("decimal(19,0)")))
+        .withColumn("base", intDiv(quota, dec(col("nn"))))
+        .withColumn("rem", pmod(quota, dec(col("nn"))))
       val r = q.withColumn("rk",
         row_number().over(Window.orderBy(col("rem").desc, col("source")))
           .cast("long"))
@@ -349,7 +338,7 @@ object Training {
         - 1) * col("nn").cast("decimal(19,0)")
       val den = (lit(2) * col("n_s")).cast("decimal(19,0)")
       val sl = c.join(broadcast(ns), "source").crossJoin(broadcast(g))
-        .withColumn("slot", ((num - pmod(num, den)) / den).cast("long"))
+        .withColumn("slot", intDiv(num, den))
         .select(col("doc_id"), col("source"), col("j"), col("slot"))
       val p = Ranks.globalIndex(sl, 32, col("slot"), col("source"), col("j"))
         .withColumnRenamed("idx", "pos")
@@ -399,7 +388,7 @@ object Training {
       Ranks.globalIndex(sc, 32, col("ntok"), col("doc_id"))
         .crossJoin(broadcast(g))
         .withColumn("first_epoch",
-          Ranks.intDiv(col("idx") * 5 + col("nn") - 1, col("nn")))
+          intDiv(col("idx") * 5 + col("nn") - 1, col("nn")))
         .groupBy(col("first_epoch"), col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("tok"),
           min(col("idx")).as("min_rank"), max(col("idx")).as("max_rank"))
@@ -454,7 +443,7 @@ object Training {
       val t = TextOps.tokens(col("text"))
       val lab = Tables.documents(s, d)
         .select((col("lang") === "en").as("a"),
-          (Ranks.intDiv(stopHits(t) * 1000, size(t)) >= 60).as("b"))
+          (intDiv(stopHits(t) * 1000, size(t)) >= 60).as("b"))
       val cell = (p: Column) => sum(when(p, 1L).otherwise(0L))
       val c = lab.agg(
         cell(col("a") && col("b")).as("tt"),
@@ -469,10 +458,10 @@ object Training {
           .as("pe_num"))
       m.select(col("n").cast("long").as("n"),
           col("tt"), col("tf"), col("ft"), col("ff"),
-          fdiv(col("agree") * 1000000, col("n")).as("po_micro"),
-          fdiv(col("pe_num") * 1000000, col("n") * col("n")).as("pe_micro"),
+          intDiv(col("agree") * 1000000, col("n")).as("po_micro"),
+          intDiv(col("pe_num") * 1000000, col("n") * col("n")).as("pe_micro"),
           when(col("n") * col("n") === col("pe_num"), lit(null))
-            .otherwise(fdiv(
+            .otherwise(intDiv(
               (col("n") * col("agree") + col("n") * col("n")
                 - lit(2) * col("pe_num")) * 1000000,
               col("n") * col("n") - col("pe_num")))
@@ -523,7 +512,7 @@ object Training {
         .select(col("source"), explode(TextOps.tokens(col("text"))).as("token"))
         .groupBy(col("source"), col("token"))
         .agg(count(lit(1)).as("c"))
-        // ckpt(a): q305 three consumers; slower lazy at sf0.1
+        // ckpt(a): q305 three consumers; lazy 1.5× at sf1 (BENCH_NOTES)
         .eagerCkpt
       val v = st.groupBy(col("token")).agg(sum(col("c")).as("ct"))
       val tot = st.groupBy(col("source"))
@@ -538,7 +527,7 @@ object Training {
           sum(col("ct")).as("pres_ct"))
       p.join(broadcast(tot), "source")
         .select(col("source"), col("n_s").as("n_tok"), col("n_types"),
-          fdiv((col("num_pres")
+          intDiv((col("num_pres")
               + dec(col("nn") - col("pres_ct")) * dec(col("n_s"))) * 1000000,
             lit(2) * dec(col("n_s")) * dec(col("nn"))).as("tvd_micro"))
         .orderBy(col("source"))
@@ -597,7 +586,7 @@ object Training {
           least(col("k").cast("long"), col("n_types")).as("kept_types"),
           col("covered").as("covered_tok"),
           (col("total") - col("covered")).as("oov_tok"),
-          fdiv(dec(col("covered")) * dec(lit(1000000L)), dec(col("total")))
+          intDiv(dec(col("covered")) * dec(lit(1000000L)), dec(col("total")))
             .as("coverage_micro"))
         .orderBy(col("k"))
     },
@@ -653,12 +642,12 @@ object Training {
             .as("trunc_docs"))
         .select(col("l"), col("n_docs"), col("tok_total"), col("tok_trunc"),
           col("pad_tok"), col("trunc_docs"),
-          Ranks.intDiv(col("tok_total") + col("l") - 1, col("l"))
+          intDiv(col("tok_total") + col("l") - 1, col("l"))
             .as("packed_seqs_lb"),
-          fdiv((dec(col("tok_total")) - dec(col("tok_trunc"))) *
+          intDiv((dec(col("tok_total")) - dec(col("tok_trunc"))) *
             dec(lit(1000000L)),
             dec(col("n_docs")) * dec(col("l"))).as("naive_util_micro"),
-          fdiv(dec(col("tok_trunc")) * dec(lit(1000000L)),
+          intDiv(dec(col("tok_trunc")) * dec(lit(1000000L)),
             dec(col("tok_total"))).as("trunc_share_micro"))
         .orderBy(col("l"))
     },
@@ -729,7 +718,7 @@ object Training {
           sum(when(col("tc") > 1, col("c")).otherwise(0L)).as("dup_mass"))
         .select(col("source"), col("n_grams"), col("n_distinct"),
           col("dup_mass"),
-          fdiv(dec(col("dup_mass")) * dec(lit(1000000L)),
+          intDiv(dec(col("dup_mass")) * dec(lit(1000000L)),
             dec(col("n_grams"))).as("dup_share_micro"))
         .orderBy(col("source"))
     },
@@ -825,7 +814,7 @@ object Training {
           byK(k => col(s"fa$k")).as("n_fail_any"),
           byK(k => (1 to k).map(j => col(s"ff$j"))
             .foldLeft(col("n"))(_ - _)).as("survivors_after"),
-          Ranks.intDiv(byK(k => col(s"ff$k")) * 1000000L, col("n"))
+          intDiv(byK(k => col(s"ff$k")) * 1000000L, col("n"))
             .as("drop_share_micro"))
         .orderBy(col("k"))
     },
@@ -880,7 +869,7 @@ object Training {
       perS.reduce(_ unionAll _)
         .select(col("n_shards"), col("n_used"), col("max_mass"),
           col("min_mass"), col("total_mass"),
-          fdiv(dec(col("max_mass")) * dec(col("n_shards")) *
+          intDiv(dec(col("max_mass")) * dec(col("n_shards")) *
             dec(lit(1000000L)), dec(col("total_mass")))
             .as("imbalance_micro"))
         .orderBy(col("n_shards"))
@@ -928,9 +917,9 @@ object Training {
           sum(when(col("ct") === 2, 1L).otherwise(0L)).as("n2"))
         .select(col("source"), col("n_tok"), col("n_types"), col("n1"),
           col("n2"),
-          fdiv(dec(col("n1")) * dec(lit(1000000L)), dec(col("n_tok")))
+          intDiv(dec(col("n1")) * dec(lit(1000000L)), dec(col("n_tok")))
             .as("unseen_mass_micro"),
-          fdiv(dec(col("n1")) * dec(lit(1000000L)), dec(col("n_types")))
+          intDiv(dec(col("n1")) * dec(lit(1000000L)), dec(col("n_types")))
             .as("hapax_share_micro"))
         .orderBy(col("source"))
     },
@@ -969,7 +958,7 @@ object Training {
       val ts = s.range(1).select(
         explode(array(lit(100), lit(250), lit(1000))).as("t"))
       def ceilDiv(a: Column, b: Column): Column =
-        Ranks.intDiv(a + b - 1, b)
+        intDiv(a + b - 1, b)
       c.crossJoin(broadcast(ts))
         .groupBy(col("t"))
         .agg(count(lit(1)).as("n_keys"),
@@ -979,9 +968,9 @@ object Training {
           max(col("ct")).as("max_ct"))
         .select(col("t").as("t_target"), col("n_keys"), col("n_rows"),
           col("n_virtual"), col("max_factor"),
-          Ranks.intDiv(col("n_virtual") * 1000000L, col("n_keys"))
+          intDiv(col("n_virtual") * 1000000L, col("n_keys"))
             .as("expand_micro"),
-          Ranks.intDiv(col("max_ct") * 1000000L, col("n_rows"))
+          intDiv(col("max_ct") * 1000000L, col("n_rows"))
             .as("top_key_share_micro"))
         .orderBy(col("t_target"))
     }

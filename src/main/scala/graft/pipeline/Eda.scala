@@ -110,9 +110,10 @@ object Eda {
     *
     * Why not the built-in exact `percentile` aggregate: its buffer is a
     * per-partition OpenHashMap keyed by VALUE, so on a high-cardinality
-    * double column every partial holds (value→count) for ~all its rows —
-    * at sf0.1 that's 32 maps of ~19k boxed entries merged through a
-    * single-partition exchange, measured 16–57 s and GC-bound. A range-
+    * double column the partials hold (value→count) for ~all their rows, merged through
+    * a single-partition exchange: three quartiles of sf0.1 l_extendedprice
+    * take 2.3–3.0 s against 1.0–1.1 s here at local[4], a tie at sf0.01
+    * (BENCH_NOTES "Built-in `percentile` vs `Eda.exactQuantiles`"). A range-
     * partitioned sort of the raw doubles plus per-partition rank selection
     * stays primitive end to end. (The 100 TB path for quantiles is
     * approx_percentile; exact quantiles are inherently a sort.)

@@ -5,6 +5,26 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 
+/** Deferred data-SHAPE probe for [[AdaptivePlan]] — the round-14 answer
+  * to the measured Zipfian mis-pick (BENCH_NOTES round 14): the direct
+  * shared-key plans cost Σdf² (candidate mass) while the prefix/variant
+  * plans stay ~linear in rows, and a byte statistic cannot tell the two
+  * shapes apart (the skew1 corpus is ~30× smaller than flat sf10 in
+  * bytes yet ~5× slower on the direct plan). `plan` is a PRE-BUILT lazy
+  * single-row aggregate over the (already-checkpointed) key stream that
+  * estimates the amplification Σdf²/rows — built at query construction
+  * (zero jobs), executed by [[AdaptivePlanRule]] only when the byte
+  * statistic alone cannot rule the large branch out (`floorBytes` ≤
+  * bytes ≤ thresholdBytes), and cached per canonical plan so repeated
+  * optimizations of the same frame pay one probe job. `ampThreshold` is
+  * the measured crossover of the ratio: because both plan costs are
+  * ~linear in their respective statistic, the crossover in Σdf²/rows is
+  * scale-invariant, unlike any absolute threshold. */
+case class AmpProbe(
+    plan: LogicalPlan,
+    ampThreshold: Double,
+    floorBytes: BigInt)
+
 /** Optimizer-time choice between two exact-equivalent plans — the one
   * mechanism behind the adaptive kernel switches in
   * `TextOps.exactJaccardPairsFrom` (direct shared-shingle join vs the
@@ -51,26 +71,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * byte-threshold constants): the size scales linearly with the corpus,
   * exactly like the row counts the crossovers were measured in.
   */
-/** Deferred data-SHAPE probe for [[AdaptivePlan]] — the round-14 answer
-  * to the measured Zipfian mis-pick (BENCH_NOTES round 14): the direct
-  * shared-key plans cost Σdf² (candidate mass) while the prefix/variant
-  * plans stay ~linear in rows, and a byte statistic cannot tell the two
-  * shapes apart (the skew1 corpus is ~30× smaller than flat sf10 in
-  * bytes yet ~5× slower on the direct plan). `plan` is a PRE-BUILT lazy
-  * single-row aggregate over the (already-checkpointed) key stream that
-  * estimates the amplification Σdf²/rows — built at query construction
-  * (zero jobs), executed by [[AdaptivePlanRule]] only when the byte
-  * statistic alone cannot rule the large branch out (`floorBytes` ≤
-  * bytes ≤ thresholdBytes), and cached per canonical plan so repeated
-  * optimizations of the same frame pay one probe job. `ampThreshold` is
-  * the measured crossover of the ratio: because both plan costs are
-  * ~linear in their respective statistic, the crossover in Σdf²/rows is
-  * scale-invariant, unlike any absolute threshold. */
-case class AmpProbe(
-    plan: LogicalPlan,
-    ampThreshold: Double,
-    floorBytes: BigInt)
-
 case class AdaptivePlan(
     small: LogicalPlan,
     large: LogicalPlan,

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Custom streaming state via flatMapGroupsWithState (SURVEY.md §2.9): a
-  * hand-rolled per-user sessionizer equivalent to `session_window` but with
+/** The per-user session fold the streaming sessionizer
+  * ([[TwsSessions]], transformWithState) runs in each key's state, plus
+  * its batch reference: `session_window` semantics (SURVEY.md §2.9) with
   * arbitrary state logic — the extension point `session_window` cannot
   * express (e.g. value-dependent gaps, per-session aggregates beyond
   * sum/count, emitting mid-session checkpoints).
@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State design for scale: one small record per ACTIVE user (last-event
   * time + running aggregates), partitioned by the grouping key across
   * executors, checkpointed by the state store, and expired with an event-
-  * time timeout tied to the watermark — bounded state, no driver residency.
+  * time timer tied to the watermark — bounded state, no driver residency.
   * Closed sessions are emitted as soon as the gap elapses or the group sees
   * a later event.
   */
@@ -78,44 +78,6 @@ object StatefulSessions {
     * µs representation exists to protect. */
   private[streaming] def expiryMs(s: SessionState): Long =
     Math.floorDiv(s.lastTs + GapUs + 999, 1000)
-
-  def sessionize(user: Long, it: Iterator[Event],
-      state: GroupState[SessionState]): Iterator[Session] = {
-    val sorted = it.toSeq.sortBy(e => (e.ts_us, e.value))
-    if (state.hasTimedOut) {
-      val out = state.getOption.map(emit(user, _)).iterator
-      state.remove()
-      out
-    } else {
-      val (closed, open) =
-        fold(sorted.map(e => (e.ts_us, e.value)), state.getOption)
-      open match {
-        case Some(s) =>
-          state.update(s)
-          // always register the timeout — a group that gets no further
-          // events is only re-invoked (to emit + expire its session) if a
-          // timeout exists; skipping registration while the watermark is
-          // still 0 (first microbatch) would leak that state forever
-          state.setTimeoutTimestamp(expiryMs(s))
-        case None => state.remove()
-      }
-      closed.iterator.map(emit(user, _))
-    }
-  }
-
-  /** The streaming query: watermarked event stream → per-user custom state.
-    * Append mode: sessions are emitted only once closed. */
-  def run(spark: SparkSession, events: DataFrame): Dataset[Session] = {
-    import spark.implicits._
-    events
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id"), col("ts"),
-        unix_micros(col("ts")).as("ts_us"), col("value"))
-      .as[Event]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(sessionize)
-  }
 
   /** Batch reference for parity tests: the same fold applied per user to
     * the full static table. `includeOpen=true` closes every tail session at

@@ -7,18 +7,17 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
 
 import StatefulSessions.{Event, GapUs, Session, SessionState}
 
-/** The same sessionizer as StatefulSessions, on Spark 4's transformWithState
-  * (arbitrary-state v2): typed `ValueState` handles instead of a single
-  * opaque `GroupState`, explicit event-time timers, and a state store that
-  * must be RocksDB-backed (`spark.sql.streaming.stateStore.providerClass`).
-  * The session-transition logic is the SAME pure `fold` — both APIs are
-  * thin drivers around it, which is what keeps the two implementations (and
-  * `session_window`, q25) provably in agreement (StatefulSessionsSpec,
-  * TwsSessionsSpec).
+/** The streaming sessionizer over [[StatefulSessions.fold]], on Spark 4's
+  * transformWithState (arbitrary-state v2): typed `ValueState` handles,
+  * explicit event-time timers, and a state store that must be
+  * RocksDB-backed (`spark.sql.streaming.stateStore.providerClass`). The
+  * session-transition logic is the pure `fold`, which is what keeps the
+  * stream, its batch reference and `session_window` (q25) provably in
+  * agreement (StatefulSessionsSpec, TwsSessionsSpec).
   *
-  * Scale notes as for flatMapGroupsWithState: one small record per active
-  * key, partitioned by key, checkpoint-persisted; timers replace the
-  * timeout API and are likewise per-key state-store entries. */
+  * Scale: one small record per active key, partitioned by key,
+  * checkpoint-persisted; timers are likewise per-key state-store
+  * entries. */
 object TwsSessions {
 
   class SessionProcessor extends StatefulProcessor[Long, Event, Session] {

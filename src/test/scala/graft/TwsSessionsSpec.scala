@@ -3,9 +3,9 @@ package graft
 import graft.streaming.{EventStreams, StatefulSessions, TwsSessions}
 import org.apache.spark.sql.functions._
 
-/** transformWithState sessionizer parity: must behave exactly like the
-  * flatMapGroupsWithState driver over the same fold — closed sessions
-  * always emitted, watermark-expired tails emitted once, nothing else. */
+/** transformWithState sessionizer parity against the shared fold's batch
+  * references: sessions closed by a later event always emitted,
+  * watermark-expired tails emitted once, nothing else. */
 class TwsSessionsSpec extends SparkSpec {
 
   private def canon(df: org.apache.spark.sql.DataFrame) = df

@@ -3,12 +3,12 @@
 graft.Verify via sbt, then compare each query's parquet dump against the
 DuckDB oracle SQL on the same test tables. Dev-only (driver-side python)."""
 import json, math, sys, glob, os
-import duckdb
+from oracle_compare import connect
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 
-con = duckdb.connect()
+con = connect()
 for p in glob.glob(f"{sf_dir}/*.parquet"):
     name = os.path.basename(p).replace(".parquet", "")
     con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{p}'")

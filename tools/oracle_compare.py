@@ -2,11 +2,23 @@
 """Local replica of the driver's correctness gate: compare graft.Verify
 parquet dumps against DuckDB running SparkEntry.oracleSql on the same
 tables. Usage: oracle_compare.py <verify_out_dir> <sf_dir>"""
-import duckdb, json, glob, os, sys
+import atexit, duckdb, json, glob, os, shutil, sys, tempfile
 import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
+
+
+def connect():
+    """DuckDB capped at half of RAM and one thread per core, spilling to a
+    private temp dir removed at exit. Uncapped, the q259 oracle at sf0.1
+    took this process to 12.2 GB RSS on a 15 GB box."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    tmp = tempfile.mkdtemp(prefix="duckdb_oracle_")
+    atexit.register(shutil.rmtree, tmp, True)
+    return duckdb.connect(config={"memory_limit": f"{ram // 2 >> 20}MB",
+                                  "threads": os.cpu_count(),
+                                  "temp_directory": tmp})
 
 
 def canon(df):
@@ -18,7 +30,7 @@ def canon(df):
 
 def main(out, sf):
     oracle = json.load(open(f"{out}/oracle_sql.json"))
-    con = duckdb.connect()
+    con = connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     fails = []
