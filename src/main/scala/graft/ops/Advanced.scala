@@ -775,7 +775,7 @@ object Advanced {
     // ranks in a pid-partitioned window (fully parallel; the checkpoint
     // hides the range partitioning from the planner, so this costs one
     // extra — but parallel — hash exchange on pid), plus running-sum
-    // block offsets over the ≤32-row per-pid counts (that tiny window is
+    // block offsets over the one-row-per-pid counts (that tiny window is
     // the only SinglePartition in the plan) broadcast back. For a unique key
     // the result is independent of where sampling placed the range
     // boundaries: offset + local rank = global rank for ANY range-disjoint
@@ -794,7 +794,7 @@ object Advanced {
         |       CAST(sum(idx * (o_custkey % 97)) AS BIGINT) AS align_checksum
         |FROM r""".stripMargin) { (s, d) =>
       Ranks.globalIndex(Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_custkey")), 32, col("o_orderkey"))
+          .select(col("o_orderkey"), col("o_custkey")), col("o_orderkey"))
         .agg(
           count(lit(1)).as("n_rows"),
           min(col("idx")).cast("long").as("min_idx"),
@@ -906,13 +906,12 @@ object Advanced {
       val ranked = Ranks.globalIndex(Tables.orders(s, d)
           .groupBy(col("o_custkey").as("ck"))
           .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
-            .cast("long").as("m")), 32, col("m"), col("ck"))
+            .cast("long").as("m")), col("m"), col("ck"))
         .withColumnRenamed("idx", "rk")
       val t = ranked.agg(count(lit(1)).as("n"),
         sum(col("m")).cast("long").as("total"),
         sum(col("rk").cast("decimal(19,0)") * col("m")).as("s"))
       def topShare(div: Int, out: String) = ranked
-        .crossJoin(broadcast(t.select(col("n"))))
         .filter(col("rk") > col("n") - expr(s"n div $div"))
         .agg(coalesce(sum(col("m")), lit(0L)).cast("long").as(out))
       t.crossJoin(topShare(100, "top1_cents"))
@@ -1270,12 +1269,11 @@ object Advanced {
         .select(col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
           round(col("l_extendedprice") * 100, 0).cast("long").as("cents"),
           col("l_quantity").cast("long").as("qty"))
-      val n = base.count() // one scalar; both ntile expressions reuse it
-      val p = Ranks.globalIndex(base, 32, col("cents"), col("ok"), col("ln"))
-        .withColumn("dp", Ranks.ntileExpr(col("idx"), lit(n), 10))
-        .drop("idx")
-      val both = Ranks.globalIndex(p, 32, col("qty"), col("ok"), col("ln"))
-        .withColumn("dq", Ranks.ntileExpr(col("idx"), lit(n), 10))
+      val p = Ranks.globalIndex(base, col("cents"), col("ok"), col("ln"))
+        .withColumn("dp", Ranks.ntileExpr(col("idx"), col("n"), 10))
+        .drop("idx", "n")
+      val both = Ranks.globalIndex(p, col("qty"), col("ok"), col("ln"))
+        .withColumn("dq", Ranks.ntileExpr(col("idx"), col("n"), 10))
       both.groupBy(col("dp").cast("int").as("price_decile"),
           col("dq").cast("int").as("qty_decile"))
         .agg(count(lit(1)).cast("long").as("n"))

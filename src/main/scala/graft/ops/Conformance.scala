@@ -211,10 +211,8 @@ object Conformance {
           .cast("long").as("v"),
           col("l_quantity").cast("long").as("w"))
         .groupBy(col("v")).agg(sum(col("w")).as("a"))
-      val cum = Ranks.globalCumSum(counts, 32, col("a"), col("v"))
-      val tot = cum.agg(count(lit(1)).cast("long").as("n_values"),
-        sum(col("a")).cast("long").as("total_weight"))
-      cum.crossJoin(broadcast(tot))
+      Ranks.globalCumSum(counts, col("a"), col("v"))
+        .withColumnsRenamed(Map("n" -> "n_values", "cum_total" -> "total_weight"))
         .filter(lit(2) * col("cum") >= col("total_weight"))
         .groupBy(col("n_values"), col("total_weight"))
         .agg(min(col("v")).cast("long").as("wmedian_cents"))

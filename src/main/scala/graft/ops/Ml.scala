@@ -21,12 +21,29 @@ object Ml {
     * ML quartet is ~8.5% of the bench board, and q152's fit exists only to
     * have SOMETHING to persist — its contract is save→load→re-score
     * parity + metadata, properties of serialization, not of the training
-    * data). Keyed by (sfDir, input-file signature) with the same
-    * (path, mtime, length) staleness discipline as the quantile memo
-    * (pipeline/Eda.scala): a regenerated corpus misses and refits. The
-    * value is a handful of fitted tree/indexer params — driver-tiny. */
+    * data). Keyed by (sfDir, [[inputSignature]]): a regenerated corpus
+    * misses and refits. The value is a handful of fitted tree/indexer
+    * params — driver-tiny. */
   private[graft] val fittedMemo = scala.collection.concurrent.TrieMap
     .empty[(String, Long), org.apache.spark.ml.PipelineModel]
+
+  /** Hash of the (path, mtime, length) of every file feeding `df`'s file
+    * sources, taken from the plan's OWN file-index listing (fresh per
+    * `spark.read`, so an overwritten input shows new statuses here even
+    * though the canonicalized plan is unchanged). Non-file leaves (local
+    * fixtures) contribute nothing. */
+  private[graft] def inputSignature(df: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val files = df.queryExecution.analyzed.collect {
+      case lr: LogicalRelation => lr.relation match {
+        case fs: HadoopFsRelation =>
+          fs.location.listFiles(Nil, Nil).flatMap(_.files)
+            .map(f => (f.getPath.toString, f.getModificationTime, f.getLen))
+        case _ => Nil
+      }
+    }.flatten.sorted
+    scala.util.hashing.MurmurHash3.orderedHash(files).toLong
+  }
 
   /** The shared q40/q152 estimator shape: 8 trees × depth 5 on a 50%
     * bagging fraction with 16 split bins — the reference fit's shape
@@ -70,9 +87,9 @@ object Ml {
         // trees × nodes × bins).
         val Array(train, valid) = li.randomSplit(Array(0.8, 0.2), 42L)
         // fitMetrics (round 18): one uncached two-column aggregation pass
-        // over the holdout yields n + r2 + rmse together — the fitScore
-        // form cached the full scored frame (vector column included) only
-        // to count it again (guide §5)
+        // over the holdout yields n + r2 + rmse together — caching the
+        // full scored frame (vector column included) only to count it
+        // again is what it avoids (guide §5)
         val (transformers, n, r2, rmse) = graft.pipeline.Model.fitMetrics(
           train, valid, "l_extendedprice",
           Seq("l_quantity", "l_discount", "l_tax", "l_returnflag", "l_linestatus"),
@@ -80,7 +97,7 @@ object Ml {
         // stash the fitted chain for q152's persistence round-trip (the
         // Pipeline.fit over already-fitted Transformer stages is a
         // schema-only pass — no jobs)
-        fittedMemo.put((d, graft.pipeline.Eda.inputSignature(
+        fittedMemo.put((d, inputSignature(
             Tables.lineitem(s, d))),
           new org.apache.spark.ml.Pipeline()
             .setStages(transformers.toArray).fit(li))
@@ -131,7 +148,7 @@ object Ml {
         .cache()
       try {
         val memoKey = (d,
-          graft.pipeline.Eda.inputSignature(Tables.lineitem(s, d)))
+          inputSignature(Tables.lineitem(s, d)))
         val model = fittedMemo.getOrElse(memoKey, {
           val fitDf = li.sample(withReplacement = false, 0.2, 42L)
           // fitTransformers (not Pipeline.fit): the tree fit must read a
@@ -256,7 +273,7 @@ object Ml {
           val (nTest, baseErr) = (e.getLong(0), e.getLong(1))
           val rf = new org.apache.spark.ml.regression.RandomForestRegressor()
             .setNumTrees(3).setMaxDepth(3).setMaxBins(8).setSeed(42L)
-          // fitTransformers, not fitScore: fitScore's r2/rmse metrics pass
+          // fitTransformers, not fitMetrics: its r2/rmse metrics pass
           // would be discarded here — this scores the window in ONE
           // aggregation job, uncached (single consumer)
           val transformers = graft.pipeline.Model.fitTransformers(
@@ -300,7 +317,7 @@ object Ml {
         val gbt = new org.apache.spark.ml.regression.GBTRegressor()
           .setMaxIter(4).setMaxDepth(3).setStepSize(0.1)
           .setMaxBins(8).setSubsamplingRate(0.5).setSeed(42L)
-        // fitMetrics, not fitScore: see q40 — one uncached holdout pass
+        // fitMetrics: see q40 — one uncached holdout pass
         val (_, n, r2, rmse) = graft.pipeline.Model.fitMetrics(
           train, valid, "l_extendedprice", feats, gbt)
         li.agg(count(lit(1)).as("n_total"),
@@ -629,7 +646,7 @@ object Ml {
       // ranking on r alone (no tie-break) is safe: tied residuals are
       // equal values, so the value at rank k is the same in any tie order
       val qhat = Ranks.globalIndex(
-          scored.filter(col("split") === "cal").select(col("r")), 16, col("r"))
+          scored.filter(col("split") === "cal").select(col("r")), col("r"))
         .filter(col("idx") === k)
         .head().getAs[Double]("r")
       val covered = scored.filter(col("split") === "test" &&

@@ -380,7 +380,7 @@ object Profiling {
     // over the full rank-frequency curve. The frequency-descending rank
     // is GLOBAL, so it runs through [[Ranks.globalIndex]]
     // (range-repartition on (freq DESC, tok), parallel per-partition
-    // ranks, ≤32-row offset broadcast) — no vocabulary-sized
+    // ranks, one-row-per-block offset broadcast) — no vocabulary-sized
     // SinglePartition sort; the OLS reduces to four double power sums in
     // the same pass (q173's sufficient-statistics shape). The slope/r²
     // divisions happen once, on near-identical accumulations, rounded
@@ -418,7 +418,7 @@ object Profiling {
         .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
       val slope = (col("n") * col("sxy") - col("sx") * col("sy")) /
         (col("n") * col("sxx") - col("sx") * col("sx"))
-      Ranks.globalIndex(v, 32, col("freq").desc, col("tok"))
+      Ranks.globalIndex(v, col("freq").desc, col("tok"))
         .select(log(col("idx").cast("double")).as("x"),
           log(col("freq").cast("double")).as("y"), col("freq"))
         .agg(count(lit(1)).as("n"),
@@ -606,7 +606,7 @@ object Profiling {
         |FROM c, m ORDER BY c.bucket""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val ranked = Ranks.groupIndex(docs, 32, Nil, col("doc_id"))
+      val ranked = Ranks.groupIndex(docs, Nil, col("doc_id"))
         // integer div, not double /: bucket boundaries must be exact at
         // any corpus size (the oracle's `//`)
         .withColumn("bucket",

@@ -58,33 +58,43 @@ object Ranks {
   def cumeDistExpr(r: Column, n: Column): Column =
     r.cast("double") / n
 
-  /** The one block-offset implementation (the q130 topology): running
-    * values of each `running` aggregate (`count` or `sum`, under a ROWS
-    * frame) in `orderBy` order within `partitionBy` groups (Nil = the whole
-    * frame), WITHOUT the single-task sort of a global window.
-    * Range-repartition on (partitionBy ++ orderBy) — range partitions are
-    * ordered by construction, so `spark_partition_id` IS the block order
-    * and a group's rows in block p all precede its rows in block p+1 —
-    * aggregate per block in a fully parallel (block, group)-partitioned
-    * window, and broadcast back the running totals of the earlier blocks:
-    * an offsets frame of ≤`parts` rows per group (without groups, all the
-    * only SinglePartition in the plan carries). With `withN` the offsets
-    * frame also carries the group's row count `n`, at no extra job.
-    * `orderBy` must be a TOTAL order within a group (add a key tie-break)
-    * or values at range boundaries become nondeterministic. The input is
-    * localCheckpointed (offsets and the local window share one shuffle);
-    * callers should project it down to the columns they need first.
-    * Group keys join back null-safe, so a null group is a group. */
-  private def blockRunning(df: DataFrame, parts: Int, partitionBy: Seq[String],
-      orderBy: Seq[Column], running: Seq[(String, Column)],
-      withN: Boolean): DataFrame = {
+  /** The one block-offset implementation (the q130 topology): the running
+    * row count `idx` and the running value of each `sums` measure (cast to
+    * LONG, under a ROWS frame) in `orderBy` order within `partitionBy`
+    * groups (Nil = the whole frame), WITHOUT the single-task sort of a
+    * global window. Range-repartition on (partitionBy ++ orderBy) into one
+    * block per core of the session (`defaultParallelism`; `parts` forces
+    * another count, for the property spec) — range partitions are ordered
+    * by construction, so `spark_partition_id` IS the block order and a
+    * group's rows in block p all precede its rows in block p+1 — aggregate
+    * per block in a fully parallel (block, group)-partitioned window, and
+    * broadcast back the running totals of the earlier blocks: an offsets
+    * frame of ≤`parts` rows per group (without groups, all the only
+    * SinglePartition in the plan carries). The same group window gives
+    * every row its group's row count `n` and, per measure `out`, the group
+    * total `out_total`, at no extra job — callers read totals from here
+    * rather than re-aggregating the ranked frame, and drop them before
+    * passing a ranked frame through. `orderBy` must be a TOTAL order
+    * within a group (add a key tie-break) or values at range boundaries
+    * become nondeterministic. The input is localCheckpointed (offsets and
+    * the local window share one shuffle); callers should project it down
+    * to the columns they need first. Group keys join back null-safe, so a
+    * null group is a group. */
+  private[graft] def blockRunning(df: DataFrame, partitionBy: Seq[String],
+      orderBy: Seq[Column], sums: Seq[(String, Column)],
+      parts: Int = 0): DataFrame = {
+    val running = ("idx" -> count(lit(1))) +:
+      sums.map { case (out, v) => out -> sum(v.cast("long")) }
+    val totals = ("idx" -> "n") +: sums.map { case (out, _) =>
+      out -> s"${out}_total" }
+    val blocks =
+      if (parts > 0) parts else df.sparkSession.sparkContext.defaultParallelism
     val groups = partitionBy.map(col)
-    val parted = df.repartitionByRange(parts, groups ++ orderBy: _*)
+    val parted = df.repartitionByRange(blocks, groups ++ orderBy: _*)
       .withColumn("_pid", spark_partition_id())
       // ckpt(e): spark_partition_id after repartitionByRange, read twice
       .eagerCkpt
-    val blockAggs = running.map { case (out, f) => f.as(s"_b_$out") } ++
-      (if (withN) Seq(count(lit(1)).as("_b_n")) else Nil)
+    val blockAggs = running.map { case (out, f) => f.as(s"_b_$out") }
     val group = Window.partitionBy(groups: _*)
     val before = group.orderBy(col("_pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -96,7 +106,8 @@ object Ranks {
         running.map { case (out, _) =>
           coalesce(sum(col(s"_b_$out")).over(before), lit(0L)).as(s"_o_$out")
         } ++
-        (if (withN) Seq(sum(col("_b_n")).over(group).as("n")) else Nil): _*)
+        totals.map { case (out, t) => sum(col(s"_b_$out")).over(group).as(t) }
+        : _*)
     val on = groups.zip(gKeys).foldLeft(col("_pid") === col("_opid")) {
       case (c, (g, k)) => c && (g <=> col(k)) }
     val local = Window.partitionBy(col("_pid") +: groups: _*)
@@ -109,32 +120,31 @@ object Ranks {
   }
 
   /** Global 1-based `row_number() OVER (ORDER BY sortExprs…)` — a LONG
-    * `idx` column — in the block-offset topology ([[blockRunning]]). */
-  def globalIndex(df: DataFrame, parts: Int, sortExprs: Column*): DataFrame =
-    blockRunning(df, parts, Nil, sortExprs, Seq("idx" -> count(lit(1))),
-      withN = false)
+    * `idx` column — plus the row count `n`, in the block-offset topology
+    * ([[blockRunning]]). */
+  def globalIndex(df: DataFrame, sortExprs: Column*): DataFrame =
+    groupIndex(df, Nil, sortExprs: _*)
 
   /** [[globalIndex]] within each `partitionBy` group (Nil = one group,
-    * the whole frame) plus the group's row count `n` — the (rank, n) pair
+    * the whole frame), `n` the group's row count — the (rank, n) pair
     * [[ntileExpr]], [[percentRankExpr]] and [[cumeDistExpr]] read. */
-  def groupIndex(df: DataFrame, parts: Int, partitionBy: Seq[String],
+  def groupIndex(df: DataFrame, partitionBy: Seq[String],
       sortExprs: Column*): DataFrame =
-    blockRunning(df, parts, partitionBy, sortExprs,
-      Seq("idx" -> count(lit(1))), withN = true)
+    blockRunning(df, partitionBy, sortExprs, Nil)
 
   /** Global inclusive running sum of `value` (cast to LONG) under the total
     * order `sortExprs` — `sum(value) OVER (ORDER BY … ROWS UNBOUNDED
-    * PRECEDING..CURRENT ROW)` as a `cum` column, in the block-offset
-    * topology ([[blockRunning]]). */
-  def globalCumSum(df: DataFrame, parts: Int, value: Column,
-      sortExprs: Column*): DataFrame =
-    globalCumSums(df, parts, Seq("cum" -> value), sortExprs: _*)
+    * PRECEDING..CURRENT ROW)` as a `cum` column, with its total `cum_total`
+    * and the row count `n`, in the block-offset topology
+    * ([[blockRunning]]). */
+  def globalCumSum(df: DataFrame, value: Column, sortExprs: Column*): DataFrame =
+    globalCumSums(df, Seq("cum" -> value), sortExprs: _*)
 
-  /** [[globalCumSum]] of several measures under one order, one column per
-    * (name, value) pair, all from the same blocks. An exclusive ("strictly
-    * below") sum is the inclusive one minus the row's own value. */
-  def globalCumSums(df: DataFrame, parts: Int, values: Seq[(String, Column)],
+  /** [[globalCumSum]] of several measures under one order, one column and
+    * one `_total` column per (name, value) pair, all from the same blocks.
+    * An exclusive ("strictly below") sum is the inclusive one minus the
+    * row's own value. */
+  def globalCumSums(df: DataFrame, values: Seq[(String, Column)],
       sortExprs: Column*): DataFrame =
-    blockRunning(df, parts, Nil, sortExprs,
-      values.map { case (out, v) => out -> sum(v.cast("long")) }, withN = false)
+    blockRunning(df, Nil, sortExprs, values).drop("idx")
 }

@@ -295,10 +295,9 @@ object Relational {
         |       count(*) AS n,
         |       round(max(pr), 6) AS max_pr, round(max(cd), 6) AS max_cd
         |FROM w GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      val parts = math.max(2, s.sparkContext.defaultParallelism)
       Ranks.groupIndex(Tables.customer(s, d)
           .select(col("c_mktsegment"), col("c_acctbal"), col("c_custkey")),
-          parts, Seq("c_mktsegment"), col("c_acctbal"), col("c_custkey"))
+          Seq("c_mktsegment"), col("c_acctbal"), col("c_custkey"))
         .select(col("c_mktsegment"),
           Ranks.ntileExpr(col("idx"), col("n"), 4).as("quartile"),
           Ranks.percentRankExpr(col("idx"), col("n")).as("pr"),

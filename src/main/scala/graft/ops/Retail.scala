@@ -122,13 +122,12 @@ object Retail {
           count(lit(1)).as("f"),
           sum(round(col("o_totalprice") * 100, 0).cast("long"))
             .cast("long").as("m_cents"))
-      val parts = math.max(2, s.sparkContext.defaultParallelism)
       val q = Seq[(String, Seq[org.apache.spark.sql.Column])](
         ("rq", Seq(col("r_ts").desc, col("ck"))),
         ("fq", Seq(col("f").desc, col("ck"))),
         ("mq", Seq(col("m_cents").desc, col("ck"))))
         .foldLeft(c) { case (df, (name, ord)) =>
-          Ranks.groupIndex(df, parts, Nil, ord: _*)
+          Ranks.groupIndex(df, Nil, ord: _*)
             .withColumn(name, Ranks.ntileExpr(col("idx"), col("n"), 4))
             .drop("idx", "n")
         }
@@ -700,9 +699,10 @@ object Retail {
     // plans as one Exchange SinglePartition over EVERY part — the q148
     // ntile scale-killer. Instead the q130 block-offset topology, revenue-
     // descending: range-repartition on (rev DESC, pk), per-partition
-    // running sums in a fully parallel pid-partitioned window, and a ≤32-
-    // row running block-offset table broadcast back (the only
-    // SinglePartition in the plan carries 32 aggregate rows). Class
+    // running sums in a fully parallel pid-partitioned window, and a
+    // one-row-per-block running offset table broadcast back (the only
+    // SinglePartition in the plan carries one aggregate row per core). The
+    // total `tot` is the cum_total the offsets frame carries. Class
     // boundaries compare in EXACT integers (cumb·5 < tot·4 ⇔ share < 0.8),
     // so no float sits anywhere near the classification decision.
     Q("q223_abc_classes",
@@ -731,13 +731,11 @@ object Retail {
         .groupBy(col("l_partkey").as("pk"))
         .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
           .cast("long").as("rev"))
-      val ranked =
-        Ranks.globalCumSum(per, 32, col("rev"), col("rev").desc, col("pk"))
-      // the total reads the per-part rows globalCumSum's checkpoint holds;
-      // an aggregate over `per` would rescan lineitem in the sink
-      val tot = ranked.agg(sum(col("rev")).cast("long").as("tot"))
-      ranked.withColumn("cumb", col("cum") - col("rev"))
-        .join(broadcast(tot), lit(true))
+      // the total is globalCumSum's carried cum_total: an aggregate over
+      // `per` would rescan lineitem, one over the ranked frame re-plans it
+      Ranks.globalCumSum(per, col("rev"), col("rev").desc, col("pk"))
+        .withColumn("cumb", col("cum") - col("rev"))
+        .withColumnRenamed("cum_total", "tot")
         .withColumn("abc_class",
           when(col("cumb") * 5 < col("tot") * 4, "A")
             .when(col("cumb") * 20 < col("tot") * 19, "B")

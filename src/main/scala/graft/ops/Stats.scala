@@ -25,9 +25,10 @@ import graft.Ckpt._
   *    ordered distinct values. The naive `sum() OVER (ORDER BY v)` plans an
   *    Exchange SinglePartition — one task sorts everything. Instead the
   *    q130 block-offset topology of [[Ranks.globalCumSums]]: per-block
-  *    prefix sums in parallel, and a ≤32-row block-offset table (the only
-  *    SinglePartition in the plan) broadcast back. Exact for any
-  *    range-disjoint boundary placement.
+  *    prefix sums in parallel, and a block-offset table of one row per
+  *    block (the only SinglePartition in the plan) broadcast back, which
+  *    also carries the sample totals. Exact for any range-disjoint
+  *    boundary placement.
   *  - All statistic numerators stay in BIGINT (counts, cents, rank sums);
   *    doubles appear only in the final rounded ratio, so the DuckDB oracle
   *    hash-matches bit-for-bit on the integer columns and at round-6 on the
@@ -51,7 +52,7 @@ object Stats {
     * [[Ranks.globalCumSums]] call, minus each row's own counts. Input: one
     * row per distinct `v` with per-sample counts `a`, `b`. */
   private def withCumBelow(counts: DataFrame): DataFrame =
-    Ranks.globalCumSums(counts, 32, Seq("ca" -> col("a"), "cb" -> col("b")),
+    Ranks.globalCumSums(counts, Seq("ca" -> col("a"), "cb" -> col("b")),
       col("v"))
       .withColumn("ca", col("ca") - col("a"))
       .withColumn("cb", col("cb") - col("b"))
@@ -90,7 +91,7 @@ object Stats {
     //   T = Σ_v t_v³ − t_v,  t_v = a_v + b_v,
     // is assembled from those BIGINTs only at the final rounded division.
     // Scale shape: see the object doc — the only SinglePartition carries
-    // ≤32 block-offset rows.
+    // one block-offset row per block.
     Q("q166_mann_whitney",
       cdfPrelude +
       """,
@@ -149,11 +150,8 @@ object Stats {
         |       round(CAST(max(abs((ca + a) * n_b - (cb + b) * n_a)) AS DOUBLE)
         |             / (CAST(n_a AS DOUBLE) * n_b), 6) AS ks_d
         |FROM w, n GROUP BY n_a, n_b""".stripMargin) { (s, d) =>
-      val cum = withCumBelow(twoSampleCounts(s, d))
-      val tot = cum.agg(sum(col("a")).cast("long").as("n_a"),
-        sum(col("b")).cast("long").as("n_b"))
-      cum.crossJoin(broadcast(tot))
-        .select(col("n_a"), col("n_b"),
+      withCumBelow(twoSampleCounts(s, d))
+        .select(col("ca_total").as("n_a"), col("cb_total").as("n_b"),
           abs((col("ca") + col("a")) * col("n_b")
             - (col("cb") + col("b")) * col("n_a")).as("dn"))
         .groupBy(col("n_a"), col("n_b"))
@@ -1013,8 +1011,8 @@ object Stats {
         sum(col("a") * col("v")).cast("long").as("sg"))
       val lam = col("n").cast("double") / col("sg")
       val fexp = lit(1) - exp(-lam * col("v"))
-      val kd = Ranks.globalCumSum(c, 32, col("a"), col("v"))
-        .withColumn("ca", col("cum") - col("a"))
+      val kd = Ranks.globalCumSum(c, col("a"), col("v"))
+        .select(col("a"), col("v"), (col("cum") - col("a")).as("ca"))
         .join(broadcast(t), lit(true))
         .select(greatest(
           abs((col("ca") + col("a")) / col("n").cast("double") - fexp),

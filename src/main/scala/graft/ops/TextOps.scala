@@ -2266,7 +2266,7 @@ object TextOps {
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
-      val pooled = Ranks.globalIndex(docs, 32, col("n_chars"), col("doc_id"))
+      val pooled = Ranks.globalIndex(docs, col("n_chars"), col("doc_id"))
         .select(col("idx").as("g"), col("n_chars").as("after_v"))
       val nn = docs.agg(count(lit(1)).as("nn"))
       val wSrc = Window.partitionBy(col("source"))

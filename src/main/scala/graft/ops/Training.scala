@@ -23,7 +23,7 @@ import graft.Ckpt._
   * partial struct-max/min aggregation (no window, no join); q299 reduces
   * the corpus to (doc_id, lang, ntok, score) map-side, then runs the
   * q130 block-offset topology for the global running token sum — the
-  * only SinglePartition carries ≤32 block totals; q300 reduces the
+  * only SinglePartition carries one total per block; q300 reduces the
   * corpus to ≤|sources| rows with one partial-aggregated scan and does
   * all level arithmetic on that broadcast-sized frame. Cross-engine
   * float discipline: scores, budgets, levels, and allocations are all
@@ -120,8 +120,9 @@ object Training {
     // q130 block-offset topology ([[Ranks.globalCumSum]]): the corpus is
     // reduced map-side to 4 small columns, range-partitioned on the
     // (score desc, doc_id) total order, prefix-summed per block in
-    // parallel, and stitched with a broadcast ≤32-row block-total table —
-    // no single-task global sort at any size. Output is the per-language
+    // parallel, and stitched with a broadcast one-row-per-block table that
+    // also carries the corpus token total the budget halves — no
+    // single-task global sort at any size. Output is the per-language
     // selection profile (what a mixture report reads), ≤|langs| rows.
     Q("q299_token_budget_select",
       s"""WITH sc AS (
@@ -142,11 +143,9 @@ object Training {
       val sc = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), size(t).cast("long").as("ntok"),
           intDiv(stopHits(t) * 1000, size(t)).as("score_milli"))
-      val budget = sc.agg(intDiv(sum(col("ntok")), lit(2)).as("budget"))
-      Ranks.globalCumSum(sc, 32, col("ntok"),
-          col("score_milli").desc, col("doc_id"))
-        .crossJoin(broadcast(budget))
-        .filter(col("cum") <= col("budget"))
+      Ranks.globalCumSum(sc, col("ntok"), col("score_milli").desc,
+          col("doc_id"))
+        .filter(col("cum") <= intDiv(col("cum_total"), lit(2)))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_sel"), sum(col("ntok")).as("tok_sel"))
         .orderBy(col("lang"))
@@ -340,7 +339,7 @@ object Training {
       val sl = c.join(broadcast(ns), "source").crossJoin(broadcast(g))
         .withColumn("slot", intDiv(num, den))
         .select(col("doc_id"), col("source"), col("j"), col("slot"))
-      val p = Ranks.globalIndex(sl, 32, col("slot"), col("source"), col("j"))
+      val p = Ranks.globalIndex(sl, col("slot"), col("source"), col("j"))
         .withColumnRenamed("idx", "pos")
       val wGap = Window.partitionBy(col("source")).orderBy(col("pos"))
       p.withColumn("gap", col("pos") - lag(col("pos"), 1).over(wGap))
@@ -384,11 +383,9 @@ object Training {
       val sc = Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
-      val g = sc.agg(count(lit(1)).as("nn"))
-      Ranks.globalIndex(sc, 32, col("ntok"), col("doc_id"))
-        .crossJoin(broadcast(g))
+      Ranks.globalIndex(sc, col("ntok"), col("doc_id"))
         .withColumn("first_epoch",
-          intDiv(col("idx") * 5 + col("nn") - 1, col("nn")))
+          intDiv(col("idx") * 5 + col("n") - 1, col("n")))
         .groupBy(col("first_epoch"), col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("tok"),
           min(col("idx")).as("min_rank"), max(col("idx")).as("max_rank"))
@@ -538,8 +535,8 @@ object Training {
     // {100, 1000, 10000}, what fraction of the corpus TOKEN MASS do the
     // top-k types cover, and what OOV mass falls outside? Types rank by
     // (count desc, token) — a TOTAL order — through [[Ranks.globalIndex]]
-    // (range-partitioned vocabulary, per-block ranks, ≤32-row offset
-    // broadcast); covered mass then falls out of the CASE sums over the
+    // (range-partitioned vocabulary, per-block ranks, one-row-per-block
+    // offset broadcast); covered mass then falls out of the CASE sums over the
     // rank. The corpus reduces to the vocabulary in
     // one explode+partial-agg pass and is never touched again; the
     // cutoff sweep is a conditional aggregation over the ranked
@@ -569,7 +566,7 @@ object Training {
       val v = Tables.documents(s, d)
         .select(explode(TextOps.tokens(col("text"))).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("ct"))
-      val r = Ranks.globalIndex(v, 32, col("ct").desc, col("token"))
+      val r = Ranks.globalIndex(v, col("ct").desc, col("token"))
       val ks = Seq(100, 1000, 10000)
       val aggCols = Seq(
         sum(col("ct")).as("total"), count(lit(1)).as("n_types")) ++

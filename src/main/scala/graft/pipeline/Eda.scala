@@ -46,64 +46,6 @@ object Eda {
       .agg(count(lit(1)).as("n_outliers"))
   }
 
-  /** Session-lifetime memo of computed exact quantiles, keyed by the
-    * CANONICALIZED input plan + column + probability. q11 (quartiles), q12
-    * (IQR outlier bounds) and the Walmart EDA stage all ask for order
-    * statistics of the same column of the same table; without the memo each
-    * query re-sorts the column from scratch. This is the classic engine
-    * statistics cache (Spark's own CBO caches table stats the same way),
-    * valid because the canonicalized logical plan identifies the data and
-    * the driver/bench contract reads immutable inputs within a session.
-    * Keying on the structural plan (not a hash) makes false hits
-    * impossible; entries are a handful of scalars.
-    *
-    * CONTRACT + bound: the values are scalars but each KEY retains a full
-    * logical-plan tree, so the memo is capped at [[QuantileMemoMax]]
-    * distinct (plan, column, prob) entries — overflow clears it wholesale
-    * (recompute is always safe; an eviction policy is not worth the
-    * machinery for a cache whose working set is a handful of columns).
-    *
-    * STALENESS GUARD: a canonicalized parquet relation does not change
-    * when the FILES at its path are overwritten — and the driver HAS
-    * regenerated /root/testdata mid-history — so the key also carries
-    * [[inputSignature]]: a hash of every input file's (path, mtime,
-    * length) read from the query's own freshly-listed file index (each
-    * Tables.load builds a new index, so the statuses are current, and
-    * hashing the cached listing costs no filesystem round-trips). A
-    * regenerated input therefore misses and recomputes instead of serving
-    * the stale scalar. [[clearQuantileMemo]] stays for callers that
-    * rewrite a file without changing mtime-or-length (sub-granularity
-    * in-place writes are the one hole a status signature cannot see). */
-  private[graft] val QuantileMemoMax = 256
-  private val quantileMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long, String, Double), Double]
-
-  /** Hash of the (path, mtime, length) of every file feeding `df`'s file
-    * sources, taken from the plan's OWN file-index listing (fresh per
-    * `spark.read`, so an overwritten input shows new statuses here even
-    * though the canonicalized plan is unchanged). Non-file leaves (local
-    * fixtures) contribute nothing — the canonicalized plan alone already
-    * identifies in-memory data. Shared with the Ml fitted-model memo
-    * (ops/Ml.scala), which keys on the same staleness discipline. */
-  private[graft] def inputSignature(df: DataFrame): Long = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val files = df.queryExecution.analyzed.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location.listFiles(Nil, Nil).flatMap(_.files)
-            .map(f => (f.getPath.toString, f.getModificationTime, f.getLen))
-        case _ => Nil
-      }
-    }.flatten.sorted
-    scala.util.hashing.MurmurHash3.orderedHash(files).toLong
-  }
-
-  /** Drop every memoized quantile — needed only after rewriting a file
-    * IN PLACE with identical mtime and length (see memo contract; plain
-    * overwrites are caught by the input signature). */
-  def clearQuantileMemo(): Unit = quantileMemo.clear()
-
   /** Exact quantile_cont order statistics via distributed sort + fused
     * rank selection, DuckDB-compatible interpolation (lo + (hi−lo)·frac at
     * rank p·(n−1)).
@@ -126,21 +68,6 @@ object Eda {
     * partitions that hold a wanted rank — no zipWithIndex re-pass, no
     * per-element tuple allocation, no full-scan filter. */
   def exactQuantiles(df: DataFrame, c: String, probs: Seq[Double]): Seq[Double] = {
-    val planKey = df.queryExecution.analyzed.canonicalized
-    val sig = inputSignature(df)
-    val missing = probs.filterNot(p => quantileMemo.contains((planKey, sig, c, p)))
-    if (missing.nonEmpty) {
-      // bound enforcement: wholesale clear on overflow (see memo contract)
-      if (quantileMemo.size + missing.size > QuantileMemoMax) quantileMemo.clear()
-      val computed = computeQuantiles(df, c, missing)
-      missing.lazyZip(computed).foreach((p, v) =>
-        quantileMemo((planKey, sig, c, p)) = v)
-    }
-    probs.map(p => quantileMemo((planKey, sig, c, p)))
-  }
-
-  private def computeQuantiles(
-      df: DataFrame, c: String, probs: Seq[Double]): Seq[Double] = {
     val sorted = df.select(col(c).cast("double")).na.drop()
       .rdd.map(_.getDouble(0)).sortBy(identity)
     sorted.cache()

@@ -70,9 +70,8 @@ object Model {
 
   /** The feature half of the reference pipeline (model.py:24-42): ONE
     * multi-column StringIndexer(handleInvalid=keep) over the string
-    * features + a VectorAssembler, feature list dedup'd. Shared by the RF
-    * pipeline, the GBT comparison (q154) and the rolling-origin backtest
-    * (q153) so every estimator trains on the identical featurization. */
+    * features + a VectorAssembler, feature list dedup'd — the stages
+    * [[pipeline]] puts in front of its RandomForestRegressor. */
   private def featureStages(df: DataFrame, labelCol: String,
       featureCols: Seq[String]): Array[org.apache.spark.ml.PipelineStage] = {
     val (catCols, assembled) = featureLayout(df, labelCol, featureCols)
@@ -91,8 +90,9 @@ object Model {
     (indexers :+ assembler).toArray[org.apache.spark.ml.PipelineStage]
   }
 
-  /** StringIndexer(handleInvalid=keep) per string column + VectorAssembler +
-    * seeded RandomForestRegressor (model.py:24-42), feature list dedup'd. */
+  /** One multi-column StringIndexer(handleInvalid=keep) over the string
+    * features + VectorAssembler + seeded RandomForestRegressor
+    * (model.py:24-42), feature list dedup'd. */
   def pipeline(df: DataFrame, labelCol: String, featureCols: Seq[String],
       numTrees: Int = 20, maxDepth: Int = 5, seed: Long = 42L,
       maxBins: Int = 32, subsamplingRate: Double = 1.0): Pipeline = {
@@ -110,7 +110,11 @@ object Model {
     * aggregation passes, and training through an uncached transform chain
     * re-runs every StringIndexer lookup per pass (measured 17s → 7s at
     * sf0.1). r2 and rmse come from ONE aggregation pass instead of two
-    * evaluator jobs. */
+    * evaluator jobs. The scored holdout is cached: the metrics pass
+    * populates it and the caller's read hits it (without the cache the
+    * whole featurize+score lineage runs twice). CONTRACT: the caller owns
+    * the returned frame and should unpersist it when done
+    * (Walmart.runModel does). */
   def fitPredict(df: DataFrame, labelCol: String, featureCols: Seq[String],
       numTrees: Int = 20, maxDepth: Int = 5, seed: Long = 42L,
       maxBins: Int = 32, subsamplingRate: Double = 1.0)
@@ -119,13 +123,16 @@ object Model {
       .setNumTrees(numTrees).setMaxDepth(maxDepth).setSeed(seed)
       .setMaxBins(maxBins).setSubsamplingRate(subsamplingRate)
     val Array(train, valid) = df.randomSplit(Array(0.8, 0.2), seed)
-    fitScore(train, valid, labelCol, featureCols, rf)
+    val transformers = fitTransformers(train, labelCol, featureCols, rf)
+    val scored = transformers.foldLeft(valid)((d, t) => t.transform(d)).cache()
+    val (_, r2, rmse) = holdoutMetrics(scored, labelCol)
+    (transformers, scored, r2, rmse)
   }
 
-  /** The fit half of [[fitScore]]: featurize (cached, right-sized — see
-    * below) + fit `regressor`, returning the fitted transformer chain.
-    * q152 uses this alone (persist → reload needs the model, not a
-    * holdout score). */
+  /** The fit half of [[fitPredict]] and [[fitMetrics]]: featurize (cached,
+    * right-sized — see below) + fit `regressor`, returning the fitted
+    * transformer chain. q152, q153 and q293 use this alone (they need the
+    * model, or score the holdout their own way). */
   def fitTransformers(train: DataFrame, labelCol: String,
       featureCols: Seq[String],
       regressor: org.apache.spark.ml.Predictor[org.apache.spark.ml.linalg.Vector, _, _])
@@ -174,15 +181,16 @@ object Model {
     featModel :+ regModel
   }
 
-  /** [[fitScore]] without materializing the scored frame: fit, then ONE
+  /** [[fitPredict]]'s metrics on an EXPLICIT train/holdout pair with any
+    * estimator, without materializing the scored frame: fit, then ONE
     * uncached column-pruned aggregation pass over the holdout computing
-    * (n, r2, rmse) together. q40/q154 need exactly these scalars — the
-    * fitScore form cached the full scored frame (every lineitem column
-    * plus the assembled VECTOR, an expensive columnar-cache write) only to
-    * run a second count() job over it; measured 3.4 s + 0.5 s of q40's
-    * 12 s board entry at sf0.1 vs ~1 s for this single pass (guide §5:
-    * cache only what is reused; §2.3 project early — the agg reads two
-    * doubles per row). */
+    * (n, r2, rmse) together. q40 and q154 (a GBTRegressor under the same
+    * featurization) need exactly these scalars — caching the full scored
+    * frame (every lineitem column plus the assembled VECTOR, an expensive
+    * columnar-cache write) only to run a second count() job over it
+    * measured 3.4 s + 0.5 s of q40's 12 s board entry at sf0.1 vs ~1 s for
+    * this single pass (guide §5: cache only what is reused; §2.3 project
+    * early — the agg reads two doubles per row). */
   def fitMetrics(
       train: DataFrame, valid: DataFrame, labelCol: String,
       featureCols: Seq[String],
@@ -209,28 +217,6 @@ object Model {
     val (n, ssr) = (m.getLong(0), m.getDouble(1))
     val sst = m.getDouble(2) - m.getDouble(3) * m.getDouble(3) / n
     (n, 1.0 - ssr / sst, math.sqrt(ssr / n))
-  }
-
-  /** The fit/score/metrics core behind [[fitPredict]], parameterized on the
-    * estimator and an EXPLICIT train/holdout pair — q154 swaps in a
-    * GBTRegressor under the same featurization + holdout, and q153's
-    * rolling-origin backtest passes date-cutoff splits instead of the
-    * reference's leaky randomSplit-on-a-time-series (model.py:69: a random
-    * split trains on rows from the future of its own test rows). */
-  def fitScore(
-      train: DataFrame, valid: DataFrame, labelCol: String,
-      featureCols: Seq[String],
-      regressor: org.apache.spark.ml.Predictor[org.apache.spark.ml.linalg.Vector, _, _])
-      : (Seq[Transformer], DataFrame, Double, Double) = {
-    val transformers = fitTransformers(train, labelCol, featureCols, regressor)
-    // cached: the metrics pass below populates it and the caller's read
-    // hits it (without the cache the whole featurize+score lineage runs
-    // twice). CONTRACT: the caller owns the returned frame and should
-    // unpersist it when done (Walmart.runModel does; Bench clears caches
-    // between queries).
-    val scored = transformers.foldLeft(valid)((d, t) => t.transform(d)).cache()
-    val (_, r2, rmse) = holdoutMetrics(scored, labelCol)
-    (transformers, scored, r2, rmse)
   }
 
   /** Grid-search CV (model.py:89-107) with setParallelism — the reference's

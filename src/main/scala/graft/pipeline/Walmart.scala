@@ -91,8 +91,8 @@ object Walmart {
     * Returned LAZILY (round 18): quartiles/outliers run their
     * exact-quantile jobs at DataFrame-construction time, so building the
     * list eagerly would serialize work runEda's overlap exists to hide.
-    * The two share one sort: from concurrent Par.run threads both would
-    * miss Eda's quantile memo, so the lazy val makes one wait instead. */
+    * The two share one sort: the lazy val computes the quartiles once, and
+    * a second Par.run thread waits for it instead of sorting again. */
   def eda(train: DataFrame): Seq[(String, () => DataFrame)] = {
     lazy val q = Eda.exactQuantiles(train, "Weekly_Sales", Seq(0.25, 0.50, 0.75))
     Seq(

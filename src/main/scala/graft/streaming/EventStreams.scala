@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.{GraftSession, Tables}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSql, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSql,
+  KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, BitXorAgg}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, TransformWithState}
 import org.apache.spark.sql.functions._
@@ -30,6 +31,25 @@ object EventStreams {
     Tables.eventsTs(spark.readStream.schema(Tables.eventsFile(spark, dir).schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir), "timestamp")
+
+  /** One user event as the per-user transformWithState processors
+    * ([[TwsPatterns]], [[TwsAttribution]]) read it: `ts_us` is `ts` in
+    * epoch microseconds, the in-batch sort key with `event_id`. */
+  case class UserEvent(user_id: Long, ts: java.sql.Timestamp, ts_us: Long,
+      event_id: Long, event_type: String)
+
+  /** The events stream watermarked at 1 hour, as [[UserEvent]] rows keyed
+    * by `user_id` — the input of every per-user transformWithState run. */
+  def byUser(events: DataFrame): KeyValueGroupedDataset[Long, UserEvent] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events
+      .withWatermark("ts", "1 hour")
+      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
+        col("event_id"), col("event_type"))
+      .as[UserEvent]
+      .groupByKey(_.user_id)
+  }
 
   /** Tumbling 1-day aggregate with a 1-hour watermark (≡ batch q23). */
   def tumblingDaily(events: DataFrame): DataFrame =

@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.streaming.EventStreams.UserEvent
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor,
   TimeMode, TimerValues, TTLConfig}
 
@@ -21,13 +21,11 @@ import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor,
   */
 object TwsAttribution {
 
-  case class AEvent(user_id: Long, ts: java.sql.Timestamp, ts_us: Long,
-      event_id: Long, event_type: String)
   case class Attribution(user_id: Long, event_id: Long,
       ts: java.sql.Timestamp, n_views: Long, n_clicks: Long)
 
   /** Pure step: fold ordered events into emissions + the carried histogram. */
-  def step(hist: Map[String, Long], events: Seq[AEvent])
+  def step(hist: Map[String, Long], events: Seq[UserEvent])
       : (Seq[Attribution], Map[String, Long]) = {
     val out = Seq.newBuilder[Attribution]
     var h = hist
@@ -42,14 +40,14 @@ object TwsAttribution {
   }
 
   class AttributionProcessor
-      extends StatefulProcessor[Long, AEvent, Attribution] {
+      extends StatefulProcessor[Long, UserEvent, Attribution] {
     @transient private var hist: MapState[String, Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       hist = getHandle.getMapState[String, Long]("hist",
         Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
 
-    override def handleInputRows(user: Long, rows: Iterator[AEvent],
+    override def handleInputRows(user: Long, rows: Iterator[UserEvent],
         timers: TimerValues): Iterator[Attribution] = {
       val sorted = rows.toSeq.sortBy(e => (e.ts_us, e.event_id))
       val prev: Map[String, Long] = hist.iterator().toMap
@@ -66,13 +64,7 @@ object TwsAttribution {
   /** Streaming query: watermarked events → per-user attribution. */
   def run(spark: SparkSession, events: DataFrame): Dataset[Attribution] = {
     import spark.implicits._
-    events
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-      .as[AEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new AttributionProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
+    EventStreams.byUser(events).transformWithState(new AttributionProcessor,
+      TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.streaming.EventStreams.UserEvent
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   TimeMode, TimerValues, TTLConfig}
 
@@ -23,8 +23,6 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   */
 object TwsPatterns {
 
-  case class PEvent(user_id: Long, ts: java.sql.Timestamp, ts_us: Long,
-      event_id: Long, event_type: String)
   /** The last-k tail entry kept in ListState (k = 2 here). */
   case class Prev(ts_us: Long, event_id: Long, event_type: String)
   case class Match(user_id: Long, event_id: Long, ts: java.sql.Timestamp)
@@ -33,7 +31,7 @@ object TwsPatterns {
 
   /** Pure pattern step: fold ordered events into matches + the new tail.
     * `tail` is the previous (≤ 2)-event suffix in order. */
-  def step(tail: Seq[Prev], events: Seq[PEvent])
+  def step(tail: Seq[Prev], events: Seq[UserEvent])
       : (Seq[Match], Seq[Prev]) = {
     val out = Seq.newBuilder[Match]
     var t = tail.toVector
@@ -46,14 +44,14 @@ object TwsPatterns {
     (out.result(), t)
   }
 
-  class PatternProcessor extends StatefulProcessor[Long, PEvent, Match] {
+  class PatternProcessor extends StatefulProcessor[Long, UserEvent, Match] {
     @transient private var tail: ListState[Prev] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       tail = getHandle.getListState[Prev]("tail",
         Encoders.product[Prev], TTLConfig.NONE)
 
-    override def handleInputRows(user: Long, rows: Iterator[PEvent],
+    override def handleInputRows(user: Long, rows: Iterator[UserEvent],
         timers: TimerValues): Iterator[Match] = {
       // ORDERING INVARIANT: this sort is per-BATCH only; cross-batch
       // correctness needs batches to arrive in event order (the tail state
@@ -72,13 +70,7 @@ object TwsPatterns {
   /** Streaming query: watermarked events → per-user pattern matcher. */
   def run(spark: SparkSession, events: DataFrame): Dataset[Match] = {
     import spark.implicits._
-    events
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-      .as[PEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new PatternProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
+    EventStreams.byUser(events).transformWithState(new PatternProcessor,
+      TimeMode.EventTime(), OutputMode.Append())
   }
 }

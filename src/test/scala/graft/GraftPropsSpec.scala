@@ -91,12 +91,13 @@ class GraftPropsSpec extends SparkSpec {
   }
 
   test("property: block-offset global cumsum equals the single-window form") {
-    // Every Ranks entry point (q299's cumsum, q130's index, q53's grouped
-    // index with n, the Stats two-measure CDF) against a driver-side
-    // reference over the sorted rows: seeded random values with DUPLICATE
-    // sort keys (8 key values), a null group, partition counts that leave
-    // range partitions empty (parts > rows), one row and the empty frame.
-    // Few trials: each call is a shuffle + a checkpoint job.
+    // Every Ranks output — running index and sums, the row count n and each
+    // measure's `_total` — against a driver-side reference over the sorted
+    // rows: seeded random values with DUPLICATE sort keys (8 key values), a
+    // null group, one row and the empty frame, at block counts 1, 7 (more
+    // blocks than the 5-row trial has rows, so some range partitions are
+    // empty) and the session-derived default (0). Few trials: each call is
+    // a shuffle + a checkpoint job.
     import graft.ops.Ranks
     val rnd = new scala.util.Random(13L)
     val sizes = Seq(40 + rnd.nextInt(60), 40 + rnd.nextInt(60), 5, 1, 0)
@@ -105,41 +106,59 @@ class GraftPropsSpec extends SparkSpec {
         Seq("a", "b", null)(rnd.nextInt(3)), 1L + rnd.nextInt(50),
         rnd.nextInt(1000).toLong))
       val df = rows.toDF("id", "key", "grp", "v", "w")
-      val ctx = s"trial $trial ($n rows)"
       def byId(d: org.apache.spark.sql.DataFrame, c: String*) =
         d.select(col("id") +: c.map(col): _*).collect()
           .map(r => r.getLong(0) -> (1 to c.size).map(r.getLong)).toMap
-      // total order (key desc, id): the exact row_number / running sums
+      // total order (key desc, id): the exact row_number / running sums,
+      // and the frame's row count and measure totals on every row
+      val order = Seq(col("key").desc, col("id"))
       val total = rows.sortBy { case (id, k, _, _, _) => (-k, id) }
+      val (vt, wt) = (rows.map(_._4).sum, rows.map(_._5).sum)
       val cum = total.scanLeft((0L, 0L, 0L)) { case ((i, v, w), r) =>
         (i + 1, v + r._4, w + r._5) }.tail
       val want = total.map(_._1).zip(cum).toMap
-      assert(byId(Ranks.globalIndex(df, 7, col("key").desc, col("id")),
-        "idx") == want.map { case (id, c) => id -> Seq(c._1) }, s"index, $ctx")
-      assert(byId(Ranks.globalCumSum(df, 7, col("v"), col("key").desc,
-        col("id")), "cum") == want.map { case (id, c) => id -> Seq(c._2) },
+      // grouped (null group included): rank within the group, group size
+      val grouped = rows.groupBy(_._3).values.flatMap { g =>
+        g.sortBy(r => (r._2, r._1)).zipWithIndex
+          .map { case (r, i) => r._1 -> Seq(i + 1L, g.size.toLong) } }.toMap
+      Seq(1, 7, 0).foreach { parts =>
+        val ctx = s"trial $trial ($n rows, parts $parts)"
+        assert(byId(Ranks.blockRunning(df, Nil, order, Nil, parts),
+            "idx", "n") ==
+          want.map { case (id, c) => id -> Seq(c._1, n.toLong) }, s"index, $ctx")
+        assert(byId(Ranks.blockRunning(df, Nil, order,
+            Seq("cv" -> col("v"), "cw" -> col("w")), parts),
+            "idx", "cv", "cw", "n", "cv_total", "cw_total") ==
+          want.map { case (id, c) =>
+            id -> Seq(c._1, c._2, c._3, n.toLong, vt, wt) }, s"two sums, $ctx")
+        assert(byId(Ranks.blockRunning(df, Seq("grp"),
+            Seq(col("key"), col("id")), Nil, parts), "idx", "n") == grouped,
+          s"grouped index, $ctx")
+      }
+      // the public entry points: the default block count and their column
+      // contracts (input columns + idx/n, or + each sum, its _total and n)
+      val ctx = s"trial $trial ($n rows)"
+      val gi = Ranks.globalIndex(df, order: _*)
+      assert(gi.columns.toSet == df.columns.toSet ++ Set("idx", "n"), ctx)
+      assert(byId(gi, "idx") == want.map { case (id, c) => id -> Seq(c._1) },
+        s"index, $ctx")
+      val cs = Ranks.globalCumSum(df, col("v"), order: _*)
+      assert(cs.columns.toSet == df.columns.toSet ++ Set("cum", "cum_total", "n"),
+        ctx)
+      assert(byId(cs, "cum", "cum_total", "n") ==
+        want.map { case (id, c) => id -> Seq(c._2, vt, n.toLong) },
         s"cumsum, $ctx")
-      assert(byId(Ranks.globalCumSums(df, 7, Seq("cv" -> col("v"),
-          "cw" -> col("w")), col("key").desc, col("id")), "cv", "cw") ==
-        want.map { case (id, c) => id -> Seq(c._2, c._3) }, s"two sums, $ctx")
+      val gx = Ranks.groupIndex(df, Seq("grp"), col("key"), col("id"))
+      assert(gx.columns.toSet == df.columns.toSet ++ Set("idx", "n"), ctx)
+      assert(byId(gx, "idx", "n") == grouped, s"grouped index, $ctx")
       // tied key only: ties share one block, so each key holds the same
       // contiguous range of indices in any tie order
       def perKey(idx: Iterable[(Long, Long)]) =
         idx.groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2).toSet }
-      val tied = Ranks.globalIndex(df, 7, col("key")).select("key", "idx")
+      val tied = Ranks.globalIndex(df, col("key")).select("key", "idx")
         .collect().map(r => r.getLong(0) -> r.getLong(1))
       assert(perKey(tied) == perKey(rows.map(_._2).sorted.zipWithIndex
         .map { case (k, i) => k -> (i + 1L) }), s"tied index, $ctx")
-      // grouped (null group included) with the group size n, and the
-      // one-group form whose n is the row count
-      val grouped = rows.groupBy(_._3).values.flatMap { g =>
-        g.sortBy(r => (r._2, r._1)).zipWithIndex
-          .map { case (r, i) => r._1 -> Seq(i + 1L, g.size.toLong) } }.toMap
-      assert(byId(Ranks.groupIndex(df, 7, Seq("grp"), col("key"), col("id")),
-        "idx", "n") == grouped, s"grouped index, $ctx")
-      assert(byId(Ranks.groupIndex(df, 7, Nil, col("key").desc, col("id")),
-        "idx", "n") == want.map { case (id, c) => id -> Seq(c._1, n.toLong) },
-        s"one-group index, $ctx")
     }
   }
 

@@ -107,9 +107,9 @@ class MlSpec extends SparkSpec {
   }
 
   test("exactQuantiles memo sees through an in-place input regeneration") {
-    // the canonicalized-plan key alone cannot distinguish two generations
-    // of the same path (the driver HAS regenerated /root/testdata
-    // mid-history); the file-status signature must force a recompute
+    // two generations of the same path (test corpora get regenerated in
+    // place) must give two answers: nothing carries a quantile over from
+    // the first read of the path to the second
     val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
     try {
       (1 to 100).map(_.toDouble).toDF("v")
@@ -190,7 +190,7 @@ class MlSpec extends SparkSpec {
 
     // in-heap: exactly q40's entry, keyed by corpus dir + input signature,
     // holding the live fitted chain (no path, no reload)
-    val key = (sf0001, Eda.inputSignature(Tables.lineitem(spark, sf0001)))
+    val key = (sf0001, graft.ops.Ml.inputSignature(Tables.lineitem(spark, sf0001)))
     assert(graft.ops.Ml.fittedMemo.keySet == Set(key))
     assert(graft.ops.Ml.fittedMemo(key).isInstanceOf[PipelineModel])
     // nothing persisted: the warehouse gains no file, and no ML persistence

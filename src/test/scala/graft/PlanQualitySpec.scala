@@ -170,7 +170,7 @@ class PlanQualitySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val df = spark.range(1000).toDF("id")
       .withColumn("v", col("id") * 37 % 97)
-    val hp = ops.Ranks.groupIndex(df, 4, Nil, col("v"), col("id"))
+    val hp = ops.Ranks.groupIndex(df, Nil, col("v"), col("id"))
       .withColumn("b", ops.Ranks.ntileExpr(col("idx"), col("n"), 4))
       .queryExecution.executedPlan.toString
     val hLines = hp.linesIterator.toVector
@@ -205,7 +205,7 @@ class PlanQualitySpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, lit}
     val counts = spark.range(5000).toDF("v")
       .withColumn("a", col("v") % 7).withColumn("b", col("v") % 5)
-    val hp = ops.Ranks.globalCumSums(counts, 32,
+    val hp = ops.Ranks.globalCumSums(counts,
         Seq("ca" -> col("a"), "cb" -> col("b")), col("v"))
       .queryExecution.executedPlan.toString
     assert(hp.contains("hashpartitioning(_pid"),

@@ -79,7 +79,7 @@ class RetailSpec extends SparkSpec {
         .map(r => (r.getAs[Long]("id"), r.getAs[Int]("b"))).toSeq
       val expected = pairs(df.withColumn("b",
         ntile(4).over(Window.orderBy(col("v").desc, col("id")))))
-      val got = pairs(graft.ops.Ranks.groupIndex(df, 4, Nil,
+      val got = pairs(graft.ops.Ranks.groupIndex(df, Nil,
           col("v").desc, col("id"))
         .withColumn("b", graft.ops.Ranks.ntileExpr(col("idx"), col("n"), 4)))
       assert(got == expected, s"n=$n: $got != $expected")

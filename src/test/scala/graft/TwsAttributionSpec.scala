@@ -1,13 +1,13 @@
 package graft
 
 import graft.streaming.TwsAttribution
-import graft.streaming.TwsAttribution.AEvent
+import graft.streaming.EventStreams.UserEvent
 import org.scalatest.funsuite.AnyFunSuite
 
 class TwsAttributionSpec extends AnyFunSuite {
 
-  private def ev(us: Long, id: Long, tpe: String): AEvent =
-    AEvent(1L, new java.sql.Timestamp(us / 1000), us, id, tpe)
+  private def ev(us: Long, id: Long, tpe: String): UserEvent =
+    UserEvent(1L, new java.sql.Timestamp(us / 1000), us, id, tpe)
 
   test("step: purchases emit accumulated view/click counts and reset") {
     val (out, h) = TwsAttribution.step(Map.empty, Seq(

@@ -1,14 +1,15 @@
 package graft
 
 import graft.streaming.TwsPatterns
-import graft.streaming.TwsPatterns.{Match, PEvent, Prev}
+import graft.streaming.EventStreams.UserEvent
+import graft.streaming.TwsPatterns.{Match, Prev}
 import org.scalatest.funsuite.AnyFunSuite
 
 class TwsPatternsSpec extends AnyFunSuite {
 
-  private def ev(us: Long, id: Long, tpe: String, user: Long = 1L): PEvent = {
+  private def ev(us: Long, id: Long, tpe: String, user: Long = 1L): UserEvent = {
     val ts = new java.sql.Timestamp(us / 1000)
-    PEvent(user, ts, us, id, tpe)
+    UserEvent(user, ts, us, id, tpe)
   }
 
   test("step: detects strict-contiguity runs and only those") {
